@@ -219,60 +219,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // Shuffle partitions sized to the per-query data volume at this SF
-      // (the brief's own sizing rule), not to the core count: with the
-      // r10 prepared-plan cache the surface is dominated by sub-MB
-      // reduces, and AQE's parallelism-first coalescing floors at
-      // defaultParallelism — so 32 initial partitions schedule ~32 tasks
-      // per tiny exchange. Measured A/B (r10, same session, idle probes):
-      // 32 → 33.5 s, 8 → 31.5 s over the full gate with zero per-query
-      // regressions. A 100 TB deployment sizes this in the thousands (or
-      // lets AQE initialPartitionNum own it) — the knob is per-deployment
-      // by design; 8 is this SF's measured operating point. AQE stays ON
-      // (skew splitting + runtime coalescing are the scale story; turning
-      // it off measured 29.6 s here but is rejected — BASELINE.md).
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // The generated-class cache defaults to 100 entries; the ~170 gate
-      // queries
-      // compile several codegen stages each, so the warm pass's classes get
-      // evicted before their timed run and a RANDOM later query pays the
-      // Janino recompilation (observed as multi-second spikes moving between
-      // queries across otherwise-identical runs). Size the cache to the
-      // query surface.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Engine-canonical planner tuning (mirrored in Verify/Smoke/tests):
-      // constraint propagation (InferFiltersFromConstraints and friends) is
-      // quadratic in predicate count at PLANNING time, and the indexed
-      // search plans carry |probes|-wide IN lists through multi-join trees —
-      // measured A/B at sf0.1: 41.1 s -> 38.2 s over the full gate, with the
-      // entire win on the search family (q23/q28/q120/q166/q174, −0.2..0.35 s
-      // each) and every delta elsewhere inside the noise band. The engine
-      // does not RELY on inference at any scale: every load-bearing filter
-      // (null guards, pushed probe predicates, partition prunes) is written
-      // explicitly in the operators and PlanSpec-locked, so the inference
-      // pass buys no execution-time pushdown here — it is pure planning
-      // overhead on short interactive queries.
-      .config("spark.sql.constraintPropagation.enabled", "false")
-    // Experiment hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" layers extra session
-    // confs for planner/runtime A-B runs without editing the recorded
-    // methodology (unset = the canonical configuration above).
-    val builder = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(';').toSeq).map(_.trim).filter(_.nonEmpty)
-      .foldLeft(spark0) { (b, kv) =>
-        kv.split("=", 2) match {
-          case Array(k, v) => b.config(k, v)
-          case _ => sys.error(
-            s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not k=v " +
-              "(expected 'key=value;key=value')")
-        }
-      }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     // PREPARED-instance reuse is opt-in (Plans scaladoc): the bench
     // qualifies — every served frame is executed standalone and pins are
     // drained between queries — and opts in so reps 2..3 measure prepared
@@ -280,7 +227,7 @@ object Bench {
     graft.Plans.enableInstanceReuse()
     // Host-phase probe #1 (see throttleProbe): prices the CPU phase the
     // timed loop below is about to run in.
-    val (preSingle, preMulti, preMem, preIo) = throttleProbe("pre", cpus.toInt)
+    val (preSingle, preMulti, preMem, preIo) = throttleProbe("pre", cpus)
     // Untimed warmup: JVM/codegen/parquet-reader initialization shouldn't be
     // attributed to whichever query happens to run first.
     locally {
@@ -296,9 +243,10 @@ object Bench {
     // Untimed A3 ingest: the indexed-search queries (q23/q28/q29) measure
     // SEARCH latency against a prebuilt index — the reference's benchmark
     // methodology (SURVEY §2.A A10 measures search against a built index;
-    // ingest is its own lifecycle step, timed separately by
-    // tools/IndexTiming). Failures here are left for the queries themselves
-    // to surface so they land in the per-query error accounting.
+    // ingest is its own lifecycle step, timed per artifact below and per
+    // query by tools/Profile's cold call). Failures here are left for the
+    // queries themselves to surface so they land in the per-query error
+    // accounting.
     // The ingest/fit wall time is MEASURED and reported as its own JSON line
     // below ("metric":"ingest") — steady-state query latency and artifact
     // build cost are both visible to the driver, neither hides the other.
@@ -308,10 +256,9 @@ object Bench {
     // Per-artifact wall time is recorded alongside the block total and
     // embedded in bench_per_query.json ("ingest_parts"), so BenchDiff can
     // attribute round-over-round drift in UNTIMED work to the artifact that
-    // moved, the way it attributes query movers (r10 did this with a manual
-    // tools/IndexTiming run). Each build gets its own try: one failed
-    // artifact no longer skips the rest — failures still surface in the
-    // queries that need the artifact, same as before.
+    // moved, the way it attributes query movers. Each build gets its own
+    // try: one failed artifact no longer skips the rest — failures still
+    // surface in the queries that need the artifact, same as before.
     val ingestParts = scala.collection.mutable.LinkedHashMap[String, Double]()
     def ingest(name: String)(body: => Any): Unit = {
       val t0 = System.nanoTime()
@@ -489,7 +436,7 @@ object Bench {
         // map as a dramatic phantom speedup.
         if (ok) results(name) = math.min(results.getOrElse(name, Double.MaxValue), dt)
       }
-      if (rep < reps) midProbes(s"mid$rep") = throttleProbe(s"mid$rep", cpus.toInt)
+      if (rep < reps) midProbes(s"mid$rep") = throttleProbe(s"mid$rep", cpus)
     }
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // MECHANIZED CANONICAL-RUN PRE-FLIGHT (r12): the manual procedure was
@@ -539,7 +486,7 @@ object Bench {
     // timed region — a phase can begin or end mid-run) so both probe pairs
     // can be embedded in the per-query file below for BenchDiff's
     // phase-normalized totals.
-    val (postSingle, postMulti, postMem, postIo) = throttleProbe("post", cpus.toInt)
+    val (postSingle, postMulti, postMem, postIo) = throttleProbe("post", cpus)
     // The driver captures a bounded (~2 KB) TAIL of stdout for its record,
     // but parses the FULL stream: every BENCH_r*.json through r14 shows
     // parsed:null because no single line ever carried the declared contract
@@ -631,5 +578,74 @@ object Bench {
       System.err.println(s"BENCH FAILED: ${errors.keys.mkString(", ")}")
       sys.exit(1)
     }
+  }
+
+  /** Cores the bench session runs on. */
+  private def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The engine's canonical session, shared by the bench and
+    * [[graft.tools.Profile]] so a profile reads the settings the bench
+    * times. Refuses to start while another session exists: `getOrCreate`
+    * would hand that session back and silently drop every setting below,
+    * each `SPARK_GRAFT_EXTRA_CONF` entry included.
+    */
+  def session(): SparkSession = {
+    if (SparkSession.getActiveSession.isDefined || SparkSession.getDefaultSession.isDefined)
+      throw new IllegalStateException(
+        "a Spark session already exists; stop it before building the bench session")
+    val spark0 = SparkSession.builder()
+      .master(s"local[$cpus]")
+      // Shuffle partitions sized to the per-query data volume at this SF
+      // (the brief's own sizing rule), not to the core count: with the
+      // r10 prepared-plan cache the surface is dominated by sub-MB
+      // reduces, and AQE's parallelism-first coalescing floors at
+      // defaultParallelism — so 32 initial partitions schedule ~32 tasks
+      // per tiny exchange. Measured A/B (r10, same session, idle probes):
+      // 32 → 33.5 s, 8 → 31.5 s over the full gate with zero per-query
+      // regressions. A 100 TB deployment sizes this in the thousands (or
+      // lets AQE initialPartitionNum own it) — the knob is per-deployment
+      // by design; 8 is this SF's measured operating point. AQE stays ON
+      // (skew splitting + runtime coalescing are the scale story; turning
+      // it off measured 29.6 s here but is rejected — BASELINE.md).
+      .config("spark.sql.shuffle.partitions", "8")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // The generated-class cache defaults to 100 entries; the ~170 gate
+      // queries
+      // compile several codegen stages each, so the warm pass's classes get
+      // evicted before their timed run and a RANDOM later query pays the
+      // Janino recompilation (observed as multi-second spikes moving between
+      // queries across otherwise-identical runs). Size the cache to the
+      // query surface.
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // Engine-canonical planner tuning (mirrored in Verify/Smoke/tests):
+      // constraint propagation (InferFiltersFromConstraints and friends) is
+      // quadratic in predicate count at PLANNING time, and the indexed
+      // search plans carry |probes|-wide IN lists through multi-join trees —
+      // measured A/B at sf0.1: 41.1 s -> 38.2 s over the full gate, with the
+      // entire win on the search family (q23/q28/q120/q166/q174, −0.2..0.35 s
+      // each) and every delta elsewhere inside the noise band. The engine
+      // does not RELY on inference at any scale: every load-bearing filter
+      // (null guards, pushed probe predicates, partition prunes) is written
+      // explicitly in the operators and PlanSpec-locked, so the inference
+      // pass buys no execution-time pushdown here — it is pure planning
+      // overhead on short interactive queries.
+      .config("spark.sql.constraintPropagation.enabled", "false")
+    // Experiment hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" layers extra session
+    // confs for planner/runtime A-B runs without editing the recorded
+    // methodology (unset = the canonical configuration above).
+    val builder = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(';').toSeq).map(_.trim).filter(_.nonEmpty)
+      .foldLeft(spark0) { (b, kv) =>
+        kv.split("=", 2) match {
+          case Array(k, v) => b.config(k, v)
+          case _ => sys.error(
+            s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not k=v " +
+              "(expected 'key=value;key=value')")
+        }
+      }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.DataFrame
   * DataFrame operator by operator, and EVERY intermediate Dataset is
   * eagerly analyzed, so a ~30-operator gate query pays ~29 analyzer
   * invocations per call — measured at 12–17 ms of Catalyst rule time per
-  * query per invocation over the gate surface (tools/RuleTiming:
+  * query per invocation over the gate surface (tools/Profile's rule ranking:
   * ResolveReferences + DeduplicateRelations + ResolveFunctions dominate),
   * re-paid identically on each of the bench's 3 reps and by every caller
   * of a repeated query.

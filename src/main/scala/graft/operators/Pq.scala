@@ -343,10 +343,6 @@ object Pq {
   def vacuumPqIndex(spark: SparkSession, indexDir: String): Unit =
     Lifecycle.vacuum(spark, indexDir, Seq("codes" -> Nil))
 
-  /** Purging compaction of the cell-partitioned IVF-PQ code table. */
-  def vacuumIvfPqIndex(spark: SparkSession, indexDir: String): Unit =
-    Lifecycle.vacuum(spark, indexDir, Seq("codes" -> Seq("cell")))
-
   /** The live code table (tombstones and superseded versions filtered out;
     * plain scan until the first delete / re-ingest).
     */
@@ -601,17 +597,8 @@ object Pq {
     * cell directories (static partition filter, like [[Vectors.annIvfIndexed]])
     * and ADC-scans only those cells' 8-byte codes: the two multiplicative
     * reductions — read 1/C of the corpus, at 1/32 the bytes — compose.
-    */
-  def buildIvfPqIndex(
-      spark: SparkSession,
-      emb: DataFrame,
-      cells: Int,
-      m: Int,
-      k: Int,
-      outDir: String): Unit =
-    buildIvfPqIndexWith(spark, emb, Vectors.quantizer(spark, emb, cells), fit(emb, m, k), outDir)
-
-  /** Build with externally trained models — the rebuild twin of
+    *
+    * Built with externally trained models — the rebuild twin of
     * [[appendIvfPqIndex]], so append ≡ rebuild is testable under one fixed
     * (quantizer, codebook) pair.
     */

@@ -679,26 +679,6 @@ object Text {
     array_distinct(expr(sampled))
   }
 
-  /** MinHash signatures over an arbitrary (doc_id, t) unit table: k
-    * independent hash functions simulated by salting xxhash64 with the seed
-    * index; signature(doc, s) = min over the doc's distinct units. Narrow
-    * map + small agg — corpus-scale safe.
-    */
-  def minhashSignaturesOf(tok: DataFrame, k: Int): DataFrame = {
-    val seeds = explode(sequence(lit(0), lit(k - 1))).as("seed")
-    tok.select(col("doc_id"), col("t"), seeds)
-      // hash the (seed, unit) PAIR natively — xxhash64 chains its arguments,
-      // so no per-row string building; ~20M long→string conversions saved
-      // per signature pass at sf0.1
-      .withColumn("h", xxhash64(col("seed"), col("t")))
-      .groupBy(col("doc_id"), col("seed"))
-      .agg(min(col("h")).as("mh"))
-  }
-
-  def minhashSignatures(doc: DataFrame, k: Int = 32): DataFrame =
-    minhashSignaturesOf(
-      doc.select(col("doc_id"), explode(array_distinct(tokens(col("text")))).as("t")), k)
-
   /** q34 — MinHash-LSH near-duplicate detection (no SQL oracle — hash-
     * function dependent; pinned by TextSpec recall/precision tests).
     *
@@ -720,8 +700,7 @@ object Text {
     * hashes, then a |docs|-group hash aggregate) — NOT by exploding every
     * unit k ways, which shuffles k·|units| rows (measured 5× slower at
     * sf0.1 for k=32). Band hashes come straight off the wide row; the
-    * per-seed hash is the chained numeric xxhash64(seed, unit), matching
-    * [[minhashSignaturesOf]] exactly.
+    * per-seed hash is the chained numeric xxhash64(seed, unit).
     */
   /** (doc_id, band, bh) band-hash rows and (doc_id, sz) set sizes for a
     * (doc_id, t) unit table — the signature stage of the banding pipeline,
@@ -733,9 +712,8 @@ object Text {
     * of k hashes, then a |docs|-group hash aggregate) — NOT by exploding
     * every unit k ways, which shuffles k·|units| rows (measured 5× slower
     * at sf0.1 for k=32). Band hashes come straight off the wide row; the
-    * per-seed hash is the chained numeric xxhash64(seed, unit), matching
-    * [[minhashSignaturesOf]] exactly. Set size rides the same aggregate as
-    * the k minima — one pass, not two.
+    * per-seed hash is the chained numeric xxhash64(seed, unit). Set size
+    * rides the same aggregate as the k minima — one pass, not two.
     */
   /** Band + size frames from a raw per-doc signature frame
     * (doc_id, mh: array<long> nullable, sz: long). The whole signature
@@ -2688,42 +2666,24 @@ object Text {
         .filter(col("doc_id") % evalMod =!= evalRem &&
           col("doc_id") % batchMod === batchRem),
       eager = true)
-    // The four stage frames are mutually independent (each reads the
-    // pinned delivery plus its own store) but their CONSTRUCTION is
-    // driver-side work — store-cache probes, per-stage analysis, and the
-    // near-dup stage's eager pin jobs — that a sequential build serializes:
-    // the measured job timeline showed the pre-execution window as small
-    // serialized jobs separated by driver gaps (plans/r15/
-    // q175_job_timeline_{before,after}.txt). Build them from a scheduling
-    // thread each (guide §2.6 — overlap independent driver work/jobs);
-    // the composition below awaits all four, so semantics and the
-    // composed plan are unchanged.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val cleanedF = Future { cleanCorpusOf(delivery) }
+    // The four stage frames are mutually independent: each reads the
+    // pinned delivery plus its own store. They are built in sequence: once
+    // the stores exist, only the near-dup stage runs jobs while it is built
+    // (its eager pin chain, whose jobs feed each other), and building the
+    // four concurrently measured at parity (OPTIMIZATION_r15.md §4).
+    val cleaned = cleanCorpusOf(delivery)
     // stage 2's probe returns the batch docs whose content is NOT already
     // in the store — the novel ones; a cleaned doc absent from this set is
     // a cross-corpus duplicate
-    val novelF = Future {
-      dedupBatchAgainstStore(spark, delivery,
-          ensureDigestStore(spark, sfDir, batchMod, batchRem))
-        .select(col("doc_id"))
-    }
-    val nearDupsF = Future {
-      nearDupIncrement(spark, sfDir, batchMod, batchRem,
-          batchDocs = Some(delivery))
-        .select(col("i").as("doc_id")).distinct()
-    }
-    val contaminatedF = Future {
-      decontaminateBatchAgainstStore(spark, delivery,
-          ensureGramStore(spark, sfDir, gram, evalMod, evalRem), gram)
-        .select(col("doc_id"))
-    }
-    val cleaned = Await.result(cleanedF, Duration.Inf)
-    val novel = Await.result(novelF, Duration.Inf)
-    val nearDups = Await.result(nearDupsF, Duration.Inf)
-    val contaminated = Await.result(contaminatedF, Duration.Inf)
+    val novel = dedupBatchAgainstStore(spark, delivery,
+        ensureDigestStore(spark, sfDir, batchMod, batchRem))
+      .select(col("doc_id"))
+    val nearDups = nearDupIncrement(spark, sfDir, batchMod, batchRem,
+        batchDocs = Some(delivery))
+      .select(col("i").as("doc_id")).distinct()
+    val contaminated = decontaminateBatchAgainstStore(spark, delivery,
+        ensureGramStore(spark, sfDir, gram, evalMod, evalRem), gram)
+      .select(col("doc_id"))
     cleaned
       .join(novel, Seq("doc_id"), "left_semi")
       .join(nearDups, Seq("doc_id"), "left_anti")

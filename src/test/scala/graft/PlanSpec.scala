@@ -132,7 +132,7 @@ class PlanSpec extends SparkSpec {
     // plan and leave df's own stages unbuilt): the locks must assert the
     // FINAL adaptive plan, where an AQE runtime join-strategy change that
     // broadcasts the fact/corpus side actually shows up (r15, the r14
-    // advisory; PlanSnap's executed-plan rationale).
+    // advisory).
     df.collect()
     walk(df.queryExecution.executedPlan)
   }
