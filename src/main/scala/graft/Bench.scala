@@ -346,18 +346,20 @@ object Bench {
     // the per-delivery collapsed-graph increment.
     ingest("label_store") { graft.operators.Components.ensureLabelStore(spark, sfDir) }
     val ingestSec = (System.nanoTime() - ingestT0) / 1e9
-    try {
-      val idx = graft.operators.Index.ensure(spark, sfDir)
-      // One untimed single-query probe: search queries measure steady-state
-      // latency, not the first-call codegen/plan compilation of the search
-      // pipeline (standard warm-measurement methodology, same every round).
-      graft.operators.Knn.searchIndex(spark, idx, 1, 10, 5).count()
-      // Touch the full postings layout once so the session's shared file-
-      // listing cache is hot (the sandbox tmp fs charges ~60ms per directory
-      // listed; a real cluster's object-store listing is the same class of
-      // one-time cost and is equally cached by InMemoryFileIndex).
-      graft.operators.Index.postings(spark, idx).count()
-    } catch { case _: Throwable => () }
+    // A failed index build or warm search fails the run here, instead of
+    // surfacing later as slow or failed timed searches.
+    val idx = graft.operators.Index.ensure(spark, sfDir)
+    // One untimed single-query probe: search queries measure steady-state
+    // latency, not the first-call codegen/plan compilation of the search
+    // pipeline (standard warm-measurement methodology, same every round).
+    // collect(), not count(): under count() Catalyst drops the terminal
+    // sort, so the warm pass would compile a different plan than the timed.
+    graft.operators.Knn.searchIndex(spark, idx, 1, 10, 5).collect()
+    // Touch the full postings layout once so the session's shared file-
+    // listing cache is hot (a local tmp fs was measured at ~60ms per
+    // directory listed; a cluster's object-store listing is the same class of
+    // one-time cost and is equally cached by InMemoryFileIndex).
+    graft.operators.Index.postings(spark, idx).count()
     // Codegen warm pass on the SMALLEST fixture, one untimed run of EVERY
     // gate query: generated code is keyed by plan structure, not data size,
     // so the tiny runs populate the Janino cache (and memoized model fits)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,17 +17,30 @@ import org.apache.spark.sql.graft.VectorExpressions
   * Phase 2 (re-rank): exact Euclidean distance on the k1 candidates, keep
   * top-k2. Self-matches are EXCLUDED (documented contract choice, SURVEY A7).
   *
-  * Spark shape: explode both sides to (table, hash) posting lists → equi-join
-  * → count → window top-k1 → join back for vectors → distance → window
-  * top-k2. This is the collision-counting LSH similarity join (PAPERS.md
-  * C2Net) expressed with stock relational operators so Catalyst handles
-  * pushdown and join selection.
+  * Spark shape (indexed search, [[searchIndex]] / [[searchIndexByVector]]):
+  * the query side is a few hundred bytes of driver data, carried into the
+  * plan as literals — an exact (tbl, hash) key set beside the static pkey
+  * partition prune, plus literal key → query and query → vector maps. The
+  * postings scan counts collisions per (query, candidate) in one exchange;
+  * everything after the count runs in a single partition: window top-k1,
+  * broadcast into the vectors join for the exact distance, an ordered
+  * limit that gathers the |Q|·k1 rescored rows, window top-k2, final sort.
+  * A search is three Spark jobs — the collision-count exchange, the k1
+  * broadcast, the result (KnnJobsSpec). This is the collision-counting LSH
+  * similarity join (PAPERS.md C2Net) expressed with stock relational
+  * operators so Catalyst handles pushdown and join selection.
   *
-  * Scale notes (100 TB): the candidate join is an equi-join on (tbl, hash) —
-  * shuffle-partitionable, no cross product anywhere. The query side is tiny
-  * and broadcast. Skewed buckets (a hash value holding a large fraction of
-  * rows) are the known risk; mitigation at scale is capping bucket size or
-  * salting the heavy hashes (SURVEY §7); at gate scale AQE handles it.
+  * Scale notes (100 TB): the candidate scan reads only the probed pkey
+  * directories and is executor-parallel; no cross product anywhere, and no
+  * embedding is ever shuffled (the k1 set is broadcast into the corpus-sized
+  * vectors scan). The single-partition tail is bounded by construction: the
+  * counted pairs are at most the probed buckets' postings (E[bucket] is
+  * held near the target by [[Lsh.deriveBits]], and [[Lsh.autoBucketCap]]
+  * caps it past the width ceiling), and |Q|·k1 rows after the cut; |Q| is
+  * point-lookup sized by contract, as the driver-side query GET already
+  * assumes. Skewed buckets (a hash value holding a large fraction of rows)
+  * are the known risk; the bucket cap or salting the heavy hashes (SURVEY
+  * §7) is the mitigation.
   */
 object Knn {
 
@@ -163,7 +176,11 @@ object Knn {
     * path's arithmetic exactly), so probes hit the identical buckets a
     * stored twin's precomputed hashes would. `excludeIds` is the ES
     * exclude-filter knob (drop known ids — e.g. the query's own document —
-    * before the k1 cut so every slot is servable).
+    * before the k1 cut so every slot is servable). Output rows carry
+    * `query_id = -1`.
+    *
+    * Launches no Spark job before its action: the query side is driver
+    * arithmetic carried into the plan as literals (see [[search]]).
     *
     * Parity contract (spec-pinned): for a vector that IS stored, searching
     * by value with its id excluded returns exactly [[searchIndex]]'s
@@ -179,63 +196,27 @@ object Knn {
       multiprobe: Boolean = false,
       bucketCap: Int = 0,
       excludeIds: Seq[Long] = Nil): DataFrame = {
-    import spark.implicits._
-    val (model, numBuckets) = Lsh.loadModelCached(spark, s"$indexDir/model")
-    val probeKeys = probesOf(-1L, model.hashVector(query).toSeq, model, multiprobe).distinct
-    val pkeys = probeKeys.map { case (_, t, h) => Index.pkeyOf(t, h, numBuckets) }.distinct
-    // Same conditional duplicate-collapse as [[searchIndex]]: only a layout
-    // with append generations can hold duplicate posting copies.
-    val appended = everAppended(spark, indexDir)
-    val scanned = Index.livePostings(spark, indexDir)
-      .filter(col(Index.PKeyCol).isin(pkeys: _*))
-    val pruned =
-      if (appended) scanned.dropDuplicates("tbl", "hash", "vec_id") else scanned
-    val postings = if (bucketCap > 0) Skew.capBuckets(pruned, bucketCap) else pruned
-    val qposts = probeKeys.toDF("query_id", "tbl", "hash")
-    val collisions = postings
-      .join(broadcast(qposts), Seq("tbl", "hash"))
-      .filter(if (excludeIds.isEmpty) lit(true) else !col("vec_id").isin(excludeIds: _*))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(count(lit(1)).as("collisions"))
-    val wK1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("collisions").desc, col("vec_id").asc)
-    val k1set = collisions
-      .withColumn("r1", row_number().over(wK1))
-      .filter(col("r1") <= k1)
-      .drop("r1")
-    val qvecs = Seq((-1L, query.toSeq)).toDF("query_id", "qv")
-    // broadcast the CANDIDATE side: k1set is |Q|·k1 rows of 16 B by contract
-    // (the bounded probe set), the vectors side is the CORPUS — static
-    // sizeInBytes would happily broadcast the fixture-tiny vectors scan,
-    // which inverts at scale (shipping the corpus to the candidates).
-    val rescoredRaw = broadcast(k1set)
-      .join(Index.liveVectors(spark, indexDir).select(col("vec_id"), col("embedding")), "vec_id")
-      .join(broadcast(qvecs), "query_id")
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"), col("collisions"),
-        VectorExpressions.l2(col("qv"), col("embedding")).as("dist"))
-    val rescored =
-      if (appended) rescoredRaw.dropDuplicates("query_id", "neighbor_id")
-      else rescoredRaw
-    val wK2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id").asc)
-    rescored
-      .withColumn("rank", row_number().over(wK2))
-      .filter(col("rank") <= k2)
-      .select(
-        col("query_id"), col("neighbor_id"), col("rank"),
-        col("collisions"), Det.display(col("dist"), 4).as("dist4"))
-      .orderBy(col("query_id"), col("rank"))
+    val (model, _) = Lsh.loadModelCached(spark, s"$indexDir/model")
+    search(spark, indexDir,
+      probesOf(-1L, model.hashVector(query).toSeq, model, multiprobe),
+      Map(-1L -> query.toSeq), k1, k2, bucketCap,
+      keep = if (excludeIds.isEmpty) lit(true) else !col("vec_id").isin(excludeIds: _*),
+      candidateFilter = None)
   }
 
-  /** A5–A7 against a persisted [[Index]] layout.
+  /** A5–A7 against a persisted [[Index]] layout, for every stored query id
+    * below `queryMaxId`: one pushed-filter GET of the query docs'
+    * precomputed hashes and vectors (no re-hash; the one job this call
+    * runs before its action, |Q|-small by contract and needed for the
+    * literal pkey prune), then [[search]]. Self-matches are excluded.
     *
     * `bucketCap` (0 = off, the gate default) bounds the posting-list length
     * per (tbl, hash) via [[Skew.capBuckets]] — the 100 TB control for
     * degenerate buckets (a hash value holding a large fraction of the
     * corpus would otherwise dominate the collision join's fan-out). Capping
     * trades a measured recall loss on exactly those low-signal buckets for
-    * a hard bound on join width.
+    * a hard bound on join width. `candidateFilter` keeps only the vec_ids
+    * it holds, before the k1 cut (see [[lshTopKFilteredIndexed]]).
     */
   def searchIndex(
       spark: SparkSession,
@@ -246,86 +227,83 @@ object Knn {
       multiprobe: Boolean = false,
       bucketCap: Int = 0,
       candidateFilter: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
-    val (model, numBuckets) = Lsh.loadModelCached(spark, s"$indexDir/model")
-    // Live views: tombstoned ids (Index.delete) are anti-joined out; with no
-    // tombstones the plan is the plain scan.
-    val vectors = Index.liveVectors(spark, indexDir)
-
-    // 1. GET query docs: precomputed hashes + stored vectors, no re-hash
-    // (A7). One pushed-filter scan; the rows are |Q|-small by contract.
-    val qRows = vectors.filter(col("vec_id") < queryMaxId)
+    val (model, _) = Lsh.loadModelCached(spark, s"$indexDir/model")
+    val qRows = Index.liveVectors(spark, indexDir).filter(col("vec_id") < queryMaxId)
       .select(col("vec_id"), col("hashes"), col("embedding")).collect()
-    val probeKeys: Seq[(Long, Int, Long)] = qRows.toSeq.flatMap { r =>
-      probesOf(r.getLong(0), r.getSeq[Long](1), model, multiprobe)
-    }.distinct
+    search(spark, indexDir,
+      qRows.toSeq.flatMap(r => probesOf(r.getLong(0), r.getSeq[Long](1), model, multiprobe)),
+      qRows.map(r => r.getLong(0) -> r.getSeq[Float](2)).toMap,
+      k1, k2, bucketCap, keep = col("vec_id") =!= col("query_id"), candidateFilter)
+  }
 
-    // 2. Probe postings under a static partition prune (lossless — see
-    // Index scaladoc). The probe list itself is a tiny local relation.
-    val pkeys = probeKeys.map { case (_, t, h) => Index.pkeyOf(t, h, numBuckets) }.distinct
-    // dropDuplicates AFTER the partition prune: append-after-delete can
-    // leave duplicate copies of a posting row, and deduping here costs a
-    // shuffle of only the probed buckets, not the corpus. Skipped entirely
-    // on a never-appended layout (no `appends/` markers): a fresh build or
-    // exactly-once streamed bootstrap cannot hold duplicate copies, and the
-    // collapse would be one pure-overhead exchange per search.
+  /** The search core both indexed entry points share: collision count over
+    * the probed postings (A5), top-k1, exact re-rank (A6), top-k2 — the
+    * three-job shape in the [[Knn]] scaladoc. `probes` are (query_id, tbl,
+    * hash), multiprobe flips included; `keep` is the exclusion predicate
+    * over (query_id, vec_id), applied before the count. Duplicate posting
+    * or vector copies exist only on a layout that has been appended to
+    * (append-after-delete), and only there are they collapsed: on the
+    * probed postings, and on the |Q|·k1 re-rank rows.
+    */
+  private def search(
+      spark: SparkSession,
+      indexDir: String,
+      probes: Seq[(Long, Int, Long)],
+      queryVecs: Map[Long, Seq[Float]],
+      k1: Int,
+      k2: Int,
+      bucketCap: Int,
+      keep: Column,
+      candidateFilter: Option[DataFrame]): DataFrame = {
+    val (model, numBuckets) = Lsh.loadModelCached(spark, s"$indexDir/model")
+    // (tbl, hash) packs exactly as tbl·2^bits + hash (hash < 2^bits) only
+    // while every table index fits above the hash bits.
+    require(model.bits < 64 && model.tables - 1L <= (Long.MaxValue >> model.bits),
+      s"${model.tables} tables of ${model.bits} bits exceed the 63-bit probe key")
+    val keyCol = shiftleft(col("tbl").cast("long"), model.bits).bitwiseOR(col("hash"))
+    val queriesByKey = probes.distinct
+      .groupMap { case (_, t, h) => (t.toLong << model.bits) | h }(_._1)
+    val pkeys = probes.map { case (_, t, h) => Index.pkeyOf(t, h, numBuckets) }.distinct
     val appended = everAppended(spark, indexDir)
     val scanned = Index.livePostings(spark, indexDir)
-      .filter(col(Index.PKeyCol).isin(pkeys: _*))
-    val pruned =
-      if (appended) scanned.dropDuplicates("tbl", "hash", "vec_id") else scanned
-    val postings = if (bucketCap > 0) Skew.capBuckets(pruned, bucketCap) else pruned
-    val qposts = probeKeys.toDF("query_id", "tbl", "hash")
-
-    // 3. A5: collision counting, then A6: exact re-rank — identical shape to
-    // lshSearch but over the pruned stored postings (deduplicated above, so
-    // a plain count IS the distinct-table collision count).
-    val rawCollisions = postings
-      .join(broadcast(qposts), Seq("tbl", "hash"))
-      .filter(col("vec_id") =!= col("query_id"))
+      .filter(col(Index.PKeyCol).isin(pkeys: _*) && keyCol.isin(queriesByKey.keys.toSeq: _*))
+    val deduped = if (appended) scanned.dropDuplicates("tbl", "hash", "vec_id") else scanned
+    val postings = if (bucketCap > 0) Skew.capBuckets(deduped, bucketCap) else deduped
+    // explode even for one query: a literal query_id would be folded out of
+    // the windows' partitionBy, leaving unpartitioned windows
+    val queryOf = element_at(typedLit(queriesByKey), keyCol)
+    val counted = postings
+      .select(col("vec_id"), explode(queryOf).as("query_id"))
+      .filter(keep)
       .groupBy(col("query_id"), col("vec_id"))
       .agg(count(lit(1)).as("collisions"))
-    // Metadata predicate (filtered search): drop disallowed candidates
-    // BEFORE the k1 cut so every k1 slot holds a servable candidate — see
-    // [[lshTopKFilteredIndexed]].
-    val collisions = candidateFilter match {
-      case Some(allowed) =>
-        rawCollisions.join(allowed.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      case None => rawCollisions
-    }
+      // bounded by the probed buckets: one partition from here on
+      .coalesce(1)
+    val collisions = candidateFilter.fold(counted)(allowed =>
+      counted.join(allowed.select(col("vec_id")), Seq("vec_id"), "left_semi"))
     val wK1 = Window.partitionBy(col("query_id"))
       .orderBy(col("collisions").desc, col("vec_id").asc)
     val k1set = collisions
       .withColumn("r1", row_number().over(wK1))
       .filter(col("r1") <= k1)
       .drop("r1")
-
-    val vecs = vectors.select(col("vec_id"), col("embedding"))
-    // Query vectors come from the rows already fetched in step 1 — a local
-    // relation, not another index scan.
-    val qvecs = qRows.toSeq
-      .map(r => (r.getLong(0), r.getSeq[Float](2)))
-      .toDF("query_id", "qv")
-    // broadcast the CANDIDATE side (|Q|·k1-bounded by contract) — see
-    // [[searchIndexByVector]]: the vectors side is the corpus, and the
-    // scale-safe direction never depends on the fixture's static stats.
-    val rescoredRaw = broadcast(k1set)
-      .join(vecs, "vec_id")
-      .join(broadcast(qvecs), "query_id")
+    val queryVec = element_at(typedLit(queryVecs), col("query_id"))
+    // broadcast the CANDIDATE side: the vectors side is the corpus, and the
+    // fixture-tiny vectors scan's static size would invert the join at scale
+    val rescored = broadcast(k1set)
+      .join(Index.liveVectors(spark, indexDir).select(col("vec_id"), col("embedding")), "vec_id")
       .select(
         col("query_id"), col("vec_id").as("neighbor_id"), col("collisions"),
-        VectorExpressions.l2(col("qv"), col("embedding")).as("dist"))
-    // duplicate stored copies of an id (append-after-delete) produce
-    // identical rescored rows — collapse them on the k1-sized set, never
-    // on the corpus-sized vectors table; a never-appended layout cannot
-    // hold duplicates, so the collapse exchange is skipped there too.
-    val rescored =
-      if (appended) rescoredRaw.dropDuplicates("query_id", "neighbor_id")
-      else rescoredRaw
-    val wK2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id").asc)
-    rescored
-      .withColumn("rank", row_number().over(wK2))
+        VectorExpressions.l2(queryVec, col("embedding")).as("dist"))
+    val byDist = Seq(col("dist").asc, col("neighbor_id").asc)
+    // Once duplicate copies are collapsed there are at most |Q|·k1 rescored
+    // rows, so this limit keeps them all: it only gathers them, ordered, into
+    // one partition inside the result job (a local top-k per scan partition),
+    // with no exchange stage or sample job of its own.
+    (if (appended) rescored.dropDuplicates("query_id", "neighbor_id") else rescored)
+      .orderBy(col("query_id") +: byDist: _*)
+      .limit(math.multiplyExact(queryVecs.size, k1))
+      .withColumn("rank", row_number().over(Window.partitionBy(col("query_id")).orderBy(byDist: _*)))
       .filter(col("rank") <= k2)
       .select(
         col("query_id"), col("neighbor_id"), col("rank"),

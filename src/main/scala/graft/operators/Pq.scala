@@ -263,7 +263,10 @@ object Pq {
     // compared the fixture-tiny vectors scan against the candidates'
     // post-window estimate and broadcast the corpus (BuildRight over the
     // full embeddings FileScan in the executed plan), which inverts at
-    // scale. Same direction [[Knn.searchIndex]] has always hinted.
+    // scale. The LSH search core ([[Knn.searchIndex]]) broadcasts its k1
+    // set the same way; it also carries its query vectors as a literal map
+    // and runs the post-count tail in one partition, which this path has
+    // not adopted (its `qvecs` stays a broadcast relation).
     broadcast(candidates)
       .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
       .join(broadcast(qvecs), "query_id")

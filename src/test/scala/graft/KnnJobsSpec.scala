@@ -1,0 +1,72 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.TestBus
+
+import graft.operators.{Index, Knn}
+
+/** Job budget of an indexed kNN search: the query side rides the plan as
+  * literals and everything after the collision count sits in one
+  * partition, so a search is the collision-count exchange, the k1
+  * broadcast and the result job — three jobs, measured on this sf0.001
+  * index (before the shared core it was nine: the query-side broadcasts,
+  * the k1/k2 window exchanges and the global sort's sample and range
+  * exchange each cost one). A regression back to broadcast relations or
+  * window exchanges fails here before any bench run.
+  */
+class KnnJobsSpec extends SparkSpec {
+
+  /** Jobs started while `body` runs (the listener bus drained both sides). */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val n = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    TestBus.drain(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      TestBus.drain(spark)
+      (out, n.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Jobs of the search core's action on a fresh (never appended) layout. */
+  val ActionJobs = 3
+
+  private lazy val idx = {
+    val dir = Index.ensure(spark, sf0001)
+    // first reads resolve and memoize the layout's relations (schema
+    // inference jobs); the budget is the steady state after that
+    Knn.searchIndex(spark, dir, 8, 100, 10).collect()
+    Knn.searchIndexByVector(spark, dir, Array.fill(64)(0.5f), 100, 10).collect()
+    dir
+  }
+
+  test("raw-vector search: no job before its action, at most three in it") {
+    val q = spark.read.parquet(s"$idx/vectors").filter("vec_id = 3")
+      .select("embedding").collect()(0).getSeq[Float](0).toArray
+    val (df, constructJobs) = jobsDuring(Knn.searchIndexByVector(spark, idx, q, 100, 10))
+    assert(constructJobs == 0, "searchIndexByVector ran a job before its action")
+    val (rows, actionJobs) = jobsDuring(df.collect())
+    assert(rows.nonEmpty)
+    info(s"action jobs: $actionJobs")
+    assert(actionJobs <= ActionJobs, s"raw-vector search ran $actionJobs jobs")
+  }
+
+  test("stored-id batch search: the query-doc GET plus at most three jobs") {
+    val (rows, jobs) = jobsDuring(Knn.searchIndex(spark, idx, queryMaxId = 8, 100, 10).collect())
+    assert(rows.map(_.getLong(0)).distinct.length == 8)
+    info(s"jobs: $jobs")
+    assert(jobs <= 1 + ActionJobs, s"stored-id search ran $jobs jobs")
+  }
+
+  test("multiprobe search keeps the same budget") {
+    val (_, jobs) = jobsDuring(
+      Knn.searchIndex(spark, idx, queryMaxId = 4, 100, 10, multiprobe = true).collect())
+    info(s"jobs: $jobs")
+    assert(jobs <= 1 + ActionJobs, s"multiprobe search ran $jobs jobs")
+  }
+}

@@ -469,4 +469,14 @@ class LshSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     assert(indexedMp == inlineMp)
   }
+
+  test("a wide explicit model keeps indexed = inline rows (exact probe key)") {
+    // 2 tables × 40 bits: the (tbl, hash) probe key must stay exact far
+    // beyond the derived widths (≤ 16 bits)
+    val inline = Knn.lshTopK(spark, sf0001, queryMaxId = 8, tables = 2, bits = 40,
+      multiprobe = true).collect().map(_.toSeq).toSeq
+    val indexed = Knn.lshTopKIndexed(spark, sf0001, queryMaxId = 8, tables = 2, bits = 40,
+      multiprobe = true).collect().map(_.toSeq).toSeq
+    assert(indexed == inline)
+  }
 }

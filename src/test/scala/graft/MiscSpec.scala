@@ -280,6 +280,48 @@ class MiscSpec extends SparkSpec {
     assert(byVec.nonEmpty && byVec.forall(_._1 != 3L))
   }
 
+  /** Query 3's stored-id rows against a raw-vector search by its values
+    * (id 3 excluded) on `idx`, as (neighbor_id, rank, collisions, dist4).
+    */
+  private def storedVsByVector(idx: String, multiprobe: Boolean) = {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Index, Knn}
+    def cols(rows: Array[org.apache.spark.sql.Row]) =
+      rows.map(r => (r.getLong(1), r.getInt(2), r.getLong(3), r.getDouble(4))).toSeq
+    val stored = Knn.searchIndex(spark, idx, queryMaxId = 4, k1 = 100, k2 = 10,
+      multiprobe = multiprobe).filter(col("query_id") === 3L).collect()
+    val v = Index.liveVectors(spark, idx).filter(col("vec_id") === 3L)
+      .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
+    val byVec = Knn.searchIndexByVector(spark, idx, v, k1 = 100, k2 = 10,
+      multiprobe = multiprobe, excludeIds = Seq(3L)).collect()
+    (cols(stored), cols(byVec))
+  }
+
+  test("raw-vector search equals stored-id search under multiprobe") {
+    val (stored, byVec) =
+      storedVsByVector(graft.operators.Index.ensure(spark, sf0001), multiprobe = true)
+    assert(byVec.nonEmpty && byVec == stored)
+  }
+
+  test("raw-vector search equals stored-id search on an appended-then-deleted layout") {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Index, Knn, Lsh}
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val dir = java.nio.file.Files.createTempDirectory("graft-idx-parity").toString
+    Index.build(spark, emb.filter(col("vec_id") < 300), Lsh.fit(emb, tables = 8, bits = 3),
+      dir, numBuckets = 16)
+    // re-append ids 250..299 on top of their build copies, then delete two
+    // of query 3's neighbours: duplicate posting and vector copies plus
+    // tombstones, the dropDuplicates and live-view branches of the core
+    Index.append(spark, dir, emb.filter(col("vec_id") >= 250))
+    val victims = Knn.searchIndex(spark, dir, 4, 100, 10)
+      .filter(col("query_id") === 3L).collect().map(_.getLong(1)).take(2).toSeq
+    Index.delete(spark, dir, victims)
+    val (stored, byVec) = storedVsByVector(dir, multiprobe = false)
+    assert(byVec.nonEmpty && byVec == stored)
+    assert(byVec.forall(r => !victims.contains(r._1)))
+  }
+
   test("bq recall gate: exact leg always full, mean recall above the PqSpec floor") {
     val rows = graft.operators.Knn.recallBenchmarkBq(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
