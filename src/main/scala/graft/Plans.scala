@@ -38,6 +38,11 @@ import org.apache.spark.sql.DataFrame
   * instances with constraint propagation ON — the r5 trigger — still
   * matches fresh-built results on the gate queries.
   *
+  * Every call, reuse or not, first installs the
+  * [[org.apache.spark.sql.graft.SmallSort]] planner strategy on the session
+  * (once; later calls find it), so each served query's small terminal sort
+  * runs in one partition without a range exchange.
+  *
   * Exclusions and invalidation (active only under instance reuse):
   *   - A build that PINNED frames ([[graft.operators.Materialize.stable]]
   *     during construction — the q175 delivery pin, the shingle unit
@@ -83,6 +88,8 @@ object Plans {
 
   def cached(name: String, spark: org.apache.spark.sql.SparkSession, sfDir: String)(
       build: => DataFrame): DataFrame = {
+    // every served query plans its small terminal sort in one partition
+    org.apache.spark.sql.graft.SmallSort.install(spark)
     if (!instanceReuse) return build
     // The key carries every fixture's (mtime, length) signature (10 local
     // stats, ~26 µs each): a fixture regenerated WITHIN a session — even a

@@ -266,7 +266,7 @@ object Media {
     // holding 51 s of verify CPU over a 794 KB exchange
     // (plans/r15/q161_stage_metrics_{before,after}.txt). The join needs
     // this hash partitioning anyway, so the pin adds no exchange.
-    val nPart = sig.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val nPart = Skew.shufflePartitions(sig.sparkSession)
     val bands = sig.select(
       col("media_id"), col("ph"),
       posexplode(expr(

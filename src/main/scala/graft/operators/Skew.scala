@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities (SURVEY.md §7 risk list: "skewed hash buckets
@@ -17,6 +17,19 @@ import org.apache.spark.sql.functions._
   * degenerate buckets that carry little signal).
   */
 object Skew {
+
+  /** `spark.sql.shuffle.partitions`, the width the CPU-bound banding
+    * exchanges pin to (exempt from AQE's byte-based coalescing). Parsed as
+    * Spark parses it; a malformed value fails naming the key and the value.
+    */
+  def shufflePartitions(spark: SparkSession): Int =
+    partitionCount(spark.conf.get(ShufflePartitions))
+
+  val ShufflePartitions = "spark.sql.shuffle.partitions"
+
+  private[graft] def partitionCount(raw: String): Int =
+    raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"$ShufflePartitions must be a positive integer, got '$raw'"))
 
   /** Deterministic salt in [0, salts) from a secondary column. */
   def saltOf(c: Column, salts: Int): Column = pmod(xxhash64(c), lit(salts.toLong))

@@ -801,7 +801,7 @@ object Text {
       bands: DataFrame, spread: Boolean): DataFrame = {
     val mined =
       if (spread) {
-        val n = bands.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+        val n = Skew.shufflePartitions(bands.sparkSession)
         bands.repartition(n, col("band"), col("bh"))
       } else bands
     mined.as("x")

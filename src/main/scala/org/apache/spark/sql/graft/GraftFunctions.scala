@@ -39,9 +39,14 @@ object GraftFunctions {
     }
 }
 
-/** `spark.sql.extensions` entry point. */
+/** `spark.sql.extensions` entry point: the SQL functions and the
+  * [[SmallSort]] planner strategy.
+  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = GraftFunctions.inject(e)
+  override def apply(e: SparkSessionExtensions): Unit = {
+    GraftFunctions.inject(e)
+    e.injectPlannerStrategy(_ => SmallSort)
+  }
 }
 
 /** Engine-internal accessors that need the sql package (classic `Dataset` and

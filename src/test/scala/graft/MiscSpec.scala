@@ -94,6 +94,15 @@ class MiscSpec extends SparkSpec {
     assert(capped.filter(col("cell") === 10L).collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
   }
 
+  test("shuffle-partition read: parsed as Spark parses it; a bad value names key and value") {
+    assert(Skew.shufflePartitions(spark) == spark.conf.get(Skew.ShufflePartitions).trim.toInt)
+    assert(Skew.partitionCount(" 6 ") == 6)
+    Seq("six", "0", "").foreach { bad =>
+      val e = intercept[IllegalArgumentException](Skew.partitionCount(bad))
+      assert(e.getMessage.contains(Skew.ShufflePartitions) && e.getMessage.contains(s"'$bad'"))
+    }
+  }
+
   test("batch allocation: monotonic, and an existing marker is never reused") {
     val dir = java.nio.file.Files.createTempDirectory("graft-alloc").toString
     val fs = graft.operators.Lifecycle.fsOf(spark, dir)
