@@ -26,9 +26,15 @@ import org.apache.spark.sql.graft.VectorExpressions
   * broadcast into the vectors join for the exact distance, an ordered
   * limit that gathers the |Q|·k1 rescored rows, window top-k2, final sort.
   * A search is three Spark jobs — the collision-count exchange, the k1
-  * broadcast, the result (KnnJobsSpec). This is the collision-counting LSH
-  * similarity join (PAPERS.md C2Net) expressed with stock relational
-  * operators so Catalyst handles pushdown and join selection.
+  * broadcast, the result (KnnJobsSpec). Everything after the k1 cut is
+  * [[rerank]], the one exact re-rank tail the quantized searches in [[Pq]]
+  * share. Its ordered limit of |Q|·k1 rows drops nothing: the k1 window
+  * leaves at most k1 candidates per query, and each joins at most one
+  * vectors row, since vec_id is the key of the vectors frame (an appended
+  * layout's duplicate copies are collapsed first). This is the
+  * collision-counting LSH similarity join (PAPERS.md C2Net) expressed with
+  * stock relational operators so Catalyst handles pushdown and join
+  * selection.
   *
   * Scale notes (100 TB): the candidate scan reads only the probed pkey
   * directories and is executor-parallel; no cross product anywhere, and no
@@ -287,38 +293,51 @@ object Knn {
       .withColumn("r1", row_number().over(wK1))
       .filter(col("r1") <= k1)
       .drop("r1")
+    rerank(k1set, Index.liveVectors(spark, indexDir), queryVecs, k1, k2, dedupe = appended)
+  }
+
+  /** The exact re-rank tail (A6) of every two-phase vector search — the
+    * indexed LSH core above and the seven quantized searches in [[Pq]]:
+    * the `k1set` of (query_id, vec_id) candidates is broadcast into the
+    * (vec_id, embedding) scan of `vectors`, scored by L2 against the literal
+    * query_id → vector map, cut to top-k2 by (dist, neighbor_id) and sorted.
+    * Output: (query_id, neighbor_id, rank, …, dist4), where … is every
+    * other `k1set` column in order (`collisions` for LSH, none for the
+    * quantized searches). `dedupe` collapses duplicate vector copies, which
+    * only an appended index layout can hold.
+    */
+  private[operators] def rerank(
+      k1set: DataFrame,
+      vectors: DataFrame,
+      queryVecs: Map[Long, Seq[Float]],
+      k1: Int,
+      k2: Int,
+      dedupe: Boolean): DataFrame = {
+    val carried = k1set.columns.toSeq.filterNot(Set("query_id", "vec_id")).map(col)
     val queryVec = element_at(typedLit(queryVecs), col("query_id"))
     // broadcast the CANDIDATE side: the vectors side is the corpus, and the
     // fixture-tiny vectors scan's static size would invert the join at scale
     val rescored = broadcast(k1set)
-      .join(Index.liveVectors(spark, indexDir).select(col("vec_id"), col("embedding")), "vec_id")
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"), col("collisions"),
-        VectorExpressions.l2(queryVec, col("embedding")).as("dist"))
+      .join(vectors.select(col("vec_id"), col("embedding")), "vec_id")
+      .select(col("query_id") +: col("vec_id").as("neighbor_id") +: carried :+
+        VectorExpressions.l2(queryVec, col("embedding")).as("dist"): _*)
     val byDist = Seq(col("dist").asc, col("neighbor_id").asc)
-    // Once duplicate copies are collapsed there are at most |Q|·k1 rescored
-    // rows, so this limit keeps them all: it only gathers them, ordered, into
-    // one partition inside the result job (a local top-k per scan partition),
-    // with no exchange stage or sample job of its own.
-    (if (appended) rescored.dropDuplicates("query_id", "neighbor_id") else rescored)
+    // At most |Q|·k1 rescored rows (see the [[Knn]] scaladoc), so this limit
+    // keeps them all: it only gathers them, ordered, into one partition
+    // inside the result job (a local top-k per scan partition), with no
+    // exchange stage or sample job of its own.
+    (if (dedupe) rescored.dropDuplicates("query_id", "neighbor_id") else rescored)
       .orderBy(col("query_id") +: byDist: _*)
       .limit(math.multiplyExact(queryVecs.size, k1))
       .withColumn("rank", row_number().over(Window.partitionBy(col("query_id")).orderBy(byDist: _*)))
       .filter(col("rank") <= k2)
-      .select(
-        col("query_id"), col("neighbor_id"), col("rank"),
-        col("collisions"), Det.display(col("dist"), 4).as("dist4"))
+      .select(col("query_id") +: col("neighbor_id") +: col("rank") +: carried :+
+        Det.display(col("dist"), 4).as("dist4"): _*)
       .orderBy(col("query_id"), col("rank"))
   }
 
   /** A7: search by stored id — the query side is a filter on the indexed
     * table itself (precomputed hashes, no re-hash), then A5→A6.
-    *
-    * `broadcastQueries` (default true) hints the query posting list / query
-    * vectors for broadcast — correct for the point-lookup gates (≤ a few
-    * hundred queries). For a LARGE query batch pass false: the hint would
-    * force a multi-GB broadcast, and size-based selection + AQE should pick
-    * the shuffle plan instead.
     */
   def lshSearch(
       spark: SparkSession,
@@ -326,9 +345,7 @@ object Knn {
       queries: DataFrame,
       k1: Int,
       k2: Int,
-      probeBits: Int = 0,
-      broadcastQueries: Boolean = true): DataFrame = {
-    def hintQ(df: DataFrame): DataFrame = if (broadcastQueries) broadcast(df) else df
+      probeBits: Int = 0): DataFrame = {
     // Posting lists: (id, tbl, hash) both sides; query side is small → broadcast.
     val posts = Lsh.explodeHashes(hashed)
     val qexact = Lsh.explodeHashes(
@@ -339,7 +356,7 @@ object Knn {
 
     // A5: collision counting — equi-join on (tbl, hash), count per pair.
     val collisions = posts
-      .join(hintQ(qposts), Seq("tbl", "hash"))
+      .join(broadcast(qposts), Seq("tbl", "hash"))
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(count(lit(1)).as("collisions"))
@@ -356,7 +373,7 @@ object Knn {
     val qvecs = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val rescored = k1set
       .join(vecs, "vec_id")
-      .join(hintQ(qvecs), "query_id")
+      .join(broadcast(qvecs), "query_id")
       .select(
         col("query_id"), col("vec_id").as("neighbor_id"), col("collisions"),
         VectorExpressions.l2(col("qv"), col("embedding")).as("dist"))

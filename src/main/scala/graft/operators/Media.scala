@@ -266,13 +266,12 @@ object Media {
     // holding 51 s of verify CPU over a 794 KB exchange
     // (plans/r15/q161_stage_metrics_{before,after}.txt). The join needs
     // this hash partitioning anyway, so the pin adds no exchange.
-    val nPart = Skew.shufflePartitions(sig.sparkSession)
-    val bands = sig.select(
+    val bands = Skew.spread(sig.select(
       col("media_id"), col("ph"),
       posexplode(expr(
         s"transform(sequence(0, ${nBands - 1}), b -> shiftrightunsigned(ph, b * $bandBits) & $mask)"
-      )).as(Seq("band", "chunk")))
-      .repartition(nPart, col("band"), col("chunk"))
+      )).as(Seq("band", "chunk"))),
+      col("band"), col("chunk"))
     // Hamming verify BEFORE the distinct: bit_count is a per-row codegen op
     // while distinct is an exchange, so filtering first shrinks the
     // deduplicating shuffle from every band collision (~1/256 of random

@@ -211,15 +211,15 @@ object Pq {
     emb.select(col("vec_id"), VectorExpressions.pqEncode(col("embedding"), model).as("codes"))
 
   /** Query-side state shared by every PQ search path: collected query rows,
-    * their ADC tables, and the two small broadcast relations. One definition
-    * so the tie-breaks and rounding that PqSpec's parity tests pin can never
-    * drift between the flat, persisted, and IVF-PQ paths.
+    * their ADC tables, the query-id relation the ADC scan cross-joins, and
+    * the query_id → vector map the exact re-rank ([[Knn.rerank]]) reads.
+    * One definition so the flat, persisted, and IVF-PQ paths cannot drift.
     */
   private[operators] case class QuerySide(
       rows: Array[org.apache.spark.sql.Row],
       adcTables: AdcTables,
       queries: DataFrame,
-      qvecs: DataFrame)
+      qvecs: Map[Long, Seq[Float]])
 
   private def querySide(
       spark: SparkSession,
@@ -235,11 +235,11 @@ object Pq {
       qRows,
       AdcTables(model, luts),
       qRows.map(_.getLong(0)).toSeq.toDF("query_id"),
-      qRows.toSeq.map(r => (r.getLong(0), r.getSeq[Float](1))).toDF("query_id", "qv"))
+      qRows.map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap)
   }
 
   /** Phase 1: ADC-score a (query_id, vec_id, codes) frame, keep top-k1 per
-    * query (ties by vec_id).
+    * query (ties by vec_id). Phase 2 is [[Knn.rerank]].
     */
   private def adcTopK1(paired: DataFrame, q: QuerySide, k1: Int): DataFrame = {
     val wK1 = Window.partitionBy(col("query_id"))
@@ -250,33 +250,7 @@ object Pq {
         VectorExpressions.adc(col("query_id"), col("codes"), q.adcTables).as("approx_dist"))
       .withColumn("r1", row_number().over(wK1))
       .filter(col("r1") <= k1)
-  }
-
-  /** Phase 2: exact re-rank of the k1 candidates — only these rows ever read
-    * a real embedding. Output shape matches the other ANN gates.
-    */
-  private def rerank(candidates: DataFrame, emb: DataFrame, qvecs: DataFrame, k2: Int): DataFrame = {
-    val wK2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id").asc)
-    // broadcast the CANDIDATE side (r14): it is |Q|·k1 rows BY CONTRACT (the
-    // k1 window just cut it), while `emb` is the CORPUS — unhinted, Catalyst
-    // compared the fixture-tiny vectors scan against the candidates'
-    // post-window estimate and broadcast the corpus (BuildRight over the
-    // full embeddings FileScan in the executed plan), which inverts at
-    // scale. The LSH search core ([[Knn.searchIndex]]) broadcasts its k1
-    // set the same way; it also carries its query vectors as a literal map
-    // and runs the post-count tail in one partition, which this path has
-    // not adopted (its `qvecs` stays a broadcast relation).
-    broadcast(candidates)
-      .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(broadcast(qvecs), "query_id")
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"),
-        VectorExpressions.l2(col("qv"), col("embedding")).as("dist"))
-      .withColumn("rank", row_number().over(wK2))
-      .filter(col("rank") <= k2)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), Det.display(col("dist"), 4).as("dist4"))
-      .orderBy(col("query_id"), col("rank"))
+      .select(col("query_id"), col("vec_id"))
   }
 
   private def writePqModel(spark: SparkSession, model: PqModel, dir: String): Unit = {
@@ -305,7 +279,7 @@ object Pq {
     val q = querySide(spark, emb, model, queryMaxId)
     // ADC scan: |Q| passes over the CODE column only (queries broadcast).
     val candidates = adcTopK1(codes.crossJoin(broadcast(q.queries)), q, k1)
-    rerank(candidates, emb, q.qvecs, k2)
+    Knn.rerank(candidates, emb, q.qvecs, k1, k2, dedupe = false)
   }
 
   /** Persisted PQ index: `model/` (codebooks, one row) + `codes/`
@@ -397,7 +371,7 @@ object Pq {
     val emb = Tables.embeddings(spark, sfDir)
     val q = querySide(spark, emb, model, queryMaxId)
     val candidates = adcTopK1(codes.crossJoin(broadcast(q.queries)), q, k1)
-    rerank(candidates, emb, q.qvecs, k2)
+    Knn.rerank(candidates, emb, q.qvecs, k1, k2, dedupe = false)
   }
 
   /** The phase-1 ADC candidate scan in isolation (plan-inspection surface
@@ -496,7 +470,7 @@ object Pq {
     val codes = encodeSq(spark, emb, sq)
     val q = querySide(spark, emb, sq.asPqModel, queryMaxId)
     val candidates = adcTopK1(codes.crossJoin(broadcast(q.queries)), q, k1)
-    rerank(candidates, emb, q.qvecs, k2)
+    Knn.rerank(candidates, emb, q.qvecs, k1, k2, dedupe = false)
   }
 
   /** Persisted SQ8 index: `model/` (dim, mins, scales — one row) + `codes/`
@@ -579,7 +553,7 @@ object Pq {
     val emb = Tables.embeddings(spark, sfDir)
     val q = querySide(spark, emb, model.asPqModel, queryMaxId)
     val candidates = adcTopK1(liveSqCodes(spark, indexDir).crossJoin(broadcast(q.queries)), q, k1)
-    rerank(candidates, emb, q.qvecs, k2)
+    Knn.rerank(candidates, emb, q.qvecs, k1, k2, dedupe = false)
   }
 
   /** The SQ8 phase-1 scan in isolation (PlanSpec: ReadSchema must contain
@@ -712,7 +686,7 @@ object Pq {
       .filter(col("cell").isin(probes.map(_._2).distinct: _*))
     val probesDf = probes.toDF("query_id", "cell")
     val candidates = adcTopK1(codes.join(broadcast(probesDf), "cell"), q, k1)
-    rerank(candidates, emb, q.qvecs, k2)
+    Knn.rerank(candidates, emb, q.qvecs, k1, k2, dedupe = false)
   }
 
   // ------------------------------------------------------------------ BQ
@@ -799,23 +773,21 @@ object Pq {
       fitBq(Tables.embeddings(spark, sfDir)))
   }
 
-  /** Query-side codes + vectors for the BQ scan (both driver-bounded by
-    * queryMaxId, broadcast into the plan).
+  /** Query-side codes (broadcast into the Hamming scan) + the query_id →
+    * vector map for the re-rank, both driver-bounded by queryMaxId.
     */
   private def bqQuerySide(
       spark: SparkSession,
       emb: DataFrame,
       model: BqModel,
-      queryMaxId: Long): (DataFrame, DataFrame) = {
+      queryMaxId: Long): (DataFrame, Map[Long, Seq[Float]]) = {
     import spark.implicits._
     val qRows = emb.filter(col("vec_id") < queryMaxId)
       .select(col("vec_id"), col("embedding")).collect()
     val qcodes = qRows.toSeq
       .map(r => (r.getLong(0), model.encodeSeq(r.getSeq[Float](1))))
       .toDF("query_id", "qcode")
-    val qvecs = qRows.toSeq.map(r => (r.getLong(0), r.getSeq[Float](1)))
-      .toDF("query_id", "qv")
-    (qcodes, qvecs)
+    (qcodes, qRows.map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap)
   }
 
   /** Phase 1: Hamming-score a (query_id, vec_id, code) frame, keep top-k1
@@ -831,6 +803,7 @@ object Pq {
         bit_count(col("code").bitwiseXOR(col("qcode"))).as("ham"))
       .withColumn("r1", row_number().over(wK1))
       .filter(col("r1") <= k1)
+      .select(col("query_id"), col("vec_id"))
   }
 
   /** q155 — BQ ANN (no SQL oracle — quantization-dependent; pinned by
@@ -849,7 +822,7 @@ object Pq {
     val codes = encodeBq(spark, emb, model)
     val (qcodes, qvecs) = bqQuerySide(spark, emb, model, queryMaxId)
     val candidates = hammingTopK1(codes.crossJoin(broadcast(qcodes)), k1)
-    rerank(candidates, emb, qvecs, k2)
+    Knn.rerank(candidates, emb, qvecs, k1, k2, dedupe = false)
   }
 
   /** Persisted BQ index: `model/` (dim, thr6 — one row) + `codes/`
@@ -934,7 +907,7 @@ object Pq {
     val (qcodes, qvecs) = bqQuerySide(spark, emb, model, queryMaxId)
     val candidates = hammingTopK1(
       liveBqCodes(spark, indexDir).crossJoin(broadcast(qcodes)), k1)
-    rerank(candidates, emb, qvecs, k2)
+    Knn.rerank(candidates, emb, qvecs, k1, k2, dedupe = false)
   }
 
   /** The BQ phase-1 scan in isolation (PlanSpec: ReadSchema must contain

@@ -18,12 +18,24 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  /** `spark.sql.shuffle.partitions`, the width the CPU-bound banding
-    * exchanges pin to (exempt from AQE's byte-based coalescing). Parsed as
-    * Spark parses it; a malformed value fails naming the key and the value.
+  /** `spark.sql.shuffle.partitions`, the width [[spread]] pins to. Parsed
+    * as Spark parses it; a malformed value fails naming the key and the
+    * value.
     */
   def shufflePartitions(spark: SparkSession): Int =
     partitionCount(spark.conf.get(ShufflePartitions))
+
+  /** Spread a CPU-bound stage over `spark.sql.shuffle.partitions` tasks:
+    * `repartition(n, cols*)` (hash by `cols`, round-robin without), a
+    * REPARTITION_BY_NUM exchange that AQE's partition coalescing leaves
+    * alone. AQE sizes post-shuffle partitions by bytes, but the stages
+    * this feeds (banding self-joins, unit-fanout verify) cost CPU on few
+    * bytes, so coalescing would collapse them onto one task. The one
+    * spread policy of the engine; the shuffle-partition setting is the one
+    * width a deployment sizes.
+    */
+  def spread(df: DataFrame, cols: Column*): DataFrame =
+    df.repartition(shufflePartitions(df.sparkSession), cols: _*)
 
   val ShufflePartitions = "spark.sql.shuffle.partitions"
 

@@ -782,8 +782,8 @@ object Text {
     * the LSH pair-mining self-join shared by the banding detectors.
     *
     * `spread = true` (corpus-scale callers) pins the self-join's exchange
-    * to the session's shuffle-partition count (`repartition(n, band, bh)`
-    * — REPARTITION_BY_NUM, which AQE partition coalescing must respect):
+    * to the session's shuffle-partition count ([[Skew.spread]] on (band,
+    * bh) — REPARTITION_BY_NUM, which AQE partition coalescing must respect):
     * AQE sizes post-shuffle partitions by BYTES, but this join's cost is
     * pair-generation CPU (quadratic in bucket occupancy), so byte-blind
     * coalescing collapses the whole mining pass onto one task — measured
@@ -799,11 +799,7 @@ object Text {
     */
   private[graft] def bandCandidatePairs(
       bands: DataFrame, spread: Boolean): DataFrame = {
-    val mined =
-      if (spread) {
-        val n = Skew.shufflePartitions(bands.sparkSession)
-        bands.repartition(n, col("band"), col("bh"))
-      } else bands
+    val mined = if (spread) Skew.spread(bands, col("band"), col("bh")) else bands
     mined.as("x")
       .join(mined.as("y"),
         col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
@@ -844,9 +840,7 @@ object Text {
     // pair rows (§8's lightweight proxy), once.
     val cands =
       if (pinned)
-        Materialize.stable(
-          candsRaw.repartition(docs.sparkSession.sparkContext.defaultParallelism),
-          eager = true)
+        Materialize.stable(Skew.spread(candsRaw), eager = true)
       else candsRaw
     // Verification reads ONLY candidate documents' units: semi-join the RAW
     // doc frame down to candidate ids FIRST, then build + explode the unit
@@ -3181,8 +3175,7 @@ object Text {
     // holding 4.8 s of CPU while 31 cores idled
     // (plans/r15/q109_stage_metrics_{before,after}.txt). The exchange
     // moves pair metadata only, negligible at every scale.
-    val common = cands
-      .repartition(spark.sparkContext.defaultParallelism)
+    val common = Skew.spread(cands)
       .join(batchTok.select(col("doc_id").as("i"), col("t")), "i")
       .join(jTok.select(col("jd").as("j"), col("t")), Seq("j", "t"))
       .groupBy(col("i"), col("j"))

@@ -5,7 +5,9 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.graft.TestBus
 
-import graft.operators.{Index, Knn}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.operators.{Index, Knn, Pq}
 
 /** Job budget of an indexed kNN search: the query side rides the plan as
   * literals and everything after the collision count sits in one
@@ -68,5 +70,28 @@ class KnnJobsSpec extends SparkSpec {
       Knn.searchIndex(spark, idx, queryMaxId = 4, 100, 10, multiprobe = true).collect())
     info(s"jobs: $jobs")
     assert(jobs <= 1 + ActionJobs, s"multiprobe search ran $jobs jobs")
+  }
+
+  /** Action jobs of an indexed quantized search, measured on this fixture:
+    * the query-id broadcast into the code scan, the k1 window's exchange,
+    * the k1 broadcast into the vectors join and the result job. Before the
+    * shared tail it was eight here: a query-vector broadcast, the k2
+    * window's exchange, and the final sort's sample job and range exchange.
+    */
+  val QuantizedActionJobs = 4
+
+  Seq[(String, (SparkSession, String) => DataFrame)](
+    "PQ" -> ((s, d) => Pq.annPqIndexed(s, d)),
+    "SQ8" -> ((s, d) => Pq.annSq8Indexed(s, d)),
+    "BQ" -> ((s, d) => Pq.annBqIndexed(s, d))).foreach { case (family, search) =>
+    test(s"indexed $family search: the shared re-rank tail keeps the action within budget") {
+      // the first call builds the index and memoizes its model and relations
+      search(spark, sf0001).collect()
+      val df = search(spark, sf0001)
+      val (rows, actionJobs) = jobsDuring(df.collect())
+      assert(rows.map(_.getLong(0)).distinct.length == 8)
+      info(s"action jobs: $actionJobs")
+      assert(actionJobs <= QuantizedActionJobs, s"$family search ran $actionJobs action jobs")
+    }
   }
 }

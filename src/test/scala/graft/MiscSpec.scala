@@ -103,6 +103,23 @@ class MiscSpec extends SparkSpec {
     }
   }
 
+  test("spread: spark.sql.shuffle.partitions tasks under a REPARTITION_BY_NUM exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike}
+    object Plan extends AdaptiveSparkPlanHelper
+    val prev = spark.conf.get(Skew.ShufflePartitions)
+    spark.conf.set(Skew.ShufflePartitions, "3")
+    // hashed by a key and round-robin; AQE would coalesce either exchange of
+    // these few bytes to one partition were it not pinned
+    try Seq(Seq(col("id")), Nil).foreach { cols =>
+      val df = Skew.spread(spark.range(1000).toDF("id"), cols: _*)
+      assert(df.collect().map(_.getLong(0)).sorted.toSeq == (0L until 1000L))
+      val exchanges = Plan.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeLike => e }
+      assert(exchanges.map(e => (e.shuffleOrigin, e.numPartitions)) == Seq((REPARTITION_BY_NUM, 3)))
+      assert(df.queryExecution.toRdd.getNumPartitions == 3)
+    } finally spark.conf.set(Skew.ShufflePartitions, prev)
+  }
+
   test("batch allocation: monotonic, and an existing marker is never reused") {
     val dir = java.nio.file.Files.createTempDirectory("graft-alloc").toString
     val fs = graft.operators.Lifecycle.fsOf(spark, dir)

@@ -148,7 +148,7 @@ class PlanSpec extends SparkSpec {
 
   test("quantized-ANN rerank broadcasts candidates, never the vector table (r14 lock)") {
     // The flat + indexed paths of all three quantizer families share
-    // Pq.rerank; one gate per shape keeps the lock cheap.
+    // Knn.rerank; one gate per shape keeps the lock cheap.
     Seq("q90_sq8_ann", "q71_pq_ann_indexed", "q155_bq_ann").foreach { q =>
       val paths = broadcastScanPaths(SparkEntry.queries(q)(spark, sf001))
       assert(!paths.exists(_.contains("embeddings")),
