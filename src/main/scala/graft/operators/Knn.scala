@@ -31,7 +31,10 @@ import org.apache.spark.sql.graft.VectorExpressions
   * share. Its ordered limit of |Q|·k1 rows drops nothing: the k1 window
   * leaves at most k1 candidates per query, and each joins at most one
   * vectors row, since vec_id is the key of the vectors frame (an appended
-  * layout's duplicate copies are collapsed first). This is the
+  * layout's duplicate copies are collapsed first). Every stored-query
+  * vector search carries its query side into the plan as literals like
+  * this, never as a broadcast relation (the quantized and indexed IVF
+  * searches derive theirs from [[queryVectors]]). This is the
   * collision-counting LSH similarity join (PAPERS.md C2Net) expressed with
   * stock relational operators so Catalyst handles pushdown and join
   * selection.
@@ -296,6 +299,21 @@ object Knn {
     rerank(k1set, Index.liveVectors(spark, indexDir), queryVecs, k1, k2, dedupe = appended)
   }
 
+  /** The query side of the stored-query searches in [[Pq]] and
+    * [[Vectors.annIvfIndexed]]: one pushed-filter collect of the query docs'
+    * vectors, query_id → vector. Their ADC tables, BQ query codes and IVF
+    * cell probes are all derived from this map, and it rides their plans
+    * as literals ([[queryVec]]), never as a relation.
+    */
+  private[operators] def queryVectors(vectors: DataFrame, queryMaxId: Long): Map[Long, Seq[Float]] =
+    vectors.filter(col("vec_id") < queryMaxId)
+      .select(col("vec_id"), col("embedding")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+
+  /** Each row's query vector, read from the literal query_id → vector map. */
+  private[operators] def queryVec(queryVecs: Map[Long, Seq[Float]]): Column =
+    element_at(typedLit(queryVecs), col("query_id"))
+
   /** The exact re-rank tail (A6) of every two-phase vector search — the
     * indexed LSH core above and the seven quantized searches in [[Pq]]:
     * the `k1set` of (query_id, vec_id) candidates is broadcast into the
@@ -314,13 +332,12 @@ object Knn {
       k2: Int,
       dedupe: Boolean): DataFrame = {
     val carried = k1set.columns.toSeq.filterNot(Set("query_id", "vec_id")).map(col)
-    val queryVec = element_at(typedLit(queryVecs), col("query_id"))
     // broadcast the CANDIDATE side: the vectors side is the corpus, and the
     // fixture-tiny vectors scan's static size would invert the join at scale
     val rescored = broadcast(k1set)
       .join(vectors.select(col("vec_id"), col("embedding")), "vec_id")
       .select(col("query_id") +: col("vec_id").as("neighbor_id") +: carried :+
-        VectorExpressions.l2(queryVec, col("embedding")).as("dist"): _*)
+        VectorExpressions.l2(queryVec(queryVecs), col("embedding")).as("dist"): _*)
     val byDist = Seq(col("dist").asc, col("neighbor_id").asc)
     // At most |Q|·k1 rescored rows (see the [[Knn]] scaladoc), so this limit
     // keeps them all: it only gathers them, ordered, into one partition

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,10 +18,15 @@ import org.apache.spark.sql.graft.VectorExpressions
   *
   *   1. ADC scan: per query, precompute an M×K lookup table of squared L2
   *      distances between the query's subvectors and every codebook entry
-  *      (M·K·subdim flops, driver-side, broadcast); the approximate distance
-  *      of a corpus vector is then M table lookups + adds over its CODES —
-  *      the full float vector is never touched. Top-k1 candidates per query.
+  *      (M·K·subdim flops, driver-side, riding the plan as the [[AdcTables]]
+  *      reference object); the approximate distance of a corpus vector is
+  *      then M table lookups + adds over its CODES — the full float vector
+  *      is never touched. Top-k1 candidates per query.
   *   2. Exact re-rank: true L2 on the k1 candidates only, top-k2.
+  *
+  * Every search here carries its query side as plan literals (see [[Knn]]):
+  * each code row explodes a literal array of query ids, and one candidate
+  * phase ([[search]]) serves PQ, SQ8, BQ and IVF-PQ alike.
   *
   * Scale notes (100 TB): encoding is a narrow map over a broadcast codebook
   * (like [[Lsh.withHashes]]); the ADC scan reads only the 8-byte code column
@@ -29,8 +34,8 @@ import org.apache.spark.sql.graft.VectorExpressions
   * 32×, which is the entire point at 100 TB); candidate selection is the
   * standard window top-k with WindowGroupLimit pushdown; only k1 rows per
   * query ever read a real vector. Composes with IVF (classic IVF-PQ: coarse
-  * cells prune the scan, PQ codes shrink what remains) — the cell layout in
-  * [[Vectors.buildIvfIndex]] would simply store codes instead of embeddings.
+  * cells prune the scan, PQ codes shrink what remains) — [[annIvfPq]] (q72)
+  * stores codes in the cell-partitioned layout of [[Vectors.buildIvfIndex]].
   *
   * Training is deterministic: per-subspace Lloyd k-means on the first
   * `sampleN` vectors by id, seeded by the first K sample subvectors, fixed
@@ -210,47 +215,57 @@ object Pq {
   def encode(spark: SparkSession, emb: DataFrame, model: PqModel): DataFrame =
     emb.select(col("vec_id"), VectorExpressions.pqEncode(col("embedding"), model).as("codes"))
 
-  /** Query-side state shared by every PQ search path: collected query rows,
-    * their ADC tables, the query-id relation the ADC scan cross-joins, and
-    * the query_id → vector map the exact re-rank ([[Knn.rerank]]) reads.
-    * One definition so the flat, persisted, and IVF-PQ paths cannot drift.
+  /** Phase-1 pairing of every quantized search: each code row gets a
+    * `query_id` per element of `queryIds`, an array column over literals —
+    * all |Q| ids ([[everyQuery]]), or for IVF-PQ the ids of the queries
+    * probing the row's cell. The query side rides the plan (see [[Knn]]);
+    * no query relation is joined in.
     */
-  private[operators] case class QuerySide(
-      rows: Array[org.apache.spark.sql.Row],
-      adcTables: AdcTables,
-      queries: DataFrame,
-      qvecs: Map[Long, Seq[Float]])
+  private def paired(codes: DataFrame, queryIds: Column): DataFrame =
+    codes.withColumn("query_id", explode(queryIds))
 
-  private def querySide(
-      spark: SparkSession,
-      emb: DataFrame,
-      model: PqModel,
-      queryMaxId: Long): QuerySide = {
-    import spark.implicits._
-    val qRows = emb.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id"), col("embedding")).collect()
-    val luts: Map[Long, Array[Array[Double]]] =
-      qRows.map(r => r.getLong(0) -> model.lut(r.getSeq[Float](1).toArray)).toMap
-    QuerySide(
-      qRows,
-      AdcTables(model, luts),
-      qRows.map(_.getLong(0)).toSeq.toDF("query_id"),
-      qRows.map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap)
+  private def everyQuery(qvecs: Map[Long, Seq[Float]]): Column =
+    typedLit(qvecs.keys.toSeq.sorted)
+
+  /** ADC distance of a paired row's `codes` to its query, through the
+    * per-query lookup tables ([[AdcTables]]) derived from `qvecs`.
+    */
+  private def adcDist(model: PqModel, qvecs: Map[Long, Seq[Float]]): Column =
+    VectorExpressions.adc(col("query_id"), col("codes"),
+      AdcTables(model, qvecs.map { case (qid, v) => qid -> model.lut(v.toArray) }))
+
+  /** Hamming distance of a paired row's BQ `code` to its query's code, read
+    * from a literal query_id → code map. `bit_count(xor)` is a codegen'd
+    * integer intrinsic — the cheapest approximate-distance scan the engine
+    * has.
+    */
+  private def hammingDist(model: BqModel, qvecs: Map[Long, Seq[Float]]): Column = {
+    val qcodes = qvecs.map { case (qid, v) => qid -> model.encodeSeq(v) }
+    bit_count(col("code").bitwiseXOR(element_at(typedLit(qcodes), col("query_id"))))
   }
 
-  /** Phase 1: ADC-score a (query_id, vec_id, codes) frame, keep top-k1 per
-    * query (ties by vec_id). Phase 2 is [[Knn.rerank]].
+  /** Phase 1 scan: (query_id, vec_id, `name`) for every pair. */
+  private def scan(pairs: DataFrame, dist: Column, name: String): DataFrame =
+    pairs.select(col("query_id"), col("vec_id"), dist.as(name))
+
+  /** The candidate phase of all seven quantized searches: score the
+    * `pairs` by `dist`, drop self-matches, keep the top-k1 per query by
+    * (dist, vec_id), then exact re-rank in [[Knn.rerank]].
     */
-  private def adcTopK1(paired: DataFrame, q: QuerySide, k1: Int): DataFrame = {
+  private def search(
+      pairs: DataFrame,
+      dist: Column,
+      emb: DataFrame,
+      qvecs: Map[Long, Seq[Float]],
+      k1: Int,
+      k2: Int): DataFrame = {
     val wK1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_dist").asc, col("vec_id").asc)
-    paired
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        VectorExpressions.adc(col("query_id"), col("codes"), q.adcTables).as("approx_dist"))
+      .orderBy(col("dist").asc, col("vec_id").asc)
+    val k1set = scan(pairs.filter(col("vec_id") =!= col("query_id")), dist, "dist")
       .withColumn("r1", row_number().over(wK1))
       .filter(col("r1") <= k1)
       .select(col("query_id"), col("vec_id"))
+    Knn.rerank(k1set, emb, qvecs, k1, k2, dedupe = false)
   }
 
   private def writePqModel(spark: SparkSession, model: PqModel, dir: String): Unit = {
@@ -275,11 +290,10 @@ object Pq {
       k: Int = 16): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
     val model = fit(emb, m, k)
-    val codes = encode(spark, emb, model)
-    val q = querySide(spark, emb, model, queryMaxId)
-    // ADC scan: |Q| passes over the CODE column only (queries broadcast).
-    val candidates = adcTopK1(codes.crossJoin(broadcast(q.queries)), q, k1)
-    Knn.rerank(candidates, emb, q.qvecs, k1, k2, dedupe = false)
+    val qvecs = Knn.queryVectors(emb, queryMaxId)
+    // ADC scan: |Q| passes over the CODE column only
+    search(paired(encode(spark, emb, model), everyQuery(qvecs)), adcDist(model, qvecs),
+      emb, qvecs, k1, k2)
   }
 
   /** Persisted PQ index: `model/` (codebooks, one row) + `codes/`
@@ -367,24 +381,21 @@ object Pq {
       k: Int = 16): DataFrame = {
     val indexDir = ensurePqIndex(spark, sfDir, m, k)
     val model = loadPqModel(spark, s"$indexDir/model")
-    val codes = liveCodes(spark, indexDir)
     val emb = Tables.embeddings(spark, sfDir)
-    val q = querySide(spark, emb, model, queryMaxId)
-    val candidates = adcTopK1(codes.crossJoin(broadcast(q.queries)), q, k1)
-    Knn.rerank(candidates, emb, q.qvecs, k1, k2, dedupe = false)
+    val qvecs = Knn.queryVectors(emb, queryMaxId)
+    search(paired(liveCodes(spark, indexDir), everyQuery(qvecs)), adcDist(model, qvecs),
+      emb, qvecs, k1, k2)
   }
 
-  /** The phase-1 ADC candidate scan in isolation (plan-inspection surface
-    * for PlanSpec: its ReadSchema must contain codes and never embedding).
+  /** The phase-1 ADC scan of [[annPqIndexed]], before the self-match filter
+    * and the k1 cut (plan-inspection surface for PlanSpec: its ReadSchema
+    * must contain codes and never embedding).
     */
   def adcScanPlan(spark: SparkSession, sfDir: String, queryMaxId: Long = 8): DataFrame = {
     val indexDir = ensurePqIndex(spark, sfDir)
-    val model = loadPqModel(spark, s"$indexDir/model")
-    val codes = liveCodes(spark, indexDir)
-    val q = querySide(spark, Tables.embeddings(spark, sfDir), model, queryMaxId)
-    codes.crossJoin(broadcast(q.queries))
-      .select(col("query_id"), col("vec_id"),
-        VectorExpressions.adc(col("query_id"), col("codes"), q.adcTables).as("approx_dist"))
+    val qvecs = Knn.queryVectors(Tables.embeddings(spark, sfDir), queryMaxId)
+    scan(paired(liveCodes(spark, indexDir), everyQuery(qvecs)),
+      adcDist(loadPqModel(spark, s"$indexDir/model"), qvecs), "approx_dist")
   }
 
   /** Scalar quantization (SQ8): each float32 dimension quantized to one byte
@@ -467,10 +478,9 @@ object Pq {
       k2: Int = 10): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
     val sq = fitSq(emb)
-    val codes = encodeSq(spark, emb, sq)
-    val q = querySide(spark, emb, sq.asPqModel, queryMaxId)
-    val candidates = adcTopK1(codes.crossJoin(broadcast(q.queries)), q, k1)
-    Knn.rerank(candidates, emb, q.qvecs, k1, k2, dedupe = false)
+    val qvecs = Knn.queryVectors(emb, queryMaxId)
+    search(paired(encodeSq(spark, emb, sq), everyQuery(qvecs)), adcDist(sq.asPqModel, qvecs),
+      emb, qvecs, k1, k2)
   }
 
   /** Persisted SQ8 index: `model/` (dim, mins, scales — one row) + `codes/`
@@ -551,21 +561,20 @@ object Pq {
     val indexDir = ensureSqIndex(spark, sfDir)
     val model = loadSqModel(spark, s"$indexDir/model")
     val emb = Tables.embeddings(spark, sfDir)
-    val q = querySide(spark, emb, model.asPqModel, queryMaxId)
-    val candidates = adcTopK1(liveSqCodes(spark, indexDir).crossJoin(broadcast(q.queries)), q, k1)
-    Knn.rerank(candidates, emb, q.qvecs, k1, k2, dedupe = false)
+    val qvecs = Knn.queryVectors(emb, queryMaxId)
+    search(paired(liveSqCodes(spark, indexDir), everyQuery(qvecs)),
+      adcDist(model.asPqModel, qvecs), emb, qvecs, k1, k2)
   }
 
-  /** The SQ8 phase-1 scan in isolation (PlanSpec: ReadSchema must contain
-    * codes and never embedding — the 4× working-set reduction is the point).
+  /** The phase-1 scan of [[annSq8Indexed]], before the self-match filter
+    * and the k1 cut (PlanSpec: ReadSchema must contain codes and never
+    * embedding — the 4× working-set reduction is the point).
     */
   def sqScanPlan(spark: SparkSession, sfDir: String, queryMaxId: Long = 8): DataFrame = {
     val indexDir = ensureSqIndex(spark, sfDir)
-    val model = loadSqModel(spark, s"$indexDir/model")
-    val q = querySide(spark, Tables.embeddings(spark, sfDir), model.asPqModel, queryMaxId)
-    liveSqCodes(spark, indexDir).crossJoin(broadcast(q.queries))
-      .select(col("query_id"), col("vec_id"),
-        VectorExpressions.adc(col("query_id"), col("codes"), q.adcTables).as("approx_dist"))
+    val qvecs = Knn.queryVectors(Tables.embeddings(spark, sfDir), queryMaxId)
+    scan(paired(liveSqCodes(spark, indexDir), everyQuery(qvecs)),
+      adcDist(loadSqModel(spark, s"$indexDir/model").asPqModel, qvecs), "approx_dist")
   }
 
   /** Persisted IVF-PQ index: the classic composition (Jégou et al. §IVFADC)
@@ -670,23 +679,17 @@ object Pq {
       nprobe: Int = 4,
       m: Int = 8,
       k: Int = 16): DataFrame = {
-    import spark.implicits._
     val indexDir = ensureIvfPqIndex(spark, sfDir, cells, m, k)
-    val cents = Vectors.loadCentroids(spark, s"$indexDir/centroids")
     val model = loadPqModel(spark, s"$indexDir/model")
     val emb = Tables.embeddings(spark, sfDir)
-    val q = querySide(spark, emb, model, queryMaxId)
-
-    // (query, cell) probes — driver-computed over the broadcast-small coarse
-    // quantizer, exactly like annIvfIndexed.
-    val probes = q.rows.toSeq.flatMap { r =>
-      cents.nearestArray(r.getSeq[Float](1).toArray, nprobe).map(c => (r.getLong(0), c))
-    }
+    val qvecs = Knn.queryVectors(emb, queryMaxId)
+    // cell → probing queries, driver-computed over the broadcast-small
+    // coarse quantizer exactly like annIvfIndexed
+    val byCell = Vectors.loadCentroids(spark, s"$indexDir/centroids").probesByCell(qvecs, nprobe)
     val codes = liveCellCodes(spark, indexDir)
-      .filter(col("cell").isin(probes.map(_._2).distinct: _*))
-    val probesDf = probes.toDF("query_id", "cell")
-    val candidates = adcTopK1(codes.join(broadcast(probesDf), "cell"), q, k1)
-    Knn.rerank(candidates, emb, q.qvecs, k1, k2, dedupe = false)
+      .filter(col("cell").isin(byCell.keys.toSeq.sorted: _*))
+    search(paired(codes, element_at(typedLit(byCell), col("cell"))), adcDist(model, qvecs),
+      emb, qvecs, k1, k2)
   }
 
   // ------------------------------------------------------------------ BQ
@@ -773,39 +776,6 @@ object Pq {
       fitBq(Tables.embeddings(spark, sfDir)))
   }
 
-  /** Query-side codes (broadcast into the Hamming scan) + the query_id →
-    * vector map for the re-rank, both driver-bounded by queryMaxId.
-    */
-  private def bqQuerySide(
-      spark: SparkSession,
-      emb: DataFrame,
-      model: BqModel,
-      queryMaxId: Long): (DataFrame, Map[Long, Seq[Float]]) = {
-    import spark.implicits._
-    val qRows = emb.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id"), col("embedding")).collect()
-    val qcodes = qRows.toSeq
-      .map(r => (r.getLong(0), model.encodeSeq(r.getSeq[Float](1))))
-      .toDF("query_id", "qcode")
-    (qcodes, qRows.map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap)
-  }
-
-  /** Phase 1: Hamming-score a (query_id, vec_id, code) frame, keep top-k1
-    * per query (ties by vec_id). `bit_count(xor)` is a codegen'd integer
-    * intrinsic — the cheapest approximate-distance scan the engine has.
-    */
-  private def hammingTopK1(paired: DataFrame, k1: Int): DataFrame = {
-    val wK1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("ham").asc, col("vec_id").asc)
-    paired
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        bit_count(col("code").bitwiseXOR(col("qcode"))).as("ham"))
-      .withColumn("r1", row_number().over(wK1))
-      .filter(col("r1") <= k1)
-      .select(col("query_id"), col("vec_id"))
-  }
-
   /** q155 — BQ ANN (no SQL oracle — quantization-dependent; pinned by
     * PqSpec full-rank-parity, recall-floor, and indexed≡inline tests):
     * Hamming scan over the 1-long-per-vector codes → top-k1 → exact
@@ -819,10 +789,9 @@ object Pq {
       k2: Int = 10): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
     val model = bqModelCached(spark, sfDir)
-    val codes = encodeBq(spark, emb, model)
-    val (qcodes, qvecs) = bqQuerySide(spark, emb, model, queryMaxId)
-    val candidates = hammingTopK1(codes.crossJoin(broadcast(qcodes)), k1)
-    Knn.rerank(candidates, emb, qvecs, k1, k2, dedupe = false)
+    val qvecs = Knn.queryVectors(emb, queryMaxId)
+    search(paired(encodeBq(spark, emb, model), everyQuery(qvecs)), hammingDist(model, qvecs),
+      emb, qvecs, k1, k2)
   }
 
   /** Persisted BQ index: `model/` (dim, thr6 — one row) + `codes/`
@@ -904,23 +873,20 @@ object Pq {
     val indexDir = ensureBqIndex(spark, sfDir)
     val model = loadBqModel(spark, s"$indexDir/model")
     val emb = Tables.embeddings(spark, sfDir)
-    val (qcodes, qvecs) = bqQuerySide(spark, emb, model, queryMaxId)
-    val candidates = hammingTopK1(
-      liveBqCodes(spark, indexDir).crossJoin(broadcast(qcodes)), k1)
-    Knn.rerank(candidates, emb, qvecs, k1, k2, dedupe = false)
+    val qvecs = Knn.queryVectors(emb, queryMaxId)
+    search(paired(liveBqCodes(spark, indexDir), everyQuery(qvecs)), hammingDist(model, qvecs),
+      emb, qvecs, k1, k2)
   }
 
-  /** The BQ phase-1 scan in isolation (PlanSpec: ReadSchema must contain
-    * code and never embedding — the 32× working-set reduction is the
-    * point).
+  /** The phase-1 scan of [[annBqIndexed]], before the self-match filter
+    * and the k1 cut (PlanSpec: ReadSchema must contain code and never
+    * embedding — the 32× working-set reduction is the point).
     */
   def bqScanPlan(spark: SparkSession, sfDir: String, queryMaxId: Long = 8): DataFrame = {
     val indexDir = ensureBqIndex(spark, sfDir)
-    val model = loadBqModel(spark, s"$indexDir/model")
-    val (qcodes, _) = bqQuerySide(spark, Tables.embeddings(spark, sfDir), model, queryMaxId)
-    liveBqCodes(spark, indexDir).crossJoin(broadcast(qcodes))
-      .select(col("query_id"), col("vec_id"),
-        bit_count(col("code").bitwiseXOR(col("qcode"))).as("ham"))
+    val qvecs = Knn.queryVectors(Tables.embeddings(spark, sfDir), queryMaxId)
+    scan(paired(liveBqCodes(spark, indexDir), everyQuery(qvecs)),
+      hammingDist(loadBqModel(spark, s"$indexDir/model"), qvecs), "ham")
   }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

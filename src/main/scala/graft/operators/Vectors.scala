@@ -62,6 +62,14 @@ case class CentroidSet(ids: Array[Long], vecs: Array[Array[Float]]) {
     }
     out
   }
+
+  /** The IVF probes of a literal query side: cell → ids of the queries
+    * that have it among their `nprobe` nearest cells.
+    */
+  def probesByCell(queryVecs: Map[Long, Seq[Float]], nprobe: Int): Map[Long, Seq[Long]] =
+    queryVecs.toSeq.sortBy(_._1)
+      .flatMap { case (qid, v) => nearestArray(v.toArray, nprobe).map(_ -> qid) }
+      .groupMap(_._1)(_._2)
 }
 
 /** Embedding-column analytics beyond point-lookup kNN: per-label centroids
@@ -358,8 +366,11 @@ object Vectors {
     * quantizer is loaded (and memoizable) driver-side, each query's nprobe
     * cells are computed there (C is broadcast-small), and the candidate scan
     * reads ONLY the probed cell directories — PartitionFilters, asserted in
-    * PlanSpec. Results are identical to the inline [[annIvf]] (same seeded
-    * quantizer, same ranking) — asserted in VectorsSpec.
+    * PlanSpec. The query side rides the plan as literals, as in every
+    * stored-query search ([[Knn]]): each scanned row explodes the literal
+    * cell → query-ids map and reads its query vector from the query_id →
+    * vector map. Results are identical to the inline [[annIvf]] (same
+    * seeded quantizer, same ranking) — asserted in VectorsSpec.
     */
   def annIvfIndexed(
       spark: SparkSession,
@@ -368,33 +379,18 @@ object Vectors {
       k: Int = 10,
       cells: Int = 16,
       nprobe: Int = 4): DataFrame = {
-    import spark.implicits._
     val indexDir = ensureIvfIndex(spark, sfDir, cells)
-    val cents = loadCentroids(spark, s"$indexDir/centroids")
-    val qRows = Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id"), col("embedding")).collect()
-    // Cell ids stay Long end-to-end: they are seed vec_ids, which need not
-    // fit an Int. The read-back partition column is inference-typed (int for
-    // small ids), so cast it up to long for the prune + join.
-    val probes = qRows.toSeq.flatMap { r =>
-      val v = r.getSeq[Float](1).toArray
-      cents.nearestArray(v, nprobe).map(c => (r.getLong(0), c))
-    }
-    val qvecs = qRows.toSeq.map(r => (r.getLong(0), r.getSeq[Float](1)))
-      .toDF("query_id", "qv")
-    val probesDf = probes.toDF("query_id", "cell")
-    val candidates = liveCells(spark, indexDir)
-      .filter(col("cell").isin(probes.map(_._2).distinct: _*))
+    val qvecs = Knn.queryVectors(Tables.embeddings(spark, sfDir), queryMaxId)
+    val byCell = loadCentroids(spark, s"$indexDir/centroids").probesByCell(qvecs, nprobe)
     val wK = Window.partitionBy(col("query_id"))
       .orderBy(col("dist").asc, col("neighbor_id").asc)
-    candidates
-      .join(broadcast(probesDf), "cell")
+    liveCells(spark, indexDir)
+      .filter(col("cell").isin(byCell.keys.toSeq.sorted: _*))
+      .withColumn("query_id", explode(element_at(typedLit(byCell), col("cell"))))
       .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(qvecs), "query_id")
       .select(
         col("query_id"), col("vec_id").as("neighbor_id"),
-        VectorExpressions.l2(col("qv"), col("embedding")).as("dist"))
+        VectorExpressions.l2(Knn.queryVec(qvecs), col("embedding")).as("dist"))
       .withColumn("rank", row_number().over(wK))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"), Det.display(col("dist"), 4).as("dist4"))

@@ -7,7 +7,7 @@ import org.apache.spark.sql.graft.TestBus
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{Index, Knn, Pq}
+import graft.operators.{Index, Knn, Pq, Vectors}
 
 /** Job budget of an indexed kNN search: the query side rides the plan as
   * literals and everything after the collision count sits in one
@@ -73,25 +73,49 @@ class KnnJobsSpec extends SparkSpec {
   }
 
   /** Action jobs of an indexed quantized search, measured on this fixture:
-    * the query-id broadcast into the code scan, the k1 window's exchange,
-    * the k1 broadcast into the vectors join and the result job. Before the
-    * shared tail it was eight here: a query-vector broadcast, the k2
-    * window's exchange, and the final sort's sample job and range exchange.
+    * the k1 window's exchange, the k1 broadcast into the vectors join and
+    * the result job. The query side rides the code scan as a literal
+    * query-id array (IVF-PQ: a literal cell → query-ids map), so no query
+    * relation is broadcast. Before that it was four here, and eight before
+    * the shared re-rank tail: a query-vector broadcast, the k2 window's
+    * exchange, and the final sort's sample job and range exchange.
     */
-  val QuantizedActionJobs = 4
+  val QuantizedActionJobs = 3
 
   Seq[(String, (SparkSession, String) => DataFrame)](
     "PQ" -> ((s, d) => Pq.annPqIndexed(s, d)),
     "SQ8" -> ((s, d) => Pq.annSq8Indexed(s, d)),
-    "BQ" -> ((s, d) => Pq.annBqIndexed(s, d))).foreach { case (family, search) =>
+    "BQ" -> ((s, d) => Pq.annBqIndexed(s, d)),
+    "IVF-PQ" -> ((s, d) => Pq.annIvfPq(s, d))).foreach { case (family, search) =>
     test(s"indexed $family search: the shared re-rank tail keeps the action within budget") {
-      // the first call builds the index and memoizes its model and relations
-      search(spark, sf0001).collect()
-      val df = search(spark, sf0001)
-      val (rows, actionJobs) = jobsDuring(df.collect())
+      val (rows, actionJobs) = steadyActionJobs(search)
       assert(rows.map(_.getLong(0)).distinct.length == 8)
       info(s"action jobs: $actionJobs")
       assert(actionJobs <= QuantizedActionJobs, s"$family search ran $actionJobs action jobs")
     }
+  }
+
+  /** Action jobs of the indexed IVF search (q29), measured on this fixture:
+    * the top-k window's exchange, then the final sort's sample job, range
+    * exchange and result. Its probes and query vectors are literals; with
+    * them as broadcast relations it was six.
+    */
+  val IvfActionJobs = 4
+
+  test("indexed IVF search: the literal query side keeps the action within budget") {
+    val (rows, actionJobs) = steadyActionJobs((s, d) => Vectors.annIvfIndexed(s, d))
+    assert(rows.map(_.getLong(0)).distinct.length == 8)
+    info(s"action jobs: $actionJobs")
+    assert(actionJobs <= IvfActionJobs, s"IVF search ran $actionJobs action jobs")
+  }
+
+  /** Rows and action jobs of a search's second call: the first builds the
+    * index and memoizes its model and relations.
+    */
+  private def steadyActionJobs(
+      search: (SparkSession, String) => DataFrame): (Array[org.apache.spark.sql.Row], Int) = {
+    search(spark, sf0001).collect()
+    val df = search(spark, sf0001)
+    jobsDuring(df.collect())
   }
 }

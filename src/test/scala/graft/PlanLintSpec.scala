@@ -131,9 +131,11 @@ class PlanLintSpec extends SparkSpec {
     *
     * Families:
     *  - knn/ann: the ≤5-row query-vector frame broadcasts into the corpus
-    *    scan (queryMaxId pushed filter bounds it): q19 q20 q21 q26 q64 q71
-    *    q90 q91 q95 q105 q118 q119 q125 q128 q130 q139 q140 q155 q156 q158
-    *    q172 q173 q196.
+    *    scan (queryMaxId pushed filter bounds it): q19 q20 q21 q26 q95
+    *    q105 q118 q119 q128 q130 q139 q196, and the recall rows through
+    *    their [[graft.operators.KnnExact]] leg: q125 q140 q158 q172 q173.
+    *    The quantized and indexed IVF searches carry their query side as
+    *    plan literals and plan no BNLJ.
     *  - retrieval scoring: 1-row corpus-stats / keyset cursors / idf tables
     *    bounded by the query's own term list: q61 q62 q82 q88 q92 q146
     *    q151 q152 q157 q163 q164 q165 q167 q168.
@@ -143,11 +145,9 @@ class PlanLintSpec extends SparkSpec {
     */
   private val auditedBnljQueries: Set[String] = Set(
     "q19_sql_vector_knn", "q20_knn_exact", "q21_knn_cosine", "q26_top_cosine_pairs",
-    "q64_pq_ann", "q71_pq_ann_indexed", "q90_sq8_ann", "q91_sq8_ann_indexed",
     "q95_knn_dot", "q105_matryoshka_knn", "q118_knn_filtered", "q119_range_search",
     "q125_recall_benchmark", "q128_hard_negatives", "q130_knn_label_eval",
-    "q139_ndcg_eval", "q140_recall_ivf", "q155_bq_ann", "q156_bq_ann_indexed",
-    "q158_recall_bq", "q172_recall_pq", "q173_recall_sq8",
+    "q139_ndcg_eval", "q140_recall_ivf", "q158_recall_bq", "q172_recall_pq", "q173_recall_sq8",
     "q196_semantic_decontamination",
     "q61_tfidf_search", "q62_bm25_scores", "q82_token_rarity", "q88_rrf_fusion",
     "q92_token_lift", "q146_search_after", "q151_more_like_this",
