@@ -277,10 +277,10 @@ object Bench {
     }
     ingest("lsh_index") { graft.operators.Index.ensure(spark, sfDir) }
     ingest("ivf_index") { graft.operators.Vectors.ensureIvfIndex(spark, sfDir) }
-    ingest("pq_index") { graft.operators.Pq.ensurePqIndex(spark, sfDir) }
-    ingest("sq_index") { graft.operators.Pq.ensureSqIndex(spark, sfDir) }
+    ingest("pq_index") { graft.operators.Pq.ensure(spark, graft.operators.Pq.PQ(), sfDir) }
+    ingest("sq_index") { graft.operators.Pq.ensure(spark, graft.operators.Pq.SQ8, sfDir) }
     ingest("ivfpq_index") { graft.operators.Pq.ensureIvfPqIndex(spark, sfDir) }
-    ingest("bq_index") { graft.operators.Pq.ensureBqIndex(spark, sfDir) }
+    ingest("bq_index") { graft.operators.Pq.ensure(spark, graft.operators.Pq.BQ, sfDir) }
     // The persisted near-dup pairs stage output (q78 derives survivors
     // from it) — same prebuilt-artifact methodology as the indexes; the
     // detection pipeline itself is timed live as q77.

@@ -302,7 +302,7 @@ object Bpe {
 
   def trainCached(spark: SparkSession, sfDir: String, numMerges: Int = 12): Seq[Merge] = {
     // Keyed on the fixture's mtime like every sibling artifact cache
-    // (kmeansModel, ensurePqIndex): an in-place regenerated corpus must
+    // (kmeansModel, Pq.ensure): an in-place regenerated corpus must
     // retrain, not serve the old merge table.
     val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
     graft.Memo.once(memo, s"$sfDir:$srcSig:$numMerges")(

@@ -170,7 +170,7 @@ object Index {
     * appends accumulate small files — [[compact]] is the periodic remedy.
     */
   def append(spark: SparkSession, indexDir: String, newVectors: DataFrame): Unit = {
-    val (model, numBuckets) = Lsh.loadModelCached(spark, s"$indexDir/model")
+    val (model, numBuckets) = Lsh.loadModel(spark, s"$indexDir/model")
     // The supersede probe covers BOTH data dirs (column-pruned to
     // vec_id+batch): a mid-append crash leaves orphan postings with no
     // vectors row, and a vectors-only probe would never mark them dead.
@@ -222,40 +222,32 @@ object Index {
     * small-file debt of repeated [[append]]s). Contents are unchanged —
     * byte-identical row set, asserted in LshSpec.
     *
-    * Swap protocol: write to `postings_compacting`, then two renames
-    * (live→old, compacting→live). The window between them is not atomic on
-    * a generic filesystem — compact is a single-writer MAINTENANCE op, run
-    * it without concurrent readers (a table format with atomic commits —
-    * Delta/Iceberg — is the production answer). Crash recovery is explicit:
-    * a leftover `postings_old` from a crashed run is rolled back or cleaned
-    * on the next call, so a crashed compact never wedges the index.
+    * Swap protocol: [[Lifecycle.promoteSwap]] — write to
+    * `postings_compacting`, then two renames (live→old, compacting→live).
+    * The window between them is not atomic on a generic filesystem —
+    * compact is a single-writer MAINTENANCE op, run it without concurrent
+    * readers (a table format with atomic commits — Delta/Iceberg — is the
+    * production answer). A crashed run's leftovers are settled on the next
+    * call ([[Lifecycle.settleSwap]], [[Lifecycle.clearSwapStaging]]), so a
+    * crashed compact never wedges the index.
     */
   def compact(spark: SparkSession, indexDir: String): Unit = {
     // Hadoop FS throughout (same reason as the tombstone check): indexDir
     // may be an hdfs:// URI, where java.io.File renames/exists silently
     // operate on a bogus local path.
+    val fs = Lifecycle.fsOf(spark, indexDir)
     val live = new org.apache.hadoop.fs.Path(s"$indexDir/postings")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = new org.apache.hadoop.fs.Path(s"$indexDir/postings_old")
     val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/postings_compacting")
-    // Recover from a previous crashed compact: if the swap died after
-    // staging live aside, roll postings_old back; if live exists too, the
-    // old copy is superseded garbage.
-    if (fs.exists(old)) {
-      if (!fs.exists(live)) require(fs.rename(old, live), s"could not roll back $old")
-      else fs.delete(old, true)
-    }
-    if (fs.exists(tmp)) fs.delete(tmp, true) // half-written crashed output
+    Lifecycle.settleSwap(fs, live, old)
+    Lifecycle.clearSwapStaging(fs, old, tmp)
     postings(spark, indexDir)
       .select(col("vec_id"), col(BatchCol), col("tbl"), col("hash"), col(PKeyCol))
       .repartition(col(PKeyCol))
       .write.mode(SaveMode.Overwrite)
       .partitionBy(PKeyCol)
       .parquet(tmp.toString)
-    require(fs.rename(live, old), s"could not stage $live aside")
-    require(fs.rename(tmp, live), s"could not promote $tmp")
-    fs.delete(old, true)
-    graft.Readers.bump()
+    Lifecycle.promoteSwap(fs, live, old, tmp)
   }
 
   /** Purging compaction: rewrite `vectors/` + `postings/` keeping only live

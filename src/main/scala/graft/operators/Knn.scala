@@ -205,7 +205,7 @@ object Knn {
       multiprobe: Boolean = false,
       bucketCap: Int = 0,
       excludeIds: Seq[Long] = Nil): DataFrame = {
-    val (model, _) = Lsh.loadModelCached(spark, s"$indexDir/model")
+    val (model, _) = Lsh.loadModel(spark, s"$indexDir/model")
     search(spark, indexDir,
       probesOf(-1L, model.hashVector(query).toSeq, model, multiprobe),
       Map(-1L -> query.toSeq), k1, k2, bucketCap,
@@ -236,7 +236,7 @@ object Knn {
       multiprobe: Boolean = false,
       bucketCap: Int = 0,
       candidateFilter: Option[DataFrame] = None): DataFrame = {
-    val (model, _) = Lsh.loadModelCached(spark, s"$indexDir/model")
+    val (model, _) = Lsh.loadModel(spark, s"$indexDir/model")
     val qRows = Index.liveVectors(spark, indexDir).filter(col("vec_id") < queryMaxId)
       .select(col("vec_id"), col("hashes"), col("embedding")).collect()
     search(spark, indexDir,
@@ -264,7 +264,7 @@ object Knn {
       bucketCap: Int,
       keep: Column,
       candidateFilter: Option[DataFrame]): DataFrame = {
-    val (model, numBuckets) = Lsh.loadModelCached(spark, s"$indexDir/model")
+    val (model, numBuckets) = Lsh.loadModel(spark, s"$indexDir/model")
     // (tbl, hash) packs exactly as tbl·2^bits + hash (hash < 2^bits) only
     // while every table index fits above the hash bits.
     require(model.bits < 64 && model.tables - 1L <= (Long.MaxValue >> model.bits),
@@ -486,7 +486,7 @@ object Knn {
       k1: Int = 100): DataFrame =
     recallOf(
       KnnExact.topK(spark, sfDir, queryMaxId, k),
-      Pq.annBqIndexed(spark, sfDir, queryMaxId, k1, k))
+      Pq.annIndexed(spark, Pq.BQ, sfDir, queryMaxId, k1, k))
 
   /** q172 — the A10 recall measurement against the PERSISTED PQ index
     * (completing the recall-gate family across the whole compression
@@ -504,7 +504,7 @@ object Knn {
       k1: Int = 100): DataFrame =
     recallOf(
       KnnExact.topK(spark, sfDir, queryMaxId, k),
-      Pq.annPqIndexed(spark, sfDir, queryMaxId, k1, k))
+      Pq.annIndexed(spark, Pq.PQ(), sfDir, queryMaxId, k1, k))
 
   /** q173 — the A10 recall measurement against the PERSISTED SQ8 index:
     * per-query exact-vs-SQ8 overlap and integer recall%. The approximate
@@ -520,7 +520,7 @@ object Knn {
       k1: Int = 100): DataFrame =
     recallOf(
       KnnExact.topK(spark, sfDir, queryMaxId, k),
-      Pq.annSq8Indexed(spark, sfDir, queryMaxId, k1, k))
+      Pq.annIndexed(spark, Pq.SQ8, sfDir, queryMaxId, k1, k))
 
   /** The overlap-count core shared by every recall row. ONE exact leg: a
     * left join marks each exact neighbor found by the approximate leg, and

@@ -4,10 +4,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Index mutation machinery shared by every persisted layout (the LSH
-  * postings index in [[Index]], the IVF cell table in [[Vectors]], the PQ
-  * code tables in [[Pq]]): parquet is immutable, so all three express the ES
-  * document lifecycle the same way —
+/** Index mutation machinery shared by every persisted layout — the LSH
+  * postings index in [[Index]], the IVF cell table in [[Vectors]], the one
+  * flat code table in [[Pq]] (shared by its PQ, SQ8 and BQ codecs) and the
+  * cell-partitioned IVF-PQ code table: parquet is immutable, so all four
+  * express the ES document lifecycle the same way —
   *
   *   - DELETE: ids append to `<dir>/tombstones/`; readers anti-join them out.
   *   - UPSERT: every stored row carries [[BatchCol]], the append generation
@@ -33,8 +34,8 @@ object Lifecycle {
 
   /** The write-aside / two-rename swap protocol, stated ONCE for every
     * swap-managed directory ([[vacuum]] parts, [[adoptStreamedLayout]],
-    * `Text.compactStore` on digest/band stores). Three helpers so a
-    * protocol fix can never silently miss one copy:
+    * [[Index.compact]], `Text.compactStore` on digest/band stores). Three
+    * helpers so a protocol fix can never silently miss one copy:
     *
     * [[settleSwap]] rolls a crashed swap forward — when a maintenance op
     * died between its stage and promote renames, the only complete copy of
@@ -188,7 +189,7 @@ object Lifecycle {
     * the marker bookkeeping ([[finishAppend]]) against `stored` — evaluated
     * by name AFTER the data lands. The ordering here is load-bearing crash
     * safety; encoding it once means a protocol fix cannot silently miss one
-    * of the five layouts.
+    * of the four layouts.
     */
   def appendWith(
       spark: SparkSession,

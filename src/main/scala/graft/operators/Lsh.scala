@@ -225,27 +225,24 @@ object Lsh {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
   }
 
-  /** Per-JVM model memo — the reference's node-local model cache (SURVEY
-    * §2.A A4: `Map<uri, LshModel>` memoized on first GET). Keyed by the
-    * model directory; the executors' copy is cached by the broadcast /
-    * plan-reference-object mechanism, this saves the driver-side re-read.
+  /** Read a model written by [[saveModel]]. Returns (model, numBuckets).
+    * Memoized per JVM through [[graft.Readers.artifact]] — the reference's
+    * node-local model cache (SURVEY §2.A A4: `Map<uri, LshModel>` memoized
+    * on first GET), keyed by (session, lifecycle epoch, model dir): every
+    * search and append loads the model, and a rebuild into the same dir
+    * bumps the epoch, so no search or append ever hashes with a replaced
+    * model. The executors' copy rides the plan as a reference object.
     */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (LshModel, Int)]()
-
-  def loadModelCached(spark: SparkSession, dir: String): (LshModel, Int) =
-    graft.Memo.once(modelCache, dir)(loadModel(spark, dir))
-
-  /** Read a model written by [[saveModel]]. Returns (model, numBuckets). */
-  def loadModel(spark: SparkSession, dir: String): (LshModel, Int) = {
-    val r = spark.read.parquet(dir).collect()(0)
-    def planes(field: String): Array[Array[Float]] =
-      r.getSeq[scala.collection.Seq[Float]](r.fieldIndex(field)).map(_.toArray).toArray
-    val model = LshModel(
-      r.getAs[Int]("tables"), r.getAs[Int]("bits"), r.getAs[Int]("dim"),
-      planes("midpoints"), planes("normals"))
-    (model, r.getAs[Int]("num_buckets"))
-  }
+  def loadModel(spark: SparkSession, dir: String): (LshModel, Int) =
+    graft.Readers.artifact(spark, dir) {
+      val r = spark.read.parquet(dir).collect()(0)
+      def planes(field: String): Array[Array[Float]] =
+        r.getSeq[scala.collection.Seq[Float]](r.fieldIndex(field)).map(_.toArray).toArray
+      val model = LshModel(
+        r.getAs[Int]("tables"), r.getAs[Int]("bits"), r.getAs[Int]("dim"),
+        planes("midpoints"), planes("normals"))
+      (model, r.getAs[Int]("num_buckets"))
+    }
 
   /** The hash table exploded to (id, table, hash) — the posting-list view the
     * collision-count join runs on (ES inverted-index analog, SURVEY §1.1).

@@ -1150,7 +1150,7 @@ object Vectors {
   }
 
   /** Per-JVM memo of the fitted k-means model over an sfDir corpus — the
-    * same node-local model-cache discipline as [[Lsh.loadModelCached]] and
+    * same node-local model-cache discipline as [[Lsh.loadModel]] and
     * the persisted index layouts: a fitted model is an ARTIFACT (train once,
     * reuse across every query in the session); q84 and q85 share one fit.
     * Keyed by corpus identity (path + mtime) and hyperparams.

@@ -192,13 +192,15 @@ object Streams {
   }
 
   /** Streaming quantized-code ingest — the [[postingsSink]]/[[cellsSink]]
-    * twin for the flat code-table layouts (PQ q71 / SQ8 q91): vectors
-    * arrive on a stream, are encoded with the STORED frozen codebooks/grid
-    * (the same narrow codegen expression the batch build uses — the model
-    * rides the plan as a reference object, executor-parallel, no shuffle),
-    * and land in the SAME `codes/` layout the batch builders write.
-    * StreamingSpec proves the streamed code table is row-identical to the
-    * batch build for both encoders.
+    * twin for the flat code-table layout of [[graft.operators.Pq]] (PQ q71
+    * / SQ8 q91 / BQ q156): vectors arrive on a stream, are encoded by
+    * `encoder` — a codec's [[graft.operators.Pq.Codec.encoder]] over the
+    * STORED frozen model (the same narrow codegen expression, named as the
+    * code column, that the batch build uses — the model rides the plan as a
+    * reference object, executor-parallel, no shuffle), and land in the SAME
+    * `codes/` layout [[graft.operators.Pq.build]] writes. StreamingSpec
+    * proves the streamed code table is row-identical to the batch build for
+    * the PQ and SQ8 encoders.
     */
   def codesSink(
       spark: SparkSession,
@@ -213,7 +215,7 @@ object Streams {
     // per epoch; an EXTERNALLY started sink has the same bump contract).
     graft.Readers.bump()
     readVectors(spark, srcDir)
-      .select(col("vec_id"), encoder(col("embedding")).as("codes"))
+      .select(col("vec_id"), encoder(col("embedding")))
       .withColumn(graft.operators.Lifecycle.BatchCol, lit(0L))
       .writeStream
       .format("parquet")

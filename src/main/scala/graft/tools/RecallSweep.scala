@@ -40,7 +40,7 @@ object RecallSweep {
       k <- Seq(16, 64)
       k1 <- Seq(50, 100)
     } {
-      val pq = Pq.annPq(spark, sfDir, queryMaxId = 8, k1 = k1, k2 = 10, m = m, k = k)
+      val pq = Pq.ann(spark, Pq.PQ(m, k), sfDir, queryMaxId = 8, k1 = k1, k2 = 10)
         .select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val recall = (exact & pq).size.toDouble / exact.size
@@ -49,7 +49,7 @@ object RecallSweep {
     }
     // SQ8: one point on the compression ladder (64 B/vector vs PQ's 4-16).
     for (k1 <- Seq(50, 100)) {
-      val sq = Pq.annSq8(spark, sfDir, queryMaxId = 8, k1 = k1, k2 = 10)
+      val sq = Pq.ann(spark, Pq.SQ8, sfDir, queryMaxId = 8, k1 = k1, k2 = 10)
         .select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val recall = (exact & sq).size.toDouble / exact.size
@@ -58,7 +58,7 @@ object RecallSweep {
     // BQ: the bottom rung (8 B/vector, xor+popcount distance) — what one
     // sign bit per dimension costs in k1 for a given recall.
     for (k1 <- Seq(50, 100, 200)) {
-      val bq = Pq.annBq(spark, sfDir, queryMaxId = 8, k1 = k1, k2 = 10)
+      val bq = Pq.ann(spark, Pq.BQ, sfDir, queryMaxId = 8, k1 = k1, k2 = 10)
         .select("query_id", "neighbor_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val recall = (exact & bq).size.toDouble / exact.size

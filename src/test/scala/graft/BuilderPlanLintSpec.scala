@@ -43,10 +43,10 @@ class BuilderPlanLintSpec extends SparkSpec {
   private val storeBuilders: Seq[(String, () => String)] = Seq(
     "lsh_index" -> (() => ops.Index.ensure(spark, sf0001)),
     "ivf_index" -> (() => ops.Vectors.ensureIvfIndex(spark, sf0001)),
-    "pq_index" -> (() => ops.Pq.ensurePqIndex(spark, sf0001)),
-    "sq_index" -> (() => ops.Pq.ensureSqIndex(spark, sf0001)),
+    "pq_index" -> (() => ops.Pq.ensure(spark, ops.Pq.PQ(), sf0001)),
+    "sq_index" -> (() => ops.Pq.ensure(spark, ops.Pq.SQ8, sf0001)),
     "ivfpq_index" -> (() => ops.Pq.ensureIvfPqIndex(spark, sf0001)),
-    "bq_index" -> (() => ops.Pq.ensureBqIndex(spark, sf0001)),
+    "bq_index" -> (() => ops.Pq.ensure(spark, ops.Pq.BQ, sf0001)),
     "shingle_pairs" -> (() => ops.Text.ensureShinglePairs(spark, sf0001)),
     "pair_postings" -> (() => ops.Vectors.ensurePairPostings(spark, sf0001)),
     "phash_store" -> (() => ops.Media.ensurePhashStore(spark, sf0001)),

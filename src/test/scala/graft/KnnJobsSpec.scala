@@ -83,9 +83,9 @@ class KnnJobsSpec extends SparkSpec {
   val QuantizedActionJobs = 3
 
   Seq[(String, (SparkSession, String) => DataFrame)](
-    "PQ" -> ((s, d) => Pq.annPqIndexed(s, d)),
-    "SQ8" -> ((s, d) => Pq.annSq8Indexed(s, d)),
-    "BQ" -> ((s, d) => Pq.annBqIndexed(s, d)),
+    "PQ" -> ((s, d) => Pq.annIndexed(s, Pq.PQ(), d)),
+    "SQ8" -> ((s, d) => Pq.annIndexed(s, Pq.SQ8, d)),
+    "BQ" -> ((s, d) => Pq.annIndexed(s, Pq.BQ, d)),
     "IVF-PQ" -> ((s, d) => Pq.annIvfPq(s, d))).foreach { case (family, search) =>
     test(s"indexed $family search: the shared re-rank tail keeps the action within budget") {
       val (rows, actionJobs) = steadyActionJobs(search)
@@ -93,6 +93,23 @@ class KnnJobsSpec extends SparkSpec {
       info(s"action jobs: $actionJobs")
       assert(actionJobs <= QuantizedActionJobs, s"$family search ran $actionJobs action jobs")
     }
+  }
+
+  /** Construction jobs of an inline quantized search's second call: the
+    * fit is memoized per (codec, corpus), so only the query-vector collect
+    * runs before the action. Refitting, PQ re-collects its codebook sample
+    * and SQ8 reruns its min/max aggregate on every call.
+    */
+  val InlineConstructJobs = 1
+
+  test("inline PQ, SQ8 and BQ searches: a memoized fit leaves one construction job") {
+    val jobs = Seq[(String, Pq.Codec[_ <: AnyRef])](
+      "PQ" -> Pq.PQ(), "SQ8" -> Pq.SQ8, "BQ" -> Pq.BQ).map { case (family, codec) =>
+      Pq.ann(spark, codec, sf0001).collect()
+      family -> jobsDuring(Pq.ann(spark, codec, sf0001))._2
+    }
+    info(s"construction jobs: ${jobs.mkString(", ")}")
+    assert(jobs.forall(_._2 <= InlineConstructJobs), s"construction jobs over budget: $jobs")
   }
 
   /** Action jobs of the indexed IVF search (q29), measured on this fixture:

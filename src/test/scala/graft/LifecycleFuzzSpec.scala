@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions.col
 
-import graft.operators.{Index, Knn, Lsh}
+import graft.operators.{Index, Knn, Lsh, Pq}
 
 /** Randomized lifecycle-sequence fuzz: the scenario specs in LshSpec cover
   * each op pair (append+search, delete+re-append, vacuum+crash, …) but not
@@ -129,62 +129,23 @@ class LifecycleFuzzSpec extends SparkSpec {
     assert(got == want, s"IVF end state drift after [${ops.mkString(" -> ")}]")
   }
 
-  test("randomized SQ8 lifecycle sequences: end state equals a fresh encode") {
-    import spark.implicits._
-    import graft.operators.Pq
-    val embRows = Tables.embeddings(spark, sf0001)
-      .filter(col("vec_id") < 120).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val allIds = embRows.map(_._1)
-    val byId = embRows.toMap
-    def df(ids: Seq[Long]) =
-      ids.sorted.map(id => (id, byId(id))).toDF("vec_id", "embedding")
-
-    val rnd = new scala.util.Random(4242L)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-fuzzsq").toString + "/idx"
-    val initial = allIds.filter(_ => rnd.nextBoolean()).toSeq
-    var live = initial.toSet
-    // frozen grid fit on the initial set — appends encode with the STORED
-    // model, so the end state is reproducible from it
-    val model = Pq.fitSq(df(initial))
-    Pq.buildSqIndex(spark, df(initial), model, dir)
-    val ops = scala.collection.mutable.ArrayBuffer[String]()
-    (1 to 8).foreach { _ =>
-      rnd.nextInt(3) match {
-        case 0 =>
-          val ids = allIds.filter(_ => rnd.nextInt(6) == 0).toSeq
-          if (ids.nonEmpty) {
-            Pq.appendSqIndex(spark, dir, df(ids)); live ++= ids
-            ops += s"append(${ids.size})"
-          }
-        case 1 =>
-          val ids = allIds.filter(_ => rnd.nextInt(8) == 0).toSeq
-          if (ids.nonEmpty) {
-            Pq.deleteFromSqIndex(spark, dir, ids); live --= ids
-            ops += s"delete(${ids.size})"
-          }
-        case 2 => Pq.vacuumSqIndex(spark, dir); ops += "vacuum"
+  /** The quantized code index under random append (upsert / resurface),
+    * delete and vacuum sequences, once per codec: after every op the live
+    * code table must hold each live id exactly once, and the end state must
+    * equal a fresh encode of the live set under the frozen model fit on the
+    * initial set — appends encode with the STORED model, so the end state
+    * is reproducible from it.
+    */
+  Seq[(String, Pq.Codec[_ <: AnyRef], Long)](
+    ("SQ8", Pq.SQ8, 4242L), ("PQ", Pq.PQ(), 60814L), ("BQ", Pq.BQ, 31337L)).foreach {
+    case (name, codec, seed) =>
+      test(s"randomized $name lifecycle sequences: end state equals a fresh encode") {
+        fuzzCodes(name, codec, seed)
       }
-      val ids = Pq.liveSqCodes(spark, dir).select(col("vec_id"))
-        .collect().map(_.getLong(0)).toSeq
-      assert(ids.length == ids.distinct.length,
-        s"duplicate live code rows after [${ops.mkString(" -> ")}]")
-      assert(ids.toSet == live,
-        s"SQ8 live-view drift after [${ops.mkString(" -> ")}]")
-    }
-    val got = Pq.liveSqCodes(spark, dir)
-      .select(col("vec_id"), col("codes"))
-      .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toSet
-    val want = Pq.encodeSq(spark, df(live.toSeq), model)
-      .select(col("vec_id"), col("codes"))
-      .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toSet
-    assert(got == want, s"SQ8 end state drift after [${ops.mkString(" -> ")}]")
   }
 
-  test("randomized PQ lifecycle sequences: end state equals a fresh encode") {
+  private def fuzzCodes[M <: AnyRef](name: String, codec: Pq.Codec[M], seed: Long): Unit = {
     import spark.implicits._
-    import graft.operators.Pq
     val embRows = Tables.embeddings(spark, sf0001)
       .filter(col("vec_id") < 120).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
@@ -193,99 +154,47 @@ class LifecycleFuzzSpec extends SparkSpec {
     def df(ids: Seq[Long]) =
       ids.sorted.map(id => (id, byId(id))).toDF("vec_id", "embedding")
 
-    val rnd = new scala.util.Random(60814L)
+    val rnd = new scala.util.Random(seed)
     val dir = java.nio.file.Files
-      .createTempDirectory("graft-fuzzpq").toString + "/idx"
+      .createTempDirectory(s"graft-fuzz${codec.dirName}").toString + "/idx"
     val initial = allIds.filter(_ => rnd.nextBoolean()).toSeq
     var live = initial.toSet
-    // frozen codebooks fit on the initial set — appends encode with the
-    // STORED model, so the end state is reproducible from it
-    val model = Pq.fit(df(initial))
-    Pq.buildPqIndex(spark, df(initial), model, dir)
+    val model = codec.fit(df(initial))
+    Pq.build(spark, codec, df(initial), model, dir)
     val ops = scala.collection.mutable.ArrayBuffer[String]()
     (1 to 8).foreach { _ =>
       rnd.nextInt(3) match {
         case 0 =>
           val ids = allIds.filter(_ => rnd.nextInt(6) == 0).toSeq
           if (ids.nonEmpty) {
-            Pq.appendPqIndex(spark, dir, df(ids)); live ++= ids
+            Pq.append(spark, codec, dir, df(ids)); live ++= ids
             ops += s"append(${ids.size})"
           }
         case 1 =>
           val ids = allIds.filter(_ => rnd.nextInt(8) == 0).toSeq
           if (ids.nonEmpty) {
-            Pq.deleteFromPqIndex(spark, dir, ids); live --= ids
+            Pq.delete(spark, dir, ids); live --= ids
             ops += s"delete(${ids.size})"
           }
-        case 2 => Pq.vacuumPqIndex(spark, dir); ops += "vacuum"
+        case 2 => Pq.vacuum(spark, dir); ops += "vacuum"
       }
       val ids = Pq.liveCodes(spark, dir).select(col("vec_id"))
         .collect().map(_.getLong(0)).toSeq
       assert(ids.length == ids.distinct.length,
         s"duplicate live code rows after [${ops.mkString(" -> ")}]")
       assert(ids.toSet == live,
-        s"PQ live-view drift after [${ops.mkString(" -> ")}]")
+        s"$name live-view drift after [${ops.mkString(" -> ")}]")
     }
-    val got = Pq.liveCodes(spark, dir)
-      .select(col("vec_id"), col("codes"))
-      .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toSet
-    val want = Pq.encode(spark, df(live.toSeq), model)
-      .select(col("vec_id"), col("codes"))
-      .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toSet
-    assert(got == want, s"PQ end state drift after [${ops.mkString(" -> ")}]")
-  }
-
-  test("randomized BQ lifecycle sequences: end state equals a fresh encode") {
-    import spark.implicits._
-    import graft.operators.Pq
-    val embRows = Tables.embeddings(spark, sf0001)
-      .filter(col("vec_id") < 120).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val allIds = embRows.map(_._1)
-    val byId = embRows.toMap
-    def df(ids: Seq[Long]) =
-      ids.sorted.map(id => (id, byId(id))).toDF("vec_id", "embedding")
-
-    val rnd = new scala.util.Random(31337L)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-fuzzbq").toString + "/idx"
-    val initial = allIds.filter(_ => rnd.nextBoolean()).toSeq
-    var live = initial.toSet
-    // frozen thresholds fit on the initial set — appends encode with the
-    // STORED model, so the end state is reproducible from it
-    val model = Pq.fitBq(df(initial))
-    Pq.buildBqIndex(spark, df(initial), model, dir)
-    val ops = scala.collection.mutable.ArrayBuffer[String]()
-    (1 to 8).foreach { _ =>
-      rnd.nextInt(3) match {
-        case 0 =>
-          val ids = allIds.filter(_ => rnd.nextInt(6) == 0).toSeq
-          if (ids.nonEmpty) {
-            Pq.appendBqIndex(spark, dir, df(ids)); live ++= ids
-            ops += s"append(${ids.size})"
-          }
-        case 1 =>
-          val ids = allIds.filter(_ => rnd.nextInt(8) == 0).toSeq
-          if (ids.nonEmpty) {
-            Pq.deleteFromBqIndex(spark, dir, ids); live --= ids
-            ops += s"delete(${ids.size})"
-          }
-        case 2 => Pq.vacuumBqIndex(spark, dir); ops += "vacuum"
-      }
-      val ids = Pq.liveBqCodes(spark, dir).select(col("vec_id"))
-        .collect().map(_.getLong(0)).toSeq
-      assert(ids.length == ids.distinct.length,
-        s"duplicate live code rows after [${ops.mkString(" -> ")}]")
-      assert(ids.toSet == live,
-        s"BQ live-view drift after [${ops.mkString(" -> ")}]")
-    }
-    val got = Pq.liveBqCodes(spark, dir)
-      .select(col("vec_id"), col("code"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = Pq.encodeBq(spark, df(live.toSeq), model)
-      .select(col("vec_id"), col("code"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == want, s"BQ end state drift after [${ops.mkString(" -> ")}]")
+    // (vec_id, code) pairs; a binary code compares by content
+    def codes(codeTable: org.apache.spark.sql.DataFrame) =
+      codeTable.select(col("vec_id"), col(codec.codeCol)).collect()
+        .map(r => (r.getLong(0), r.get(1) match {
+          case b: Array[Byte] => b.toSeq
+          case c => c
+        })).toSet
+    val got = codes(Pq.liveCodes(spark, dir))
+    val want = codes(codec.encode(df(live.toSeq), model))
+    assert(got == want, s"$name end state drift after [${ops.mkString(" -> ")}]")
   }
 
   test("randomized digest-store sequences: the probe always equals the model") {

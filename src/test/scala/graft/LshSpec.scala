@@ -479,4 +479,28 @@ class LshSpec extends SparkSpec {
       multiprobe = true).collect().map(_.toSeq).toSeq
     assert(indexed == inline)
   }
+
+  test("a rebuild into the same dir searches and appends with the new model") {
+    // The model memo is keyed by the lifecycle epoch, which a rebuild
+    // bumps: after it, search hashes the queries and append hashes the new
+    // vectors with the rebuilt model, never the one memoized before.
+    import org.apache.spark.sql.functions.col
+    val emb = Tables.embeddings(spark, sf0001)
+    val q = emb.filter(col("vec_id") === 3L).select("embedding")
+      .collect()(0).getSeq[Float](0).toArray
+    def results(dir: String) = (
+      Knn.searchIndex(spark, dir, 8, 100, 10).collect().map(_.toSeq).toSeq,
+      Knn.searchIndexByVector(spark, dir, q, 100, 10).collect().map(_.toSeq).toSeq)
+    val dir = java.nio.file.Files.createTempDirectory("graft-idx-rebuild").toString
+    Index.build(spark, emb.filter(col("vec_id") < 400),
+      Lsh.fit(emb, tables = 4, bits = 3), dir, numBuckets = 16)
+    results(dir) // loads (and memoizes) the first model
+    val second = Lsh.fit(emb, tables = 8, bits = 4)
+    Index.build(spark, emb.filter(col("vec_id") < 400), second, dir, numBuckets = 16)
+    Index.append(spark, dir, emb.filter(col("vec_id") >= 400))
+    val fresh = java.nio.file.Files.createTempDirectory("graft-idx-fresh").toString
+    Index.build(spark, emb, second, fresh, numBuckets = 16)
+    assert(results(dir) == results(fresh),
+      "the rebuilt dir must serve what a fresh build of the new model serves")
+  }
 }

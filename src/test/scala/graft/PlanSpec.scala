@@ -684,7 +684,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("pq adc scan reads only the 8-byte code column, never an embedding") {
-    val plan = graft.operators.Pq.adcScanPlan(spark, sf0001)
+    val plan = graft.operators.Pq.scanPlan(spark, graft.operators.Pq.PQ(), sf0001)
       .queryExecution.executedPlan.toString
     val scan = plan.linesIterator.filter(_.contains("FileScan"))
       .find(_.contains("codes")).getOrElse(fail(s"no codes scan:\n$plan"))
@@ -729,7 +729,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("sq8 scan reads only the 1-byte-per-dim code column, never an embedding") {
-    val plan = graft.operators.Pq.sqScanPlan(spark, sf0001)
+    val plan = graft.operators.Pq.scanPlan(spark, graft.operators.Pq.SQ8, sf0001)
       .queryExecution.executedPlan.toString
     val scan = plan.linesIterator.filter(_.contains("FileScan"))
       .find(_.contains("codes")).getOrElse(fail(s"no codes scan:\n$plan"))
@@ -840,7 +840,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bq scan reads only the one-long code column, never an embedding") {
-    val plan = graft.operators.Pq.bqScanPlan(spark, sf0001)
+    val plan = graft.operators.Pq.scanPlan(spark, graft.operators.Pq.BQ, sf0001)
       .queryExecution.executedPlan.toString
     val scan = plan.linesIterator.filter(_.contains("FileScan"))
       .find(_.contains("code")).getOrElse(fail(s"no code scan:\n$plan"))

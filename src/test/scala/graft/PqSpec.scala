@@ -8,8 +8,8 @@ class PqSpec extends SparkSpec {
 
   test("pq fit is deterministic and codebooks differ across subspaces") {
     val emb = Tables.embeddings(spark, sf0001)
-    val a = Pq.fit(emb)
-    val b = Pq.fit(emb)
+    val a = Pq.PQ().fit(emb)
+    val b = Pq.PQ().fit(emb)
     assert(a.codebooks.map(_.map(_.toSeq).toSeq).toSeq ==
       b.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
     assert(a.codebooks(0).map(_.toSeq).toSeq != a.codebooks(1).map(_.toSeq).toSeq)
@@ -17,8 +17,8 @@ class PqSpec extends SparkSpec {
 
   test("pq encode: M bytes per vector — 32x smaller than the float vector") {
     val emb = Tables.embeddings(spark, sf0001)
-    val model = Pq.fit(emb)
-    val row = Pq.encode(spark, emb, model).limit(1).collect()(0)
+    val model = Pq.PQ().fit(emb)
+    val row = Pq.PQ().encode(emb, model).limit(1).collect()(0)
     val codes = row.getAs[Array[Byte]]("codes")
     assert(codes.length == 8)
     assert(8 * 32 == 64 * 4, "8 code bytes stand in for 256 float bytes")
@@ -26,7 +26,7 @@ class PqSpec extends SparkSpec {
 
   test("pq adc distance approximates true distance (rank correlation on a sample)") {
     val emb = Tables.embeddings(spark, sf0001)
-    val model = Pq.fit(emb)
+    val model = Pq.PQ().fit(emb)
     val rows = emb.select(col("vec_id"), col("embedding"))
       .orderBy(col("vec_id")).limit(50).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
@@ -48,23 +48,23 @@ class PqSpec extends SparkSpec {
   }
 
   test("indexed pq ann equals the inline path (same deterministic fit)") {
-    val inline = Pq.annPq(spark, sf0001).collect().map(_.toSeq).toSeq
-    val indexed = Pq.annPqIndexed(spark, sf0001).collect().map(_.toSeq).toSeq
+    val inline = Pq.ann(spark, Pq.PQ(), sf0001).collect().map(_.toSeq).toSeq
+    val indexed = Pq.annIndexed(spark, Pq.PQ(), sf0001).collect().map(_.toSeq).toSeq
     assert(indexed == inline)
   }
 
   test("pq model round-trips through the persisted index layout") {
     val emb = Tables.embeddings(spark, sf0001)
-    val want = Pq.fit(emb)
-    val dir = Pq.ensurePqIndex(spark, sf0001)
-    val got = Pq.loadPqModel(spark, s"$dir/model")
+    val want = Pq.PQ().fit(emb)
+    val dir = Pq.ensure(spark, Pq.PQ(), sf0001)
+    val got = Pq.PQ().loadModel(spark, s"$dir/model")
     assert(got.m == want.m && got.k == want.k && got.subdim == want.subdim)
     assert(got.codebooks.map(_.map(_.toSeq).toSeq).toSeq ==
       want.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
   }
 
   test("ivf-pq at full probe equals the flat pq scan; pruned probe keeps recall") {
-    val flat = Pq.annPq(spark, sf0001).collect().map(_.toSeq).toSeq
+    val flat = Pq.ann(spark, Pq.PQ(), sf0001).collect().map(_.toSeq).toSeq
     val fullProbe = Pq.annIvfPq(spark, sf0001, nprobe = 16).collect().map(_.toSeq).toSeq
     assert(fullProbe == flat,
       "probing every cell must reproduce the flat ADC scan exactly")
@@ -78,13 +78,13 @@ class PqSpec extends SparkSpec {
 
   test("adc codegen expression matches the driver-side kernel bit-for-bit") {
     val emb = Tables.embeddings(spark, sf0001)
-    val model = Pq.fit(emb)
+    val model = Pq.PQ().fit(emb)
     val q = emb.select(col("vec_id"), col("embedding"))
       .orderBy(col("vec_id")).limit(1).collect()(0)
     val lut = model.lut(q.getSeq[Float](1).toArray)
-    val viaPlan = Pq.adcScanPlan(spark, sf0001, queryMaxId = 1).collect()
+    val viaPlan = Pq.scanPlan(spark, Pq.PQ(), sf0001, queryMaxId = 1).collect()
       .map(r => r.getLong(1) -> r.getDouble(2)).toMap
-    val codes = Pq.encode(spark, emb, model).collect()
+    val codes = Pq.PQ().encode(emb, model).collect()
       .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1))
     codes.foreach { case (id, c) =>
       assert(viaPlan(id) == model.adc(lut, c), s"vec $id diverges")
@@ -94,14 +94,14 @@ class PqSpec extends SparkSpec {
   test("pq ann: recall@10 vs exact knn, never self, deterministic") {
     val exact = KnnExact.topK(spark, sf0001, queryMaxId = 8, k = 10).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val got = Pq.annPq(spark, sf0001).collect()
+    val got = Pq.ann(spark, Pq.PQ(), sf0001).collect()
     val gotPairs = got.map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.forall(r => r.getLong(0) != r.getLong(1)), "self-match leaked")
     val recall = (exact & gotPairs).size.toDouble / exact.size
     // k1=100 of 500 corpus vectors re-ranked exactly; random 64-d vectors
     // are the hard case for 8x16 codebooks — measured recall ≈0.9.
     assert(recall >= 0.7, s"pq recall=$recall over ${exact.size} exact pairs")
-    val again = Pq.annPq(spark, sf0001).collect()
+    val again = Pq.ann(spark, Pq.PQ(), sf0001).collect()
     assert(got.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq)
   }
 
@@ -109,22 +109,22 @@ class PqSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf0001)
     // One FIXED codebook set for both layouts (append encodes with the
     // stored model, so the rebuild twin must quantize identically).
-    val model = Pq.fit(emb.filter(col("vec_id") < 400))
+    val model = Pq.PQ().fit(emb.filter(col("vec_id") < 400))
     val incr = java.nio.file.Files.createTempDirectory("graft-pq-incr").toString
-    Pq.buildPqIndex(spark, emb.filter(col("vec_id") < 400), model, incr)
-    Pq.appendPqIndex(spark, incr, emb.filter(col("vec_id") >= 400))
+    Pq.build(spark, Pq.PQ(), emb.filter(col("vec_id") < 400), model, incr)
+    Pq.append(spark, Pq.PQ(), incr, emb.filter(col("vec_id") >= 400))
     val full = java.nio.file.Files.createTempDirectory("graft-pq-full").toString
-    Pq.buildPqIndex(spark, emb, model, full)
+    Pq.build(spark, Pq.PQ(), emb, model, full)
     def codes(dir: String) = Pq.liveCodes(spark, dir)
       .select("vec_id", "codes").collect()
       .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toSet
     assert(codes(incr) == codes(full),
       "appended PQ index must hold the same live codes as a rebuild")
-    Pq.deleteFromPqIndex(spark, incr, Seq(42L))
+    Pq.delete(spark, incr, Seq(42L))
     assert(!codes(incr).exists(_._1 == 42L), "deleted id still live")
     val changed = emb.filter(col("vec_id") === 7L)
       .withColumn("embedding", transform(col("embedding"), x => (-x).cast("float")))
-    Pq.appendPqIndex(spark, incr, changed)
+    Pq.append(spark, Pq.PQ(), incr, changed)
     val v7 = codes(incr).filter(_._1 == 7L)
     assert(v7.size == 1, s"expected one live version of id 7, got ${v7.size}")
     val wantCodes = model.encode(changed.collect()(0).getSeq[Float](1).toArray).toSeq
@@ -134,7 +134,7 @@ class PqSpec extends SparkSpec {
     // Vacuum: identical live codes, dead rows physically gone, markers
     // retired, and the flat code table is back to a plain-scan read.
     val liveBefore = codes(incr)
-    Pq.vacuumPqIndex(spark, incr)
+    Pq.vacuum(spark, incr)
     assert(codes(incr) == liveBefore, "vacuum changed the live code set")
     assert(!new java.io.File(s"$incr/tombstones").exists)
     assert(!new java.io.File(s"$incr/superseded").exists)
@@ -144,9 +144,9 @@ class PqSpec extends SparkSpec {
 
   test("sq8: one byte per dim; decode error bounded by half a grid step") {
     val emb = Tables.embeddings(spark, sf0001)
-    val sq = Pq.fitSq(emb)
+    val sq = Pq.SQ8.fit(emb)
     assert(sq.dim == 64)
-    val codes = Pq.encodeSq(spark, emb, sq).collect()
+    val codes = Pq.SQ8.encode(emb, sq).collect()
       .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
     val vecs = emb.select(col("vec_id"), col("embedding")).limit(50).collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
@@ -169,10 +169,10 @@ class PqSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // k1 = corpus size ⇒ the exact re-rank sees every vector: the pair set
     // must equal brute force regardless of quantization error.
-    val fullRank = Pq.annSq8(spark, sf0001, k1 = 500).collect()
+    val fullRank = Pq.ann(spark, Pq.SQ8, sf0001, k1 = 500).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(fullRank == exact, "full-rank SQ8 must reduce to exact knn")
-    val got = Pq.annSq8(spark, sf0001).collect()
+    val got = Pq.ann(spark, Pq.SQ8, sf0001).collect()
     assert(got.forall(r => r.getLong(0) != r.getLong(1)), "self-match leaked")
     val gotPairs = got.map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact & gotPairs).size.toDouble / exact.size
@@ -180,13 +180,13 @@ class PqSpec extends SparkSpec {
     // k1=100 should be near-exact (measured 1.0 on the fixtures), far above
     // PQ's 0.7 bound — that fidelity gap is the reason the rung exists.
     assert(recall >= 0.9, s"sq8 recall=$recall over ${exact.size} exact pairs")
-    val again = Pq.annSq8(spark, sf0001).collect()
+    val again = Pq.ann(spark, Pq.SQ8, sf0001).collect()
     assert(got.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq, "nondeterministic")
   }
 
   test("indexed sq8 ann equals the inline path (same deterministic fit)") {
-    val inline = Pq.annSq8(spark, sf0001).collect().map(_.toSeq).toSeq
-    val indexed = Pq.annSq8Indexed(spark, sf0001).collect().map(_.toSeq).toSeq
+    val inline = Pq.ann(spark, Pq.SQ8, sf0001).collect().map(_.toSeq).toSeq
+    val indexed = Pq.annIndexed(spark, Pq.SQ8, sf0001).collect().map(_.toSeq).toSeq
     assert(indexed == inline)
   }
 
@@ -194,25 +194,25 @@ class PqSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf0001)
     // One FIXED grid for both layouts (append quantizes with the stored
     // model, so the rebuild twin must encode identically).
-    val model = Pq.fitSq(emb.filter(col("vec_id") < 400))
+    val model = Pq.SQ8.fit(emb.filter(col("vec_id") < 400))
     val incr = java.nio.file.Files.createTempDirectory("graft-sq-incr").toString
-    Pq.buildSqIndex(spark, emb.filter(col("vec_id") < 400), model, incr)
-    Pq.appendSqIndex(spark, incr, emb.filter(col("vec_id") >= 400))
+    Pq.build(spark, Pq.SQ8, emb.filter(col("vec_id") < 400), model, incr)
+    Pq.append(spark, Pq.SQ8, incr, emb.filter(col("vec_id") >= 400))
     val full = java.nio.file.Files.createTempDirectory("graft-sq-full").toString
-    Pq.buildSqIndex(spark, emb, model, full)
-    def codes(dir: String) = Pq.liveSqCodes(spark, dir)
+    Pq.build(spark, Pq.SQ8, emb, model, full)
+    def codes(dir: String) = Pq.liveCodes(spark, dir)
       .select("vec_id", "codes").collect()
       .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toSet
     assert(codes(incr) == codes(full),
       "appended SQ8 index must hold the same live codes as a rebuild")
-    Pq.deleteFromSqIndex(spark, incr, Seq(42L))
+    Pq.delete(spark, incr, Seq(42L))
     assert(!codes(incr).exists(_._1 == 42L), "deleted id still live")
     val changed = emb.filter(col("vec_id") === 7L)
       .withColumn("embedding", transform(col("embedding"), x => (-x).cast("float")))
-    Pq.appendSqIndex(spark, incr, changed)
+    Pq.append(spark, Pq.SQ8, incr, changed)
     val v7 = codes(incr).filter(_._1 == 7L)
     assert(v7.size == 1, s"expected one live version of id 7, got ${v7.size}")
-    Pq.vacuumSqIndex(spark, incr)
+    Pq.vacuum(spark, incr)
     assert(!codes(incr).exists(_._1 == 42L), "vacuum resurrected a delete")
     assert(spark.read.parquet(s"$incr/codes").count() == codes(incr).size,
       "dead code rows survived the vacuum")
@@ -220,13 +220,13 @@ class PqSpec extends SparkSpec {
 
   test("bq: one long per vector; fit is partition-independent scaled-long means") {
     val emb = Tables.embeddings(spark, sf0001)
-    val model = Pq.fitBq(emb)
+    val model = Pq.BQ.fit(emb)
     assert(model.dim == 64)
-    val again = Pq.fitBq(emb.repartition(7))
+    val again = Pq.BQ.fit(emb.repartition(7))
     assert(model.thr6.toSeq == again.thr6.toSeq,
       "thresholds must be bitwise partition-independent")
     // codegen encode ≡ driver encode for every vector
-    val codes = Pq.encodeBq(spark, emb, model).collect()
+    val codes = Pq.BQ.encode(emb, model).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     emb.select(col("vec_id"), col("embedding")).collect().foreach { r =>
       assert(codes(r.getLong(0)) == model.encodeSeq(r.getSeq[Float](1)),
@@ -244,10 +244,10 @@ class PqSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // k1 = corpus size ⇒ the exact re-rank sees every vector: the pair set
     // must equal brute force regardless of how lossy the sign bits are.
-    val fullRank = Pq.annBq(spark, sf0001, k1 = 500).collect()
+    val fullRank = Pq.ann(spark, Pq.BQ, sf0001, k1 = 500).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(fullRank == exact, "full-rank BQ must reduce to exact knn")
-    val got = Pq.annBq(spark, sf0001).collect()
+    val got = Pq.ann(spark, Pq.BQ, sf0001).collect()
     assert(got.forall(r => r.getLong(0) != r.getLong(1)), "self-match leaked")
     val gotPairs = got.map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact & gotPairs).size.toDouble / exact.size
@@ -256,13 +256,13 @@ class PqSpec extends SparkSpec {
     // (RecallSweep: 0.663/0.875/0.975 at k1=50/100/200) — floor at the
     // repo-standard 0.7 bound, well above chance (k1/N = 0.2).
     assert(recall >= 0.7, s"bq recall=$recall over ${exact.size} exact pairs")
-    val again = Pq.annBq(spark, sf0001).collect()
+    val again = Pq.ann(spark, Pq.BQ, sf0001).collect()
     assert(got.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq, "nondeterministic")
   }
 
   test("indexed bq ann equals the inline path (same deterministic fit)") {
-    val inline = Pq.annBq(spark, sf0001).collect().map(_.toSeq).toSeq
-    val indexed = Pq.annBqIndexed(spark, sf0001).collect().map(_.toSeq).toSeq
+    val inline = Pq.ann(spark, Pq.BQ, sf0001).collect().map(_.toSeq).toSeq
+    val indexed = Pq.annIndexed(spark, Pq.BQ, sf0001).collect().map(_.toSeq).toSeq
     assert(indexed == inline)
   }
 
@@ -270,25 +270,25 @@ class PqSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf0001)
     // One FIXED threshold set for both layouts (append encodes with the
     // stored model, so the rebuild twin must encode identically).
-    val model = Pq.fitBq(emb.filter(col("vec_id") < 400))
+    val model = Pq.BQ.fit(emb.filter(col("vec_id") < 400))
     val incr = java.nio.file.Files.createTempDirectory("graft-bq-incr").toString
-    Pq.buildBqIndex(spark, emb.filter(col("vec_id") < 400), model, incr)
-    Pq.appendBqIndex(spark, incr, emb.filter(col("vec_id") >= 400))
+    Pq.build(spark, Pq.BQ, emb.filter(col("vec_id") < 400), model, incr)
+    Pq.append(spark, Pq.BQ, incr, emb.filter(col("vec_id") >= 400))
     val full = java.nio.file.Files.createTempDirectory("graft-bq-full").toString
-    Pq.buildBqIndex(spark, emb, model, full)
-    def codes(dir: String) = Pq.liveBqCodes(spark, dir)
+    Pq.build(spark, Pq.BQ, emb, model, full)
+    def codes(dir: String) = Pq.liveCodes(spark, dir)
       .select("vec_id", "code").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(codes(incr) == codes(full),
       "appended BQ index must hold the same live codes as a rebuild")
-    Pq.deleteFromBqIndex(spark, incr, Seq(42L))
+    Pq.delete(spark, incr, Seq(42L))
     assert(!codes(incr).exists(_._1 == 42L), "deleted id still live")
     val changed = emb.filter(col("vec_id") === 7L)
       .withColumn("embedding", transform(col("embedding"), x => (-x).cast("float")))
-    Pq.appendBqIndex(spark, incr, changed)
+    Pq.append(spark, Pq.BQ, incr, changed)
     val v7 = codes(incr).filter(_._1 == 7L)
     assert(v7.size == 1, s"expected one live version of id 7, got ${v7.size}")
-    Pq.vacuumBqIndex(spark, incr)
+    Pq.vacuum(spark, incr)
     assert(!codes(incr).exists(_._1 == 42L), "vacuum resurrected a delete")
     assert(spark.read.parquet(s"$incr/codes").count() == codes(incr).size,
       "dead code rows survived the vacuum")
@@ -298,7 +298,7 @@ class PqSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf0001)
     val cents = graft.operators.Vectors.quantizer(
       spark, emb.filter(col("vec_id") < 400), cells = 16)
-    val model = Pq.fit(emb.filter(col("vec_id") < 400))
+    val model = Pq.PQ().fit(emb.filter(col("vec_id") < 400))
     val incr = java.nio.file.Files.createTempDirectory("graft-ivfpq-incr").toString
     Pq.buildIvfPqIndexWith(spark, emb.filter(col("vec_id") < 400), cents, model, incr)
     Pq.appendIvfPqIndex(spark, incr, emb.filter(col("vec_id") >= 400))

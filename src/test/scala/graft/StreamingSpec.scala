@@ -127,14 +127,14 @@ class StreamingSpec extends SparkSpec {
       spark.read.parquet(outDir).select("vec_id", "codes").collect()
         .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toSet
     }
-    val pq = graft.operators.Pq.fit(emb)
-    val pqBatch = graft.operators.Pq.encode(spark, emb, pq).collect()
+    val pq = graft.operators.Pq.PQ().fit(emb)
+    val pqBatch = graft.operators.Pq.PQ().encode(emb, pq).collect()
       .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toSet
-    assert(streamed(org.apache.spark.sql.graft.VectorExpressions.pqEncode(_, pq)) == pqBatch)
-    val sq = graft.operators.Pq.fitSq(emb)
-    val sqBatch = graft.operators.Pq.encodeSq(spark, emb, sq).collect()
+    assert(streamed(graft.operators.Pq.PQ().encoder(pq)) == pqBatch)
+    val sq = graft.operators.Pq.SQ8.fit(emb)
+    val sqBatch = graft.operators.Pq.SQ8.encode(emb, sq).collect()
       .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toSet
-    assert(streamed(org.apache.spark.sql.graft.VectorExpressions.sq8Encode(_, sq)) == sqBatch)
+    assert(streamed(graft.operators.Pq.SQ8.encoder(sq)) == sqBatch)
     assert(pqBatch.size == 500 && sqBatch.size == 500)
   }
 
@@ -180,9 +180,9 @@ class StreamingSpec extends SparkSpec {
 
   test("batch append onto a stream-bootstrapped code table adopts the sink layout") {
     val emb = Tables.embeddings(spark, sf0001)
-    val sq = graft.operators.Pq.fitSq(emb)
+    val sq = graft.operators.Pq.SQ8.fit(emb)
     val idx = Files.createTempDirectory("graft-adopt-idx").toString
-    graft.operators.Pq.writeSqModel(spark, sq, s"$idx/model")
+    graft.operators.Pq.SQ8.writeModel(spark, sq, s"$idx/model")
     // Bootstrap codes/ via the STREAMING sink: the dir carries _spark_metadata.
     val src = Files.createTempDirectory("graft-adopt-src").toString
     locally {
@@ -195,24 +195,24 @@ class StreamingSpec extends SparkSpec {
     }
     val ckpt = Files.createTempDirectory("graft-adopt-ckpt").toString
     val q = Streams.codesSink(spark,
-      src, org.apache.spark.sql.graft.VectorExpressions.sq8Encode(_, sq),
+      src, graft.operators.Pq.SQ8.encoder(sq),
       s"$idx/codes", ckpt)
     try q.processAllAvailable()
     finally q.stop()
     assert(new java.io.File(s"$idx/codes/_spark_metadata").exists,
       "precondition: streamed bootstrap carries a sink log")
     // Without adoption this append would be invisible to batch readers.
-    graft.operators.Pq.appendSqIndex(spark, idx,
+    graft.operators.Pq.append(spark, graft.operators.Pq.SQ8, idx,
       emb.filter(org.apache.spark.sql.functions.col("vec_id") >= 400))
     assert(!new java.io.File(s"$idx/codes/_spark_metadata").exists,
       "append must retire the sink log before writing")
     def codes(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id", "codes").collect()
         .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq)).toSet
-    val got = codes(graft.operators.Pq.liveSqCodes(spark, idx))
+    val got = codes(graft.operators.Pq.liveCodes(spark, idx))
     val full = Files.createTempDirectory("graft-adopt-full").toString
-    graft.operators.Pq.buildSqIndex(spark, emb, sq, full)
-    assert(got == codes(graft.operators.Pq.liveSqCodes(spark, full)),
+    graft.operators.Pq.build(spark, graft.operators.Pq.SQ8, emb, sq, full)
+    assert(got == codes(graft.operators.Pq.liveCodes(spark, full)),
       "stream-bootstrapped + batch-appended index must equal a full rebuild")
     // The retired bootstrap must REFUSE to restart: with its old checkpoint
     // it would recreate a _spark_metadata log hiding the batch-appended rows
@@ -220,14 +220,14 @@ class StreamingSpec extends SparkSpec {
     // into a fast failure.
     val e = intercept[IllegalArgumentException] {
       Streams.codesSink(spark, src,
-        org.apache.spark.sql.graft.VectorExpressions.sq8Encode(_, sq),
+        graft.operators.Pq.SQ8.encoder(sq),
         s"$idx/codes", ckpt)
     }
     assert(e.getMessage.contains("adopted"), e.getMessage)
     // A from-scratch rebuild resets ALL marker state including the adoption
     // sentinel — the rebuilt directory may legitimately be bootstrapped by a
     // fresh streaming sink again.
-    graft.operators.Pq.buildSqIndex(spark, emb, sq, idx)
+    graft.operators.Pq.build(spark, graft.operators.Pq.SQ8, emb, sq, idx)
     graft.operators.Lifecycle.assertNotAdopted(spark, s"$idx/codes")
   }
 

@@ -73,7 +73,7 @@ class VectorExprSpec extends SparkSpec {
   test("PqEncode expression is bitwise-identical to the driver-side kernel, both eval modes") {
     import graft.operators.Pq
     val emb = Tables.embeddings(spark, sf0001)
-    val model = Pq.fit(emb)
+    val model = Pq.PQ().fit(emb)
     def driverSide = emb.orderBy("vec_id").limit(50).collect()
       .map(r => (r.getLong(0), model.encode(r.getSeq[Float](1).toArray).toSeq))
     def viaExpr() = emb.orderBy("vec_id").limit(50)
