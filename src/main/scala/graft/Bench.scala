@@ -244,9 +244,9 @@ object Bench {
     // SEARCH latency against a prebuilt index — the reference's benchmark
     // methodology (SURVEY §2.A A10 measures search against a built index;
     // ingest is its own lifecycle step, timed per artifact below and per
-    // query by tools/Profile's cold call). Failures here are left for the
-    // queries themselves to surface so they land in the per-query error
-    // accounting.
+    // query by tools/Profile's cold call). Failures here are named (see
+    // `ingest`) and left for the queries themselves to surface so they land
+    // in the per-query error accounting.
     // The ingest/fit wall time is MEASURED and reported as its own JSON line
     // below ("metric":"ingest") — steady-state query latency and artifact
     // build cost are both visible to the driver, neither hides the other.
@@ -257,12 +257,19 @@ object Bench {
     // embedded in bench_per_query.json ("ingest_parts"), so BenchDiff can
     // attribute round-over-round drift in UNTIMED work to the artifact that
     // moved, the way it attributes query movers. Each build gets its own
-    // try: one failed artifact no longer skips the rest — failures still
-    // surface in the queries that need the artifact, same as before.
+    // try: one failed artifact no longer skips the rest. A failure is
+    // named on stderr and in bench_per_query.json ("ingest_errors"), and
+    // still surfaces in the queries that need the artifact; a fatal error
+    // (OOM, interrupt) ends the run.
     val ingestParts = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val ingestErrors = scala.collection.mutable.LinkedHashMap[String, String]()
     def ingest(name: String)(body: => Any): Unit = {
       val t0 = System.nanoTime()
-      try body catch { case _: Throwable => () }
+      try body catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"INGEST FAILED: $name: $e")
+          ingestErrors(name) = jsonSafe(e)
+      }
       ingestParts(name) = (System.nanoTime() - t0) / 1e9
     }
     val ingestT0 = System.nanoTime()
@@ -421,11 +428,7 @@ object Bench {
         val ok =
           try { rowCounts(name) = fn(spark, sfDir).count(); true } catch {
             case e: Throwable =>
-              // Strip backslash, quote, and ALL control chars (Spark plan
-              // fragments carry tabs/newlines): the message is embedded in
-              // JSON string literals that must stay parseable.
-              errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-                .replaceAll("[\\\\\"\\p{Cntrl}]", " ").take(200)
+              errors(name) = jsonSafe(e)
               false
           }
         val dt = (System.nanoTime() - t0) / 1e9
@@ -527,6 +530,9 @@ object Bench {
       val partsObj = ingestParts
         .map { case (k, v) => s"\"" + k + "\":" + r4(v) }
         .mkString("\"ingest_parts\":{", ",", "},")
+      val ingestErrObj = ingestErrors
+        .map { case (k, v) => s"\"" + k + "\":\"" + v + "\"" }
+        .mkString("\"ingest_errors\":{", ",", "},")
       // Ordered (reps+1)-point phase trace: pre, mid1..mid(reps-1), post.
       // Flat name→number objects so BenchDiff's parseObj reads them like
       // ingest_parts; the pre/post scalar fields stay for older consumers.
@@ -543,7 +549,7 @@ object Bench {
       val rowsObj = rowCounts
         .map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString("\"query_rows\":{", ",", "},")
-      val meta = s""""ingest_sec":${r4(ingestSec)},""" + partsObj +
+      val meta = s""""ingest_sec":${r4(ingestSec)},""" + partsObj + ingestErrObj +
         traceMultiObj + traceMemObj + rowsObj +
         s""""phase_suspect":$phaseSuspect,"phase_class":"$phaseLabel","phase_gate_multi_sec":$PhaseSuspectMultiSec,"phase_warm_multi_sec":$PhaseWarmMultiSec,"phase_mid_multi_mean":${r4(midMultiMean)},""" +
         s""""mem_phase_class":"$memPhaseLabel","mem_phase_mid_mean":${r4(memMidMean)},"mem_phase_warm_sec":$MemWarmMultiSec,"mem_phase_suspect_sec":$MemSuspectMultiSec,""" +
@@ -581,6 +587,14 @@ object Bench {
       sys.exit(1)
     }
   }
+
+  /** An error message fit for a JSON string literal: backslash, quote and
+    * ALL control chars (Spark plan fragments carry tabs/newlines) become
+    * spaces, cut to 200 chars.
+    */
+  private def jsonSafe(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName)
+      .replaceAll("[\\\\\"\\p{Cntrl}]", " ").take(200)
 
   /** Cores the bench session runs on. */
   private def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt

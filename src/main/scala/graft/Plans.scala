@@ -3,7 +3,11 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
+import org.apache.spark.sql.types.StructType
 
 /** PREPARED-QUERY cache — the statement-cache layer every serving engine
   * puts in front of a per-request query compiler (the reference's ES
@@ -50,6 +54,12 @@ import org.apache.spark.sql.DataFrame
   *     queries (releaseAll), and a cached plan over released localCheckpoint
   *     blocks fails on re-execution. Detected via [[Materialize.pinCount]]
   *     around the build — zero per-query bookkeeping.
+  *   - A build whose analyzed plan holds driver-collected RESULT rows
+  *     ([[resultFrame]] — the indexed and quantized kNN searches return
+  *     their answer as a local frame) is returned UNCACHED: a prepared
+  *     statement keeps the plan, not its results, and re-serving the frame
+  *     would replay the stored rows instead of running the search.
+  *     Literal tables a builder writes into its plan stay cacheable.
   *   - [[Readers.bump]] clears this cache (the key also carries the epoch,
   *     so a stale entry is unreachable even mid-race): every lifecycle
   *     mutation re-prepares, the same staleness contract as the relation
@@ -86,7 +96,21 @@ object Plans {
 
   private[graft] def clear(): Unit = memo.clear()
 
-  def cached(name: String, spark: org.apache.spark.sql.SparkSession, sfDir: String)(
+  private val ResultRows = TreeNodeTag[Unit]("graft.resultRows")
+
+  /** A local frame over `rows`, result rows a query collected to the
+    * driver, marked so [[cached]] never re-serves a plan that holds them.
+    */
+  def resultFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame = {
+    val df = spark.createDataFrame(rows.asJava, schema)
+    df.queryExecution.analyzed.setTagValue(ResultRows, ())
+    df
+  }
+
+  private def holdsResults(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.exists(_.getTagValue(ResultRows).isDefined)
+
+  def cached(name: String, spark: SparkSession, sfDir: String)(
       build: => DataFrame): DataFrame = {
     // every served query plans its small terminal sort in one partition
     org.apache.spark.sql.graft.SmallSort.install(spark)
@@ -111,7 +135,7 @@ object Plans {
       // loser's plan is simply returned uncached.
       val pinsBefore = graft.operators.Materialize.pinCount
       val df = build
-      if (graft.operators.Materialize.pinCount != pinsBefore) df
+      if (graft.operators.Materialize.pinCount != pinsBefore || holdsResults(df)) df
       else {
         val prev = memo.putIfAbsent(key, df)
         if (prev != null) prev else df

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.Tables
 import org.apache.spark.sql.graft.VectorExpressions
@@ -17,39 +20,35 @@ import org.apache.spark.sql.graft.VectorExpressions
   * Phase 2 (re-rank): exact Euclidean distance on the k1 candidates, keep
   * top-k2. Self-matches are EXCLUDED (documented contract choice, SURVEY A7).
   *
-  * Spark shape (indexed search, [[searchIndex]] / [[searchIndexByVector]]):
-  * the query side is a few hundred bytes of driver data, carried into the
-  * plan as literals — an exact (tbl, hash) key set beside the static pkey
-  * partition prune, plus literal key → query and query → vector maps. The
-  * postings scan counts collisions per (query, candidate) in one exchange;
-  * everything after the count runs in a single partition: window top-k1,
-  * broadcast into the vectors join for the exact distance, an ordered
-  * limit that gathers the |Q|·k1 rescored rows, window top-k2, final sort.
-  * A search is three Spark jobs — the collision-count exchange, the k1
-  * broadcast, the result (KnnJobsSpec). Everything after the k1 cut is
-  * [[rerank]], the one exact re-rank tail the quantized searches in [[Pq]]
-  * share. Its ordered limit of |Q|·k1 rows drops nothing: the k1 window
-  * leaves at most k1 candidates per query, and each joins at most one
-  * vectors row, since vec_id is the key of the vectors frame (an appended
-  * layout's duplicate copies are collapsed first). Every stored-query
-  * vector search carries its query side into the plan as literals like
-  * this, never as a broadcast relation (the quantized and indexed IVF
-  * searches derive theirs from [[queryVectors]]). This is the
-  * collision-counting LSH similarity join (PAPERS.md C2Net) expressed with
-  * stock relational operators so Catalyst handles pushdown and join
-  * selection.
+  * Spark shape (indexed search, [[searchIndex]] / [[searchIndexByVector]]),
+  * the reference's coordinating node (SURVEY §3.3 steps 3–4): the query
+  * side is a few hundred bytes of driver data, carried into the plan as
+  * literals — an exact (tbl, hash) key set beside the static pkey
+  * partition prune, and literal vec_id → query and query → vector maps. A
+  * search is two Spark jobs, neither with an exchange (KnnJobsSpec): the
+  * probe collects the probed postings' (key, vec_id) rows, and the driver
+  * counts collisions per query and cuts top-k1; then [[rerank]], the one
+  * exact re-rank tail the quantized searches in [[Pq]] share, fetches the
+  * k1 candidates' vectors rows by a pushed vec_id filter, scores them on
+  * the executors and collects the at most |Q|·k1 rescored rows, and the
+  * driver cuts top-k2. The searches run these jobs when called and return
+  * a local frame. Every stored-query vector search carries its query side
+  * into the plan as literals like this, never as a broadcast relation (the
+  * quantized and indexed IVF searches derive theirs from [[queryVectors]]).
+  * This is the collision-counting LSH similarity join (PAPERS.md C2Net),
+  * with the counting step on the bounded set of probed postings, so it
+  * needs no shuffle.
   *
   * Scale notes (100 TB): the candidate scan reads only the probed pkey
   * directories and is executor-parallel; no cross product anywhere, and no
-  * embedding is ever shuffled (the k1 set is broadcast into the corpus-sized
-  * vectors scan). The single-partition tail is bounded by construction: the
-  * counted pairs are at most the probed buckets' postings (E[bucket] is
-  * held near the target by [[Lsh.deriveBits]], and [[Lsh.autoBucketCap]]
-  * caps it past the width ceiling), and |Q|·k1 rows after the cut; |Q| is
-  * point-lookup sized by contract, as the driver-side query GET already
-  * assumes. Skewed buckets (a hash value holding a large fraction of rows)
-  * are the known risk; the bucket cap or salting the heavy hashes (SURVEY
-  * §7) is the mitigation.
+  * embedding is ever shuffled or collected (the fetch returns distances).
+  * The driver holds at most the probed postings' (key, vec_id) pairs —
+  * E[bucket] is held near the target by [[Lsh.deriveBits]], and
+  * [[Lsh.autoBucketCap]] caps it past the width ceiling — plus at most
+  * |Q|·k1 rescored rows; |Q| is point-lookup sized by contract, as the
+  * driver-side query GET already assumes. Skewed buckets (a hash value
+  * holding a large fraction of rows) are the known risk; the bucket cap or
+  * salting the heavy hashes (SURVEY §7) is the mitigation.
   */
 object Knn {
 
@@ -127,16 +126,16 @@ object Knn {
   /** q120 — FILTERED search against the persisted index (the indexed twin
     * of [[KnnExact.topKFiltered]], A5–A7 composed with a metadata
     * predicate). The index layout stores no attributes beyond the vector,
-    * so the label predicate is a METADATA JOIN: candidate ids from the
-    * collision count join the (vec_id, label) projection of the source
-    * table, and disallowed candidates drop BEFORE the k1 cut — k1 slots
-    * only ever hold servable candidates (pure post-filtering of a k2 list
-    * under-fills; pre-filtering the postings would need label-aware
-    * partitioning). At 100 TB the metadata side is a 2-column columnar
-    * scan joined on vec_id against the bucket-sized candidate set —
-    * broadcast whichever side is small; candidate sets from a point query
-    * are tiny, so AQE picks them. Rows-only gate; pinned by the LshSpec
-    * filtered-recall + label-soundness spec.
+    * so the label predicate is a METADATA JOIN: the probed postings
+    * semi-join the (vec_id, label) projection of the source table, and
+    * disallowed candidates drop BEFORE the collision count and the k1
+    * cut — k1 slots only ever hold servable candidates (pure
+    * post-filtering of a k2 list under-fills; pre-filtering the postings
+    * scan would need label-aware partitioning). At 100 TB the metadata
+    * side is a 2-column columnar scan joined on vec_id against the
+    * bucket-sized probed postings — broadcast whichever side is small;
+    * those from a point query are tiny, so AQE picks them. Rows-only gate;
+    * pinned by the LshSpec filtered-recall + label-soundness spec.
     */
   def lshTopKFilteredIndexed(
       spark: SparkSession,
@@ -188,8 +187,10 @@ object Knn {
     * before the k1 cut so every slot is servable). Output rows carry
     * `query_id = -1`.
     *
-    * Launches no Spark job before its action: the query side is driver
-    * arithmetic carried into the plan as literals (see [[search]]).
+    * Runs its two Spark jobs, the postings probe and the candidate fetch,
+    * when called, and returns a local frame whose action runs none: the
+    * query side is driver arithmetic carried into the plans as literals
+    * (see [[search]]).
     *
     * Parity contract (spec-pinned): for a vector that IS stored, searching
     * by value with its id excluded returns exactly [[searchIndex]]'s
@@ -206,26 +207,28 @@ object Knn {
       bucketCap: Int = 0,
       excludeIds: Seq[Long] = Nil): DataFrame = {
     val (model, _) = Lsh.loadModel(spark, s"$indexDir/model")
+    val excluded = excludeIds.toArray.sorted
     search(spark, indexDir,
       probesOf(-1L, model.hashVector(query).toSeq, model, multiprobe),
       Map(-1L -> query.toSeq), k1, k2, bucketCap,
-      keep = if (excludeIds.isEmpty) lit(true) else !col("vec_id").isin(excludeIds: _*),
+      keep = (_, vec) => java.util.Arrays.binarySearch(excluded, vec) < 0,
       candidateFilter = None)
   }
 
   /** A5–A7 against a persisted [[Index]] layout, for every stored query id
     * below `queryMaxId`: one pushed-filter GET of the query docs'
     * precomputed hashes and vectors (no re-hash; the one job this call
-    * runs before its action, |Q|-small by contract and needed for the
+    * runs before the probe, |Q|-small by contract and needed for the
     * literal pkey prune), then [[search]]. Self-matches are excluded.
     *
     * `bucketCap` (0 = off, the gate default) bounds the posting-list length
     * per (tbl, hash) via [[Skew.capBuckets]] — the 100 TB control for
     * degenerate buckets (a hash value holding a large fraction of the
-    * corpus would otherwise dominate the collision join's fan-out). Capping
-    * trades a measured recall loss on exactly those low-signal buckets for
-    * a hard bound on join width. `candidateFilter` keeps only the vec_ids
-    * it holds, before the k1 cut (see [[lshTopKFilteredIndexed]]).
+    * corpus would otherwise dominate the probe's output). Capping trades a
+    * measured recall loss on exactly those low-signal buckets for a hard
+    * bound on the probed postings the driver counts. `candidateFilter`
+    * keeps only the vec_ids it holds, before the collision count and the
+    * k1 cut (see [[lshTopKFilteredIndexed]]).
     */
   def searchIndex(
       spark: SparkSession,
@@ -242,17 +245,20 @@ object Knn {
     search(spark, indexDir,
       qRows.toSeq.flatMap(r => probesOf(r.getLong(0), r.getSeq[Long](1), model, multiprobe)),
       qRows.map(r => r.getLong(0) -> r.getSeq[Float](2)).toMap,
-      k1, k2, bucketCap, keep = col("vec_id") =!= col("query_id"), candidateFilter)
+      k1, k2, bucketCap, keep = _ != _, candidateFilter)
   }
 
-  /** The search core both indexed entry points share: collision count over
-    * the probed postings (A5), top-k1, exact re-rank (A6), top-k2 — the
-    * three-job shape in the [[Knn]] scaladoc. `probes` are (query_id, tbl,
-    * hash), multiprobe flips included; `keep` is the exclusion predicate
-    * over (query_id, vec_id), applied before the count. Duplicate posting
-    * or vector copies exist only on a layout that has been appended to
-    * (append-after-delete), and only there are they collapsed: on the
-    * probed postings, and on the |Q|·k1 re-rank rows.
+  /** The search core both indexed entry points share, shaped like the
+    * reference's coordinating node (SURVEY §3.3 steps 3–4): the probe job
+    * collects the probed postings' (key, vec_id) rows, the driver counts
+    * collisions (A5) and cuts top-k1, and [[rerank]] fetches and rescores
+    * the k1 candidates (A6) and cuts top-k2 — the two-job shape in the
+    * [[Knn]] scaladoc. `probes` are (query_id, tbl, hash), multiprobe flips
+    * included; `keep` is the exclusion predicate over (query_id, vec_id),
+    * applied before the count. Duplicate posting or vector copies exist
+    * only on a layout that has been appended to (append-after-delete), and
+    * only there are they collapsed: on the probed postings, and on the
+    * |Q|·k1 rescored rows.
     */
   private def search(
       spark: SparkSession,
@@ -262,7 +268,7 @@ object Knn {
       k1: Int,
       k2: Int,
       bucketCap: Int,
-      keep: Column,
+      keep: (Long, Long) => Boolean,
       candidateFilter: Option[DataFrame]): DataFrame = {
     val (model, numBuckets) = Lsh.loadModel(spark, s"$indexDir/model")
     // (tbl, hash) packs exactly as tbl·2^bits + hash (hash < 2^bits) only
@@ -270,34 +276,59 @@ object Knn {
     require(model.bits < 64 && model.tables - 1L <= (Long.MaxValue >> model.bits),
       s"${model.tables} tables of ${model.bits} bits exceed the 63-bit probe key")
     val keyCol = shiftleft(col("tbl").cast("long"), model.bits).bitwiseOR(col("hash"))
-    val queriesByKey = probes.distinct
+    val queriesByKey = mutable.LongMap.from(probes.distinct
       .groupMap { case (_, t, h) => (t.toLong << model.bits) | h }(_._1)
+      .view.mapValues(_.toArray))
     val pkeys = probes.map { case (_, t, h) => Index.pkeyOf(t, h, numBuckets) }.distinct
     val appended = everAppended(spark, indexDir)
     val scanned = Index.livePostings(spark, indexDir)
       .filter(col(Index.PKeyCol).isin(pkeys: _*) && keyCol.isin(queriesByKey.keys.toSeq: _*))
     val deduped = if (appended) scanned.dropDuplicates("tbl", "hash", "vec_id") else scanned
-    val postings = if (bucketCap > 0) Skew.capBuckets(deduped, bucketCap) else deduped
-    // explode even for one query: a literal query_id would be folded out of
-    // the windows' partitionBy, leaving unpartitioned windows
-    val queryOf = element_at(typedLit(queriesByKey), keyCol)
-    val counted = postings
-      .select(col("vec_id"), explode(queryOf).as("query_id"))
-      .filter(keep)
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(count(lit(1)).as("collisions"))
-      // bounded by the probed buckets: one partition from here on
-      .coalesce(1)
-    val collisions = candidateFilter.fold(counted)(allowed =>
-      counted.join(allowed.select(col("vec_id")), Seq("vec_id"), "left_semi"))
-    val wK1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("collisions").desc, col("vec_id").asc)
-    val k1set = collisions
-      .withColumn("r1", row_number().over(wK1))
-      .filter(col("r1") <= k1)
-      .drop("r1")
-    rerank(k1set, Index.liveVectors(spark, indexDir), queryVecs, k1, k2, dedupe = appended)
+    val capped = if (bucketCap > 0) Skew.capBuckets(deduped, bucketCap) else deduped
+    val postings = candidateFilter.fold(capped)(allowed =>
+      capped.join(allowed.select(col("vec_id")), Seq("vec_id"), "left_semi"))
+    // The collision count, one primitive map per query: the probed
+    // postings are bounded by the probed buckets (see the [[Knn]] scaladoc)
+    val counts = mutable.LongMap.from(queryVecs.keys.map(_ -> mutable.LongMap.empty[Int]))
+    postings.select(keyCol, col("vec_id")).collect().foreach { r =>
+      val queries = queriesByKey(r.getLong(0))
+      val vec = r.getLong(1)
+      var i = 0
+      while (i < queries.length) {
+        if (keep(queries(i), vec)) {
+          val c = counts(queries(i))
+          c(vec) = c.getOrElse(vec, 0) + 1
+        }
+        i += 1
+      }
+    }
+    rerank(spark, counts.map { case (q, c) => q -> topByCollisions(c, k1) }.toMap,
+      Index.liveVectors(spark, indexDir), queryVecs, k2, dedupe = appended,
+      collisions = Some((q, vec) => counts(q)(vec).toLong))
   }
+
+  /** One query's top `k` vec_ids by (collisions desc, vec_id asc): every id
+    * counted above the cut count, then the smallest ids counted at it.
+    */
+  private def topByCollisions(counts: mutable.LongMap[Int], k: Int): Array[Long] =
+    if (counts.size <= k) counts.keys.toArray
+    else {
+      val byCount = new Array[Int](counts.valuesIterator.max + 1)
+      counts.foreachValue(c => byCount(c) += 1)
+      var cut = byCount.length - 1
+      var above = 0
+      while (above + byCount(cut) < k) { above += byCount(cut); cut -= 1 }
+      val top = new Array[Long](k)
+      val ties = new Array[Long](byCount(cut))
+      var (n, t) = (0, 0)
+      counts.foreachEntry { (vec, c) =>
+        if (c > cut) { top(n) = vec; n += 1 }
+        else if (c == cut) { ties(t) = vec; t += 1 }
+      }
+      java.util.Arrays.sort(ties)
+      System.arraycopy(ties, 0, top, n, k - n)
+      top
+    }
 
   /** The query side of the stored-query searches in [[Pq]] and
     * [[Vectors.annIvfIndexed]]: one pushed-filter collect of the query docs'
@@ -315,42 +346,51 @@ object Knn {
     element_at(typedLit(queryVecs), col("query_id"))
 
   /** The exact re-rank tail (A6) of every two-phase vector search — the
-    * indexed LSH core above and the seven quantized searches in [[Pq]]:
-    * the `k1set` of (query_id, vec_id) candidates is broadcast into the
-    * (vec_id, embedding) scan of `vectors`, scored by L2 against the literal
-    * query_id → vector map, cut to top-k2 by (dist, neighbor_id) and sorted.
-    * Output: (query_id, neighbor_id, rank, …, dist4), where … is every
-    * other `k1set` column in order (`collisions` for LSH, none for the
-    * quantized searches). `dedupe` collapses duplicate vector copies, which
-    * only an appended index layout can hold.
+    * indexed LSH core above and the seven quantized searches in [[Pq]] —
+    * run the way the reference's coordinating node runs it: one fetch job
+    * reads the k1 candidates' rows of `vectors` (a pushed vec_id `In`
+    * filter, a literal vec_id → query-ids map), scores them by L2 against
+    * the literal query_id → vector map on the executors and collects the
+    * at most |Q|·k1 rescored rows; the driver cuts top-k2 by
+    * (dist, neighbor_id). `k1set` maps each query to its candidate ids.
+    * Output, a local frame sorted by (query_id, rank): (query_id,
+    * neighbor_id, rank, collisions, dist4) with `collisions` (LSH), else
+    * (query_id, neighbor_id, rank, dist4). `dedupe` collapses duplicate
+    * vector copies, which only an appended index layout can hold.
     */
   private[operators] def rerank(
-      k1set: DataFrame,
+      spark: SparkSession,
+      k1set: Map[Long, Array[Long]],
       vectors: DataFrame,
       queryVecs: Map[Long, Seq[Float]],
-      k1: Int,
       k2: Int,
-      dedupe: Boolean): DataFrame = {
-    val carried = k1set.columns.toSeq.filterNot(Set("query_id", "vec_id")).map(col)
-    // broadcast the CANDIDATE side: the vectors side is the corpus, and the
-    // fixture-tiny vectors scan's static size would invert the join at scale
-    val rescored = broadcast(k1set)
-      .join(vectors.select(col("vec_id"), col("embedding")), "vec_id")
-      .select(col("query_id") +: col("vec_id").as("neighbor_id") +: carried :+
-        VectorExpressions.l2(queryVec(queryVecs), col("embedding")).as("dist"): _*)
-    val byDist = Seq(col("dist").asc, col("neighbor_id").asc)
-    // At most |Q|·k1 rescored rows (see the [[Knn]] scaladoc), so this limit
-    // keeps them all: it only gathers them, ordered, into one partition
-    // inside the result job (a local top-k per scan partition), with no
-    // exchange stage or sample job of its own.
-    (if (dedupe) rescored.dropDuplicates("query_id", "neighbor_id") else rescored)
-      .orderBy(col("query_id") +: byDist: _*)
-      .limit(math.multiplyExact(queryVecs.size, k1))
-      .withColumn("rank", row_number().over(Window.partitionBy(col("query_id")).orderBy(byDist: _*)))
-      .filter(col("rank") <= k2)
-      .select(col("query_id") +: col("neighbor_id") +: col("rank") +: carried :+
+      dedupe: Boolean,
+      collisions: Option[(Long, Long) => Long] = None): DataFrame = {
+    val queriesOf = k1set.toSeq
+      .flatMap { case (q, vecs) => vecs.map(_ -> q) }
+      .groupMap(_._1)(_._2)
+    val fetched = vectors
+      .filter(col("vec_id").isin(queriesOf.keys.toSeq.sorted: _*))
+      .select(explode(element_at(typedLit(queriesOf), col("vec_id"))).as("query_id"),
+        col("vec_id").as("neighbor_id"), col("embedding"))
+      .select(col("query_id"), col("neighbor_id"),
+        VectorExpressions.l2(queryVec(queryVecs), col("embedding")).as("dist"))
+    val rescored = if (queriesOf.isEmpty) Array.empty[Row] else fetched.collect()
+    val byDist = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+    val ranked = rescored.groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (q, rows) =>
+      val sorted = rows.map(r => (r.getDouble(2), r.getLong(1))).sorted(byDist)
+      (if (dedupe) sorted.distinctBy(_._2) else sorted).take(k2).zipWithIndex.map {
+        case ((dist, vec), i) => Row.fromSeq(Seq[Any](q, vec, i + 1) ++ collisions.map(_(q, vec)) :+ dist)
+      }
+    }
+    val carried = collisions.map(_ => "collisions").toSeq
+    val schema = StructType(
+      Seq(StructField("query_id", LongType, nullable = false),
+        StructField("neighbor_id", LongType), StructField("rank", IntegerType, nullable = false)) ++
+        carried.map(StructField(_, LongType, nullable = false)) :+ StructField("dist", DoubleType))
+    graft.Plans.resultFrame(spark, ranked, schema)
+      .select(col("query_id") +: col("neighbor_id") +: col("rank") +: carried.map(col) :+
         Det.display(col("dist"), 4).as("dist4"): _*)
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** A7: search by stored id — the query side is a filter on the indexed

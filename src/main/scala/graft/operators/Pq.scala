@@ -38,9 +38,10 @@ import org.apache.spark.sql.graft.VectorExpressions
   *     1. approximate scan: each code row explodes a literal array of query
   *        ids (the query side rides the plan, see [[Knn]]) and scores the
   *        codec's distance over the CODE column only — the float vector is
-  *        never touched. Top-k1 candidates per query.
+  *        never touched. Top-k1 candidates per query, collected to the
+  *        driver (at most |Q|·k1 rows).
   *     2. exact re-rank in [[Knn.rerank]]: true L2 on the k1 candidates
-  *        only, top-k2.
+  *        only, top-k2 on the driver.
   *
   * Scale notes (100 TB): encoding is a narrow codegen map with the model
   * riding the plan as a reference object (like [[Lsh.withHashes]]); the
@@ -530,7 +531,8 @@ object Pq {
 
   /** The candidate phase of every quantized search: score the `pairs` by
     * `dist`, drop self-matches, keep the top-k1 per query by
-    * (dist, vec_id), then exact re-rank in [[Knn.rerank]].
+    * (dist, vec_id), collect those at most |Q|·k1 (query_id, vec_id) rows,
+    * then exact re-rank in [[Knn.rerank]].
     */
   private def search(
       pairs: DataFrame,
@@ -545,7 +547,9 @@ object Pq {
       .withColumn("r1", row_number().over(wK1))
       .filter(col("r1") <= k1)
       .select(col("query_id"), col("vec_id"))
-    Knn.rerank(k1set, emb, qvecs, k1, k2, dedupe = false)
+      .collect()
+      .groupMap(_.getLong(0))(_.getLong(1))
+    Knn.rerank(pairs.sparkSession, k1set, emb, qvecs, k2, dedupe = false)
   }
 
   /** The inline searches' fitted models, one fit per (codec, corpus) per

@@ -9,19 +9,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.{Index, Knn, Pq, Vectors}
 
-/** Job budget of an indexed kNN search: the query side rides the plan as
-  * literals and everything after the collision count sits in one
-  * partition, so a search is the collision-count exchange, the k1
-  * broadcast and the result job — three jobs, measured on this sf0.001
-  * index (before the shared core it was nine: the query-side broadcasts,
-  * the k1/k2 window exchanges and the global sort's sample and range
-  * exchange each cost one). A regression back to broadcast relations or
-  * window exchanges fails here before any bench run.
+/** Job budgets of the two-phase vector searches, as total jobs per call
+  * (construction + action), measured on this sf0.001 index. An indexed LSH
+  * search runs like the reference's coordinating node: the postings probe
+  * and the candidate fetch are one job each, neither with an exchange, and
+  * the collision count and both top-k cuts run on the driver — so the
+  * search returns a local frame whose action runs no job. Before that it
+  * was three action jobs (the collision-count exchange, the k1 broadcast,
+  * the result), and nine before the shared core (the query-side
+  * broadcasts, the k1/k2 window exchanges and the global sort's sample and
+  * range exchange each cost one). A regression back to an exchange, a
+  * broadcast relation or a lazy tail fails here before any bench run.
   */
 class KnnJobsSpec extends SparkSpec {
 
-  /** Jobs started while `body` runs (the listener bus drained both sides). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
+  /** What `body` ran: its value, the jobs started and the executed plans
+    * of its actions (the listener bus drained both sides).
+    */
+  private def jobsDuring[T](body: => T): (T, Int, Seq[String]) = {
     val n = new AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
@@ -29,14 +34,22 @@ class KnnJobsSpec extends SparkSpec {
     TestBus.drain(spark)
     spark.sparkContext.addSparkListener(listener)
     try {
-      val out = body
-      TestBus.drain(spark)
-      (out, n.get)
+      var out: Option[T] = None
+      val plans = PlanLints.capture(spark) { out = Some(body) }
+      (out.get, n.get, plans)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  /** Jobs of the search core's action on a fresh (never appended) layout. */
-  val ActionJobs = 3
+  /** Jobs and plans of one search call and of its result's action. */
+  private def searchJobs(search: => DataFrame): (Array[org.apache.spark.sql.Row], Int, Seq[String]) = {
+    val (df, callJobs, plans) = jobsDuring(search)
+    val (rows, actionJobs, _) = jobsDuring(df.collect())
+    assert(actionJobs == 0, s"the search's action ran $actionJobs jobs")
+    (rows, callJobs, plans)
+  }
+
+  /** Jobs of an LSH search core call: the postings probe and the fetch. */
+  val SearchJobs = 2
 
   private lazy val idx = {
     val dir = Index.ensure(spark, sf0001)
@@ -47,40 +60,60 @@ class KnnJobsSpec extends SparkSpec {
     dir
   }
 
-  test("raw-vector search: no job before its action, at most three in it") {
-    val q = spark.read.parquet(s"$idx/vectors").filter("vec_id = 3")
-      .select("embedding").collect()(0).getSeq[Float](0).toArray
-    val (df, constructJobs) = jobsDuring(Knn.searchIndexByVector(spark, idx, q, 100, 10))
-    assert(constructJobs == 0, "searchIndexByVector ran a job before its action")
-    val (rows, actionJobs) = jobsDuring(df.collect())
-    assert(rows.nonEmpty)
-    info(s"action jobs: $actionJobs")
-    assert(actionJobs <= ActionJobs, s"raw-vector search ran $actionJobs jobs")
+  /** Stored vector 3, read outside any measured call. */
+  private lazy val q = spark.read.parquet(s"$idx/vectors").filter("vec_id = 3")
+    .select("embedding").collect()(0).getSeq[Float](0).toArray
+
+  /** The probe and fetch plans of a search: the postings scan and the
+    * vectors scan, neither behind an exchange.
+    */
+  private def assertProbesWithoutExchange(plans: Seq[String]): Unit = {
+    assert(plans.exists(_.contains("postings")) && plans.exists(_.contains("vectors")),
+      plans.mkString("\n\n"))
+    plans.foreach(p => assert(!p.contains("Exchange"), s"a search plan has an exchange:\n$p"))
   }
 
-  test("stored-id batch search: the query-doc GET plus at most three jobs") {
-    val (rows, jobs) = jobsDuring(Knn.searchIndex(spark, idx, queryMaxId = 8, 100, 10).collect())
+  test("raw-vector search: two jobs per call, both probes without an exchange") {
+    val query = q
+    val (rows, jobs, plans) = searchJobs(Knn.searchIndexByVector(spark, idx, query, 100, 10))
+    assert(rows.nonEmpty)
+    info(s"jobs: $jobs")
+    assert(jobs <= SearchJobs, s"raw-vector search ran $jobs jobs")
+    assertProbesWithoutExchange(plans)
+  }
+
+  test("stored-id batch search: the query-doc GET plus two jobs") {
+    val dir = idx
+    val (rows, jobs, plans) = searchJobs(Knn.searchIndex(spark, dir, queryMaxId = 8, 100, 10))
     assert(rows.map(_.getLong(0)).distinct.length == 8)
     info(s"jobs: $jobs")
-    assert(jobs <= 1 + ActionJobs, s"stored-id search ran $jobs jobs")
+    assert(jobs <= 1 + SearchJobs, s"stored-id search ran $jobs jobs")
+    assertProbesWithoutExchange(plans)
   }
 
   test("multiprobe search keeps the same budget") {
-    val (_, jobs) = jobsDuring(
-      Knn.searchIndex(spark, idx, queryMaxId = 4, 100, 10, multiprobe = true).collect())
-    info(s"jobs: $jobs")
-    assert(jobs <= 1 + ActionJobs, s"multiprobe search ran $jobs jobs")
+    val query = q
+    val (_, byVector, vectorPlans) = searchJobs(
+      Knn.searchIndexByVector(spark, idx, query, 100, 10, multiprobe = true))
+    val (_, stored, storedPlans) = searchJobs(
+      Knn.searchIndex(spark, idx, queryMaxId = 4, 100, 10, multiprobe = true))
+    info(s"jobs: raw-vector $byVector, stored-id $stored")
+    assert(byVector <= SearchJobs, s"raw-vector multiprobe search ran $byVector jobs")
+    assert(stored <= 1 + SearchJobs, s"stored-id multiprobe search ran $stored jobs")
+    assertProbesWithoutExchange(vectorPlans ++ storedPlans)
   }
 
-  /** Action jobs of an indexed quantized search, measured on this fixture:
-    * the k1 window's exchange, the k1 broadcast into the vectors join and
-    * the result job. The query side rides the code scan as a literal
-    * query-id array (IVF-PQ: a literal cell → query-ids map), so no query
-    * relation is broadcast. Before that it was four here, and eight before
-    * the shared re-rank tail: a query-vector broadcast, the k2 window's
-    * exchange, and the final sort's sample job and range exchange.
+  /** Jobs per call of an indexed quantized search, measured on this
+    * fixture: the query-vector GET, the k1 window's exchange and result
+    * (collecting the at most |Q|·k1 candidates), and the fetch that rescores
+    * them. The query side rides the code scan as a literal query-id array
+    * (IVF-PQ: a literal cell → query-ids map), so no query relation is
+    * broadcast. The same four jobs before the tail moved to the driver were
+    * the GET plus three action jobs (the k1 window's exchange, the k1
+    * broadcast into the vectors join, the result); before that the action
+    * alone was four here, and eight before the shared re-rank tail.
     */
-  val QuantizedActionJobs = 3
+  val QuantizedJobs = 4
 
   Seq[(String, (SparkSession, String) => DataFrame)](
     "PQ" -> ((s, d) => Pq.annIndexed(s, Pq.PQ(), d)),
@@ -88,28 +121,31 @@ class KnnJobsSpec extends SparkSpec {
     "BQ" -> ((s, d) => Pq.annIndexed(s, Pq.BQ, d)),
     "IVF-PQ" -> ((s, d) => Pq.annIvfPq(s, d))).foreach { case (family, search) =>
     test(s"indexed $family search: the shared re-rank tail keeps the action within budget") {
-      val (rows, actionJobs) = steadyActionJobs(search)
+      search(spark, sf0001).collect()
+      val (rows, jobs, _) = searchJobs(search(spark, sf0001))
       assert(rows.map(_.getLong(0)).distinct.length == 8)
-      info(s"action jobs: $actionJobs")
-      assert(actionJobs <= QuantizedActionJobs, s"$family search ran $actionJobs action jobs")
+      info(s"jobs: $jobs")
+      assert(jobs <= QuantizedJobs, s"$family search ran $jobs jobs")
     }
   }
 
-  /** Construction jobs of an inline quantized search's second call: the
-    * fit is memoized per (codec, corpus), so only the query-vector collect
-    * runs before the action. Refitting, PQ re-collects its codebook sample
-    * and SQ8 reruns its min/max aggregate on every call.
+  /** Jobs per call of an inline quantized search's second call: the fit is
+    * memoized per (codec, corpus), so the call runs the indexed search's
+    * four jobs, the query-vector GET among them (before the tail moved to
+    * the driver: the GET, then three action jobs). Refitting, PQ
+    * re-collects its codebook sample and SQ8 reruns its min/max aggregate
+    * on every call.
     */
-  val InlineConstructJobs = 1
+  val InlineJobs = QuantizedJobs
 
-  test("inline PQ, SQ8 and BQ searches: a memoized fit leaves one construction job") {
+  test("inline PQ, SQ8 and BQ searches: a memoized fit leaves the search's own jobs") {
     val jobs = Seq[(String, Pq.Codec[_ <: AnyRef])](
       "PQ" -> Pq.PQ(), "SQ8" -> Pq.SQ8, "BQ" -> Pq.BQ).map { case (family, codec) =>
       Pq.ann(spark, codec, sf0001).collect()
-      family -> jobsDuring(Pq.ann(spark, codec, sf0001))._2
+      family -> searchJobs(Pq.ann(spark, codec, sf0001))._2
     }
-    info(s"construction jobs: ${jobs.mkString(", ")}")
-    assert(jobs.forall(_._2 <= InlineConstructJobs), s"construction jobs over budget: $jobs")
+    info(s"jobs: ${jobs.mkString(", ")}")
+    assert(jobs.forall(_._2 <= InlineJobs), s"jobs over budget: $jobs")
   }
 
   /** Action jobs of the indexed IVF search (q29), measured on this fixture:
@@ -133,6 +169,7 @@ class KnnJobsSpec extends SparkSpec {
       search: (SparkSession, String) => DataFrame): (Array[org.apache.spark.sql.Row], Int) = {
     search(spark, sf0001).collect()
     val df = search(spark, sf0001)
-    jobsDuring(df.collect())
+    val (rows, jobs, _) = jobsDuring(df.collect())
+    (rows, jobs)
   }
 }

@@ -503,4 +503,127 @@ class LshSpec extends SparkSpec {
     assert(results(dir) == results(fresh),
       "the rebuilt dir must serve what a fresh build of the new model serves")
   }
+
+  // ------------------------------------------- the coordinator's branches
+
+  /** The indexed search recomputed by brute force from the layout's stored
+    * hashes and vectors (live view, duplicate copies collapsed by vec_id):
+    * per query, the collision count against every vector — a table
+    * collides when the vector's hash equals the query's, and with
+    * `bucketCap > 0` the vector is among its bucket's `bucketCap` smallest
+    * ids — over the ids `allowed` keeps for that query; top-k1 by
+    * (collisions desc, vec_id asc); exact L2; top-k2 by (dist, vec_id).
+    * Rows: (query_id, neighbor_id, rank, collisions, dist4).
+    */
+  private def bruteForce(
+      dir: String,
+      queries: Map[Long, Array[Long]],
+      queryVecs: Map[Long, Array[Float]],
+      k1: Int,
+      k2: Int,
+      bucketCap: Int = 0,
+      allowed: (Long, Long) => Boolean = _ != _): Seq[Seq[Any]] = {
+    val stored = Index.liveVectors(spark, dir)
+      .select(col("vec_id"), col("hashes"), col("embedding")).collect()
+      .map(r => r.getLong(0) -> (r.getSeq[Long](1).toArray, r.getSeq[Float](2).toArray))
+      .toMap
+    val kept: Set[(Int, Long, Long)] = stored.toSeq
+      .flatMap { case (id, (hs, _)) => hs.zipWithIndex.map { case (h, t) => (t, h, id) } }
+      .groupBy { case (t, h, _) => (t, h) }.values
+      .flatMap(bucket => if (bucketCap > 0) bucket.sortBy(_._3).take(bucketCap) else bucket)
+      .toSet
+    def l2(a: Array[Float], b: Array[Float]): Double =
+      math.sqrt(a.indices.map { i => val d = a(i).toDouble - b(i).toDouble; d * d }.sum)
+    queries.toSeq.sortBy(_._1).flatMap { case (q, qh) =>
+      val counted = stored.keys.toSeq.filter(allowed(q, _)).map(id =>
+        id -> qh.indices.count(t => kept((t, qh(t), id)))).filter(_._2 > 0)
+      counted.sortBy { case (id, c) => (-c, id) }.take(k1)
+        .map { case (id, c) => (l2(queryVecs(q), stored(id)._2), id, c) }
+        .sortBy { case (d, id, _) => (d, id) }(
+          Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+        .take(k2).zipWithIndex
+        .map { case ((d, id, c), i) =>
+          Seq[Any](q, id, i + 1, c.toLong, math.floor(d * 1e4 + 0.5) / 1e4) }
+    }
+  }
+
+  /** A small index whose buckets run long (8 tables × 3 bits over the
+    * fixture), so the k1 cut and a bucket cap both bind.
+    */
+  private lazy val longBuckets = {
+    val emb = Tables.embeddings(spark, sf0001)
+    val dir = java.nio.file.Files.createTempDirectory("graft-idx-brute").toString
+    Index.build(spark, emb, Lsh.fit(emb, tables = 8, bits = 3), dir, numBuckets = 16)
+    dir
+  }
+
+  private def storedQueries(dir: String, queryMaxId: Long) = {
+    val rows = Index.liveVectors(spark, dir).filter(col("vec_id") < queryMaxId)
+      .select(col("vec_id"), col("hashes"), col("embedding")).collect()
+    (rows.map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap,
+      rows.map(r => r.getLong(0) -> r.getSeq[Float](2).toArray).toMap)
+  }
+
+  test("coordinator: a bucket cap counts only each bucket's smallest ids") {
+    val dir = longBuckets
+    val (hashes, vecs) = storedQueries(dir, 8)
+    val got = Knn.searchIndex(spark, dir, 8, 30, 5, bucketCap = 16).collect().map(_.toSeq).toSeq
+    assert(got == bruteForce(dir, hashes, vecs, 30, 5, bucketCap = 16))
+    // the cap binds: uncapped, the answer differs
+    assert(got != bruteForce(dir, hashes, vecs, 30, 5))
+  }
+
+  test("coordinator: a q120-shaped candidate filter drops ids before the count") {
+    val dir = longBuckets
+    val (hashes, vecs) = storedQueries(dir, 8)
+    val emb = Tables.embeddings(spark, sf0001)
+    val meta = emb.select(col("vec_id"), col("label"))
+      .filter(col("label").isin(1, 2, 3))
+    val servable = meta.collect().map(_.getLong(0)).toSet
+    val got = Knn.searchIndex(spark, dir, 8, 30, 5,
+      candidateFilter = Some(meta.select(col("vec_id")))).collect().map(_.toSeq).toSeq
+    assert(got.nonEmpty)
+    assert(got == bruteForce(dir, hashes, vecs, 30, 5,
+      allowed = (q, id) => q != id && servable(id)))
+  }
+
+  test("coordinator: excluded ids never count for a raw-vector search") {
+    val dir = longBuckets
+    val (model, _) = Lsh.loadModel(spark, s"$dir/model")
+    val (_, vecs) = storedQueries(dir, 8)
+    val q = vecs(3L)
+    val plain = Knn.searchIndexByVector(spark, dir, q, 30, 5).collect()
+    // exclude the query's own document and its two nearest neighbours
+    val excluded = plain.map(_.getLong(1)).take(3).toSeq
+    assert(excluded.contains(3L))
+    val got = Knn.searchIndexByVector(spark, dir, q, 30, 5, excludeIds = excluded)
+      .collect().map(_.toSeq).toSeq
+    assert(got == bruteForce(dir, Map(-1L -> model.hashVector(q)), Map(-1L -> q), 30, 5,
+      allowed = (_, id) => !excluded.contains(id)))
+  }
+
+  test("coordinator: an append-after-delete layout's duplicate copies count once") {
+    val emb = Tables.embeddings(spark, sf0001)
+    val dir = java.nio.file.Files.createTempDirectory("graft-idx-dups").toString
+    Index.build(spark, emb, Lsh.fit(emb, tables = 8, bits = 3), dir, numBuckets = 16)
+    val (hashes, vecs) = storedQueries(dir, 4)
+    val near = Knn.searchIndex(spark, dir, 4, 30, 5).collect().map(_.getLong(1)).distinct
+    // delete two served neighbours, then re-append them in one batch that
+    // holds each twice (a replayed delivery): the batch supersedes the
+    // build's copies, and both of its own copies are live
+    val victims = near.filter(_ >= 4).take(2).toSeq
+    Index.delete(spark, dir, victims)
+    val again = emb.filter(col("vec_id").isin(victims: _*))
+    Index.append(spark, dir, again.unionByName(again))
+    def copies(part: org.apache.spark.sql.DataFrame, keys: String*) =
+      part.filter(col("vec_id").isin(victims: _*)).groupBy(keys.map(col): _*).count()
+        .filter(col("count") > 1).count()
+    assert(copies(Index.livePostings(spark, dir), "tbl", "hash", "vec_id") > 0,
+      "no duplicate posting copies")
+    assert(copies(Index.liveVectors(spark, dir), "vec_id") == victims.length,
+      "no duplicate vector copies")
+    val got = Knn.searchIndex(spark, dir, 4, 30, 5).collect().map(_.toSeq).toSeq
+    assert(got.exists(r => victims.contains(r(1))), "the re-appended ids are not served")
+    assert(got == bruteForce(dir, hashes, vecs, 30, 5))
+  }
 }

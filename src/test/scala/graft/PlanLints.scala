@@ -67,18 +67,24 @@ object PlanLints {
 
   /** Executed plans of every Spark action `body` runs, via a
     * QueryExecutionListener (dispatch is async — the bus drain makes the
-    * read race-free). Shared by [[BuilderPlanLintSpec]] (cold builds) and
-    * [[PlanLintSpec]]'s construction-side-job sweep.
+    * read race-free). Shared by [[BuilderPlanLintSpec]] (cold builds),
+    * [[PlanLintSpec]]'s construction-side-job sweep, and the kNN searches'
+    * probe and fetch plans in [[KnnJobsSpec]] and [[PlanSpec]].
     */
-  def capture(spark: org.apache.spark.sql.SparkSession)(body: => Any): Seq[String] = {
-    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+  def capture(spark: org.apache.spark.sql.SparkSession)(body: => Any): Seq[String] =
+    executedPlans(spark)(body).map(_.toString)
+
+  /** [[capture]]'s plans as physical trees. */
+  def executedPlans(spark: org.apache.spark.sql.SparkSession)(
+      body: => Any): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    val plans = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.execution.SparkPlan]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString }
+        plans.synchronized { plans += qe.executedPlan }
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
-        plans.synchronized { plans += qe.executedPlan.toString }
+        plans.synchronized { plans += qe.executedPlan }
     }
     spark.listenerManager.register(listener)
     try { body; org.apache.spark.sql.graft.TestBus.drain(spark) }

@@ -100,6 +100,16 @@ class PlanSpec extends SparkSpec {
     * fixed.
     */
   private def broadcastScanPaths(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    // Execute first (collect, not count — count would execute a derived
+    // plan and leave df's own stages unbuilt): the locks must assert the
+    // FINAL adaptive plan, where an AQE runtime join-strategy change that
+    // broadcasts the fact/corpus side actually shows up (r15, the r14
+    // advisory).
+    df.collect()
+    broadcastScanPaths(df.queryExecution.executedPlan)
+  }
+
+  private def broadcastScanPaths(plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
     import org.apache.spark.sql.execution.{CoalesceExec, ColumnarToRowExec, FileSourceScanExec, FilterExec, InputAdapter, ProjectExec, SortExec, SparkPlan, UnionExec, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
@@ -128,13 +138,7 @@ class PlanSpec extends SparkSpec {
         .flatMap(a => walk(a.executedPlan))
       here ++ nested
     }
-    // Execute first (collect, not count — count would execute a derived
-    // plan and leave df's own stages unbuilt): the locks must assert the
-    // FINAL adaptive plan, where an AQE runtime join-strategy change that
-    // broadcasts the fact/corpus side actually shows up (r15, the r14
-    // advisory).
-    df.collect()
-    walk(df.queryExecution.executedPlan)
+    walk(plan)
   }
 
   test("fact tables are never the broadcast side (r14 q02/q07 inversion lock)") {
@@ -148,9 +152,15 @@ class PlanSpec extends SparkSpec {
 
   test("quantized-ANN rerank broadcasts candidates, never the vector table (r14 lock)") {
     // The flat + indexed paths of all three quantizer families share
-    // Knn.rerank; one gate per shape keeps the lock cheap.
+    // Knn.rerank; one gate per shape keeps the lock cheap. The tail runs
+    // when the search is called: the k1 candidates reach the vectors scan
+    // as a pushed literal vec_id filter, and no plan of the call may
+    // broadcast the corpus vector table.
     Seq("q90_sq8_ann", "q71_pq_ann_indexed", "q155_bq_ann").foreach { q =>
-      val paths = broadcastScanPaths(SparkEntry.queries(q)(spark, sf001))
+      val plans = callPlans(q)
+      assert(plans.exists(p => p.toString.contains("embeddings") && p.toString.contains("In(vec_id")),
+        s"$q: no candidate fetch from the vector table:\n${plans.mkString("\n\n")}")
+      val paths = plans.flatMap(broadcastScanPaths)
       assert(!paths.exists(_.contains("embeddings")),
         s"$q broadcasts the corpus vector table: ${paths.mkString(", ")}")
     }
@@ -365,10 +375,49 @@ class PlanSpec extends SparkSpec {
     assertNeverShuffled("q117_corpus_delta", "text")
   }
 
-  test("lsh knn joins posting lists with a broadcast of the query side") {
-    val plan = planOf("q23_lsh_knn")
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(!plan.contains("CartesianProduct"), plan)
+  /** Executed plans of the actions a gate query's construction runs, on
+    * its second build (the first builds its index). The indexed LSH and
+    * quantized searches run their probe and fetch jobs when called and
+    * return a local frame, so their scans live in these plans, not in the
+    * served frame's.
+    */
+  private def callPlans(name: String): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    SparkEntry.queries(name)(spark, sf001)
+    PlanLints.executedPlans(spark)(SparkEntry.queries(name)(spark, sf001))
+  }
+
+  /** The postings probe and the vectors fetch of an indexed LSH search. */
+  private def probeAndFetch(name: String): (String, String) = {
+    val plans = callPlans(name).map(_.toString)
+    def scanning(what: String) = plans.filter(_.linesIterator.exists(l =>
+      l.contains("FileScan") && l.contains(what)))
+    val probe = scanning("postings")
+    val fetch = scanning("vectors").filter(_.contains("In(vec_id"))
+    assert(probe.length == 1 && fetch.length == 1,
+      s"$name: expected one postings probe and one vectors fetch:\n${plans.mkString("\n\n")}")
+    (probe.head, fetch.head)
+  }
+
+  test("lsh knn probes posting lists with the query side as literals, no join") {
+    Seq("q23_lsh_knn", "q28_lsh_multiprobe", "q166_knn_by_vector").foreach { q =>
+      val (probe, fetch) = probeAndFetch(q)
+      assert(probe.contains("INSET"), s"$q: the probe carries no literal key set:\n$probe")
+      Seq(probe, fetch).foreach { plan =>
+        assert(!plan.contains("Join"), s"$q: $plan")
+        assert(!plan.contains("CartesianProduct"), s"$q: $plan")
+      }
+    }
+  }
+
+  test("indexed search fetches candidates by a pushed vec_id filter; no embedding crosses an exchange") {
+    Seq("q23_lsh_knn", "q28_lsh_multiprobe", "q166_knn_by_vector").foreach { q =>
+      val (probe, fetch) = probeAndFetch(q)
+      val scan = fetch.linesIterator.filter(_.contains("FileScan"))
+        .find(_.contains("vectors")).get
+      assert(scan.contains("PushedFilters") && scan.contains("In(vec_id"), s"$q: $scan")
+      // the stronger form: neither job has an exchange at all
+      Seq(probe, fetch).foreach(plan => assert(!plan.contains("Exchange"), s"$q: $plan"))
+    }
   }
 
   test("indexed ivf prunes the cell scan to the probed partitions") {
@@ -381,7 +430,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("indexed search prunes postings partitions to the probe keys") {
-    val plan = planOf("q23_lsh_knn")
+    val (plan, _) = probeAndFetch("q23_lsh_knn")
     val scan = plan.linesIterator.filter(_.contains("FileScan"))
       .find(_.contains("postings")).getOrElse(fail(s"no postings scan:\n$plan"))
     assert(scan.contains("PartitionFilters"), scan)
@@ -619,9 +668,8 @@ class PlanSpec extends SparkSpec {
     assertNeverShuffled("q138_media_dedup", "payload")
     // The exact-kNN family broadcasts the query side and scores in the
     // scan projection; only (ids, score) rows reach the rank shuffle. The
-    // indexed two-phase SEARCH plans likewise keep embeddings out of every
-    // shuffle: candidates travel as (ids, counts), and the re-rank join's
-    // embedding side moves only via broadcast (whichever side is small).
+    // indexed LSH searches (q23/q28) plan no exchange at all, locked by
+    // "indexed search fetches candidates by a pushed vec_id filter".
     // Scope: these are the QUERY-TIME plans — the one-off index/artifact
     // build jobs (ensure*Index) run as separate cached jobs whose
     // exchanges this test does not see. TYPE-based (any float/double
@@ -633,7 +681,7 @@ class PlanSpec extends SparkSpec {
       // audit reduces each vector to an integer ppm inside the scan; drift
       // explodes to scaled longs before its (label, dim) exchange
       "q130_knn_label_eval", "q131_embedding_norms", "q137_centroid_drift",
-      "q23_lsh_knn", "q28_lsh_multiprobe", "q25_ann_ivf", "q29_ann_ivf_indexed",
+      "q25_ann_ivf", "q29_ann_ivf_indexed",
       "q110_semantic_increment",
       // seed-centroid scoring: the 1-row centroid moves by broadcast; the
       // corpus embedding is scored in the scan projection and only

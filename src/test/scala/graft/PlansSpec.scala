@@ -57,6 +57,22 @@ class PlansSpec extends SparkSpec {
     }
   }
 
+  test("a build holding collected result rows is served uncached; literal tables stay cached") {
+    withReuse {
+      // the indexed and quantized searches answer with a local frame of
+      // collected rows: re-serving it would replay the rows, not search
+      Seq("q23_lsh_knn", "q125_recall_benchmark", "q71_pq_ann_indexed").foreach { q =>
+        val a = SparkEntry.queries(q)(spark, sf0001)
+        val b = SparkEntry.queries(q)(spark, sf0001)
+        assert(!(a eq b), s"$q holds result rows and must not be cached")
+        assert(b.collect().map(_.toSeq).toSeq == a.collect().map(_.toSeq).toSeq)
+      }
+      // q06's literal band table is part of its plan, not a result
+      val a = SparkEntry.queries("q06_price_bands")(spark, sf0001)
+      assert(a eq SparkEntry.queries("q06_price_bands")(spark, sf0001))
+    }
+  }
+
   test("a rewritten fixture re-prepares WITHOUT a bump (sig in the key)") {
     withReuse {
       import org.apache.spark.sql.functions._
