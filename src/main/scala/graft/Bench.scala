@@ -378,7 +378,7 @@ object Bench {
       if (small.isDirectory) {
         val dir = small.getAbsolutePath
         SparkEntry.queries.foreach { case (_, fn) =>
-          try fn(spark, dir).count() catch { case _: Throwable => () }
+          try fn(spark, dir).count() catch { case scala.util.control.NonFatal(_) => () }
           graft.operators.Materialize.releaseAll()
         }
       }
@@ -427,7 +427,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { rowCounts(name) = fn(spark, sfDir).count(); true } catch {
-            case e: Throwable =>
+            case scala.util.control.NonFatal(e) =>
               errors(name) = jsonSafe(e)
               false
           }

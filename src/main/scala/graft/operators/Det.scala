@@ -64,6 +64,15 @@ object Det {
     when(isnan(c) || c === Double.PositiveInfinity || c === Double.NegativeInfinity, c)
       .otherwise(floor(c * lit(math.pow(10, dp)) + lit(0.5)) / lit(math.pow(10, dp)))
 
+  /** Driver twin of [[display]] for values already on the driver: the same
+    * IEEE op sequence (multiply, add 1/2, floor saturating to LONG, divide),
+    * non-finite inputs passed through. DetSpec pins it equal to the Column
+    * form on NaN, ±Infinity, −0.0, exact ties and saturating magnitudes.
+    */
+  def displayValue(x: Double, dp: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else math.floor(x * math.pow(10, dp) + 0.5).toLong / math.pow(10, dp)
+
   /** Exact, order-independent sum of a money-like double, back in units. */
   def exactSum(c: Column, scale: Int): Column =
     (sum(scaled(c, scale)) / math.pow(10, scale))

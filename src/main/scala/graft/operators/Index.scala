@@ -26,11 +26,16 @@ import graft.Tables
   *                 dictionary entries the bool-should query names.
   *
   * `numBuckets` is the TOTAL partition-directory count — the pruning
-  * granularity knob. Default 64 suits this environment (the sandbox tmp fs
-  * charges ~60ms of metadata ops per written file, measured: 256 dirs cost
-  * 15s to commit regardless of task parallelism or committer version); on a
-  * real cluster raise it into the thousands so a probe set touches a
-  * vanishing fraction of the corpus.
+  * granularity. 0 (the default) derives it at build time ([[deriveBuckets]]):
+  * the engine's one width, [[Skew.shufflePartitions]], raised only when a
+  * directory's raw posting rows would outgrow one scan split
+  * (`spark.sql.files.maxPartitionBytes`), so a probed directory is one read
+  * task however large the corpus grows. Every extra directory is one more
+  * file to write on build, append and compact, and to open per probe: the
+  * former fixed 64 left a 10k-vector index's probe opening ~26 tiny files.
+  * An explicit `numBuckets > 0` is honored. The count is persisted in the
+  * model doc, so readers, append, compact, vacuum and the streaming sink
+  * take it from there, never from this rule.
   *
   * Scale notes (100 TB): hashing is a narrow map (executor-parallel); the
   * one shuffle is the pkey clustering at build time, paid once to make every
@@ -75,6 +80,21 @@ object Index {
     */
   val BatchCol: String = Lifecycle.BatchCol
 
+  /** Raw width of one posting row: vec_id, batch and hash (8 bytes each)
+    * plus tbl (4).
+    */
+  private val PostingRowBytes = 28L
+
+  /** The derived postings directory count for `vectors` vectors hashed into
+    * `tables` tables — see the object scaladoc.
+    */
+  def deriveBuckets(spark: SparkSession, vectors: Long, tables: Int): Int = {
+    val split = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    val dirs = math.ceil(vectors.toDouble * tables * PostingRowBytes / split)
+    math.max(Skew.shufflePartitions(spark), math.min(dirs, Int.MaxValue.toDouble).toInt)
+  }
+
   private def explodeWithBatch(hashed: DataFrame): DataFrame =
     hashed.select(col("vec_id"), col(BatchCol),
       posexplode(col("hashes")).as(Seq("tbl", "hash")))
@@ -85,9 +105,8 @@ object Index {
       embeddings: DataFrame,
       model: Lsh.LshModel,
       outDir: String,
-      numBuckets: Int = 64): Unit = {
+      numBuckets: Int = 0): Unit = {
     Lifecycle.resetMarkers(spark, outDir) // stale markers would kill batch-0 rows
-    Lsh.saveModel(spark, model, numBuckets, s"$outDir/model")
     val hashed = Lsh.withHashes(spark, embeddings, model)
       .select(col("vec_id"), col("embedding"), col("hashes"), lit(0L).as(BatchCol))
     // ID-CLUSTERED stored source: range-partition + sort by vec_id so the
@@ -114,7 +133,11 @@ object Index {
     // so every directory gets exactly one file, written in parallel.
     val stored = spark.read.parquet(s"$outDir/vectors")
       .select(col("vec_id"), col(BatchCol), col("hashes"))
-    withPKey(explodeWithBatch(stored), numBuckets)
+    // numBuckets = 0: derive from the vectors just written (a footer count)
+    val buckets =
+      if (numBuckets > 0) numBuckets else deriveBuckets(spark, stored.count(), model.tables)
+    Lsh.saveModel(spark, model, buckets, s"$outDir/model")
+    withPKey(explodeWithBatch(stored), buckets)
       .repartition(col(PKeyCol))
       .write.mode(SaveMode.Overwrite)
       .partitionBy(PKeyCol)
@@ -135,17 +158,19 @@ object Index {
     * when the layout doesn't exist yet (the cache key says "auto", so the
     * cached path never counts). Readers always take bits from the persisted
     * model, so search code is indifferent to how the width was chosen.
+    * `numBuckets = 0` (the default) likewise derives the directory count
+    * at build time ([[deriveBuckets]]) and keys the cache "auto".
     */
   def ensure(
       spark: SparkSession,
       sfDir: String,
       tables: Int = 32,
       bits: Int = 0,
-      numBuckets: Int = 64): String = {
+      numBuckets: Int = 0): String = {
     val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/embeddings.parquet")
-    val bitsKey = if (bits > 0) bits.toString else "auto"
+    def auto(n: Int) = if (n > 0) n.toString else "auto"
     val key = cacheKey(
-      s"$sfDir:$srcSig:$tables:$bitsKey:$numBuckets:v$LayoutVersion")
+      s"$sfDir:$srcSig:$tables:${auto(bits)}:${auto(numBuckets)}:v$LayoutVersion")
     val dir = new File(sys.props("java.io.tmpdir"), s"graft-lsh-index-$key")
     if (!new File(dir, "postings/_SUCCESS").exists()) {
       val emb = Tables.embeddings(spark, sfDir)

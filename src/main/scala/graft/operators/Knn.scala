@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.Tables
-import org.apache.spark.sql.graft.VectorExpressions
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.graft.{PlanBridge, QueryLiterals, VectorExpressions}
 
 /** Two-phase approximate kNN — the reference's flagship search
   * (SURVEY.md §2.A A5–A7, `[PUBREPO AknnRestAction.handleSearchRequest,
@@ -31,10 +33,17 @@ import org.apache.spark.sql.graft.VectorExpressions
   * exact re-rank tail the quantized searches in [[Pq]] share, fetches the
   * k1 candidates' vectors rows by a pushed vec_id filter, scores them on
   * the executors and collects the at most |Q|·k1 rescored rows, and the
-  * driver cuts top-k2. The searches run these jobs when called and return
-  * a local frame. Every stored-query vector search carries its query side
-  * into the plan as literals like this, never as a broadcast relation (the
-  * quantized and indexed IVF searches derive theirs from [[queryVectors]]).
+  * driver cuts top-k2. Each of the two executions is ONE logical plan,
+  * composed through [[org.apache.spark.sql.graft.PlanBridge]] and analyzed
+  * once (a Dataset per step costs an analysis each), with its query side
+  * as literals of explicit type ([[org.apache.spark.sql.graft.QueryLiterals]],
+  * no reflection) and its rows collected without a Row encoder. The
+  * searches run these jobs when called and return the ranked rows as a
+  * ready local relation, `dist4` already rounded on the driver
+  * ([[Det.displayValue]]): no projection to plan, no job in its action.
+  * Every stored-query vector search carries its query side into the plan
+  * as literals like this, never as a broadcast relation (the quantized and
+  * indexed IVF searches derive theirs from [[queryVectors]]).
   * This is the collision-counting LSH similarity join (PAPERS.md C2Net),
   * with the counting step on the bounded set of probed postings, so it
   * needs no shuffle.
@@ -222,8 +231,8 @@ object Knn {
     * literal pkey prune), then [[search]]. Self-matches are excluded.
     *
     * `bucketCap` (0 = off, the gate default) bounds the posting-list length
-    * per (tbl, hash) via [[Skew.capBuckets]] — the 100 TB control for
-    * degenerate buckets (a hash value holding a large fraction of the
+    * per (tbl, hash) to its `bucketCap` smallest ids — the 100 TB control
+    * for degenerate buckets (a hash value holding a large fraction of the
     * corpus would otherwise dominate the probe's output). Capping trades a
     * measured recall loss on exactly those low-signal buckets for a hard
     * bound on the probed postings the driver counts. `candidateFilter`
@@ -240,13 +249,27 @@ object Knn {
       bucketCap: Int = 0,
       candidateFilter: Option[DataFrame] = None): DataFrame = {
     val (model, _) = Lsh.loadModel(spark, s"$indexDir/model")
-    val qRows = Index.liveVectors(spark, indexDir).filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id"), col("hashes"), col("embedding")).collect()
+    val qRows = PlanBridge.select(spark,
+      liveWhere(spark, indexDir, Index.vectors(spark, indexDir), col("vec_id") < queryMaxId),
+      col("vec_id"), col("hashes"), col("embedding")).collect()
     search(spark, indexDir,
       qRows.toSeq.flatMap(r => probesOf(r.getLong(0), r.getSeq[Long](1), model, multiprobe)),
       qRows.map(r => r.getLong(0) -> r.getSeq[Float](2)).toMap,
       k1, k2, bucketCap, keep = _ != _, candidateFilter)
   }
+
+  /** The live rows of a layout part (tombstoned ids and superseded copies
+    * out; the batch column stays, and a final projection drops it) that
+    * satisfy `condition`, as an unanalyzed plan: the base of the search's
+    * one-plan executions, so the live view costs no analysis of its own.
+    */
+  private def liveWhere(
+      spark: SparkSession,
+      indexDir: String,
+      part: DataFrame,
+      condition: Column): LogicalPlan =
+    PlanBridge.filter(spark, condition,
+      Lifecycle.liveKeepBatch(spark, indexDir, part).queryExecution.analyzed)
 
   /** The search core both indexed entry points share, shaped like the
     * reference's coordinating node (SURVEY §3.3 steps 3–4): the probe job
@@ -255,10 +278,12 @@ object Knn {
     * the k1 candidates (A6) and cuts top-k2 — the two-job shape in the
     * [[Knn]] scaladoc. `probes` are (query_id, tbl, hash), multiprobe flips
     * included; `keep` is the exclusion predicate over (query_id, vec_id),
-    * applied before the count. Duplicate posting or vector copies exist
-    * only on a layout that has been appended to (append-after-delete), and
-    * only there are they collapsed: on the probed postings, and on the
-    * |Q|·k1 rescored rows.
+    * applied before the count. The probe is one plan: the live postings,
+    * the pkey prune and key set, then the bucket cap and the candidate
+    * semi-join when present. Duplicate posting or vector copies exist only
+    * on a layout that has been appended to (a batch holding an id twice),
+    * and only there are they collapsed, on the driver: the probed
+    * (key, vec_id) rows before the count, and the |Q|·k1 rescored rows.
     */
   private def search(
       spark: SparkSession,
@@ -280,17 +305,23 @@ object Knn {
       .groupMap { case (_, t, h) => (t.toLong << model.bits) | h }(_._1)
       .view.mapValues(_.toArray))
     val pkeys = probes.map { case (_, t, h) => Index.pkeyOf(t, h, numBuckets) }.distinct
-    val appended = everAppended(spark, indexDir)
-    val scanned = Index.livePostings(spark, indexDir)
-      .filter(col(Index.PKeyCol).isin(pkeys: _*) && keyCol.isin(queriesByKey.keys.toSeq: _*))
-    val deduped = if (appended) scanned.dropDuplicates("tbl", "hash", "vec_id") else scanned
-    val capped = if (bucketCap > 0) Skew.capBuckets(deduped, bucketCap) else deduped
+    val probed = liveWhere(spark, indexDir, Index.postings(spark, indexDir),
+      PlanBridge.inSet(col(Index.PKeyCol), pkeys) && PlanBridge.inSet(keyCol, queriesByKey.keys))
+    // The cap keeps each bucket's `bucketCap` smallest DISTINCT ids: a
+    // dense rank gives an id's duplicate copies one rank between them.
+    val capped =
+      if (bucketCap <= 0) probed
+      else PlanBridge.filter(spark, col("_rank") <= bucketCap,
+        PlanBridge.project(spark, probed, col("*"), dense_rank()
+          .over(Window.partitionBy(col("tbl"), col("hash")).orderBy(col("vec_id"))).as("_rank")))
     val postings = candidateFilter.fold(capped)(allowed =>
-      capped.join(allowed.select(col("vec_id")), Seq("vec_id"), "left_semi"))
+      PlanBridge.semiJoin(capped, allowed.queryExecution.analyzed, "vec_id"))
+    val appended = everAppended(spark, indexDir)
+    val rows = PlanBridge.collectInternal(PlanBridge.select(spark, postings, keyCol, col("vec_id")))
     // The collision count, one primitive map per query: the probed
     // postings are bounded by the probed buckets (see the [[Knn]] scaladoc)
     val counts = mutable.LongMap.from(queryVecs.keys.map(_ -> mutable.LongMap.empty[Int]))
-    postings.select(keyCol, col("vec_id")).collect().foreach { r =>
+    (if (appended) rows.distinct else rows).foreach { r =>
       val queries = queriesByKey(r.getLong(0))
       val vec = r.getLong(1)
       var i = 0
@@ -303,8 +334,8 @@ object Knn {
       }
     }
     rerank(spark, counts.map { case (q, c) => q -> topByCollisions(c, k1) }.toMap,
-      Index.liveVectors(spark, indexDir), queryVecs, k2, dedupe = appended,
-      collisions = Some((q, vec) => counts(q)(vec).toLong))
+      Lifecycle.liveKeepBatch(spark, indexDir, Index.vectors(spark, indexDir)), queryVecs, k2,
+      dedupe = appended, collisions = Some((q, vec) => counts(q)(vec).toLong))
   }
 
   /** One query's top `k` vec_ids by (collisions desc, vec_id asc): every id
@@ -343,20 +374,22 @@ object Knn {
 
   /** Each row's query vector, read from the literal query_id → vector map. */
   private[operators] def queryVec(queryVecs: Map[Long, Seq[Float]]): Column =
-    element_at(typedLit(queryVecs), col("query_id"))
+    element_at(QueryLiterals.vectorsById(queryVecs), col("query_id"))
 
   /** The exact re-rank tail (A6) of every two-phase vector search — the
     * indexed LSH core above and the seven quantized searches in [[Pq]] —
     * run the way the reference's coordinating node runs it: one fetch job
-    * reads the k1 candidates' rows of `vectors` (a pushed vec_id `In`
-    * filter, a literal vec_id → query-ids map), scores them by L2 against
-    * the literal query_id → vector map on the executors and collects the
-    * at most |Q|·k1 rescored rows; the driver cuts top-k2 by
-    * (dist, neighbor_id). `k1set` maps each query to its candidate ids.
-    * Output, a local frame sorted by (query_id, rank): (query_id,
-    * neighbor_id, rank, collisions, dist4) with `collisions` (LSH), else
-    * (query_id, neighbor_id, rank, dist4). `dedupe` collapses duplicate
-    * vector copies, which only an appended index layout can hold.
+    * reads the k1 candidates' rows of `vectors` (any frame holding vec_id
+    * and embedding; a pushed vec_id `In` filter, a literal vec_id →
+    * query-ids map), scores them by L2 against the literal query_id →
+    * vector map on the executors and collects the at most |Q|·k1 rescored
+    * rows; the driver cuts top-k2 by (dist, neighbor_id) and rounds the
+    * distance ([[Det.displayValue]]). The fetch is one plan, analyzed once.
+    * `k1set` maps each query to its candidate ids. Output, a bare local
+    * relation sorted by (query_id, rank) whose action runs no job:
+    * (query_id, neighbor_id, rank, collisions, dist4) with `collisions`
+    * (LSH), else (query_id, neighbor_id, rank, dist4). `dedupe` collapses
+    * duplicate vector copies, which only an appended index layout can hold.
     */
   private[operators] def rerank(
       spark: SparkSession,
@@ -369,28 +402,30 @@ object Knn {
     val queriesOf = k1set.toSeq
       .flatMap { case (q, vecs) => vecs.map(_ -> q) }
       .groupMap(_._1)(_._2)
-    val fetched = vectors
-      .filter(col("vec_id").isin(queriesOf.keys.toSeq.sorted: _*))
-      .select(explode(element_at(typedLit(queriesOf), col("vec_id"))).as("query_id"),
-        col("vec_id").as("neighbor_id"), col("embedding"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorExpressions.l2(queryVec(queryVecs), col("embedding")).as("dist"))
-    val rescored = if (queriesOf.isEmpty) Array.empty[Row] else fetched.collect()
+    val rescored =
+      if (queriesOf.isEmpty) Array.empty[InternalRow]
+      else PlanBridge.collectInternal(PlanBridge.select(spark,
+        PlanBridge.project(spark,
+          PlanBridge.filter(spark, PlanBridge.inSet(col("vec_id"), queriesOf.keys),
+            vectors.queryExecution.analyzed),
+          explode(element_at(QueryLiterals.idsById(queriesOf), col("vec_id"))).as("query_id"),
+          col("vec_id").as("neighbor_id"), col("embedding")),
+        col("query_id"), col("neighbor_id"),
+        VectorExpressions.l2(queryVec(queryVecs), col("embedding")).as("dist")))
     val byDist = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
     val ranked = rescored.groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (q, rows) =>
       val sorted = rows.map(r => (r.getDouble(2), r.getLong(1))).sorted(byDist)
       (if (dedupe) sorted.distinctBy(_._2) else sorted).take(k2).zipWithIndex.map {
-        case ((dist, vec), i) => Row.fromSeq(Seq[Any](q, vec, i + 1) ++ collisions.map(_(q, vec)) :+ dist)
+        case ((dist, vec), i) =>
+          Row.fromSeq(Seq[Any](q, vec, i + 1) ++ collisions.map(_(q, vec)) :+ Det.displayValue(dist, 4))
       }
     }
-    val carried = collisions.map(_ => "collisions").toSeq
     val schema = StructType(
       Seq(StructField("query_id", LongType, nullable = false),
         StructField("neighbor_id", LongType), StructField("rank", IntegerType, nullable = false)) ++
-        carried.map(StructField(_, LongType, nullable = false)) :+ StructField("dist", DoubleType))
+        collisions.map(_ => StructField("collisions", LongType, nullable = false)) :+
+        StructField("dist4", DoubleType))
     graft.Plans.resultFrame(spark, ranked, schema)
-      .select(col("query_id") +: col("neighbor_id") +: col("rank") +: carried.map(col) :+
-        Det.display(col("dist"), 4).as("dist4"): _*)
   }
 
   /** A7: search by stored id — the query side is a filter on the indexed

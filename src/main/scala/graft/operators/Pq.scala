@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import org.apache.spark.sql.graft.VectorExpressions
+import org.apache.spark.sql.graft.{QueryLiterals, VectorExpressions}
 
 /** Quantized code indexes — the memory-bounded scale path for embedding
   * search: one index layout, one lifecycle and one two-phase search, with
@@ -389,7 +389,7 @@ object Pq {
 
     private[operators] def distance(model: BqModel, qvecs: Map[Long, Seq[Float]]): Column = {
       val qcodes = qvecs.map { case (qid, v) => qid -> model.encodeSeq(v) }
-      bit_count(col(codeCol).bitwiseXOR(element_at(typedLit(qcodes), col("query_id"))))
+      bit_count(col(codeCol).bitwiseXOR(element_at(QueryLiterals.longsById(qcodes), col("query_id"))))
     }
   }
 
@@ -523,7 +523,7 @@ object Pq {
     codes.withColumn("query_id", explode(queryIds))
 
   private def everyQuery(qvecs: Map[Long, Seq[Float]]): Column =
-    typedLit(qvecs.keys.toSeq.sorted)
+    QueryLiterals.ids(qvecs.keys.toSeq.sorted)
 
   /** Phase 1 scan: (query_id, vec_id, `name`) for every pair. */
   private def scan(pairs: DataFrame, dist: Column, name: String): DataFrame =
@@ -727,7 +727,7 @@ object Pq {
     val byCell = Vectors.loadCentroids(spark, s"$indexDir/centroids").probesByCell(qvecs, nprobe)
     val codes = liveCellCodes(spark, indexDir)
       .filter(col("cell").isin(byCell.keys.toSeq.sorted: _*))
-    search(paired(codes, element_at(typedLit(byCell), col("cell"))), codec.distance(model, qvecs),
+    search(paired(codes, element_at(QueryLiterals.idsById(byCell), col("cell"))), codec.distance(model, qvecs),
       emb, qvecs, k1, k2)
   }
 

@@ -73,9 +73,10 @@ object Skew {
   }
 
   /** Cap posting-list length per (tbl, hash) bucket. Used ahead of the LSH
-    * collision join when a bucket degenerates (e.g. all-zeros hash on sparse
-    * data) and automatically once the derived hash width saturates
-    * ([[graft.operators.Lsh.autoBucketCap]]).
+    * pair-mining self-join when a bucket degenerates (e.g. all-zeros hash on
+    * sparse data) and automatically once the derived hash width saturates
+    * ([[graft.operators.Lsh.autoBucketCap]]). The indexed search caps inside
+    * its one probe plan instead, by distinct id (`Knn.search`).
     */
   def capBuckets(posts: DataFrame, cap: Int, idCol: String = "vec_id"): DataFrame =
     capGroups(posts, cap, Seq("tbl", "hash"), idCol)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import org.apache.spark.sql.graft.VectorExpressions
+import org.apache.spark.sql.graft.{QueryLiterals, VectorExpressions}
 import graft.functions.CentroidAgg
 
 /** An IVF coarse quantizer: C centroid vectors with their cell ids, carried
@@ -386,7 +386,7 @@ object Vectors {
       .orderBy(col("dist").asc, col("neighbor_id").asc)
     liveCells(spark, indexDir)
       .filter(col("cell").isin(byCell.keys.toSeq.sorted: _*))
-      .withColumn("query_id", explode(element_at(typedLit(byCell), col("cell"))))
+      .withColumn("query_id", explode(element_at(QueryLiterals.idsById(byCell), col("cell"))))
       .filter(col("vec_id") =!= col("query_id"))
       .select(
         col("query_id"), col("vec_id").as("neighbor_id"),

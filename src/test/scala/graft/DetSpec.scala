@@ -81,6 +81,21 @@ class DetSpec extends SparkSpec {
     assert(r.getDouble(2).isNaN, s"NaN in -> NaN out, got ${r.getDouble(2)}")
   }
 
+  test("displayValue, the driver twin, equals the Column form bit for bit") {
+    import spark.implicits._
+    // non-finites, both zeros, exact x.xxxx5 ties (dyadic, so the tie is
+    // exact), negatives, and magnitudes whose scaled floor saturates LONG
+    val xs = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 0.0, -0.0,
+      0.03125, 1.03125, -0.03125, -1.03125, 0.00005, -0.00005, 2.675, -123.456789,
+      987654.32105, 1e15, -1e15, 9.3e14, 1e300, -1e300, Double.MaxValue, Double.MinValue)
+    val spark4 = xs.toDF("x").select(Det.display(col("x"), 4)).collect().map(_.getDouble(0))
+    xs.zip(spark4).foreach { case (x, want) =>
+      val got = Det.displayValue(x, 4)
+      assert(java.lang.Double.doubleToRawLongBits(got) == java.lang.Double.doubleToRawLongBits(want),
+        s"displayValue($x, 4) = $got, display = $want")
+    }
+  }
+
   // ---- r12: the boundary class, property-sampled (verdict order #6) ----
   // DetSpec above pins hand-picked adversarial values; these properties
   // sample the EXACT-.5-boundary classes across magnitudes and signs —

@@ -7,7 +7,9 @@ import org.apache.spark.sql.graft.TestBus
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{Index, Knn, Pq, Vectors}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+
+import graft.operators.{Index, Knn, Lsh, Pq, Vectors}
 
 /** Job budgets of the two-phase vector searches, as total jobs per call
   * (construction + action), measured on this sf0.001 index. An indexed LSH
@@ -101,6 +103,40 @@ class KnnJobsSpec extends SparkSpec {
     assert(byVector <= SearchJobs, s"raw-vector multiprobe search ran $byVector jobs")
     assert(stored <= 1 + SearchJobs, s"stored-id multiprobe search ran $stored jobs")
     assertProbesWithoutExchange(vectorPlans ++ storedPlans)
+  }
+
+  test("a search returns a bare local relation whose collect runs no job") {
+    val query = q
+    Seq(Knn.searchIndexByVector(spark, idx, query, 100, 10),
+      Knn.searchIndex(spark, idx, queryMaxId = 8, 100, 10),
+      Pq.annIndexed(spark, Pq.SQ8, sf0001)).foreach { df =>
+      assert(df.queryExecution.analyzed.isInstanceOf[LocalRelation],
+        s"not a bare local relation:\n${df.queryExecution.analyzed}")
+      // the columns and nullability the projected frame had
+      val want = Seq("query_id" -> false, "neighbor_id" -> true, "rank" -> false) ++
+        (if (df.columns.contains("collisions")) Seq("collisions" -> false) else Nil) :+
+        ("dist4" -> true)
+      assert(df.schema.map(f => f.name -> f.nullable) == want, df.schema)
+      val (rows, jobs, _) = jobsDuring(df.collect())
+      assert(jobs == 0, s"the result's collect ran $jobs jobs")
+      assert(rows.nonEmpty)
+    }
+  }
+
+  test("an appended layout: the same budget, no exchange in the probe or the fetch") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val dir = java.nio.file.Files.createTempDirectory("graft-idx-appended").toString
+    Index.build(spark, emb, Lsh.fit(emb, tables = 8, bits = 3), dir)
+    // fresh ids only: no supersede marker, no tombstone, a plain live view
+    Index.append(spark, dir, emb.filter("vec_id < 50")
+      .withColumn("vec_id", org.apache.spark.sql.functions.col("vec_id") + 100000L))
+    val query = q
+    Knn.searchIndex(spark, dir, 8, 100, 10).collect()
+    val (_, stored, storedPlans) = searchJobs(Knn.searchIndex(spark, dir, 8, 100, 10))
+    val (_, byVector, vectorPlans) = searchJobs(Knn.searchIndexByVector(spark, dir, query, 100, 10))
+    info(s"jobs: stored-id $stored, raw-vector $byVector")
+    assert(stored <= 1 + SearchJobs && byVector <= SearchJobs)
+    assertProbesWithoutExchange(storedPlans ++ vectorPlans)
   }
 
   /** Jobs per call of an indexed quantized search, measured on this

@@ -470,6 +470,33 @@ class LshSpec extends SparkSpec {
     assert(indexedMp == inlineMp)
   }
 
+  test("1, derived and 64 postings directories serve identical rows; the model records the count") {
+    val emb = Tables.embeddings(spark, sf0001)
+    val model = Lsh.fit(emb, tables = 8, bits = 3)
+    val dirs = Seq(1, 0, 64).map { n =>
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-idx-buckets-$n").toString
+      Index.build(spark, emb, model, dir, numBuckets = n)
+      n -> dir
+    }.toMap
+    val derived = Lsh.loadModel(spark, s"${dirs(0)}/model")._2
+    assert(derived == Index.deriveBuckets(spark, emb.count(), model.tables))
+    assert(derived == operators.Skew.shufflePartitions(spark),
+      "a fixture-sized corpus keeps the engine's one width")
+    assert(Lsh.loadModel(spark, s"${dirs(1)}/model")._2 == 1)
+    assert(Lsh.loadModel(spark, s"${dirs(64)}/model")._2 == 64)
+    val q = emb.filter(col("vec_id") === 3L).select(col("embedding")).collect()(0)
+      .getSeq[Float](0).toArray
+    def served(dir: String) = Seq(
+      Knn.searchIndex(spark, dir, 8, 100, 10),
+      Knn.searchIndex(spark, dir, 4, 100, 10, multiprobe = true),
+      Knn.searchIndexByVector(spark, dir, q, 100, 10, excludeIds = Seq(3L)),
+      Knn.searchIndexByVector(spark, dir, q, 100, 10, multiprobe = true))
+      .map(_.collect().map(_.toSeq).toSeq)
+    val want = served(dirs(0))
+    assert(want.forall(_.nonEmpty))
+    assert(served(dirs(1)) == want && served(dirs(64)) == want)
+  }
+
   test("a wide explicit model keeps indexed = inline rows (exact probe key)") {
     // 2 tables × 40 bits: the (tbl, hash) probe key must stay exact far
     // beyond the derived widths (≤ 16 bits)

@@ -336,9 +336,11 @@ class MiscSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-idx-parity").toString
     Index.build(spark, emb.filter(col("vec_id") < 300), Lsh.fit(emb, tables = 8, bits = 3),
       dir, numBuckets = 16)
-    // re-append ids 250..299 on top of their build copies, then delete two
-    // of query 3's neighbours: duplicate posting and vector copies plus
-    // tombstones, the dropDuplicates and live-view branches of the core
+    // re-append ids 250..299 on top of their build copies (supersede
+    // markers: the live view keeps one copy of each), then delete two of
+    // query 3's neighbours (tombstones): the core's live-view branches.
+    // Live duplicate copies need a batch holding an id twice — LshSpec
+    // "coordinator: an append-after-delete layout's duplicate copies count once"
     Index.append(spark, dir, emb.filter(col("vec_id") >= 250))
     val victims = Knn.searchIndex(spark, dir, 4, 100, 10)
       .filter(col("query_id") === 3L).collect().map(_.getLong(1)).take(2).toSeq

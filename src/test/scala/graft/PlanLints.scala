@@ -86,6 +86,8 @@ object PlanLints {
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
         plans.synchronized { plans += qe.executedPlan }
     }
+    // drain first: an earlier action's queued end event is not the body's
+    org.apache.spark.sql.graft.TestBus.drain(spark)
     spark.listenerManager.register(listener)
     try { body; org.apache.spark.sql.graft.TestBus.drain(spark) }
     finally spark.listenerManager.unregister(listener)
