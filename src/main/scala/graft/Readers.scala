@@ -47,10 +47,13 @@ object Readers {
     String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
   private val artifactMemo = new ConcurrentHashMap[String, AnyRef]()
   private val probeMemo = new ConcurrentHashMap[String, java.lang.Boolean]()
+  private val scanMemo = new ConcurrentHashMap[String, AnyRef]()
+  private val scanPrepares = new AtomicLong(0L)
+  private val scanReuses = new AtomicLong(0L)
 
-  /** Invalidate every memoized schema, artifact doc, and sink-probe result
-    * (called by lifecycle mutations AND by the engine's streaming sink
-    * starters — a dir growing a sink log must re-probe).
+  /** Invalidate every memoized schema, artifact doc, prepared scan and
+    * sink-probe result (called by lifecycle mutations AND by the engine's
+    * streaming sink starters — a dir growing a sink log must re-probe).
     */
   def bump(): Unit = {
     epoch.incrementAndGet()
@@ -58,6 +61,7 @@ object Readers {
     relMemo.clear()
     artifactMemo.clear()
     probeMemo.clear()
+    scanMemo.clear()
     Plans.clear() // prepared plans hold resolved relations of the old epoch
   }
 
@@ -89,6 +93,32 @@ object Readers {
   def artifact[T <: AnyRef](spark: SparkSession, path: String)(load: => T): T =
     Memo.once(artifactMemo, s"${sessionKey(spark)}:${epoch.get()}:$path")(load)
       .asInstanceOf[T]
+
+  /** A PREPARED SCAN over layout `dirs` (an
+    * [[org.apache.spark.sql.graft.PreparedScan]] with what its searches
+    * need beside it), prepared once per (session, epoch, `what`, listing
+    * signature of each dir) — the [[parquet]] key discipline, so a bump
+    * and a file landing in a dir without one both re-prepare. A sink-live
+    * dir is prepared on every call and never memoized, the [[parquet]]
+    * rule. `prepare` runs outside any map lock ([[Memo.once]]).
+    */
+  def prepared[T <: AnyRef](spark: SparkSession, dirs: Seq[String], what: String)(
+      prepare: => T): T = {
+    def fresh(): T = { scanPrepares.incrementAndGet(); prepare }
+    if (dirs.exists(sinkLiveMemo(spark, _))) fresh()
+    else {
+      val key = keyOf(spark, dirs.mkString(","), s"$what:${dirs.map(childSigOf(spark, _)).mkString(",")}")
+      val hit = scanMemo.get(key)
+      if (hit != null) { scanReuses.incrementAndGet(); hit.asInstanceOf[T] }
+      else Memo.once(scanMemo, key)(fresh()).asInstanceOf[T]
+    }
+  }
+
+  /** Prepared-scan counters since JVM start, (reused, prepared) — shaped
+    * like [[Plans.stats]]' (hits, misses); tools/Profile prints them per
+    * call.
+    */
+  def scanStats: (Long, Long) = (scanReuses.get(), scanPrepares.get())
 
   /** Stable per-session key: the session UUID (via the
     * [[org.apache.spark.sql.graft.SessionIds]] bridge — it's `private[sql]`)
@@ -157,7 +187,7 @@ object Readers {
 
   /** Local-fs direct-child listing signature behind the mutable-layout memo
     * key: a hash of each child's (name, length, mtime) in name order, plus
-    * the dir's own mtime. NON-LOCAL filesystems skip the listing entirely:
+    * the path's own (mtime, length) — for a file, the fixture signature. NON-LOCAL filesystems skip the listing entirely:
     * on an object store a per-read LIST is a remote RPC per call —
     * inconsistent with the per-epoch memoization discipline — so the epoch
     * (bump contract) alone keys those reads, exactly as documented on
@@ -173,7 +203,7 @@ object Readers {
           !fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]) 0L
       else {
         val st = fs.getFileStatus(p)
-        var h = st.getModificationTime
+        var h = st.getModificationTime * 1000003L ^ st.getLen
         if (st.isDirectory) {
           // sortBy name: listStatus order is filesystem-dependent and the
           // signature must be stable for an unchanged listing

@@ -19,9 +19,9 @@ import graft.Tables
   *   - `postings/` (tbl, hash, vec_id) partitioned by `pkey` — the inverted
   *                 index. `pkey = (tbl·p + hash) mod numBuckets` (p prime) is
   *                 a pure function of the collision-join key (tbl, hash), so
-  *                 restricting the scan to the query side's probe pkeys is a
-  *                 LOSSLESS static partition prune: any posting that could
-  *                 equi-join a probe necessarily lives in a probed partition.
+  *                 restricting a probe to the files under its probe pkeys'
+  *                 directories is a LOSSLESS prune: any posting that could
+  *                 equi-join a probe necessarily lives in a probed directory.
   *                 This is the parquet analog of ES touching only the term
   *                 dictionary entries the bool-should query names.
   *
@@ -68,6 +68,9 @@ object Index {
     (((m % numBuckets) + numBuckets) % numBuckets).toInt
   }
 
+  /** The pkey of a postings directory named `pkey=<n>`. */
+  def pkeyOfDir(name: String): Int = name.stripPrefix(s"$PKeyCol=").toInt
+
   /** Attach the postings partition key to an exploded (tbl, hash, ...) frame
     * — shared by the batch build and the streaming ingest sink.
     */
@@ -109,11 +112,15 @@ object Index {
     Lifecycle.resetMarkers(spark, outDir) // stale markers would kill batch-0 rows
     val hashed = Lsh.withHashes(spark, embeddings, model)
       .select(col("vec_id"), col("embedding"), col("hashes"), lit(0L).as(BatchCol))
-    // ID-CLUSTERED stored source: range-partition + sort by vec_id so the
-    // point reads this member exists for (GET-by-id, the |Q|-bounded query
-    // fetch, the k1→vector re-rank join) prune by file-range and row-group
-    // min/max stats instead of opening every file a pass-through write
-    // would inherit from the scan's split count. No explicit file count:
+    // ID-CLUSTERED stored source: range-partition + sort by vec_id so each
+    // file and row group holds a narrow id range. A search's GET and k1
+    // fetch (Knn.Fetch) run only the scan partitions whose footer vec_id
+    // [min, max] holds a wanted id, instead of opening every file a
+    // pass-through write would inherit from the scan's split count. (A
+    // pushed `In` would not do this: Spark pushes one of more than
+    // spark.sql.parquet.pushdown.inFilterThreshold values, 10 by default,
+    // only as a min..max range, which k1 ids spread over the corpus cover
+    // whole, so it prunes no row group.) No explicit file count:
     // the un-numbered range shuffle lets AQE size partitions to the data
     // (one file at fixture scale, maxPartitionBytes-sized files at corpus
     // scale) — the per-artifact layout policy, keyed to the CONSUMER class

@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.Tables
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.graft.{PlanBridge, QueryLiterals, VectorExpressions}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.graft.{PlanBridge, PreparedScan, QueryLiterals, VectorExpressions}
 
 /** Two-phase approximate kNN — the reference's flagship search
   * (SURVEY.md §2.A A5–A7, `[PUBREPO AknnRestAction.handleSearchRequest,
@@ -23,32 +24,34 @@ import org.apache.spark.sql.graft.{PlanBridge, QueryLiterals, VectorExpressions}
   * top-k2. Self-matches are EXCLUDED (documented contract choice, SURVEY A7).
   *
   * Spark shape (indexed search, [[searchIndex]] / [[searchIndexByVector]]),
-  * the reference's coordinating node (SURVEY §3.3 steps 3–4): the query
-  * side is a few hundred bytes of driver data, carried into the plan as
-  * literals — an exact (tbl, hash) key set beside the static pkey
-  * partition prune, and literal vec_id → query and query → vector maps. A
-  * search is two Spark jobs, neither with an exchange (KnnJobsSpec): the
-  * probe collects the probed postings' (key, vec_id) rows, and the driver
-  * counts collisions per query and cuts top-k1; then [[rerank]], the one
-  * exact re-rank tail the quantized searches in [[Pq]] share, fetches the
-  * k1 candidates' vectors rows by a pushed vec_id filter, scores them on
-  * the executors and collects the at most |Q|·k1 rescored rows, and the
-  * driver cuts top-k2. Each of the two executions is ONE logical plan,
-  * composed through [[org.apache.spark.sql.graft.PlanBridge]] and analyzed
-  * once (a Dataset per step costs an analysis each), with its query side
-  * as literals of explicit type ([[org.apache.spark.sql.graft.QueryLiterals]],
-  * no reflection) and its rows collected without a Row encoder. The
-  * searches run these jobs when called and return the ranked rows as a
+  * the reference's coordinating node (SURVEY §3.3 steps 3–4). Each layout
+  * part a search reads is a PREPARED SCAN
+  * ([[org.apache.spark.sql.graft.PreparedScan]]): the live postings as
+  * (key, vec_id) ([[Probe]]) and the live vectors as (vec_id, embedding)
+  * ([[Fetch]]), each analyzed, optimized and planned once per layout epoch
+  * ([[graft.Readers.prepared]]). A search is two jobs that re-run them,
+  * neither with an exchange (KnnJobsSpec): the probe runs on the files
+  * under the probed pkey directories and collects the (key, vec_id) pairs
+  * of the probed keys, and the driver counts collisions per query and cuts
+  * top-k1; then [[rerank]], the one exact re-rank tail the quantized
+  * searches in [[Pq]] share, runs the fetch on the partitions whose vec_id
+  * range holds a candidate, scores the candidates on the executors and
+  * collects the at most |Q|·k1 rescored rows, and the driver cuts top-k2.
+  * The query side — a few hundred bytes of driver data: the probe keys,
+  * the candidate ids, the query vectors — rides each job's task closure,
+  * never a plan, so a search compiles no plan and renders no literal. The
+  * jobs run under the descriptions `Knn.get`, `Knn.probe` and `Knn.fetch`.
+  * The searches run them when called and return the ranked rows as a
   * ready local relation, `dist4` already rounded on the driver
   * ([[Det.displayValue]]): no projection to plan, no job in its action.
-  * Every stored-query vector search carries its query side into the plan
-  * as literals like this, never as a broadcast relation (the quantized and
-  * indexed IVF searches derive theirs from [[queryVectors]]).
+  * The quantized and indexed IVF searches carry their query side into
+  * their scan plans as literals, never as a broadcast relation (derived
+  * from [[queryVectors]]).
   * This is the collision-counting LSH similarity join (PAPERS.md C2Net),
   * with the counting step on the bounded set of probed postings, so it
   * needs no shuffle.
   *
-  * Scale notes (100 TB): the candidate scan reads only the probed pkey
+  * Scale notes (100 TB): the probe reads only the probed pkey
   * directories and is executor-parallel; no cross product anywhere, and no
   * embedding is ever shuffled or collected (the fetch returns distances).
   * The driver holds at most the probed postings' (key, vec_id) pairs —
@@ -98,12 +101,14 @@ object Knn {
     * query. [[Index.ensure]] builds the three-part layout once per
     * (fixture, params); every search after that:
     *
-    *   1. GETs the stored query docs' precomputed hashes (pushed vec_id
-    *      filter on `vectors/`, tiny driver collect — the analog of ES
-    *      fetching `_aknn_hashes` of the query doc);
-    *   2. probes `postings/` with a static partition filter on the probe
-    *      pkeys — a lossless prune (pkey is a function of the join key), so
-    *      the collision scan reads |probe| directories, not the corpus;
+    *   1. GETs the stored query docs' vectors (the `vectors/` partitions
+    *      whose id range holds a query id, tiny driver collect) and hashes
+    *      them with the stored model — the analog of ES fetching
+    *      `_aknn_hashes` of the query doc;
+    *   2. probes the files of `postings/` under the probe pkeys'
+    *      directories — a lossless prune (pkey is a function of the join
+    *      key), so the collision scan reads |probe| directories, not the
+    *      corpus;
     *   3. collision-counts + re-ranks exactly as [[lshSearch]].
     *
     * Results are identical to [[lshTopK]] (same deterministic fit, same
@@ -135,16 +140,15 @@ object Knn {
   /** q120 — FILTERED search against the persisted index (the indexed twin
     * of [[KnnExact.topKFiltered]], A5–A7 composed with a metadata
     * predicate). The index layout stores no attributes beyond the vector,
-    * so the label predicate is a METADATA JOIN: the probed postings
-    * semi-join the (vec_id, label) projection of the source table, and
-    * disallowed candidates drop BEFORE the collision count and the k1
-    * cut — k1 slots only ever hold servable candidates (pure
-    * post-filtering of a k2 list under-fills; pre-filtering the postings
-    * scan would need label-aware partitioning). At 100 TB the metadata
-    * side is a 2-column columnar scan joined on vec_id against the
-    * bucket-sized probed postings — broadcast whichever side is small;
-    * those from a point query are tiny, so AQE picks them. Rows-only gate;
-    * pinned by the LshSpec filtered-recall + label-soundness spec.
+    * so the label predicate is a METADATA LOOKUP: one collect of the
+    * allowed ids among the probed ones, a pushed vec_id filter on the
+    * (vec_id, label) projection of the source table, and disallowed
+    * candidates drop in the collision count, BEFORE the k1 cut — k1 slots
+    * only ever hold servable candidates (pure post-filtering of a k2 list
+    * under-fills; pre-filtering the postings scan would need label-aware
+    * partitioning). At 100 TB the lookup is a 2-column columnar scan
+    * bounded by the probed ids. Rows-only gate; pinned by the LshSpec
+    * filtered-recall + label-soundness spec.
     */
   def lshTopKFilteredIndexed(
       spark: SparkSession,
@@ -198,8 +202,8 @@ object Knn {
     *
     * Runs its two Spark jobs, the postings probe and the candidate fetch,
     * when called, and returns a local frame whose action runs none: the
-    * query side is driver arithmetic carried into the plans as literals
-    * (see [[search]]).
+    * query side is driver arithmetic carried in the jobs' tasks (see
+    * [[search]]).
     *
     * Parity contract (spec-pinned): for a vector that IS stored, searching
     * by value with its id excluded returns exactly [[searchIndex]]'s
@@ -225,10 +229,11 @@ object Knn {
   }
 
   /** A5–A7 against a persisted [[Index]] layout, for every stored query id
-    * below `queryMaxId`: one pushed-filter GET of the query docs'
-    * precomputed hashes and vectors (no re-hash; the one job this call
-    * runs before the probe, |Q|-small by contract and needed for the
-    * literal pkey prune), then [[search]]. Self-matches are excluded.
+    * below `queryMaxId`: one GET of the query docs' vectors (the one job
+    * this call runs before the probe, |Q|-small by contract), hashed on the
+    * driver with the index's model — the arithmetic that wrote their
+    * postings, as [[searchIndexByVector]]'s parity contract pins — then
+    * [[search]]. Self-matches are excluded.
     *
     * `bucketCap` (0 = off, the gate default) bounds the posting-list length
     * per (tbl, hash) to its `bucketCap` smallest ids — the 100 TB control
@@ -249,41 +254,105 @@ object Knn {
       bucketCap: Int = 0,
       candidateFilter: Option[DataFrame] = None): DataFrame = {
     val (model, _) = Lsh.loadModel(spark, s"$indexDir/model")
-    val qRows = PlanBridge.select(spark,
-      liveWhere(spark, indexDir, Index.vectors(spark, indexDir), col("vec_id") < queryMaxId),
-      col("vec_id"), col("hashes"), col("embedding")).collect()
+    val queries = indexFetch(spark, indexDir).get(queryMaxId)
     search(spark, indexDir,
-      qRows.toSeq.flatMap(r => probesOf(r.getLong(0), r.getSeq[Long](1), model, multiprobe)),
-      qRows.map(r => r.getLong(0) -> r.getSeq[Float](2)).toMap,
+      queries.flatMap { case (q, v) => probesOf(q, model.hashVector(v).toSeq, model, multiprobe) },
+      queries.map { case (q, v) => q -> v.toSeq }.toMap,
       k1, k2, bucketCap, keep = _ != _, candidateFilter)
   }
 
-  /** The live rows of a layout part (tombstoned ids and superseded copies
-    * out; the batch column stays, and a final projection drops it) that
-    * satisfy `condition`, as an unanalyzed plan: the base of the search's
-    * one-plan executions, so the live view costs no analysis of its own.
+  /** A layout's postings as a search probes them: the live rows (the
+    * [[Lifecycle.liveKeepBatch]] view) projected to (key, vec_id), the key
+    * packed as tbl·2^bits + hash, with each partition's files keyed by the
+    * pkey directory they lie under. Prepared once per layout epoch
+    * ([[graft.Readers.prepared]]); `appended` records whether the layout
+    * can hold duplicate copies ([[everAppended]]).
     */
-  private def liveWhere(
-      spark: SparkSession,
-      indexDir: String,
-      part: DataFrame,
-      condition: Column): LogicalPlan =
-    PlanBridge.filter(spark, condition,
-      Lifecycle.liveKeepBatch(spark, indexDir, part).queryExecution.analyzed)
+  private final class Probe(val scan: PreparedScan, pkeys: IndexedSeq[Array[Int]], val appended: Boolean) {
+
+    /** The scan's partitions cut to their files under a probed pkey
+      * directory — the lossless prune (pkey is a function of the key), at
+      * the job; a partition left with no file is not run.
+      */
+    def parts(probed: Set[Int]): Seq[FilePartition] =
+      scan.partitions.zip(pkeys).flatMap { case (p, keys) =>
+        val files = p.files.zip(keys).collect { case (f, k) if probed(k) => f }
+        if (files.isEmpty) None else Some(FilePartition(p.index, files))
+      }
+  }
+
+  private def probeOf(spark: SparkSession, indexDir: String, bits: Int): Probe =
+    graft.Readers.prepared(spark, Seq(indexDir, s"$indexDir/postings"), s"probe:$bits") {
+      val scan = PlanBridge.prepare(
+        Lifecycle.liveKeepBatch(spark, indexDir, Index.postings(spark, indexDir)).select(
+          shiftleft(col("tbl").cast("long"), bits).bitwiseOR(col("hash")).as("key"), col("vec_id")))
+      new Probe(scan, scan.partitions.map(_.files.map(f => Index.pkeyOfDir(f.toPath.getParent.getName))),
+        everAppended(spark, indexDir))
+    }
+
+  /** A vector table as the fetch and the stored-id GET read it: (vec_id,
+    * embedding), with each partition's vec_id [min, max] from the parquet
+    * footers of the row groups it reads. Prepared once per layout epoch.
+    * The range is what selects a fetch's partitions: a pushed `In` of more
+    * than `spark.sql.parquet.pushdown.inFilterThreshold` ids reaches
+    * parquet only as one min..max range, which k1 ids spread over the
+    * corpus never let prune.
+    */
+  private[operators] final class Fetch(val scan: PreparedScan, ranges: IndexedSeq[(Long, Long)]) {
+
+    /** The partitions whose range holds one of the sorted `ids`. */
+    def parts(ids: Array[Long]): Seq[FilePartition] =
+      scan.partitions.zip(ranges).collect { case (p, (lo, hi)) if {
+        val at = java.util.Arrays.binarySearch(ids, lo)
+        val first = if (at >= 0) at else -at - 1
+        first < ids.length && ids(first) <= hi
+      } => p }
+
+    /** The GET: (vec_id, vector) of every row with vec_id < `below`. */
+    def get(below: Long): Seq[(Long, Array[Float])] = {
+      val holding = scan.partitions.zip(ranges).collect { case (p, (lo, hi)) if lo <= hi && lo < below => p }
+      scan.run("Knn.get", holding) { rows =>
+        val out = mutable.ArrayBuffer.empty[(Long, Array[Float])]
+        rows.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1) && r.getLong(0) < below)
+            out += r.getLong(0) -> r.getArray(1).toFloatArray()
+        }
+        out.toArray
+      }.flatten
+    }
+  }
+
+  /** The live `vectors` of an index layout, prepared for the fetch. */
+  private def indexFetch(spark: SparkSession, indexDir: String): Fetch =
+    fetchOf(spark, Seq(indexDir, s"$indexDir/vectors"),
+      Lifecycle.liveKeepBatch(spark, indexDir, Index.vectors(spark, indexDir)))
+
+  /** The fixture's embeddings, prepared for the quantized searches' fetch. */
+  private[operators] def fixtureFetch(spark: SparkSession, sfDir: String): Fetch =
+    fetchOf(spark, Seq(s"$sfDir/embeddings.parquet"), Tables.embeddings(spark, sfDir))
+
+  private def fetchOf(spark: SparkSession, dirs: Seq[String], vectors: => DataFrame): Fetch =
+    graft.Readers.prepared(spark, dirs, "fetch") {
+      val scan = PlanBridge.prepare(vectors.select(col("vec_id"), col("embedding")))
+      new Fetch(scan, scan.longRanges("vec_id"))
+    }
 
   /** The search core both indexed entry points share, shaped like the
     * reference's coordinating node (SURVEY §3.3 steps 3–4): the probe job
-    * collects the probed postings' (key, vec_id) rows, the driver counts
+    * collects the probed postings' (key, vec_id) pairs, the driver counts
     * collisions (A5) and cuts top-k1, and [[rerank]] fetches and rescores
     * the k1 candidates (A6) and cuts top-k2 — the two-job shape in the
     * [[Knn]] scaladoc. `probes` are (query_id, tbl, hash), multiprobe flips
     * included; `keep` is the exclusion predicate over (query_id, vec_id),
-    * applied before the count. The probe is one plan: the live postings,
-    * the pkey prune and key set, then the bucket cap and the candidate
-    * semi-join when present. Duplicate posting or vector copies exist only
-    * on a layout that has been appended to (a batch holding an id twice),
-    * and only there are they collapsed, on the driver: the probed
-    * (key, vec_id) rows before the count, and the |Q|·k1 rescored rows.
+    * applied before the count. The probe re-runs the layout's prepared
+    * [[Probe]] on the files under the probed pkey directories, its tasks
+    * keeping the rows whose key is probed (and, with a cap, each key's
+    * `bucketCap` smallest distinct ids, which the driver cuts again). A
+    * `candidateFilter` is one collect of the allowed ids among the probed
+    * ones, applied in the count. Duplicate posting or vector copies exist
+    * only on a layout that has been appended to (a batch holding an id
+    * twice), and only there are they collapsed, on the driver: the probed
+    * (key, vec_id) pairs before the count, and the |Q|·k1 rescored rows.
     */
   private def search(
       spark: SparkSession,
@@ -300,42 +369,74 @@ object Knn {
     // while every table index fits above the hash bits.
     require(model.bits < 64 && model.tables - 1L <= (Long.MaxValue >> model.bits),
       s"${model.tables} tables of ${model.bits} bits exceed the 63-bit probe key")
-    val keyCol = shiftleft(col("tbl").cast("long"), model.bits).bitwiseOR(col("hash"))
     val queriesByKey = mutable.LongMap.from(probes.distinct
       .groupMap { case (_, t, h) => (t.toLong << model.bits) | h }(_._1)
       .view.mapValues(_.toArray))
-    val pkeys = probes.map { case (_, t, h) => Index.pkeyOf(t, h, numBuckets) }.distinct
-    val probed = liveWhere(spark, indexDir, Index.postings(spark, indexDir),
-      PlanBridge.inSet(col(Index.PKeyCol), pkeys) && PlanBridge.inSet(keyCol, queriesByKey.keys))
-    // The cap keeps each bucket's `bucketCap` smallest DISTINCT ids: a
-    // dense rank gives an id's duplicate copies one rank between them.
-    val capped =
-      if (bucketCap <= 0) probed
-      else PlanBridge.filter(spark, col("_rank") <= bucketCap,
-        PlanBridge.project(spark, probed, col("*"), dense_rank()
-          .over(Window.partitionBy(col("tbl"), col("hash")).orderBy(col("vec_id"))).as("_rank")))
-    val postings = candidateFilter.fold(capped)(allowed =>
-      PlanBridge.semiJoin(capped, allowed.queryExecution.analyzed, "vec_id"))
-    val appended = everAppended(spark, indexDir)
-    val rows = PlanBridge.collectInternal(PlanBridge.select(spark, postings, keyCol, col("vec_id")))
+    val probe = probeOf(spark, indexDir, model.bits)
+    val keys = queriesByKey.keys.toArray.sorted
+    val found = probe.scan.run("Knn.probe",
+      probe.parts(probes.map { case (_, t, h) => Index.pkeyOf(t, h, numBuckets) }.toSet)) { rows =>
+      val out = new mutable.ArrayBuilder.ofLong
+      rows.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1) && java.util.Arrays.binarySearch(keys, r.getLong(0)) >= 0) {
+          out += r.getLong(0)
+          out += r.getLong(1)
+        }
+      }
+      if (bucketCap > 0) smallestPerKey(out.result(), bucketCap) else out.result()
+    }.toArray.flatten
+    // the cap cut again over every partition's survivors; on an appended
+    // layout, each key's distinct ids
+    val pairs =
+      if (bucketCap > 0 || probe.appended)
+        smallestPerKey(found, if (bucketCap > 0) bucketCap else Int.MaxValue)
+      else found
+    val allowed = candidateFilter.fold((_: Long) => true) { df =>
+      val probed = (1 until pairs.length by 2).map(pairs).distinct
+      val ids =
+        if (probed.isEmpty) Array.empty[Long]
+        else df.filter(PlanBridge.inSet(col("vec_id"), probed)).select(col("vec_id"))
+          .collect().map(_.getLong(0)).sorted
+      vec => java.util.Arrays.binarySearch(ids, vec) >= 0
+    }
     // The collision count, one primitive map per query: the probed
     // postings are bounded by the probed buckets (see the [[Knn]] scaladoc)
     val counts = mutable.LongMap.from(queryVecs.keys.map(_ -> mutable.LongMap.empty[Int]))
-    (if (appended) rows.distinct else rows).foreach { r =>
-      val queries = queriesByKey(r.getLong(0))
-      val vec = r.getLong(1)
+    var p = 0
+    while (p < pairs.length) {
+      val queries = queriesByKey(pairs(p))
+      val vec = pairs(p + 1)
       var i = 0
       while (i < queries.length) {
-        if (keep(queries(i), vec)) {
+        if (keep(queries(i), vec) && allowed(vec)) {
           val c = counts(queries(i))
           c(vec) = c.getOrElse(vec, 0) + 1
         }
         i += 1
       }
+      p += 2
     }
     rerank(spark, counts.map { case (q, c) => q -> topByCollisions(c, k1) }.toMap,
-      Lifecycle.liveKeepBatch(spark, indexDir, Index.vectors(spark, indexDir)), queryVecs, k2,
-      dedupe = appended, collisions = Some((q, vec) => counts(q)(vec).toLong))
+      indexFetch(spark, indexDir), queryVecs, k2,
+      dedupe = probe.appended, collisions = Some((q, vec) => counts(q)(vec).toLong))
+  }
+
+  /** Each key's `cap` smallest distinct ids among (key, vec_id) pairs laid
+    * out flat, as flat pairs: what a `dense_rank() <= cap` over each
+    * (tbl, hash) keeps, one copy of each id.
+    */
+  private def smallestPerKey(pairs: Array[Long], cap: Int): Array[Long] = {
+    val byKey = mutable.LongMap.empty[mutable.ArrayBuilder.ofLong]
+    var i = 0
+    while (i < pairs.length) {
+      byKey.getOrElseUpdate(pairs(i), new mutable.ArrayBuilder.ofLong) += pairs(i + 1)
+      i += 2
+    }
+    val out = new mutable.ArrayBuilder.ofLong
+    byKey.foreachEntry { (key, ids) =>
+      ids.result().sorted.distinct.take(cap).foreach { vec => out += key; out += vec }
+    }
+    out.result()
   }
 
   /** One query's top `k` vec_ids by (collisions desc, vec_id asc): every id
@@ -379,22 +480,24 @@ object Knn {
   /** The exact re-rank tail (A6) of every two-phase vector search — the
     * indexed LSH core above and the seven quantized searches in [[Pq]] —
     * run the way the reference's coordinating node runs it: one fetch job
-    * reads the k1 candidates' rows of `vectors` (any frame holding vec_id
-    * and embedding; a pushed vec_id `In` filter, a literal vec_id →
-    * query-ids map), scores them by L2 against the literal query_id →
-    * vector map on the executors and collects the at most |Q|·k1 rescored
+    * re-runs a prepared [[Fetch]] scan (the index's live `vectors`, or the
+    * fixture embeddings for [[Pq]]) on the partitions whose vec_id range
+    * holds a candidate; its tasks score each candidate row by L2 against
+    * its querying vectors ([[VectorExpressions.L2Distance.of]], the plan
+    * expression's exact arithmetic) and return the at most |Q|·k1 rescored
     * rows; the driver cuts top-k2 by (dist, neighbor_id) and rounds the
-    * distance ([[Det.displayValue]]). The fetch is one plan, analyzed once.
-    * `k1set` maps each query to its candidate ids. Output, a bare local
-    * relation sorted by (query_id, rank) whose action runs no job:
-    * (query_id, neighbor_id, rank, collisions, dist4) with `collisions`
-    * (LSH), else (query_id, neighbor_id, rank, dist4). `dedupe` collapses
-    * duplicate vector copies, which only an appended index layout can hold.
+    * distance ([[Det.displayValue]]). The candidates and the query vectors
+    * ride the task, not a plan. `k1set` maps each query to its candidate
+    * ids. Output, a bare local relation sorted by (query_id, rank) whose
+    * action runs no job: (query_id, neighbor_id, rank, collisions, dist4)
+    * with `collisions` (LSH), else (query_id, neighbor_id, rank, dist4).
+    * `dedupe` collapses duplicate vector copies, which only an appended
+    * index layout can hold.
     */
   private[operators] def rerank(
       spark: SparkSession,
       k1set: Map[Long, Array[Long]],
-      vectors: DataFrame,
+      fetch: Fetch,
       queryVecs: Map[Long, Seq[Float]],
       k2: Int,
       dedupe: Boolean,
@@ -402,19 +505,27 @@ object Knn {
     val queriesOf = k1set.toSeq
       .flatMap { case (q, vecs) => vecs.map(_ -> q) }
       .groupMap(_._1)(_._2)
-    val rescored =
-      if (queriesOf.isEmpty) Array.empty[InternalRow]
-      else PlanBridge.collectInternal(PlanBridge.select(spark,
-        PlanBridge.project(spark,
-          PlanBridge.filter(spark, PlanBridge.inSet(col("vec_id"), queriesOf.keys),
-            vectors.queryExecution.analyzed),
-          explode(element_at(QueryLiterals.idsById(queriesOf), col("vec_id"))).as("query_id"),
-          col("vec_id").as("neighbor_id"), col("embedding")),
-        col("query_id"), col("neighbor_id"),
-        VectorExpressions.l2(queryVec(queryVecs), col("embedding")).as("dist")))
+    val ids = queriesOf.keys.toArray.sorted
+    val qids = queriesOf.values.flatten.toArray.distinct
+    val owners = ids.map(id => queriesOf(id).map(q => qids.indexOf(q)).toArray)
+    val qvecs: Array[ArrayData] = qids.map(q => UnsafeArrayData.fromPrimitiveArray(queryVecs(q).toArray))
+    val rescored = fetch.scan.run("Knn.fetch", fetch.parts(ids)) { rows =>
+      val out = mutable.ArrayBuffer.empty[(Long, Long, Double)]
+      rows.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1)) {
+          val at = java.util.Arrays.binarySearch(ids, r.getLong(0))
+          if (at >= 0) {
+            val emb = r.getArray(1)
+            owners(at).foreach(q =>
+              out += ((qids(q), ids(at), VectorExpressions.L2Distance.of(qvecs(q), emb))))
+          }
+        }
+      }
+      out.toArray
+    }.flatten
     val byDist = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-    val ranked = rescored.groupBy(_.getLong(0)).toSeq.sortBy(_._1).flatMap { case (q, rows) =>
-      val sorted = rows.map(r => (r.getDouble(2), r.getLong(1))).sorted(byDist)
+    val ranked = rescored.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, rows) =>
+      val sorted = rows.map { case (_, vec, dist) => (dist, vec) }.sorted(byDist)
       (if (dedupe) sorted.distinctBy(_._2) else sorted).take(k2).zipWithIndex.map {
         case ((dist, vec), i) =>
           Row.fromSeq(Seq[Any](q, vec, i + 1) ++ collisions.map(_(q, vec)) :+ Det.displayValue(dist, 4))

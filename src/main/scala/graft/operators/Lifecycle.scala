@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *     after the id's latest supersede point, so a newer version REPLACES
   *     the older without rewriting anything.
   *   - Re-adding a deleted id resurfaces it: append clears arriving ids from
-  *     the tombstone set via a crash-safe two-rename swap.
+  *     the tombstone set through the one swap protocol ([[promoteSwap]]).
   *
   * Compaction-class rewrites are where dead versions and tombstoned rows get
   * physically dropped; until then the live views pay one broadcast-small
@@ -34,7 +34,8 @@ object Lifecycle {
 
   /** The write-aside / two-rename swap protocol, stated ONCE for every
     * swap-managed directory ([[vacuum]] parts, [[adoptStreamedLayout]],
-    * [[Index.compact]], `Text.compactStore` on digest/band stores). Three
+    * [[Index.compact]], `Text.compactStore` on digest/band stores, the
+    * tombstone set's rewrite in [[finishAppend]]). Three
     * helpers so a protocol fix can never silently miss one copy:
     *
     * [[settleSwap]] rolls a crashed swap forward — when a maintenance op
@@ -162,27 +163,24 @@ object Lifecycle {
     n
   }
 
-  /** Roll a crashed tombstone swap forward/back — call at append entry.
-    * States after a crash (write tmp → rename ts→old → rename tmp→ts →
-    * delete old): a complete `tmp` with no `ts` is the new set (promote);
-    * a leftover `old` beside a live `ts` is superseded garbage (drop);
-    * `tmp` beside a live `ts` is a half-written rewrite (drop).
+  /** The tombstone set's swap directories: live, staged aside, and the
+    * rewrite being written ([[finishAppend]]).
     */
-  def recoverTombstoneSwap(fs: FileSystem, indexDir: String): Unit = {
-    val ts = new Path(s"$indexDir/tombstones")
-    val old = new Path(s"$indexDir/tombstones_old")
-    val tmp = new Path(s"$indexDir/tombstones_rewriting")
-    var mutated = false
-    if (!fs.exists(ts) && fs.exists(tmp)) {
-      require(fs.rename(tmp, ts), s"could not promote $tmp during recovery")
-      mutated = true
-    }
-    if (fs.exists(old)) { fs.delete(old, true); mutated = true }
-    if (fs.exists(tmp)) { fs.delete(tmp, true); mutated = true }
-    if (mutated) graft.Readers.bump()
+  private def tombstoneSwap(indexDir: String): (Path, Path, Path) =
+    (new Path(s"$indexDir/tombstones"), new Path(s"$indexDir/tombstones_old"),
+      new Path(s"$indexDir/tombstones_rewriting"))
+
+  /** Settle a crashed tombstone rewrite and clear its staging — the entry
+    * step of an append and of a vacuum ([[settleSwap]], then
+    * [[clearSwapStaging]]).
+    */
+  private def settleTombstones(fs: FileSystem, indexDir: String): Unit = {
+    val (ts, old, tmp) = tombstoneSwap(indexDir)
+    settleSwap(fs, ts, old)
+    clearSwapStaging(fs, old, tmp)
   }
 
-  /** The append PROTOCOL, stated once for every layout: recover any crashed
+  /** The append PROTOCOL, stated once for every layout: settle any crashed
     * tombstone swap, retire a streamed bootstrap's sink log, allocate the
     * batch number BEFORE data is written (a crashed append can never share a
     * number with its successor), run the layout's own `write(batch)`, then
@@ -198,7 +196,7 @@ object Lifecycle {
       adoptParts: Seq[(String, Seq[String])],
       stored: => DataFrame)(write: Long => Unit): Unit = {
     val fs = fsOf(spark, indexDir)
-    recoverTombstoneSwap(fs, indexDir)
+    settleTombstones(fs, indexDir)
     adoptParts.foreach { case (sub, pcols) =>
       adoptStreamedLayout(spark, indexDir, sub, pcols)
     }
@@ -223,10 +221,12 @@ object Lifecycle {
     *    re-added id still deleted (conservative, nothing wrong served)
     *    rather than serving two versions.
     * 2. Tombstone clear (delete-then-index semantics): drop arriving ids
-    *    from the tombstone set via two renames, never a delete of the only
-    *    live copy — a crash at any point leaves either the old set (`ts`) or
-    *    the complete new set (`tmp`, which readers fall back to when `ts` is
-    *    absent). See [[recoverTombstoneSwap]].
+    *    from the tombstone set by writing the rest aside and swapping it in
+    *    with [[promoteSwap]], never a delete of the only live copy. A crash
+    *    between its renames leaves the old set staged aside: readers read
+    *    it there, and the next append or vacuum rolls it forward
+    *    ([[settleSwap]]). The re-added ids stay deleted until the append is
+    *    replayed — the conservative outcome step 1 already accepts.
     */
   def finishAppend(
       spark: SparkSession,
@@ -248,19 +248,15 @@ object Lifecycle {
       if (!reingested.isEmpty)
         reingested.write.mode(SaveMode.Append).parquet(s"$indexDir/superseded")
     } finally Materialize.release(reingested) // no leak if the write fails
-    val ts = new Path(s"$indexDir/tombstones")
+    val (ts, old, tmp) = tombstoneSwap(indexDir)
     if (fs.exists(ts)) {
       val remaining = spark.read.parquet(ts.toString)
         .join(newIds.select(col("vec_id")), Seq("vec_id"), "left_anti")
         .collect() // tombstones are id-only and small by regime
       import spark.implicits._
-      val old = new Path(s"$indexDir/tombstones_old")
-      val tmp = new Path(s"$indexDir/tombstones_rewriting")
       remaining.map(_.getLong(0)).toSeq.toDF("vec_id")
         .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      require(fs.rename(ts, old), s"could not stage $ts aside")
-      require(fs.rename(tmp, ts), s"could not promote $tmp")
-      fs.delete(old, true)
+      promoteSwap(fs, ts, old, tmp)
     }
   }
 
@@ -269,17 +265,12 @@ object Lifecycle {
     // where a File.exists check is always false and deletes would silently
     // stop applying.
     val fs = fsOf(spark, indexDir)
-    val path = new Path(s"$indexDir/tombstones")
-    // Crash-window fallback: the swap protocol guarantees that whenever
-    // `tombstones` is absent mid-rewrite, `tombstones_rewriting` holds the
-    // COMPLETE new set — readers never observe an empty set that isn't real.
-    val live =
-      if (fs.exists(path)) Some(path)
-      else {
-        val tmp = new Path(s"$indexDir/tombstones_rewriting")
-        if (fs.exists(tmp)) Some(tmp) else None
-      }
-    live.fold(df)(p =>
+    val (path, old, _) = tombstoneSwap(indexDir)
+    // A rewrite that crashed between its renames left the set staged aside:
+    // read it there, never an absent set as empty, until the next append or
+    // vacuum settles it. A reader never renames: its roll-forward racing an
+    // append's promote would nest the new set inside the old one.
+    Seq(path, old).find(fs.exists).fold(df)(p =>
       df.join(broadcast(graft.Readers.parquet(spark, p.toString)), Seq("vec_id"), "left_anti"))
   }
 
@@ -344,7 +335,7 @@ object Lifecycle {
     val fs = fsOf(spark, indexDir)
     // Settle a crashed append's half-finished tombstone swap first, so the
     // tombstone set we purge against is the consistent live one.
-    recoverTombstoneSwap(fs, indexDir)
+    settleTombstones(fs, indexDir)
     parts.foreach { case (sub, pcols) =>
       val livePath = new Path(s"$indexDir/$sub")
       val old = new Path(s"$indexDir/${sub}_old")
@@ -362,7 +353,7 @@ object Lifecycle {
     // All parts are physically live-only now; the markers are dead weight.
     // (Deleting them one by one is fine mid-crash — a surviving marker set
     // just filters rows that no longer exist.)
-    Seq("tombstones", "tombstones_rewriting", "superseded")
+    Seq("tombstones", "superseded")
       .foreach(d => fs.delete(new Path(s"$indexDir/$d"), true))
     graft.Readers.bump()
   }

@@ -537,7 +537,7 @@ object Pq {
   private def search(
       pairs: DataFrame,
       dist: Column,
-      emb: DataFrame,
+      fetch: Knn.Fetch,
       qvecs: Map[Long, Seq[Float]],
       k1: Int,
       k2: Int): DataFrame = {
@@ -549,7 +549,7 @@ object Pq {
       .select(col("query_id"), col("vec_id"))
       .collect()
       .groupMap(_.getLong(0))(_.getLong(1))
-    Knn.rerank(pairs.sparkSession, k1set, emb, qvecs, k2, dedupe = false)
+    Knn.rerank(pairs.sparkSession, k1set, fetch, qvecs, k2, dedupe = false)
   }
 
   /** The inline searches' fitted models, one fit per (codec, corpus) per
@@ -580,7 +580,7 @@ object Pq {
       .asInstanceOf[M]
     val qvecs = Knn.queryVectors(emb, queryMaxId)
     search(paired(codec.encode(emb, model), everyQuery(qvecs)), codec.distance(model, qvecs),
-      emb, qvecs, k1, k2)
+      Knn.fixtureFetch(spark, sfDir), qvecs, k1, k2)
   }
 
   /** q71 / q91 / q156 — the same search against the PERSISTED code table:
@@ -602,7 +602,7 @@ object Pq {
     val emb = Tables.embeddings(spark, sfDir)
     val qvecs = Knn.queryVectors(emb, queryMaxId)
     search(paired(liveCodes(spark, indexDir), everyQuery(qvecs)), codec.distance(model, qvecs),
-      emb, qvecs, k1, k2)
+      Knn.fixtureFetch(spark, sfDir), qvecs, k1, k2)
   }
 
   /** The phase-1 scan of [[annIndexed]], before the self-match filter and
@@ -728,7 +728,7 @@ object Pq {
     val codes = liveCellCodes(spark, indexDir)
       .filter(col("cell").isin(byCell.keys.toSeq.sorted: _*))
     search(paired(codes, element_at(QueryLiterals.idsById(byCell), col("cell"))), codec.distance(model, qvecs),
-      emb, qvecs, k1, k2)
+      Knn.fixtureFetch(spark, sfDir), qvecs, k1, k2)
   }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -15,7 +15,7 @@ import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.{Bench, SparkEntry}
+import graft.{Bench, Readers, SparkEntry}
 import graft.operators.Materialize
 
 /** Dev profiler on the bench's own session ([[graft.Bench.session]]), so its
@@ -29,7 +29,8 @@ import graft.operators.Materialize
   * prepared-instance reuse). Each action is a `noop` write, which
   * materializes every output column. Per call it prints the
   * construction wall apart from the action's, the action's optimization and
-  * planning time from its `QueryExecution.tracker`, every job with its
+  * planning time from its `QueryExecution.tracker`, the prepared scans it
+  * reused and prepared ([[graft.Readers.prepared]]), every job with its
   * `[start -> end]` offsets from the call's start, and one line of task
   * metrics per stage; after the reps, the Catalyst rule-time ranking over
   * the timed reps. The last rep's final adaptive plan is written to
@@ -51,8 +52,12 @@ object Profile {
       cpuMs: Long, gcMs: Long, deserMs: Long, serMs: Long, inputBytes: Long,
       shuffleReadBytes: Long, shuffleWriteBytes: Long)
 
+  /** `scans` counts the call's prepared-scan reuses and preparations
+    * ([[graft.Readers.scanStats]]).
+    */
   final case class Rep(label: String, constructS: Double, actionS: Double,
-      optimizationS: Double, planningS: Double, jobs: Seq[Job], stages: Seq[Stage])
+      optimizationS: Double, planningS: Double, jobs: Seq[Job], stages: Seq[Stage],
+      scans: (Long, Long))
 
   /** `rules` holds the ranking's lines; `error` the failure that ended the query. */
   final case class Report(query: String, reps: Seq[Rep], rules: Seq[String],
@@ -84,6 +89,7 @@ object Profile {
       ListenerDrain.drain(spark.sparkContext)
       events.clear()
       val epochMs = System.currentTimeMillis()
+      val (reused0, prepared0) = Readers.scanStats
       val t0 = System.nanoTime()
       val (constructS, actionS) =
         try {
@@ -96,8 +102,9 @@ object Profile {
       val action = events.executions.getLast
       def sec(phase: String): Double =
         action.tracker.phases.get(phase).map(_.durationMs / 1e3).getOrElse(0.0)
+      val (reused, prepared) = Readers.scanStats
       reps += Rep(label, constructS, actionS, sec("optimization"), sec("planning"),
-        events.jobs(epochMs), events.stages())
+        events.jobs(epochMs), events.stages(), (reused - reused0, prepared - prepared0))
       action
     }
     def write(name: String, text: String): Unit =
@@ -124,7 +131,8 @@ object Profile {
     val calls = r.reps.flatMap { p =>
       val head = f"  ${p.label}%-5s  construct ${p.constructS}%.3f s  action ${p.actionS}%.3f s" +
         f"  optimization ${p.optimizationS}%.3f s  planning ${p.planningS}%.3f s" +
-        s"  jobs=${p.jobs.size} stages=${p.stages.size} tasks=${p.stages.map(_.tasks).sum}"
+        s"  jobs=${p.jobs.size} stages=${p.stages.size} tasks=${p.stages.map(_.tasks).sum}" +
+        s"  scans reused=${p.scans._1} prepared=${p.scans._2}"
       val jobs = p.jobs.map(j =>
         f"    job ${j.id}%4d ${j.end - j.start}%7.3f s  [${j.start}%7.3f -> ${j.end}%7.3f]")
       val stages = p.stages.map(s =>

@@ -39,19 +39,8 @@ object VectorExpressions {
     override def dataType: DataType = DoubleType
     override def prettyName: String = "l2_distance"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
-      var s = 0.0
-      var i = 0
-      while (i < n) {
-        val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble
-        s += d * d
-        i += 1
-      }
-      math.sqrt(s)
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      L2Distance.of(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -73,6 +62,24 @@ object VectorExpressions {
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
       copy(left = newLeft, right = newRight)
+  }
+
+  object L2Distance {
+    /** The distance itself, for the interpreted path and for code that
+      * scores rows outside a plan (the kNN fetch's task): float → double,
+      * left to right, then `sqrt` — the generated code's exact arithmetic.
+      */
+    def of(x: ArrayData, y: ArrayData): Double = {
+      val n = math.min(x.numElements(), y.numElements())
+      var s = 0.0
+      var i = 0
+      while (i < n) {
+        val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble
+        s += d * d
+        i += 1
+      }
+      math.sqrt(s)
+    }
   }
 
   /** ‖a − b‖₂² with codegen — the distributed-assignment twin of

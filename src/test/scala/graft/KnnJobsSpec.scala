@@ -139,6 +139,33 @@ class KnnJobsSpec extends SparkSpec {
     assertProbesWithoutExchange(storedPlans ++ vectorPlans)
   }
 
+  test("a capped search: the stored-id budget, no exchange") {
+    // the cap is cut in the probe's tasks and again on the driver; as a
+    // dense_rank window it cost an exchange and four jobs
+    Knn.searchIndex(spark, idx, 8, 100, 10, bucketCap = 5).collect()
+    val (rows, jobs, plans) = searchJobs(Knn.searchIndex(spark, idx, 8, 100, 10, bucketCap = 5))
+    assert(rows.map(_.getLong(0)).distinct.length == 8)
+    info(s"jobs: $jobs")
+    assert(jobs <= 1 + SearchJobs, s"capped search ran $jobs jobs")
+    assertProbesWithoutExchange(plans)
+  }
+
+  /** Jobs per call of q120's filtered search, measured on this fixture:
+    * the query-doc GET, the probe, the collect of the allowed ids among the
+    * probed ones and the fetch. As a semi-join in the probe plan it was
+    * the same four, one of them an exchange's.
+    */
+  val FilteredJobs = 4
+
+  test("a q120 filtered search: no exchange, no more jobs") {
+    Knn.lshTopKFilteredIndexed(spark, sf0001).collect()
+    val (rows, jobs, plans) = searchJobs(Knn.lshTopKFilteredIndexed(spark, sf0001))
+    assert(rows.nonEmpty)
+    info(s"jobs: $jobs")
+    assert(jobs <= FilteredJobs, s"filtered search ran $jobs jobs")
+    assertProbesWithoutExchange(plans)
+  }
+
   /** Jobs per call of an indexed quantized search, measured on this
     * fixture: the query-vector GET, the k1 window's exchange and result
     * (collecting the at most |Q|·k1 candidates), and the fetch that rescores

@@ -430,18 +430,23 @@ class LshSpec extends SparkSpec {
     val base = Knn.searchIndex(spark, dir, 4, 100, 10).collect()
     val Seq(v1, v2) = base.map(_.getLong(1)).filter(_ >= 4).distinct.take(2).toSeq
     Index.delete(spark, dir, Seq(v1, v2))
-    // Simulate an append of v1 that died between the two renames of the
-    // tombstone swap: the complete new set {v2} sits in tombstones_rewriting,
-    // the old set was staged aside, and `tombstones` does not exist.
+    // Simulate an append of v1 that died between the two renames of its
+    // tombstone swap (Lifecycle.promoteSwap): the complete new set {v2}
+    // sits in tombstones_rewriting, the old set {v1, v2} was staged aside
+    // as tombstones_old, and `tombstones` does not exist.
     Seq(v2).toDF("vec_id").write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$dir/tombstones_rewriting")
     assert(new java.io.File(s"$dir/tombstones")
       .renameTo(new java.io.File(s"$dir/tombstones_old")))
-    // Mid-crash readers fall back to the complete rewrite: v2 stays deleted
-    // (never an empty tombstone set resurrecting everything).
+    // Mid-crash readers read the old set where it was staged (never an
+    // absent set as empty), and rename nothing: both ids stay deleted, v1
+    // until the append is replayed.
     val midCrash = Knn.searchIndex(spark, dir, 4, 100, 10).collect()
-    assert(!midCrash.exists(_.getLong(1) == v2), "v2 resurrected mid-crash")
-    // Re-running the append rolls the swap forward, then completes normally.
+    assert(!midCrash.exists(r => r.getLong(1) == v1 || r.getLong(1) == v2),
+      "a deleted id served mid-crash")
+    assert(new java.io.File(s"$dir/tombstones_old").exists())
+    // Replaying the append rolls the old set forward, clears the staging,
+    // then completes normally.
     Index.append(spark, dir, emb.filter(col("vec_id") === v1))
     assert(!new java.io.File(s"$dir/tombstones_old").exists())
     assert(!new java.io.File(s"$dir/tombstones_rewriting").exists())

@@ -153,12 +153,14 @@ class PlanSpec extends SparkSpec {
   test("quantized-ANN rerank broadcasts candidates, never the vector table (r14 lock)") {
     // The flat + indexed paths of all three quantizer families share
     // Knn.rerank; one gate per shape keeps the lock cheap. The tail runs
-    // when the search is called: the k1 candidates reach the vectors scan
-    // as a pushed literal vec_id filter, and no plan of the call may
-    // broadcast the corpus vector table.
+    // when the search is called: the fetch re-runs a prepared (vec_id,
+    // embedding) scan of the corpus vectors with no join, the k1
+    // candidates riding its tasks, and no plan of the call may broadcast
+    // the corpus vector table.
     Seq("q90_sq8_ann", "q71_pq_ann_indexed", "q155_bq_ann").foreach { q =>
       val plans = callPlans(q)
-      assert(plans.exists(p => p.toString.contains("embeddings") && p.toString.contains("In(vec_id")),
+      assert(plans.map(_.toString).exists(p => p.contains("embeddings") &&
+          p.contains("ReadSchema: struct<vec_id:bigint,embedding:array<float>>") && !p.contains("Join")),
         s"$q: no candidate fetch from the vector table:\n${plans.mkString("\n\n")}")
       val paths = plans.flatMap(broadcastScanPaths)
       assert(!paths.exists(_.contains("embeddings")),
@@ -386,37 +388,82 @@ class PlanSpec extends SparkSpec {
     PlanLints.executedPlans(spark)(SparkEntry.queries(name)(spark, sf001))
   }
 
-  /** The postings probe and the vectors fetch of an indexed LSH search. */
+  /** The postings probe and the vectors fetch of an indexed LSH search
+    * (a stored-id search's GET re-runs the fetch's plan).
+    */
   private def probeAndFetch(name: String): (String, String) = {
-    val plans = callPlans(name).map(_.toString)
+    val plans = callPlans(name).map(_.toString).distinct
     def scanning(what: String) = plans.filter(_.linesIterator.exists(l =>
       l.contains("FileScan") && l.contains(what)))
     val probe = scanning("postings")
-    val fetch = scanning("vectors").filter(_.contains("In(vec_id"))
+    val fetch = scanning("vectors")
     assert(probe.length == 1 && fetch.length == 1,
       s"$name: expected one postings probe and one vectors fetch:\n${plans.mkString("\n\n")}")
     (probe.head, fetch.head)
   }
 
-  test("lsh knn probes posting lists with the query side as literals, no join") {
+  /** Tasks and input rows of each job `body` runs, with its description. */
+  private def jobReads(body: => Any): Seq[(String, Int, Long)] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Seq[Int])]()
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add((e.jobId,
+        Option(e.properties).map(_.getProperty("spark.job.description")).orNull, e.stageIds))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.add(
+        (e.stageId, Option(e.taskMetrics).map(_.inputMetrics.recordsRead).getOrElse(0L)))
+    }
+    org.apache.spark.sql.graft.TestBus.drain(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; org.apache.spark.sql.graft.TestBus.drain(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    val ran = tasks.asScala.toSeq
+    jobs.asScala.toSeq.sortBy(_._1).map { case (_, description, stages) =>
+      val mine = ran.filter(t => stages.contains(t._1))
+      (description, mine.size, mine.map(_._2).sum)
+    }
+  }
+
+  test("lsh knn probes posting lists with no join and no query side in the plan") {
+    // the probe keys, candidate ids and query vectors ride the jobs' tasks
     Seq("q23_lsh_knn", "q28_lsh_multiprobe", "q166_knn_by_vector").foreach { q =>
       val (probe, fetch) = probeAndFetch(q)
-      assert(probe.contains("INSET"), s"$q: the probe carries no literal key set:\n$probe")
       Seq(probe, fetch).foreach { plan =>
         assert(!plan.contains("Join"), s"$q: $plan")
         assert(!plan.contains("CartesianProduct"), s"$q: $plan")
+        assert("""(^|\s)Filter\s""".r.findFirstIn(plan).isEmpty && !plan.contains("INSET"), s"$q: $plan")
+        val scan = plan.linesIterator.find(_.contains("FileScan")).get
+        assert(scan.contains("PartitionFilters: []") && scan.contains("PushedFilters: []"), s"$q: $scan")
       }
     }
   }
 
-  test("indexed search fetches candidates by a pushed vec_id filter; no embedding crosses an exchange") {
+  test("indexed search fetches candidates by id; no embedding crosses an exchange") {
     Seq("q23_lsh_knn", "q28_lsh_multiprobe", "q166_knn_by_vector").foreach { q =>
       val (probe, fetch) = probeAndFetch(q)
       val scan = fetch.linesIterator.filter(_.contains("FileScan"))
         .find(_.contains("vectors")).get
-      assert(scan.contains("PushedFilters") && scan.contains("In(vec_id"), s"$q: $scan")
+      assert(scan.contains("ReadSchema: struct<vec_id:bigint,embedding:array<float>>"), s"$q: $scan")
+      assert(!probe.contains("embedding"), s"$q: $probe")
       // the stronger form: neither job has an exchange at all
       Seq(probe, fetch).foreach(plan => assert(!plan.contains("Exchange"), s"$q: $plan"))
+    }
+    // By id: the GET and the fetch run only the vectors partitions whose
+    // vec_id range holds a wanted id. Appended copies of ids < 50, all
+    // deleted, sit in a second file and partition no search wants.
+    import graft.operators.{Index, Knn, Lsh}
+    import org.apache.spark.sql.functions.col
+    val emb = Tables.embeddings(spark, sf0001)
+    val dir = java.nio.file.Files.createTempDirectory("graft-idx-byid").toString
+    Index.build(spark, emb, Lsh.fit(emb, tables = 8, bits = 3), dir)
+    Index.append(spark, dir, emb.filter(col("vec_id") < 50).withColumn("vec_id", col("vec_id") + 100000L))
+    Index.delete(spark, dir, (100000L until 100050L))
+    assert(spark.read.parquet(s"$dir/vectors").rdd.getNumPartitions == 2)
+    Knn.searchIndex(spark, dir, 8, 100, 10).collect()
+    val jobs = jobReads(Knn.searchIndex(spark, dir, 8, 100, 10))
+    Seq("Knn.get", "Knn.fetch").foreach { d =>
+      assert(jobs.filter(_._1 == d).map(_._2) == Seq(1), s"$d tasks: $jobs")
     }
   }
 
@@ -430,13 +477,28 @@ class PlanSpec extends SparkSpec {
   }
 
   test("indexed search prunes postings partitions to the probe keys") {
-    val (plan, _) = probeAndFetch("q23_lsh_knn")
-    val scan = plan.linesIterator.filter(_.contains("FileScan"))
-      .find(_.contains("postings")).getOrElse(fail(s"no postings scan:\n$plan"))
-    assert(scan.contains("PartitionFilters"), scan)
-    assert(scan.contains(graft.operators.Index.PKeyCol), scan)
-    assert(!scan.contains("PartitionFilters: []"),
-      s"postings scan reads every partition: $scan")
+    // The lossless prune (pkey is a function of the probe key), applied at
+    // the job: on a 64-directory index a probe runs only the file
+    // partitions holding a probed pkey directory and reads exactly the
+    // files under those directories.
+    import graft.operators.{Index, Knn, Lsh}
+    import org.apache.spark.sql.functions.col
+    val emb = Tables.embeddings(spark, sf0001)
+    val model = Lsh.fit(emb, tables = 4, bits = 3)
+    val dir = java.nio.file.Files.createTempDirectory("graft-idx-prune").toString
+    Index.build(spark, emb, model, dir, numBuckets = 64)
+    val q = emb.filter(col("vec_id") === 3L).select(col("embedding")).collect()(0).getSeq[Float](0).toArray
+    val probed = model.hashVector(q).zipWithIndex.map { case (h, t) => Index.pkeyOf(t, h, 64) }.distinct
+    val postings = spark.read.parquet(s"$dir/postings")
+    val probedRows = postings.filter(col(Index.PKeyCol).isin(probed.toSeq: _*)).count()
+    val dirs = postings.select(Index.PKeyCol).distinct().count()
+    assert(dirs > probed.length, s"$dirs non-empty pkey directories, ${probed.length} probed")
+    Knn.searchIndexByVector(spark, dir, q, 100, 10).collect()
+    val probes = jobReads(Knn.searchIndexByVector(spark, dir, q, 100, 10)).filter(_._1 == "Knn.probe")
+    assert(probes.length == 1, probes)
+    val (_, tasks, rowsRead) = probes.head
+    assert(tasks >= 1 && tasks <= probed.length, s"$tasks tasks for ${probed.length} probed pkeys")
+    assert(rowsRead == probedRows, s"the probe read $rowsRead rows; the probed pkey dirs hold $probedRows")
   }
 
   test("tfidf joins the tiny idf table by broadcast, not a shuffle join") {
@@ -669,7 +731,8 @@ class PlanSpec extends SparkSpec {
     // The exact-kNN family broadcasts the query side and scores in the
     // scan projection; only (ids, score) rows reach the rank shuffle. The
     // indexed LSH searches (q23/q28) plan no exchange at all, locked by
-    // "indexed search fetches candidates by a pushed vec_id filter".
+    // "indexed search fetches candidates by id; no embedding crosses an
+    // exchange".
     // Scope: these are the QUERY-TIME plans — the one-off index/artifact
     // build jobs (ensure*Index) run as separate cached jobs whose
     // exchanges this test does not see. TYPE-based (any float/double

@@ -1,0 +1,126 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.Executors
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.functions.{col, lit, posexplode}
+
+import graft.operators.{Index, Knn, Lsh}
+
+/** The prepared scans an indexed search re-runs (Knn's postings probe and
+  * vectors fetch, memoized by [[Readers.prepared]]): concurrent searches
+  * share them safely, every change to the layout re-prepares them, and
+  * every search in between reuses them without compiling a plan or
+  * touching the caller's job description.
+  */
+class PreparedScanSpec extends SparkSpec {
+
+  private lazy val emb = Tables.embeddings(spark, sf0001)
+  private lazy val model = Lsh.fit(emb, tables = 8, bits = 3)
+
+  private def built(name: String, rows: DataFrame, m: Lsh.LshModel = model): String = {
+    val dir = Files.createTempDirectory(name).toString
+    Index.build(spark, rows, m, dir)
+    dir
+  }
+
+  private def vec(id: Long): Array[Float] =
+    emb.filter(col("vec_id") === id).select(col("embedding")).collect()(0).getSeq[Float](0).toArray
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
+
+  /** The stored-id, multiprobe, capped and raw-vector answers of a layout. */
+  private def answers(dir: String): Seq[Seq[Seq[Any]]] = Seq(
+    rows(Knn.searchIndex(spark, dir, 8, 100, 10)),
+    rows(Knn.searchIndex(spark, dir, 4, 100, 10, multiprobe = true)),
+    rows(Knn.searchIndex(spark, dir, 8, 100, 10, bucketCap = 5)),
+    rows(Knn.searchIndexByVector(spark, dir, vec(3), 100, 10, excludeIds = Seq(3L))))
+
+  private def prepares: Long = Readers.scanStats._2
+
+  test("concurrent mixed searches on one layout return the sequential rows") {
+    val dir = built("graft-prep-conc", emb)
+    val q = vec(3)
+    val searches: IndexedSeq[() => Seq[Seq[Any]]] = IndexedSeq(
+      () => rows(Knn.searchIndex(spark, dir, 8, 100, 10)),
+      () => rows(Knn.searchIndex(spark, dir, 4, 100, 10, multiprobe = true)),
+      () => rows(Knn.searchIndexByVector(spark, dir, q, 100, 10)),
+      () => rows(Knn.searchIndex(spark, dir, 8, 100, 10, bucketCap = 5)))
+    val want = searches.map(_())
+    val pool = Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      val runs = (0 until 20).map(i => Future(i % searches.length -> searches(i % searches.length)()))
+      Await.result(Future.sequence(runs), 5.minutes).foreach { case (k, got) =>
+        assert(got == want(k), s"search $k differs from its sequential run")
+      }
+    } finally pool.shutdown()
+  }
+
+  test("every change to the layout re-prepares; rows equal a fresh build's") {
+    val extra = emb.filter(col("vec_id") < 40).withColumn("vec_id", col("vec_id") + 100000L)
+    val dir = built("graft-prep-life", emb)
+    answers(dir)
+    def after(what: String)(change: => Unit)(fresh: => String): Unit = {
+      change
+      val before = prepares
+      val got = answers(dir)
+      assert(prepares > before, s"no scan re-prepared after $what")
+      assert(got == answers(fresh), s"rows after $what differ from a fresh build's")
+    }
+    val gone = Seq(10L, 11L, 100005L)
+    val live = emb.unionByName(extra).filter(!col("vec_id").isin(gone: _*))
+    after("append")(Index.append(spark, dir, extra))(built("graft-prep-ref", emb.unionByName(extra)))
+    after("delete")(Index.delete(spark, dir, gone))(built("graft-prep-ref", live))
+    after("compact")(Index.compact(spark, dir))(built("graft-prep-ref", live))
+    after("vacuum")(Index.vacuum(spark, dir))(built("graft-prep-ref", live))
+    val wider = Lsh.fit(emb, tables = 8, bits = 4)
+    after("a rebuild into the same dir")(Index.build(spark, emb, wider, dir))(
+      built("graft-prep-ref", emb, wider))
+  }
+
+  test("a file written under postings/ without a lifecycle call re-prepares the probe") {
+    val dir = built("graft-prep-oob", emb.filter(col("vec_id") < 400))
+    answers(dir)
+    // the rest of the corpus, hashed with the layout's model and written
+    // straight into its parts: no lifecycle call, so no bump — only the
+    // dirs' listing signatures change
+    val (m, numBuckets) = Lsh.loadModel(spark, s"$dir/model")
+    val rest = Lsh.withHashes(spark, emb.filter(col("vec_id") >= 400), m)
+      .select(col("vec_id"), col("embedding"), col("hashes"), lit(0L).as(Index.BatchCol))
+    rest.write.mode(SaveMode.Append).parquet(s"$dir/vectors")
+    Index.withPKey(rest.select(col("vec_id"), col(Index.BatchCol),
+        posexplode(col("hashes")).as(Seq("tbl", "hash"))), numBuckets)
+      .write.mode(SaveMode.Append).partitionBy(Index.PKeyCol).parquet(s"$dir/postings")
+    val before = prepares
+    val got = answers(dir)
+    assert(prepares > before, "the probe and fetch were not re-prepared")
+    assert(got == answers(built("graft-prep-ref", emb)))
+  }
+
+  test("searches with different queries share one prepared probe and fetch") {
+    val dir = built("graft-prep-reuse", emb)
+    val Seq(q3, q5, q7) = Seq(3L, 5L, 7L).map(vec)
+    Knn.searchIndexByVector(spark, dir, q3, 100, 10).collect()
+    val (reused, prepared) = Readers.scanStats
+    val sc = spark.sparkContext
+    sc.setJobDescription("the caller's")
+    val (first, second) =
+      try (PlanLints.executedPlans(spark)(Knn.searchIndexByVector(spark, dir, q5, 100, 10)),
+        PlanLints.executedPlans(spark)(Knn.searchIndexByVector(spark, dir, q7, 100, 10, multiprobe = true)))
+      finally {
+        // the searches' job descriptions gave the caller's back
+        assert(sc.getLocalProperty("spark.job.description") == "the caller's")
+        sc.setJobDescription(null)
+      }
+    assert(Readers.scanStats == (reused + 4, prepared), "a search prepared a scan")
+    // the same executed plans, probe then fetch: the second search
+    // analyzed, optimized and planned nothing
+    assert(first.length == 2 && second.length == 2, (first ++ second).mkString("\n\n"))
+    first.zip(second).foreach { case (a, b) => assert(a eq b) }
+  }
+}
