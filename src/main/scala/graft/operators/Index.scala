@@ -68,9 +68,6 @@ object Index {
     (((m % numBuckets) + numBuckets) % numBuckets).toInt
   }
 
-  /** The pkey of a postings directory named `pkey=<n>`. */
-  def pkeyOfDir(name: String): Int = name.stripPrefix(s"$PKeyCol=").toInt
-
   /** Attach the postings partition key to an exploded (tbl, hash, ...) frame
     * — shared by the batch build and the streaming ingest sink.
     */

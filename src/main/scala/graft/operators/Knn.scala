@@ -2,16 +2,17 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 import graft.Tables
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.graft.{PlanBridge, PreparedScan, QueryLiterals, VectorExpressions}
+import org.apache.spark.sql.graft.{PlanBridge, PreparedScan, VectorExpressions}
 
 /** Two-phase approximate kNN — the reference's flagship search
   * (SURVEY.md §2.A A5–A7, `[PUBREPO AknnRestAction.handleSearchRequest,
@@ -44,9 +45,7 @@ import org.apache.spark.sql.graft.{PlanBridge, PreparedScan, QueryLiterals, Vect
   * The searches run them when called and return the ranked rows as a
   * ready local relation, `dist4` already rounded on the driver
   * ([[Det.displayValue]]): no projection to plan, no job in its action.
-  * The quantized and indexed IVF searches carry their query side into
-  * their scan plans as literals, never as a broadcast relation (derived
-  * from [[queryVectors]]).
+  * The quantized and indexed IVF searches scan the same way ([[nearest]]).
   * This is the collision-counting LSH similarity join (PAPERS.md C2Net),
   * with the counting step on the bounded set of probed postings, so it
   * needs no shuffle.
@@ -223,7 +222,7 @@ object Knn {
     val excluded = excludeIds.toArray.sorted
     search(spark, indexDir,
       probesOf(-1L, model.hashVector(query).toSeq, model, multiprobe),
-      Map(-1L -> query.toSeq), k1, k2, bucketCap,
+      Map(-1L -> query), k1, k2, bucketCap,
       keep = (_, vec) => java.util.Arrays.binarySearch(excluded, vec) < 0,
       candidateFilter = None)
   }
@@ -257,36 +256,37 @@ object Knn {
     val queries = indexFetch(spark, indexDir).get(queryMaxId)
     search(spark, indexDir,
       queries.flatMap { case (q, v) => probesOf(q, model.hashVector(v).toSeq, model, multiprobe) },
-      queries.map { case (q, v) => q -> v.toSeq }.toMap,
-      k1, k2, bucketCap, keep = _ != _, candidateFilter)
+      queries.toMap, k1, k2, bucketCap, keep = _ != _, candidateFilter)
   }
 
-  /** A layout's postings as a search probes them: the live rows (the
-    * [[Lifecycle.liveKeepBatch]] view) projected to (key, vec_id), the key
-    * packed as tbl·2^bits + hash, with each partition's files keyed by the
-    * pkey directory they lie under. Prepared once per layout epoch
-    * ([[graft.Readers.prepared]]); `appended` records whether the layout
-    * can hold duplicate copies ([[everAppended]]).
+  /** A prepared scan of a layout partitioned into `column=value`
+    * directories: the postings by pkey, the IVF layouts by cell.
     */
-  private final class Probe(val scan: PreparedScan, pkeys: IndexedSeq[Array[Int]], val appended: Boolean) {
+  private[operators] final class DirScan(val scan: PreparedScan) {
+    private val dirs = scan.partitions.map(_.files.map(_.toPath.getParent.getName))
 
-    /** The scan's partitions cut to their files under a probed pkey
-      * directory — the lossless prune (pkey is a function of the key), at
-      * the job; a partition left with no file is not run.
+    /** The scan's partitions cut to their files under a `probed`
+      * directory (a lossless prune, at the job); a partition left with no
+      * file is not run.
       */
-    def parts(probed: Set[Int]): Seq[FilePartition] =
-      scan.partitions.zip(pkeys).flatMap { case (p, keys) =>
-        val files = p.files.zip(keys).collect { case (f, k) if probed(k) => f }
+    def parts(probed: Set[String]): Seq[FilePartition] =
+      scan.partitions.zip(dirs).flatMap { case (p, names) =>
+        val files = p.files.zip(names).collect { case (f, n) if probed(n) => f }
         if (files.isEmpty) None else Some(FilePartition(p.index, files))
       }
   }
 
-  private def probeOf(spark: SparkSession, indexDir: String, bits: Int): Probe =
+  /** A layout's postings as a search probes them: the live rows (the
+    * [[Lifecycle.liveKeepBatch]] view) as (key, vec_id), the key packed as
+    * tbl·2^bits + hash, and whether the layout can hold duplicate copies
+    * ([[everAppended]]). Prepared once per layout epoch
+    * ([[graft.Readers.prepared]]).
+    */
+  private def probeOf(spark: SparkSession, indexDir: String, bits: Int): (DirScan, Boolean) =
     graft.Readers.prepared(spark, Seq(indexDir, s"$indexDir/postings"), s"probe:$bits") {
-      val scan = PlanBridge.prepare(
+      (new DirScan(PlanBridge.prepare(
         Lifecycle.liveKeepBatch(spark, indexDir, Index.postings(spark, indexDir)).select(
-          shiftleft(col("tbl").cast("long"), bits).bitwiseOR(col("hash")).as("key"), col("vec_id")))
-      new Probe(scan, scan.partitions.map(_.files.map(f => Index.pkeyOfDir(f.toPath.getParent.getName))),
+          shiftleft(col("tbl").cast("long"), bits).bitwiseOR(col("hash")).as("key"), col("vec_id")))),
         everAppended(spark, indexDir))
     }
 
@@ -358,7 +358,7 @@ object Knn {
       spark: SparkSession,
       indexDir: String,
       probes: Seq[(Long, Int, Long)],
-      queryVecs: Map[Long, Seq[Float]],
+      queryVecs: Map[Long, Array[Float]],
       k1: Int,
       k2: Int,
       bucketCap: Int,
@@ -372,10 +372,10 @@ object Knn {
     val queriesByKey = mutable.LongMap.from(probes.distinct
       .groupMap { case (_, t, h) => (t.toLong << model.bits) | h }(_._1)
       .view.mapValues(_.toArray))
-    val probe = probeOf(spark, indexDir, model.bits)
+    val (probe, appended) = probeOf(spark, indexDir, model.bits)
     val keys = queriesByKey.keys.toArray.sorted
-    val found = probe.scan.run("Knn.probe",
-      probe.parts(probes.map { case (_, t, h) => Index.pkeyOf(t, h, numBuckets) }.toSet)) { rows =>
+    val found = probe.scan.run("Knn.probe", probe.parts(probes.map { case (_, t, h) =>
+      s"${Index.PKeyCol}=${Index.pkeyOf(t, h, numBuckets)}" }.toSet)) { rows =>
       val out = new mutable.ArrayBuilder.ofLong
       rows.foreach { r =>
         if (!r.isNullAt(0) && !r.isNullAt(1) && java.util.Arrays.binarySearch(keys, r.getLong(0)) >= 0) {
@@ -388,7 +388,7 @@ object Knn {
     // the cap cut again over every partition's survivors; on an appended
     // layout, each key's distinct ids
     val pairs =
-      if (bucketCap > 0 || probe.appended)
+      if (bucketCap > 0 || appended)
         smallestPerKey(found, if (bucketCap > 0) bucketCap else Int.MaxValue)
       else found
     val allowed = candidateFilter.fold((_: Long) => true) { df =>
@@ -418,7 +418,7 @@ object Knn {
     }
     rerank(spark, counts.map { case (q, c) => q -> topByCollisions(c, k1) }.toMap,
       indexFetch(spark, indexDir), queryVecs, k2,
-      dedupe = probe.appended, collisions = Some((q, vec) => counts(q)(vec).toLong))
+      dedupe = appended, collisions = Some((q, vec) => counts(q)(vec).toLong))
   }
 
   /** Each key's `cap` smallest distinct ids among (key, vec_id) pairs laid
@@ -462,20 +462,47 @@ object Knn {
       top
     }
 
-  /** The query side of the stored-query searches in [[Pq]] and
-    * [[Vectors.annIvfIndexed]]: one pushed-filter collect of the query docs'
-    * vectors, query_id → vector. Their ADC tables, BQ query codes and IVF
-    * cell probes are all derived from this map, and it rides their plans
-    * as literals ([[queryVec]]), never as a relation.
-    */
-  private[operators] def queryVectors(vectors: DataFrame, queryMaxId: Long): Map[Long, Seq[Float]] =
-    vectors.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+  /** (dist, vec_id), ascending: the order of every top-k cut. */
+  private val ByDist = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
 
-  /** Each row's query vector, read from the literal query_id → vector map. */
-  private[operators] def queryVec(queryVecs: Map[Long, Seq[Float]]): Column =
-    element_at(QueryLiterals.vectorsById(queryVecs), col("query_id"))
+  /** The scan phase of the quantized ([[Pq]]) and indexed IVF searches,
+    * shaped like the reference's shards (SURVEY §3.3): one job re-runs
+    * `scan` on `parts` under the job description `description`; `score`
+    * calls `emit(q, dist)` for each query index it scores a row against,
+    * and each task keeps each query's `k` nearest by (dist, vec_id),
+    * self-matches (column 0 is the vec_id) dropped. The driver merges them:
+    * the rows a `row_number() <= k` window keeps, the order being total.
+    */
+  private[operators] def nearest(
+      scan: PreparedScan,
+      description: String,
+      parts: Seq[FilePartition],
+      qids: Array[Long],
+      k: Int)(
+      score: (InternalRow, (Int, Double) => Unit) => Unit): Map[Long, Seq[(Double, Long)]] = {
+    val perTask = scan.run(description, parts) { rows =>
+      val worstFirst = ByDist.reverse
+      val heaps = Array.fill(qids.length)(new java.util.PriorityQueue[(Double, Long)](worstFirst))
+      var vec = 0L
+      val emit: (Int, Double) => Unit = (q, dist) =>
+        if (vec != qids(q)) {
+          val heap = heaps(q)
+          if (heap.size < k) heap.add((dist, vec))
+          else if (k > 0 && worstFirst.compare((dist, vec), heap.peek) > 0) {
+            heap.poll()
+            heap.add((dist, vec))
+          }
+        }
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) {
+          vec = r.getLong(0)
+          score(r, emit)
+        }
+      }
+      heaps.map(_.toArray(new Array[(Double, Long)](0)))
+    }
+    qids.indices.map(q => qids(q) -> perTask.flatMap(_(q)).sorted(ByDist).take(k)).toMap
+  }
 
   /** The exact re-rank tail (A6) of every two-phase vector search — the
     * indexed LSH core above and the seven quantized searches in [[Pq]] —
@@ -498,7 +525,7 @@ object Knn {
       spark: SparkSession,
       k1set: Map[Long, Array[Long]],
       fetch: Fetch,
-      queryVecs: Map[Long, Seq[Float]],
+      queryVecs: Map[Long, Array[Float]],
       k2: Int,
       dedupe: Boolean,
       collisions: Option[(Long, Long) => Long] = None): DataFrame = {
@@ -508,7 +535,7 @@ object Knn {
     val ids = queriesOf.keys.toArray.sorted
     val qids = queriesOf.values.flatten.toArray.distinct
     val owners = ids.map(id => queriesOf(id).map(q => qids.indexOf(q)).toArray)
-    val qvecs: Array[ArrayData] = qids.map(q => UnsafeArrayData.fromPrimitiveArray(queryVecs(q).toArray))
+    val qvecs: Array[ArrayData] = qids.map(q => UnsafeArrayData.fromPrimitiveArray(queryVecs(q)))
     val rescored = fetch.scan.run("Knn.fetch", fetch.parts(ids)) { rows =>
       val out = mutable.ArrayBuffer.empty[(Long, Long, Double)]
       rows.foreach { r =>
@@ -523,12 +550,22 @@ object Knn {
       }
       out.toArray
     }.flatten
-    val byDist = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-    val ranked = rescored.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, rows) =>
-      val sorted = rows.map { case (_, vec, dist) => (dist, vec) }.sorted(byDist)
-      (if (dedupe) sorted.distinctBy(_._2) else sorted).take(k2).zipWithIndex.map {
-        case ((dist, vec), i) =>
-          Row.fromSeq(Seq[Any](q, vec, i + 1) ++ collisions.map(_(q, vec)) :+ Det.displayValue(dist, 4))
+    ranked(spark, rescored.groupBy(_._1).map { case (q, rows) =>
+      val sorted = rows.map { case (_, vec, dist) => (dist, vec) }.sorted(ByDist)
+      q -> (if (dedupe) sorted.distinctBy(_._2) else sorted).take(k2)
+    }, collisions)
+  }
+
+  /** Each query's ranked (dist, neighbor_id) list as a search result: see
+    * [[rerank]].
+    */
+  private[operators] def ranked(
+      spark: SparkSession,
+      lists: Map[Long, Seq[(Double, Long)]],
+      collisions: Option[(Long, Long) => Long] = None): DataFrame = {
+    val rows = lists.toSeq.sortBy(_._1).flatMap { case (q, list) =>
+      list.zipWithIndex.map { case ((dist, vec), i) =>
+        Row.fromSeq(Seq[Any](q, vec, i + 1) ++ collisions.map(_(q, vec)) :+ Det.displayValue(dist, 4))
       }
     }
     val schema = StructType(
@@ -536,7 +573,7 @@ object Knn {
         StructField("neighbor_id", LongType), StructField("rank", IntegerType, nullable = false)) ++
         collisions.map(_ => StructField("collisions", LongType, nullable = false)) :+
         StructField("dist4", DoubleType))
-    graft.Plans.resultFrame(spark, ranked, schema)
+    graft.Plans.resultFrame(spark, rows, schema)
   }
 
   /** A7: search by stored id — the query side is a filter on the indexed

@@ -1,11 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import org.apache.spark.sql.graft.{QueryLiterals, VectorExpressions}
+import org.apache.spark.sql.graft.{PlanBridge, PreparedScan, VectorExpressions}
 
 /** Quantized code indexes — the memory-bounded scale path for embedding
   * search: one index layout, one lifecycle and one two-phase search, with
@@ -24,9 +26,9 @@ import org.apache.spark.sql.graft.{QueryLiterals, VectorExpressions}
   *
   * A codec holds only what differs between formats: the fit, the codegen
   * encode expression and its code column (`codes` binary, or `code`
-  * bigint), the one-row model doc, and the phase-1 distance column (ADC
-  * through [[AdcTables]] for PQ and SQ8, Hamming through `bit_count` for
-  * BQ). Everything else is written once:
+  * bigint), the one-row model doc, and the phase-1 scorer (ADC,
+  * [[PqModel.adc]] over each query's lookup table, for PQ and SQ8; Hamming,
+  * `bitCount(code ^ qcode)`, for BQ). Everything else is written once:
   *
   *   - the persisted layout `model/` (one row) + `codes/` (vec_id, code
   *     column, batch) and its [[Lifecycle]]: [[build]], [[append]],
@@ -35,11 +37,11 @@ import org.apache.spark.sql.graft.{QueryLiterals, VectorExpressions}
   *   - the two-phase search, inline over a freshly encoded corpus ([[ann]],
   *     with one fit memo per (codec, fixture)) or over the persisted code
   *     table ([[annIndexed]]):
-  *     1. approximate scan: each code row explodes a literal array of query
-  *        ids (the query side rides the plan, see [[Knn]]) and scores the
-  *        codec's distance over the CODE column only — the float vector is
-  *        never touched. Top-k1 candidates per query, collected to the
-  *        driver (at most |Q|·k1 rows).
+  *     1. approximate scan: one job re-runs a prepared scan of the live
+  *        CODE column (inline: of the fixture embeddings, encoded in the
+  *        task) and scores each code against the query vectors riding the
+  *        task; each task keeps its top-k1 per query and the driver merges
+  *        them ([[Knn.nearest]]).
   *     2. exact re-rank in [[Knn.rerank]]: true L2 on the k1 candidates
   *        only, top-k2 on the driver.
   *
@@ -47,9 +49,8 @@ import org.apache.spark.sql.graft.{QueryLiterals, VectorExpressions}
   * riding the plan as a reference object (like [[Lsh.withHashes]]); the
   * phase-1 scan reads only the code column (column pruning keeps embeddings
   * out of the scan — the working set shrinks 4–32×, which is the entire
-  * point at 100 TB); candidate selection is the standard window top-k with
-  * WindowGroupLimit pushdown; only k1 rows per query ever read a real
-  * vector. Composes with IVF (classic IVF-PQ: coarse cells prune the scan,
+  * point at 100 TB); candidate selection is a bounded top-k1 in each task,
+  * with no exchange; only k1 rows per query ever read a real vector. Composes with IVF (classic IVF-PQ: coarse cells prune the scan,
   * PQ codes shrink what remains) — [[annIvfPq]] (q72) stores PQ codes in
   * the cell-partitioned layout of [[Vectors.buildIvfIndex]].
   *
@@ -153,15 +154,6 @@ object Pq {
     }
   }
 
-  /** Per-query ADC lookup tables as a plan reference object (|Q|·M·K
-    * doubles) — carried into the codegen [[org.apache.spark.sql.graft
-    * .VectorExpressions.AdcDistance]] expression so the code-column scan
-    * never leaves whole-stage codegen.
-    */
-  case class AdcTables(model: PqModel, luts: Map[Long, Array[Array[Double]]]) {
-    def adc(qid: Long, codes: Array[Byte]): Double = model.adc(luts(qid), codes)
-  }
-
   /** SQ8 model: code c of dimension i decodes to min_i + c·scale_i. The
     * code is a direct O(1) rint((x−min)/scale) per dimension — the grid is
     * arithmetic, so no O(K) argmin (at 100 TB encode is the whole ingest
@@ -189,7 +181,7 @@ object Pq {
 
     /** The equivalent PQ view: m=dim one-dimensional subspaces with a K=256
       * arithmetic codebook (decode values stored as Float like every corpus
-      * value) — lets SQ8 search reuse the LUT build and the ADC codegen scan
+      * value) — lets SQ8 search reuse the LUT build and the ADC scorer
       * unchanged.
       */
     def asPqModel: PqModel = PqModel(dim, 256, 1,
@@ -241,7 +233,7 @@ object Pq {
     * layout.
     */
   sealed abstract class Codec[M <: AnyRef](
-      val tag: String, val dirName: String, val codeCol: String) {
+      val tag: String, val dirName: String, val codeCol: String) extends Serializable {
 
     /** Deterministic model fit over (vec_id, embedding). */
     def fit(emb: DataFrame): M
@@ -255,10 +247,21 @@ object Pq {
     protected def modelRow(spark: SparkSession, model: M): DataFrame
     protected def readModel(r: Row): M
 
-    /** Phase-1 distance of a paired row's code to its `query_id`'s query,
-      * derived from the query vectors `qvecs`.
+    /** A code as the phase-1 scorer reads it. */
+    type Code
+
+    /** The code in column `at` of a code-table row. */
+    private[operators] def stored(row: InternalRow, at: Int): Code
+
+    /** The code [[encoder]] writes for the embedding `v`: the function its
+      * expression calls.
       */
-    private[operators] def distance(model: M, qvecs: Map[Long, Seq[Float]]): Column
+    private[operators] def encoded(model: M, v: ArrayData): Code
+
+    /** The phase-1 scorer of the query vectors `queries`: the approximate
+      * distance of a code to the query at an index.
+      */
+    private[operators] def scorer(model: M, queries: Seq[Array[Float]]): (Code, Int) => Double
 
     /** (vec_id, code column) — the encoded corpus, a narrow codegen map. */
     def encode(emb: DataFrame, model: M): DataFrame =
@@ -315,8 +318,11 @@ object Pq {
         r.getSeq[scala.collection.Seq[scala.collection.Seq[Float]]](3)
           .map(_.map(_.toArray).toArray).toArray)
 
-    private[operators] def distance(model: PqModel, qvecs: Map[Long, Seq[Float]]): Column =
-      adcDist(model, qvecs)
+    type Code = Array[Byte]
+    private[operators] def stored(row: InternalRow, at: Int): Code = row.getBinary(at)
+    private[operators] def encoded(model: PqModel, v: ArrayData): Code = model.encodeArrayData(v)
+    private[operators] def scorer(model: PqModel, queries: Seq[Array[Float]]): (Code, Int) => Double =
+      adcScorer(model, queries)
   }
 
   /** Scalar quantization, 4× compression with much higher per-dimension
@@ -353,17 +359,20 @@ object Pq {
     protected def readModel(r: Row): SqModel =
       SqModel(r.getInt(0), r.getSeq[Float](1).toArray, r.getSeq[Double](2).toArray)
 
-    private[operators] def distance(model: SqModel, qvecs: Map[Long, Seq[Float]]): Column =
-      adcDist(model.asPqModel, qvecs)
+    type Code = Array[Byte]
+    private[operators] def stored(row: InternalRow, at: Int): Code = row.getBinary(at)
+    private[operators] def encoded(model: SqModel, v: ArrayData): Code = model.encodeArrayData(v)
+    private[operators] def scorer(model: SqModel, queries: Seq[Array[Float]]): (Code, Int) => Double =
+      adcScorer(model.asPqModel, queries)
   }
 
   /** Binary quantization: at dim 64 BQ matches PQ's 8-byte footprint, but
     * its distance is ONE xor + popcount instead of 8 table lookups — the
     * reason Lucene/ES ship it as their default coarse pass. Fit: one narrow
     * posexplode + a dim-keyed exact BIGINT aggregate (partition-independent,
-    * like SQ8's). Distance: Hamming `bit_count(code ^ qcode)` against a
-    * literal query_id → code map — pure integer, the cheapest approximate
-    * scan the engine has.
+    * like SQ8's). Distance: Hamming `bitCount(code ^ qcode)` against each
+    * query's code — pure integer, the cheapest approximate scan the engine
+    * has.
     */
   case object BQ extends Codec[BqModel]("bq", "bq", "code") {
 
@@ -387,9 +396,12 @@ object Pq {
 
     protected def readModel(r: Row): BqModel = BqModel(r.getInt(0), r.getSeq[Long](1).toArray)
 
-    private[operators] def distance(model: BqModel, qvecs: Map[Long, Seq[Float]]): Column = {
-      val qcodes = qvecs.map { case (qid, v) => qid -> model.encodeSeq(v) }
-      bit_count(col(codeCol).bitwiseXOR(element_at(QueryLiterals.longsById(qcodes), col("query_id"))))
+    type Code = Long
+    private[operators] def stored(row: InternalRow, at: Int): Code = row.getLong(at)
+    private[operators] def encoded(model: BqModel, v: ArrayData): Code = model.encodeArrayData(v)
+    private[operators] def scorer(model: BqModel, queries: Seq[Array[Float]]): (Code, Int) => Double = {
+      val qcodes = queries.map(v => model.encodeSeq(v.toSeq)).toArray
+      (code, q) => java.lang.Long.bitCount(code ^ qcodes(q)).toDouble
     }
   }
 
@@ -432,12 +444,13 @@ object Pq {
     cents
   }
 
-  /** ADC distance of a paired row's `codes` to its query, through the
-    * per-query lookup tables ([[AdcTables]]) derived from `qvecs`.
+  /** ADC of a code to each query, through the query's lookup table
+    * (|Q|·M·K doubles, riding the task).
     */
-  private def adcDist(model: PqModel, qvecs: Map[Long, Seq[Float]]): Column =
-    VectorExpressions.adc(col("query_id"), col("codes"),
-      AdcTables(model, qvecs.map { case (qid, v) => qid -> model.lut(v.toArray) }))
+  private def adcScorer(model: PqModel, queries: Seq[Array[Float]]): (Array[Byte], Int) => Double = {
+    val luts = queries.map(model.lut).toArray
+    (codes, q) => model.adc(luts(q), codes)
+  }
 
   // ------------------------------------------------------------- lifecycle
 
@@ -513,43 +526,44 @@ object Pq {
 
   // ---------------------------------------------------------------- search
 
-  /** Phase-1 pairing of every quantized search: each code row gets a
-    * `query_id` per element of `queryIds`, an array column over literals —
-    * all |Q| ids ([[everyQuery]]), or for IVF-PQ the ids of the queries
-    * probing the row's cell. The query side rides the plan (see [[Knn]]);
-    * no query relation is joined in.
+  /** A quantized search: the GET of the query docs (vec_id < `queryMaxId`)
+    * from the fixture in `sfDir`, phase 1 (`candidates`, each query's k1
+    * nearest by approximate distance), then the exact re-rank of the
+    * candidates in [[Knn.rerank]].
     */
-  private def paired(codes: DataFrame, queryIds: Column): DataFrame =
-    codes.withColumn("query_id", explode(queryIds))
+  private def search(spark: SparkSession, sfDir: String, queryMaxId: Long, k2: Int)(
+      candidates: (Knn.Fetch, Seq[(Long, Array[Float])]) => Map[Long, Seq[(Double, Long)]]): DataFrame = {
+    val fetch = Knn.fixtureFetch(spark, sfDir)
+    val queries = fetch.get(queryMaxId)
+    Knn.rerank(spark, candidates(fetch, queries).map { case (q, c) => q -> c.map(_._2).toArray },
+      fetch, queries.toMap, k2, dedupe = false)
+  }
 
-  private def everyQuery(qvecs: Map[Long, Seq[Float]]): Column =
-    QueryLiterals.ids(qvecs.keys.toSeq.sorted)
-
-  /** Phase 1 scan: (query_id, vec_id, `name`) for every pair. */
-  private def scan(pairs: DataFrame, dist: Column, name: String): DataFrame =
-    pairs.select(col("query_id"), col("vec_id"), dist.as(name))
-
-  /** The candidate phase of every quantized search: score the `pairs` by
-    * `dist`, drop self-matches, keep the top-k1 per query by
-    * (dist, vec_id), collect those at most |Q|·k1 (query_id, vec_id) rows,
-    * then exact re-rank in [[Knn.rerank]].
+  /** Phase 1 of every quantized search: one job, under the job description
+    * `description`, re-runs `scan` on `parts`; each task scores each row's
+    * code (`code`) with the codec's scorer against the queries `probing`
+    * picks for the row (None: every query; for IVF-PQ those probing its
+    * cell) and keeps its top-k1 per query ([[Knn.nearest]]).
     */
-  private def search(
-      pairs: DataFrame,
-      dist: Column,
-      fetch: Knn.Fetch,
-      qvecs: Map[Long, Seq[Float]],
+  private def candidates[M <: AnyRef](
+      codec: Codec[M],
+      model: M,
+      scan: PreparedScan,
+      description: String,
+      parts: Seq[FilePartition],
+      queries: Seq[(Long, Array[Float])],
       k1: Int,
-      k2: Int): DataFrame = {
-    val wK1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("vec_id").asc)
-    val k1set = scan(pairs.filter(col("vec_id") =!= col("query_id")), dist, "dist")
-      .withColumn("r1", row_number().over(wK1))
-      .filter(col("r1") <= k1)
-      .select(col("query_id"), col("vec_id"))
-      .collect()
-      .groupMap(_.getLong(0))(_.getLong(1))
-    Knn.rerank(pairs.sparkSession, k1set, fetch, qvecs, k2, dedupe = false)
+      probing: Option[InternalRow => Array[Int]])(
+      code: InternalRow => codec.Code): Map[Long, Seq[(Double, Long)]] = {
+    val score = codec.scorer(model, queries.map(_._2))
+    val every = queries.indices.toArray
+    val picks = probing.getOrElse((_: InternalRow) => every)
+    Knn.nearest(scan, description, parts, queries.map(_._1).toArray, k1) { (row, emit) =>
+      if (!row.isNullAt(1)) {
+        val c = code(row)
+        picks(row).foreach(q => emit(q, score(c, q)))
+      }
+    }
   }
 
   /** The inline searches' fitted models, one fit per (codec, corpus) per
@@ -566,6 +580,8 @@ object Pq {
     * oracle — model-dependent; pinned by PqSpec's recall, full-rank-parity
     * and indexed ≡ inline tests): approximate scan over the codes → top-k1
     * → exact re-rank → top-k2. Output shape matches the other ANN gates.
+    * Phase 1 re-runs the fixture's prepared (vec_id, embedding) scan, the
+    * re-rank's own, encoding each row in the task.
     */
   def ann[M <: AnyRef](
       spark: SparkSession,
@@ -574,13 +590,13 @@ object Pq {
       queryMaxId: Long = 8,
       k1: Int = 100,
       k2: Int = 10): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
     val srcSig = Tables.fixtureSig(spark, s"$sfDir/embeddings.parquet")
-    val model = graft.Memo.once(fitMemo, s"${codec.tag}:$sfDir:$srcSig")(codec.fit(emb))
-      .asInstanceOf[M]
-    val qvecs = Knn.queryVectors(emb, queryMaxId)
-    search(paired(codec.encode(emb, model), everyQuery(qvecs)), codec.distance(model, qvecs),
-      Knn.fixtureFetch(spark, sfDir), qvecs, k1, k2)
+    val model = graft.Memo.once(fitMemo, s"${codec.tag}:$sfDir:$srcSig")(
+      codec.fit(Tables.embeddings(spark, sfDir))).asInstanceOf[M]
+    search(spark, sfDir, queryMaxId, k2) { (fetch, queries) =>
+      candidates(codec, model, fetch.scan, "Pq.ann", fetch.scan.partitions, queries, k1, None)(
+        row => codec.encoded(model, row.getArray(1)))
+    }
   }
 
   /** q71 / q91 / q156 — the same search against the PERSISTED code table:
@@ -588,7 +604,7 @@ object Pq {
     * same results, asserted in PqSpec), but phase 1 scans `codes/` and only
     * the k1 re-rank rows ever read a real embedding. This is the plan that
     * holds at 100 TB: the approximate pass streams a compressed working set
-    * through whole-stage codegen with the query side riding the plan.
+    * with the query side riding the task.
     */
   def annIndexed[M <: AnyRef](
       spark: SparkSession,
@@ -596,29 +612,37 @@ object Pq {
       sfDir: String,
       queryMaxId: Long = 8,
       k1: Int = 100,
-      k2: Int = 10): DataFrame = {
-    val indexDir = ensure(spark, codec, sfDir)
-    val model = codec.loadModel(spark, s"$indexDir/model")
-    val emb = Tables.embeddings(spark, sfDir)
-    val qvecs = Knn.queryVectors(emb, queryMaxId)
-    search(paired(liveCodes(spark, indexDir), everyQuery(qvecs)), codec.distance(model, qvecs),
-      Knn.fixtureFetch(spark, sfDir), qvecs, k1, k2)
-  }
+      k2: Int = 10): DataFrame =
+    searchIndex(spark, codec, ensure(spark, codec, sfDir), sfDir, queryMaxId, k1, k2)
 
-  /** The phase-1 scan of [[annIndexed]], before the self-match filter and
-    * the k1 cut: (query_id, vec_id, approx_dist) — the plan-inspection
-    * surface for PlanSpec (its ReadSchema must contain the code column and
-    * never embedding).
+  /** [[annIndexed]] against the code index in `indexDir`; the query docs
+    * and the re-ranked vectors are the fixture's in `sfDir`.
     */
-  def scanPlan[M <: AnyRef](
+  def searchIndex[M <: AnyRef](
       spark: SparkSession,
       codec: Codec[M],
+      indexDir: String,
       sfDir: String,
-      queryMaxId: Long = 8): DataFrame = {
-    val indexDir = ensure(spark, codec, sfDir)
-    val qvecs = Knn.queryVectors(Tables.embeddings(spark, sfDir), queryMaxId)
-    scan(paired(liveCodes(spark, indexDir), everyQuery(qvecs)),
-      codec.distance(codec.loadModel(spark, s"$indexDir/model"), qvecs), "approx_dist")
+      queryMaxId: Long = 8,
+      k1: Int = 100,
+      k2: Int = 10): DataFrame =
+    search(spark, sfDir, queryMaxId, k2)((_, queries) => indexCandidates(spark, codec, indexDir, queries, k1))
+
+  /** Phase 1 of [[searchIndex]], each query's k1 nearest by the scores its
+    * tasks rank by: the live (vec_id, code column) of `codes/`, prepared
+    * once per layout epoch ([[graft.Readers.prepared]]).
+    */
+  private[graft] def indexCandidates[M <: AnyRef](
+      spark: SparkSession,
+      codec: Codec[M],
+      indexDir: String,
+      queries: Seq[(Long, Array[Float])],
+      k1: Int): Map[Long, Seq[(Double, Long)]] = {
+    val scan = graft.Readers.prepared(spark, Seq(indexDir, s"$indexDir/codes"), "codes") {
+      PlanBridge.prepare(liveCodes(spark, indexDir).select(col("vec_id"), col(codec.codeCol)))
+    }
+    candidates(codec, codec.loadModel(spark, s"$indexDir/model"), scan, "Pq.annIndexed",
+      scan.partitions, queries, k1, None)(codec.stored(_, 1))
   }
 
   // ---------------------------------------------------------------- IVF-PQ
@@ -626,7 +650,7 @@ object Pq {
   /** Persisted IVF-PQ index: the classic composition (Jégou et al. §IVFADC)
     * — `centroids/` (the IVF coarse quantizer), `model/` (the [[PQ]] doc),
     * and `codes/` (vec_id, codes) PARTITIONED BY cell. A query prunes to
-    * nprobe cell directories (static partition filter, like
+    * the files of nprobe cell directories (at the job, like
     * [[Vectors.annIvfIndexed]]) and ADC-scans only those cells' 8-byte
     * codes: the two multiplicative reductions — read 1/C of the corpus, at
     * 1/32 the bytes — compose.
@@ -716,19 +740,30 @@ object Pq {
       cells: Int = 16,
       nprobe: Int = 4,
       m: Int = 8,
-      k: Int = 16): DataFrame = {
-    val codec = PQ(m, k)
-    val indexDir = ensureIvfPqIndex(spark, sfDir, cells, m, k)
-    val model = codec.loadModel(spark, s"$indexDir/model")
-    val emb = Tables.embeddings(spark, sfDir)
-    val qvecs = Knn.queryVectors(emb, queryMaxId)
-    // cell → probing queries, driver-computed over the broadcast-small
-    // coarse quantizer exactly like annIvfIndexed
-    val byCell = Vectors.loadCentroids(spark, s"$indexDir/centroids").probesByCell(qvecs, nprobe)
-    val codes = liveCellCodes(spark, indexDir)
-      .filter(col("cell").isin(byCell.keys.toSeq.sorted: _*))
-    search(paired(codes, element_at(QueryLiterals.idsById(byCell), col("cell"))), codec.distance(model, qvecs),
-      Knn.fixtureFetch(spark, sfDir), qvecs, k1, k2)
+      k: Int = 16): DataFrame =
+    searchIvfPqIndex(spark, ensureIvfPqIndex(spark, sfDir, cells, m, k), sfDir, queryMaxId, k1, k2, nprobe)
+
+  /** [[annIvfPq]] against the IVF-PQ index in `indexDir` (any m and k: the
+    * model doc carries its own); the query docs and the re-ranked vectors
+    * are the fixture's in `sfDir`. Phase 1 re-runs the live cell-partitioned
+    * `codes/` on the files under the probed cell directories only, each
+    * row scored against the queries probing its cell.
+    */
+  def searchIvfPqIndex(
+      spark: SparkSession,
+      indexDir: String,
+      sfDir: String,
+      queryMaxId: Long = 8,
+      k1: Int = 100,
+      k2: Int = 10,
+      nprobe: Int = 4): DataFrame = {
+    val codec = PQ()
+    search(spark, sfDir, queryMaxId, k2) { (_, queries) =>
+      val (scan, parts, probing) = Vectors.probedCells(spark, indexDir, "codes", codec.codeCol,
+        queries.map(_._2), nprobe)(liveCellCodes(spark, indexDir))
+      candidates(codec, codec.loadModel(spark, s"$indexDir/model"), scan, "Pq.annIvfPq", parts, queries, k1,
+        Some(probing))(codec.stored(_, 1))
+    }
   }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

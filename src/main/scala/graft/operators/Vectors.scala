@@ -5,7 +5,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import org.apache.spark.sql.graft.{QueryLiterals, VectorExpressions}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.graft.{PlanBridge, PreparedScan, VectorExpressions}
 import graft.functions.CentroidAgg
 
 /** An IVF coarse quantizer: C centroid vectors with their cell ids, carried
@@ -62,14 +66,6 @@ case class CentroidSet(ids: Array[Long], vecs: Array[Array[Float]]) {
     }
     out
   }
-
-  /** The IVF probes of a literal query side: cell → ids of the queries
-    * that have it among their `nprobe` nearest cells.
-    */
-  def probesByCell(queryVecs: Map[Long, Seq[Float]], nprobe: Int): Map[Long, Seq[Long]] =
-    queryVecs.toSeq.sortBy(_._1)
-      .flatMap { case (qid, v) => nearestArray(v.toArray, nprobe).map(_ -> qid) }
-      .groupMap(_._1)(_._2)
 }
 
 /** Embedding-column analytics beyond point-lookup kNN: per-label centroids
@@ -264,7 +260,7 @@ object Vectors {
   /** Persisted IVF index (the cell-partitioned layout [[annIvf]]'s scaladoc
     * promises): `centroids/` (the coarse quantizer, one row per cell) and
     * `cells/` (vec_id, embedding) PARTITIONED BY cell — a query probes its
-    * nprobe cells under a static partition prune, the IVF analog of the LSH
+    * nprobe cells' directories only, the IVF analog of the LSH
     * postings layout in [[Index]].
     */
   def buildIvfIndex(spark: SparkSession, emb: DataFrame, cells: Int, outDir: String): Unit =
@@ -362,15 +358,35 @@ object Vectors {
     dir.getAbsolutePath
   }
 
-  /** q29 — IVF ANN against the PERSISTED cell-partitioned index: the coarse
-    * quantizer is loaded (and memoizable) driver-side, each query's nprobe
-    * cells are computed there (C is broadcast-small), and the candidate scan
-    * reads ONLY the probed cell directories — PartitionFilters, asserted in
-    * PlanSpec. The query side rides the plan as literals, as in every
-    * stored-query search ([[Knn]]): each scanned row explodes the literal
-    * cell → query-ids map and reads its query vector from the query_id →
-    * vector map. Results are identical to the inline [[annIvf]] (same
-    * seeded quantizer, same ranking) — asserted in VectorsSpec.
+  /** The scan of an IVF search: the live cell-partitioned `part` as
+    * (vec_id, `column`, cell), prepared once per layout epoch; its
+    * partitions cut to the files under the cells the `queries` probe (each
+    * one's `nprobe` nearest by the stored quantizer, driver-side); and each
+    * row's probing query indices.
+    */
+  private[operators] def probedCells(
+      spark: SparkSession,
+      indexDir: String,
+      part: String,
+      column: String,
+      queries: Seq[Array[Float]],
+      nprobe: Int)(live: => DataFrame): (PreparedScan, Seq[FilePartition], InternalRow => Array[Int]) = {
+    val cents = loadCentroids(spark, s"$indexDir/centroids")
+    val byCell = queries.indices.flatMap(q => cents.nearestArray(queries(q), nprobe).map(_ -> q))
+      .groupMap(_._1)(_._2).map { case (cell, qs) => cell -> qs.toArray }
+    val cells = graft.Readers.prepared(spark, Seq(indexDir, s"$indexDir/$part"), s"cells:$part") {
+      new Knn.DirScan(PlanBridge.prepare(live.select(col("vec_id"), col(column), col("cell"))))
+    }
+    val none = Array.empty[Int]
+    (cells.scan, cells.parts(byCell.keySet.map(c => s"cell=$c")), row => byCell.getOrElse(row.getLong(2), none))
+  }
+
+  /** q29 — IVF ANN against the PERSISTED cell-partitioned index: one job
+    * re-runs the live cell scan on the probed cell directories only
+    * ([[probedCells]]), each task scoring rows by L2 against the query
+    * vectors it carries ([[Knn.nearest]]); a bare local relation. Results
+    * are identical to the inline [[annIvf]] (same seeded quantizer, same
+    * ranking) — asserted in VectorsSpec.
     */
   def annIvfIndexed(
       spark: SparkSession,
@@ -380,21 +396,17 @@ object Vectors {
       cells: Int = 16,
       nprobe: Int = 4): DataFrame = {
     val indexDir = ensureIvfIndex(spark, sfDir, cells)
-    val qvecs = Knn.queryVectors(Tables.embeddings(spark, sfDir), queryMaxId)
-    val byCell = loadCentroids(spark, s"$indexDir/centroids").probesByCell(qvecs, nprobe)
-    val wK = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id").asc)
-    liveCells(spark, indexDir)
-      .filter(col("cell").isin(byCell.keys.toSeq.sorted: _*))
-      .withColumn("query_id", explode(element_at(QueryLiterals.idsById(byCell), col("cell"))))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"),
-        VectorExpressions.l2(Knn.queryVec(qvecs), col("embedding")).as("dist"))
-      .withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), Det.display(col("dist"), 4).as("dist4"))
-      .orderBy(col("query_id"), col("rank"))
+    val queries = Knn.fixtureFetch(spark, sfDir).get(queryMaxId)
+    val (scan, parts, probing) = probedCells(spark, indexDir, "cells", "embedding",
+      queries.map(_._2), nprobe)(liveCells(spark, indexDir))
+    val qvecs: Array[ArrayData] = queries.map(q => UnsafeArrayData.fromPrimitiveArray(q._2)).toArray
+    Knn.ranked(spark, Knn.nearest(scan, "Vectors.annIvfIndexed", parts, queries.map(_._1).toArray, k) {
+      (row, emit) =>
+        if (!row.isNullAt(1)) {
+          val emb = row.getArray(1)
+          probing(row).foreach(q => emit(q, VectorExpressions.L2Distance.of(qvecs(q), emb)))
+        }
+    })
   }
 
   /** Per-JVM memo of the pair-mining LSH model fit (keyed by fixture +

@@ -10,7 +10,6 @@ import org.apache.spark.sql.types._
 
 import graft.operators.CentroidSet
 import graft.operators.Lsh.LshModel
-import graft.operators.Pq.AdcTables
 
 /** Native Catalyst expressions for the vector hot paths (SURVEY.md §4.3):
   * primitive float loops with whole-stage codegen, replacing the v1
@@ -305,31 +304,6 @@ object VectorExpressions {
       copy(child = newChild)
   }
 
-  /** PQ asymmetric distance (ADC): M lookup-table reads + adds over the
-    * 8-byte code column. The per-query LUTs ride the plan as a reference
-    * object (|Q|·M·K doubles); the scan stays inside whole-stage codegen —
-    * no UDF boxing on the path that touches every corpus row.
-    */
-  case class AdcDistance(left: Expression, right: Expression, tables: AdcTables)
-      extends BinaryExpression with ExpectsInputTypes {
-
-    override def inputTypes: Seq[AbstractDataType] = Seq(LongType, BinaryType)
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "adc_distance"
-
-    override def nullSafeEval(qid: Any, codes: Any): Any =
-      tables.adc(qid.asInstanceOf[Long], codes.asInstanceOf[Array[Byte]])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("adcTables", tables, classOf[AdcTables].getName)
-      nullSafeCodeGen(ctx, ev, (q, c) => s"${ev.value} = $ref.adc($q, $c);")
-    }
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
   /** PQ encoding (embedding → M one-byte codes) as a native expression: at
     * corpus scale encode IS the ingest cost of a PQ index, and the previous
     * Scala UDF paid a Seq[Float] decode per row. The codebooks ride the plan
@@ -576,8 +550,6 @@ object VectorExpressions {
     ExpressionUtils.column(LshHash(expr(v), model))
   def nearestCells(v: Column, cents: CentroidSet, n: Int): Column =
     ExpressionUtils.column(NearestCells(expr(v), cents, n))
-  def adc(qid: Column, codes: Column, tables: AdcTables): Column =
-    ExpressionUtils.column(AdcDistance(expr(qid), expr(codes), tables))
   def pqEncode(v: Column, model: graft.operators.Pq.PqModel): Column =
     ExpressionUtils.column(PqEncode(expr(v), model))
   def sq8Encode(v: Column, model: graft.operators.Pq.SqModel): Column =

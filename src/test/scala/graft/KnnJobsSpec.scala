@@ -11,17 +11,18 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 import graft.operators.{Index, Knn, Lsh, Pq, Vectors}
 
-/** Job budgets of the two-phase vector searches, as total jobs per call
-  * (construction + action), measured on this sf0.001 index. An indexed LSH
-  * search runs like the reference's coordinating node: the postings probe
-  * and the candidate fetch are one job each, neither with an exchange, and
-  * the collision count and both top-k cuts run on the driver — so the
-  * search returns a local frame whose action runs no job. Before that it
-  * was three action jobs (the collision-count exchange, the k1 broadcast,
-  * the result), and nine before the shared core (the query-side
-  * broadcasts, the k1/k2 window exchanges and the global sort's sample and
-  * range exchange each cost one). A regression back to an exchange, a
-  * broadcast relation or a lazy tail fails here before any bench run.
+/** Job budgets of the indexed vector searches, as total jobs per call
+  * (construction + action), measured on this sf0.001 index. Every one runs
+  * like the reference's coordinating node: each scan it reads (the LSH
+  * postings probe, a quantized code scan, the IVF cell scan, the candidate
+  * fetch) is one job with no exchange, and the cuts run on the driver — so
+  * the search returns a local frame whose action runs no job. Before that
+  * an LSH search was three action jobs (the collision-count exchange, the
+  * k1 broadcast, the result), and nine before the shared core (the
+  * query-side broadcasts, the k1/k2 window exchanges and the global sort's
+  * sample and range exchange each cost one). A regression back to an
+  * exchange, a broadcast relation or a lazy tail fails here before any
+  * bench run.
   */
 class KnnJobsSpec extends SparkSpec {
 
@@ -66,14 +67,19 @@ class KnnJobsSpec extends SparkSpec {
   private lazy val q = spark.read.parquet(s"$idx/vectors").filter("vec_id = 3")
     .select("embedding").collect()(0).getSeq[Float](0).toArray
 
-  /** The probe and fetch plans of a search: the postings scan and the
-    * vectors scan, neither behind an exchange.
+  /** A search's plans: one reads each of `reads`, and none has an
+    * exchange.
     */
-  private def assertProbesWithoutExchange(plans: Seq[String]): Unit = {
-    assert(plans.exists(_.contains("postings")) && plans.exists(_.contains("vectors")),
-      plans.mkString("\n\n"))
+  private def assertNoExchange(plans: Seq[String], reads: String*): Unit = {
+    reads.foreach(r => assert(plans.exists(_.contains(r)), s"no plan reads $r:\n${plans.mkString("\n\n")}"))
     plans.foreach(p => assert(!p.contains("Exchange"), s"a search plan has an exchange:\n$p"))
   }
+
+  /** The probe and fetch plans of an LSH search: the postings scan and the
+    * vectors scan, neither behind an exchange.
+    */
+  private def assertProbesWithoutExchange(plans: Seq[String]): Unit =
+    assertNoExchange(plans, "postings", "vectors")
 
   test("raw-vector search: two jobs per call, both probes without an exchange") {
     val query = q
@@ -109,7 +115,8 @@ class KnnJobsSpec extends SparkSpec {
     val query = q
     Seq(Knn.searchIndexByVector(spark, idx, query, 100, 10),
       Knn.searchIndex(spark, idx, queryMaxId = 8, 100, 10),
-      Pq.annIndexed(spark, Pq.SQ8, sf0001)).foreach { df =>
+      Pq.annIndexed(spark, Pq.SQ8, sf0001),
+      Vectors.annIvfIndexed(spark, sf0001)).foreach { df =>
       assert(df.queryExecution.analyzed.isInstanceOf[LocalRelation],
         s"not a bare local relation:\n${df.queryExecution.analyzed}")
       // the columns and nullability the projected frame had
@@ -167,16 +174,15 @@ class KnnJobsSpec extends SparkSpec {
   }
 
   /** Jobs per call of an indexed quantized search, measured on this
-    * fixture: the query-vector GET, the k1 window's exchange and result
-    * (collecting the at most |Q|·k1 candidates), and the fetch that rescores
-    * them. The query side rides the code scan as a literal query-id array
-    * (IVF-PQ: a literal cell → query-ids map), so no query relation is
-    * broadcast. The same four jobs before the tail moved to the driver were
-    * the GET plus three action jobs (the k1 window's exchange, the k1
-    * broadcast into the vectors join, the result); before that the action
-    * alone was four here, and eight before the shared re-rank tail.
+    * fixture: the query-vector GET, the code scan (each task keeping its
+    * top-k1 per query, the driver merging them) and the fetch that
+    * rescores the candidates. The query side rides the scan's tasks. With
+    * the k1 cut a window over an exchange it was four (the GET, the
+    * window's exchange and result, the fetch); before the tail moved to the
+    * driver the action alone was four here, and eight before the shared
+    * re-rank tail.
     */
-  val QuantizedJobs = 4
+  val QuantizedJobs = 3
 
   Seq[(String, (SparkSession, String) => DataFrame)](
     "PQ" -> ((s, d) => Pq.annIndexed(s, Pq.PQ(), d)),
@@ -185,19 +191,20 @@ class KnnJobsSpec extends SparkSpec {
     "IVF-PQ" -> ((s, d) => Pq.annIvfPq(s, d))).foreach { case (family, search) =>
     test(s"indexed $family search: the shared re-rank tail keeps the action within budget") {
       search(spark, sf0001).collect()
-      val (rows, jobs, _) = searchJobs(search(spark, sf0001))
+      val (rows, jobs, plans) = searchJobs(search(spark, sf0001))
       assert(rows.map(_.getLong(0)).distinct.length == 8)
       info(s"jobs: $jobs")
       assert(jobs <= QuantizedJobs, s"$family search ran $jobs jobs")
+      assertNoExchange(plans, "/codes", "embeddings")
     }
   }
 
   /** Jobs per call of an inline quantized search's second call: the fit is
     * memoized per (codec, corpus), so the call runs the indexed search's
-    * four jobs, the query-vector GET among them (before the tail moved to
-    * the driver: the GET, then three action jobs). Refitting, PQ
-    * re-collects its codebook sample and SQ8 reruns its min/max aggregate
-    * on every call.
+    * three jobs, the code scan re-running the fixture's embeddings scan
+    * and encoding each row in the task (with the k1 window, four).
+    * Refitting, PQ re-collects its codebook sample and SQ8 reruns its
+    * min/max aggregate on every call.
     */
   val InlineJobs = QuantizedJobs
 
@@ -205,34 +212,29 @@ class KnnJobsSpec extends SparkSpec {
     val jobs = Seq[(String, Pq.Codec[_ <: AnyRef])](
       "PQ" -> Pq.PQ(), "SQ8" -> Pq.SQ8, "BQ" -> Pq.BQ).map { case (family, codec) =>
       Pq.ann(spark, codec, sf0001).collect()
-      family -> searchJobs(Pq.ann(spark, codec, sf0001))._2
+      val (_, jobs, plans) = searchJobs(Pq.ann(spark, codec, sf0001))
+      assertNoExchange(plans, "embeddings")
+      family -> jobs
     }
     info(s"jobs: ${jobs.mkString(", ")}")
     assert(jobs.forall(_._2 <= InlineJobs), s"jobs over budget: $jobs")
   }
 
-  /** Action jobs of the indexed IVF search (q29), measured on this fixture:
-    * the top-k window's exchange, then the final sort's sample job, range
-    * exchange and result. Its probes and query vectors are literals; with
-    * them as broadcast relations it was six.
+  /** Jobs per call of the indexed IVF search (q29), measured on this
+    * fixture: the query-vector GET and the cell scan (each task keeping its
+    * top-k per query, the driver merging them), so its action runs none.
+    * With literal probes and a window its action alone ran four (the
+    * window's exchange, the final sort's sample job, range exchange and
+    * result), and six with broadcast query relations.
     */
-  val IvfActionJobs = 4
+  val IvfJobs = 2
 
-  test("indexed IVF search: the literal query side keeps the action within budget") {
-    val (rows, actionJobs) = steadyActionJobs((s, d) => Vectors.annIvfIndexed(s, d))
+  test("indexed IVF search: a bare local relation from the GET and one cell scan, no exchange") {
+    Vectors.annIvfIndexed(spark, sf0001).collect()
+    val (rows, jobs, plans) = searchJobs(Vectors.annIvfIndexed(spark, sf0001))
     assert(rows.map(_.getLong(0)).distinct.length == 8)
-    info(s"action jobs: $actionJobs")
-    assert(actionJobs <= IvfActionJobs, s"IVF search ran $actionJobs action jobs")
-  }
-
-  /** Rows and action jobs of a search's second call: the first builds the
-    * index and memoizes its model and relations.
-    */
-  private def steadyActionJobs(
-      search: (SparkSession, String) => DataFrame): (Array[org.apache.spark.sql.Row], Int) = {
-    search(spark, sf0001).collect()
-    val df = search(spark, sf0001)
-    val (rows, jobs, _) = jobsDuring(df.collect())
-    (rows, jobs)
+    info(s"jobs: $jobs")
+    assert(jobs <= IvfJobs, s"IVF search ran $jobs jobs")
+    assertNoExchange(plans, "/cells", "embeddings")
   }
 }

@@ -468,12 +468,27 @@ class PlanSpec extends SparkSpec {
   }
 
   test("indexed ivf prunes the cell scan to the probed partitions") {
-    val plan = planOf("q29_ann_ivf_indexed")
-    val scan = plan.linesIterator.filter(_.contains("FileScan"))
-      .find(_.contains("cells")).getOrElse(fail(s"no cells scan:\n$plan"))
-    assert(scan.contains("PartitionFilters"), scan)
-    assert(!scan.contains("PartitionFilters: []"),
-      s"cells scan reads every partition: $scan")
+    // The lossless prune (a row's cell is the directory it lies under),
+    // applied at the job: one query probes 4 of the 16 cells, and the scan
+    // runs only the file partitions holding a probed cell directory and
+    // reads exactly the rows under those directories.
+    import graft.operators.Vectors
+    import org.apache.spark.sql.functions.col
+    val dir = Vectors.ensureIvfIndex(spark, sf0001)
+    val q = Tables.embeddings(spark, sf0001).filter(col("vec_id") === 0L)
+      .select(col("embedding")).collect()(0).getSeq[Float](0).toArray
+    val probed = Vectors.loadCentroids(spark, s"$dir/centroids").nearestArray(q, 4)
+    val cells = spark.read.parquet(s"$dir/cells")
+    val probedRows = cells.filter(col("cell").isin(probed.toSeq: _*)).count()
+    val dirs = cells.select("cell").distinct().count()
+    assert(dirs > probed.length, s"$dirs non-empty cell directories, ${probed.length} probed")
+    Vectors.annIvfIndexed(spark, sf0001, queryMaxId = 1).collect()
+    val scans = jobReads(Vectors.annIvfIndexed(spark, sf0001, queryMaxId = 1))
+      .filter(_._1 == "Vectors.annIvfIndexed")
+    assert(scans.length == 1, scans)
+    val (_, tasks, rowsRead) = scans.head
+    assert(tasks >= 1 && tasks <= probed.length, s"$tasks tasks for ${probed.length} probed cells")
+    assert(rowsRead == probedRows, s"the scan read $rowsRead rows; the probed cell dirs hold $probedRows")
   }
 
   test("indexed search prunes postings partitions to the probe keys") {
@@ -732,7 +747,8 @@ class PlanSpec extends SparkSpec {
     // scan projection; only (ids, score) rows reach the rank shuffle. The
     // indexed LSH searches (q23/q28) plan no exchange at all, locked by
     // "indexed search fetches candidates by id; no embedding crosses an
-    // exchange".
+    // exchange", and neither does the indexed IVF search (q29), locked by
+    // KnnJobsSpec's no-exchange check over every plan its call runs.
     // Scope: these are the QUERY-TIME plans — the one-off index/artifact
     // build jobs (ensure*Index) run as separate cached jobs whose
     // exchanges this test does not see. TYPE-based (any float/double
@@ -744,7 +760,7 @@ class PlanSpec extends SparkSpec {
       // audit reduces each vector to an integer ppm inside the scan; drift
       // explodes to scaled longs before its (label, dim) exchange
       "q130_knn_label_eval", "q131_embedding_norms", "q137_centroid_drift",
-      "q25_ann_ivf", "q29_ann_ivf_indexed",
+      "q25_ann_ivf",
       "q110_semantic_increment",
       // seed-centroid scoring: the 1-row centroid moves by broadcast; the
       // corpus embedding is scored in the scan projection and only
@@ -794,11 +810,20 @@ class PlanSpec extends SparkSpec {
       s"coverage reads embedding payloads: $embScan")
   }
 
+  /** The executed plan of the phase-1 scan an indexed quantized search
+    * re-runs, and its `codes/` FileScan line.
+    */
+  private def codeScan(codec: graft.operators.Pq.Codec[_ <: AnyRef]): (String, String) = {
+    def isCodeScan(l: String) = l.contains("FileScan") && l.contains("/codes")
+    val plans = PlanLints.capture(spark)(graft.operators.Pq.annIndexed(spark, codec, sf0001))
+    val scans = plans.filter(_.linesIterator.exists(isCodeScan))
+    assert(scans.length == 1, s"expected one code scan:\n${plans.mkString("\n\n")}")
+    assert(!scans.head.contains("Exchange"), scans.head)
+    (scans.head, scans.head.linesIterator.find(isCodeScan).get)
+  }
+
   test("pq adc scan reads only the 8-byte code column, never an embedding") {
-    val plan = graft.operators.Pq.scanPlan(spark, graft.operators.Pq.PQ(), sf0001)
-      .queryExecution.executedPlan.toString
-    val scan = plan.linesIterator.filter(_.contains("FileScan"))
-      .find(_.contains("codes")).getOrElse(fail(s"no codes scan:\n$plan"))
+    val (plan, scan) = codeScan(graft.operators.Pq.PQ())
     assert(scan.contains("codes:binary"), scan)
     assert(!scan.contains("embedding"), s"ADC scan reads embeddings: $scan")
     assert(!plan.contains("CartesianProduct"), plan)
@@ -840,10 +865,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("sq8 scan reads only the 1-byte-per-dim code column, never an embedding") {
-    val plan = graft.operators.Pq.scanPlan(spark, graft.operators.Pq.SQ8, sf0001)
-      .queryExecution.executedPlan.toString
-    val scan = plan.linesIterator.filter(_.contains("FileScan"))
-      .find(_.contains("codes")).getOrElse(fail(s"no codes scan:\n$plan"))
+    val (plan, scan) = codeScan(graft.operators.Pq.SQ8)
     assert(scan.contains("codes:binary"), scan)
     assert(!scan.contains("embedding"), s"SQ8 scan reads embeddings: $scan")
     assert(!plan.contains("CartesianProduct"), plan)
@@ -951,10 +973,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("bq scan reads only the one-long code column, never an embedding") {
-    val plan = graft.operators.Pq.scanPlan(spark, graft.operators.Pq.BQ, sf0001)
-      .queryExecution.executedPlan.toString
-    val scan = plan.linesIterator.filter(_.contains("FileScan"))
-      .find(_.contains("code")).getOrElse(fail(s"no code scan:\n$plan"))
+    val (plan, scan) = codeScan(graft.operators.Pq.BQ)
     assert(scan.contains("code:bigint"), scan)
     assert(!scan.contains("embedding"), s"BQ scan reads embeddings: $scan")
     assert(!plan.contains("CartesianProduct"), plan)

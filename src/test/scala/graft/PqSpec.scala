@@ -76,18 +76,22 @@ class PqSpec extends SparkSpec {
     assert(recall >= 0.4, s"ivf-pq recall=$recall (nprobe=4/16 on random vectors)")
   }
 
-  test("adc codegen expression matches the driver-side kernel bit-for-bit") {
+  test("phase-1 task scores match the driver-side adc kernel bit-for-bit") {
     val emb = Tables.embeddings(spark, sf0001)
     val model = Pq.PQ().fit(emb)
     val q = emb.select(col("vec_id"), col("embedding"))
       .orderBy(col("vec_id")).limit(1).collect()(0)
-    val lut = model.lut(q.getSeq[Float](1).toArray)
-    val viaPlan = Pq.scanPlan(spark, Pq.PQ(), sf0001, queryMaxId = 1).collect()
-      .map(r => r.getLong(1) -> r.getDouble(2)).toMap
+    val (qid, qv) = (q.getLong(0), q.getSeq[Float](1).toArray)
+    val lut = model.lut(qv)
+    // every live code kept: the scores the tasks rank the index by
+    val scored = Pq.indexCandidates(spark, Pq.PQ(), Pq.ensure(spark, Pq.PQ(), sf0001),
+      Seq(qid -> qv), k1 = Int.MaxValue)(qid)
     val codes = Pq.PQ().encode(emb, model).collect()
-      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1))
-    codes.foreach { case (id, c) =>
-      assert(viaPlan(id) == model.adc(lut, c), s"vec $id diverges")
+      .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
+    assert(scored.map(_._2).sorted == codes.keys.filter(_ != qid).toSeq.sorted,
+      "phase 1 must score every code but the query's own")
+    scored.foreach { case (dist, id) =>
+      assert(dist == model.adc(lut, codes(id)), s"vec $id diverges")
     }
   }
 

@@ -9,13 +9,14 @@ import scala.concurrent.duration._
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.{col, lit, posexplode}
 
-import graft.operators.{Index, Knn, Lsh}
+import graft.operators.{Index, Knn, Lifecycle, Lsh, Pq, Vectors}
 
 /** The prepared scans an indexed search re-runs (Knn's postings probe and
-  * vectors fetch, memoized by [[Readers.prepared]]): concurrent searches
-  * share them safely, every change to the layout re-prepares them, and
-  * every search in between reuses them without compiling a plan or
-  * touching the caller's job description.
+  * vectors fetch, the quantized code scans, the IVF cell scans, memoized
+  * by [[Readers.prepared]]): concurrent searches share them safely, every
+  * change to the layout re-prepares them, and every search in between
+  * reuses them without compiling a plan or touching the caller's job
+  * description.
   */
 class PreparedScanSpec extends SparkSpec {
 
@@ -42,23 +43,81 @@ class PreparedScanSpec extends SparkSpec {
 
   private def prepares: Long = Readers.scanStats._2
 
-  test("concurrent mixed searches on one layout return the sequential rows") {
-    val dir = built("graft-prep-conc", emb)
-    val q = vec(3)
-    val searches: IndexedSeq[() => Seq[Seq[Any]]] = IndexedSeq(
-      () => rows(Knn.searchIndex(spark, dir, 8, 100, 10)),
-      () => rows(Knn.searchIndex(spark, dir, 4, 100, 10, multiprobe = true)),
-      () => rows(Knn.searchIndexByVector(spark, dir, q, 100, 10)),
-      () => rows(Knn.searchIndex(spark, dir, 8, 100, 10, bucketCap = 5)))
+  /** `runs` calls of `searches` in turn on 4 threads, each compared with
+    * its sequential rows.
+    */
+  private def concurrently(searches: IndexedSeq[() => Seq[Seq[Any]]], runs: Int): Unit = {
     val want = searches.map(_())
     val pool = Executors.newFixedThreadPool(4)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
-      val runs = (0 until 20).map(i => Future(i % searches.length -> searches(i % searches.length)()))
-      Await.result(Future.sequence(runs), 5.minutes).foreach { case (k, got) =>
+      val calls = (0 until runs).map(i => Future(i % searches.length -> searches(i % searches.length)()))
+      Await.result(Future.sequence(calls), 5.minutes).foreach { case (k, got) =>
         assert(got == want(k), s"search $k differs from its sequential run")
       }
     } finally pool.shutdown()
+  }
+
+  test("concurrent mixed searches on one layout return the sequential rows") {
+    val dir = built("graft-prep-conc", emb)
+    val q = vec(3)
+    concurrently(IndexedSeq(
+      () => rows(Knn.searchIndex(spark, dir, 8, 100, 10)),
+      () => rows(Knn.searchIndex(spark, dir, 4, 100, 10, multiprobe = true)),
+      () => rows(Knn.searchIndexByVector(spark, dir, q, 100, 10)),
+      () => rows(Knn.searchIndex(spark, dir, 8, 100, 10, bucketCap = 5))), runs = 20)
+  }
+
+  test("concurrent mixed quantized and IVF searches return their sequential rows") {
+    concurrently(IndexedSeq(
+      () => rows(Pq.annIndexed(spark, Pq.PQ(), sf0001)),
+      () => rows(Pq.annIndexed(spark, Pq.SQ8, sf0001)),
+      () => rows(Pq.annIndexed(spark, Pq.BQ, sf0001)),
+      () => rows(Pq.ann(spark, Pq.SQ8, sf0001)),
+      () => rows(Pq.annIvfPq(spark, sf0001)),
+      () => rows(Vectors.annIvfIndexed(spark, sf0001))), runs = 24)
+  }
+
+  test("a code layout and an IVF-PQ layout: every change re-prepares; rows equal a fresh build's") {
+    val head = emb.filter(col("vec_id") < 400)
+    val cents = Vectors.quantizer(spark, head, cells = 16)
+    /** A layout kind: build (rows, model, dir), append, vacuum, search. */
+    final case class Kind(
+        name: String,
+        build: (DataFrame, Pq.PqModel, String) => Unit,
+        append: (String, DataFrame) => Unit,
+        vacuum: String => Unit,
+        search: String => Seq[Seq[Any]])
+    val kinds = Seq(
+      Kind("pq", Pq.build(spark, Pq.PQ(), _, _, _), Pq.append(spark, Pq.PQ(), _, _), Pq.vacuum(spark, _),
+        dir => rows(Pq.searchIndex(spark, Pq.PQ(), dir, sf0001))),
+      Kind("ivfpq", Pq.buildIvfPqIndexWith(spark, _, cents, _, _), Pq.appendIvfPqIndex(spark, _, _),
+        Lifecycle.vacuum(spark, _, Seq("codes" -> Seq("cell"))), dir => rows(Pq.searchIvfPqIndex(spark, dir, sf0001))))
+    val fitted = Pq.PQ().fit(head)
+    kinds.foreach { kind =>
+      def built(rows: DataFrame, m: Pq.PqModel = fitted): String = {
+        val dir = Files.createTempDirectory(s"graft-prep-${kind.name}").toString
+        kind.build(rows, m, dir)
+        dir
+      }
+      val dir = built(head)
+      kind.search(dir)
+      def after(what: String)(change: => Unit)(fresh: => String): Unit = {
+        change
+        val before = prepares
+        val got = kind.search(dir)
+        assert(prepares > before, s"${kind.name}: no scan re-prepared after $what")
+        assert(got == kind.search(fresh), s"${kind.name}: rows after $what differ from a fresh build's")
+      }
+      // query docs among the deletes: the fixture still asks for them
+      val gone = Seq(1L, 10L, 11L, 450L)
+      val live = emb.filter(!col("vec_id").isin(gone: _*))
+      after("append")(kind.append(dir, emb.filter(col("vec_id") >= 400)))(built(emb))
+      after("delete")(Pq.delete(spark, dir, gone))(built(live))
+      after("vacuum")(kind.vacuum(dir))(built(live))
+      val refit = Pq.PQ().fit(emb)
+      after("a rebuild into the same dir")(kind.build(live, refit, dir))(built(live, refit))
+    }
   }
 
   test("every change to the layout re-prepares; rows equal a fresh build's") {

@@ -25,26 +25,6 @@ class VectorsSpec extends SparkSpec {
     assert(recall >= 0.1, f"half-dim recall collapsed: $recall%.3f")
   }
 
-  test("query literals carry typedLit's types and values without reflection") {
-    import org.apache.spark.sql.graft.QueryLiterals
-    val byId = Map(3L -> Seq(7L, 1L), 9L -> Seq(2L))
-    val vecs = Map(3L -> Seq(0.5f, -1.25f), 9L -> Seq(2f, 0f))
-    val codes = Map(3L -> 5L, 9L -> -1L)
-    val ids = Seq(9L, 3L)
-    val pairs = Seq(
-      QueryLiterals.idsById(byId) -> typedLit(byId),
-      QueryLiterals.vectorsById(vecs) -> typedLit(vecs),
-      QueryLiterals.longsById(codes) -> typedLit(codes),
-      QueryLiterals.ids(ids) -> typedLit(ids))
-    val df = spark.range(1).select(pairs.flatMap { case (a, b) => Seq(a, b) }: _*)
-    val row = df.collect()(0)
-    pairs.indices.foreach { i =>
-      assert(df.schema(2 * i).dataType == df.schema(2 * i + 1).dataType, df.schema)
-      assert(df.schema(2 * i).nullable == df.schema(2 * i + 1).nullable, df.schema)
-      assert(row.get(2 * i) == row.get(2 * i + 1), row)
-    }
-  }
-
   test("centroid affinity matches a driver-side recompute exactly") {
     val emb = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("label"), col("embedding")).collect()
