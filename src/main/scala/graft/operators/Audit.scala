@@ -188,9 +188,7 @@ object Audit {
     val dir = Index.ensure(spark, sfDir)
     val nVec = Index.liveVectors(spark, dir)
       .agg(count(lit(1)).as("n_vectors"))
-    val nPost = Lifecycle
-      .liveKeepBatch(spark, dir, Index.postings(spark, dir))
-      .agg(count(lit(1)).as("n_postings"))
+    val nPost = Index.livePostings(spark, dir).agg(count(lit(1)).as("n_postings"))
     val orphans = Index.integrityReport(spark, dir)
       .agg(
         coalesce(sum(col("n_orphan_ids")), lit(0L)).as("n_orphan_ids"),

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -16,32 +16,30 @@ import graft.Tables
   *                 `aknn_models` doc, SURVEY §2.A A4);
   *   - `vectors/`  (vec_id, embedding, hashes) — stored source for GET-by-id
   *                 and exact re-rank;
-  *   - `postings/` (tbl, hash, vec_id) partitioned by `pkey` — the inverted
-  *                 index. `pkey = (tbl·p + hash) mod numBuckets` (p prime) is
-  *                 a pure function of the collision-join key (tbl, hash), so
-  *                 restricting a probe to the files under its probe pkeys'
-  *                 directories is a LOSSLESS prune: any posting that could
-  *                 equi-join a probe necessarily lives in a probed directory.
-  *                 This is the parquet analog of ES touching only the term
-  *                 dictionary entries the bool-should query names.
+  *   - `postings/` (tbl, hash, batch, ids) partitioned by `pkey` — the
+  *                 inverted index, one POSTING LIST (`ids` sorted) per hash
+  *                 key and append batch, files sorted by (tbl, hash): a probe
+  *                 reads one row per probed key, as ES one list per term.
+  *                 `pkey = (tbl·p + hash) mod numBuckets` (p prime) is a pure
+  *                 function of (tbl, hash), so reading only the probe pkeys'
+  *                 directories is a LOSSLESS prune — the analog of ES touching
+  *                 only the term dictionary entries the query names.
   *
   * `numBuckets` is the TOTAL partition-directory count — the pruning
   * granularity. 0 (the default) derives it at build time ([[deriveBuckets]]):
   * the engine's one width, [[Skew.shufflePartitions]], raised only when a
-  * directory's raw posting rows would outgrow one scan split
+  * directory's posting lists would outgrow one scan split
   * (`spark.sql.files.maxPartitionBytes`), so a probed directory is one read
-  * task however large the corpus grows. Every extra directory is one more
-  * file to write on build, append and compact, and to open per probe: the
-  * former fixed 64 left a 10k-vector index's probe opening ~26 tiny files.
-  * An explicit `numBuckets > 0` is honored. The count is persisted in the
+  * task however large the corpus grows; every extra directory is one more
+  * file to write and to open per probe. An explicit `numBuckets > 0` is
+  * honored. The count is persisted in the
   * model doc, so readers, append, compact, vacuum and the streaming sink
   * take it from there, never from this rule.
   *
-  * Scale notes (100 TB): hashing is a narrow map (executor-parallel); the
-  * one shuffle is the pkey clustering at build time, paid once to make every
-  * search read |probe keys| directories instead of the corpus. At cluster
-  * scale the same layout would be `bucketBy` into a catalog table; plain
-  * `partitionBy` keeps it filesystem-only here.
+  * Scale notes (100 TB): hashing is a narrow map; the one shuffle is the
+  * pkey clustering at build time, paid once so every search reads |probe
+  * keys| directories instead of the corpus (a catalog table would
+  * `bucketBy`; plain `partitionBy` keeps it filesystem-only).
   */
 object Index {
 
@@ -52,7 +50,7 @@ object Index {
     * the build-once tmp caches so a stale layout from an older build can
     * never serve a newer reader.
     */
-  val LayoutVersion = 7 // v7: per-CONSUMER artifact layouts — point-probe members (index vectors) id-range-sorted for min/max pruning, pair postings bucket-aggregated to sorted arrays (v6: artifacts build from the ingested multi-file base-table layout)
+  val LayoutVersion = 8 // v8: index postings are posting-list rows (tbl, hash, batch, ids) (v7: per-CONSUMER artifact layouts — point-probe members id-range-sorted, pair postings bucket-aggregated to sorted arrays)
 
   /** Collision-resistant key for build-once cache directory names: a 32-bit
     * String.hashCode collision between two (sfDir, params, mtime) keys would
@@ -80,24 +78,52 @@ object Index {
     */
   val BatchCol: String = Lifecycle.BatchCol
 
-  /** Raw width of one posting row: vec_id, batch and hash (8 bytes each)
-    * plus tbl (4).
+  /** Width of a posting list: 8 bytes per id, plus tbl and the array
+    * length (4 each), hash and batch (8 each).
     */
-  private val PostingRowBytes = 28L
+  private val IdBytes = 8L
+  private val ListHeaderBytes = 24L
 
   /** The derived postings directory count for `vectors` vectors hashed into
-    * `tables` tables — see the object scaladoc.
+    * `tables` tables of `bits` bits (min(vectors, 2^bits) lists a table).
     */
-  def deriveBuckets(spark: SparkSession, vectors: Long, tables: Int): Int = {
+  def deriveBuckets(spark: SparkSession, vectors: Long, tables: Int, bits: Int): Int = {
     val split = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes"))
-    val dirs = math.ceil(vectors.toDouble * tables * PostingRowBytes / split)
+    val lists = tables * math.min(vectors.toDouble, math.pow(2, bits))
+    val dirs = math.ceil((vectors.toDouble * tables * IdBytes + lists * ListHeaderBytes) / split)
     math.max(Skew.shufflePartitions(spark), math.min(dirs, Int.MaxValue.toDouble).toInt)
   }
 
   private def explodeWithBatch(hashed: DataFrame): DataFrame =
     hashed.select(col("vec_id"), col(BatchCol),
       posexplode(col("hashes")).as(Seq("tbl", "hash")))
+
+  /** One posting list per group of `keys`: the group's vec_ids as a sorted
+    * `ids` array, from posting rows (`vec_id`) or from list rows (`ids`,
+    * merged without exploding them) — the one list builder of the index
+    * postings and the q63 pair artifact ([[Vectors.ensurePairPostings]]).
+    */
+  def postingLists(posts: DataFrame, keys: Column*): DataFrame =
+    posts.groupBy(keys: _*).agg(sort_array(
+      if (posts.columns.contains("ids")) flatten(collect_list(col("ids"))) else collect_list(col("vec_id"))).as("ids"))
+
+  /** Posting or list rows with (batch, tbl, hash) written as list rows
+    * under their pkey directories, one file each: the aggregate reuses the
+    * pkey exchange, and a local sort orders each file by (tbl, hash).
+    */
+  private def writeLists(rows: DataFrame, numBuckets: Int, mode: SaveMode, path: String): Unit =
+    postingLists(withPKey(rows, numBuckets).repartition(col(PKeyCol)),
+        col(PKeyCol), col("tbl"), col("hash"), col(BatchCol))
+      .sortWithinPartitions(PKeyCol, "tbl", "hash")
+      .write.mode(mode).partitionBy(PKeyCol).parquet(path)
+
+  /** Posting lists as one row per posting: (vec_id, batch, tbl, hash, pkey)
+    * — what the live view, the integrity reports, the append's supersede
+    * probe and [[vacuum]] read.
+    */
+  def postingRows(lists: DataFrame): DataFrame =
+    lists.select(explode(col("ids")).as("vec_id"), col(BatchCol), col("tbl"), col("hash"), col(PKeyCol))
 
   /** Hash + write the three-part index. */
   def build(
@@ -109,47 +135,27 @@ object Index {
     Lifecycle.resetMarkers(spark, outDir) // stale markers would kill batch-0 rows
     val hashed = Lsh.withHashes(spark, embeddings, model)
       .select(col("vec_id"), col("embedding"), col("hashes"), lit(0L).as(BatchCol))
-    // ID-CLUSTERED stored source: range-partition + sort by vec_id so each
-    // file and row group holds a narrow id range. A search's GET and k1
-    // fetch (Knn.Fetch) run only the scan partitions whose footer vec_id
-    // [min, max] holds a wanted id, instead of opening every file a
-    // pass-through write would inherit from the scan's split count. (A
-    // pushed `In` would not do this: Spark pushes one of more than
-    // spark.sql.parquet.pushdown.inFilterThreshold values, 10 by default,
-    // only as a min..max range, which k1 ids spread over the corpus cover
-    // whole, so it prunes no row group.) No explicit file count:
-    // the un-numbered range shuffle lets AQE size partitions to the data
-    // (one file at fixture scale, maxPartitionBytes-sized files at corpus
-    // scale) — the per-artifact layout policy, keyed to the CONSUMER class
-    // (point probes) rather than one global file-count constant.
+    // ID-CLUSTERED stored source: each file and row group holds a narrow id
+    // range, so a search's GET and k1 fetch (Knn.Fetch) run only the scan
+    // partitions whose footer vec_id [min, max] holds a wanted id (a pushed
+    // `In` of more than inFilterThreshold ids reaches parquet as one
+    // min..max range, which prunes nothing). The un-numbered range shuffle
+    // lets AQE size the files to the data.
     hashed.repartitionByRange(col("vec_id"))
       .sortWithinPartitions(col("vec_id"))
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/vectors")
-    // Derive postings from the vectors JUST WRITTEN, not from the source
-    // frame: the corpus is hashed ONCE (during the vectors write), and this
-    // pass is a 3-column columnar read of the persisted hashes — reusing
-    // `hashed` here would re-run the hash projection over the raw
-    // embeddings a second time. At the 64-d fixtures the gain is modest
-    // (~10% cold build; the postings shuffle/write dominates) but it scales
-    // with dim × tables × bits — at MobileNet-scale 1024-d vectors the
-    // second hash pass is the build's dominant compute.
-    // repartition on the partition column: clusters each pkey into one task
-    // so every directory gets exactly one file, written in parallel.
+    // Postings from the vectors JUST WRITTEN: a columnar read of the stored
+    // hashes, where reusing `hashed` would hash the corpus a second time
+    // (the build's dominant compute at 1024-d).
     val stored = spark.read.parquet(s"$outDir/vectors")
       .select(col("vec_id"), col(BatchCol), col("hashes"))
     // numBuckets = 0: derive from the vectors just written (a footer count)
     val buckets =
-      if (numBuckets > 0) numBuckets else deriveBuckets(spark, stored.count(), model.tables)
+      if (numBuckets > 0) numBuckets else deriveBuckets(spark, stored.count(), model.tables, model.bits)
     Lsh.saveModel(spark, model, buckets, s"$outDir/model")
-    withPKey(explodeWithBatch(stored), buckets)
-      .repartition(col(PKeyCol))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(PKeyCol)
-      .parquet(s"$outDir/postings")
-    // resetMarkers bumped BEFORE the Overwrite writes; a load racing the
-    // rebuild window could memoize pre-rebuild schema/model state under the
-    // post-reset epoch, so bump again now that the new layout is live (the
-    // Lifecycle.append finally-bump discipline).
+    writeLists(explodeWithBatch(stored), buckets, SaveMode.Overwrite, s"$outDir/postings")
+    // resetMarkers bumped BEFORE the writes, and a load racing them could
+    // memoize pre-rebuild state under the new epoch: bump again.
     graft.Readers.bump()
   }
 
@@ -157,13 +163,10 @@ object Index {
     * lives in the JVM temp dir, keyed by the embeddings fixture's mtime so a
     * regenerated fixture invalidates it. Returns the index directory.
     *
-    * `bits = 0` (the default) derives the hash width from the corpus count
-    * at BUILD time via [[Lsh.deriveBits]] — one cheap `count()`, paid only
-    * when the layout doesn't exist yet (the cache key says "auto", so the
-    * cached path never counts). Readers always take bits from the persisted
-    * model, so search code is indifferent to how the width was chosen.
-    * `numBuckets = 0` (the default) likewise derives the directory count
-    * at build time ([[deriveBuckets]]) and keys the cache "auto".
+    * `bits = 0` and `numBuckets = 0` (the defaults) derive the hash width
+    * ([[Lsh.deriveBits]], one cheap `count()`) and the directory count
+    * ([[deriveBuckets]]) at BUILD time, keying the cache "auto"; readers
+    * always take both from the persisted model.
     */
   def ensure(
       spark: SparkSession,
@@ -187,12 +190,10 @@ object Index {
 
   /** Incremental ingest (the reference's online `_aknn_index` lifecycle,
     * SURVEY §3.2): hash NEW vectors with the STORED model and append them to
-    * the existing layout. The postings append is a dynamic-partition write —
-    * only the pkey directories the new rows hash into receive a file; the
-    * rest of the index is untouched. Readers see the same lossless pruning
-    * invariant (pkey is a pure function of (tbl, hash), regardless of which
-    * batch wrote the row), so search-after-append ≡ search over a full
-    * rebuild — asserted in LshSpec.
+    * the existing layout. The postings append is a dynamic-partition write
+    * of the batch's own lists — only the pkey directories they hash into
+    * receive a file — so search-after-append ≡ search over a full rebuild
+    * (asserted in LshSpec).
     *
     * Scale notes: each append costs one narrow hash map + one |batch|-sized
     * shuffle; the corpus-sized build shuffle is never repaid. Many small
@@ -200,36 +201,24 @@ object Index {
     */
   def append(spark: SparkSession, indexDir: String, newVectors: DataFrame): Unit = {
     val (model, numBuckets) = Lsh.loadModel(spark, s"$indexDir/model")
-    // The supersede probe covers BOTH data dirs (column-pruned to
-    // vec_id+batch): a mid-append crash leaves orphan postings with no
-    // vectors row, and a vectors-only probe would never mark them dead.
-    // Probing postings too makes a REPLAY of the same ids (the
-    // liveAppendSink retry path) heal the orphans — the replay's generation
-    // supersedes them in every live view, and vacuum then drops them.
+    // The supersede probe covers BOTH data dirs: a mid-append crash leaves
+    // orphan postings with no vectors row, which a REPLAY of the same ids
+    // (the liveAppendSink retry path) then supersedes; vacuum drops them.
     Lifecycle.appendWith(spark, indexDir, newVectors,
       adoptParts = Seq("postings" -> Seq(PKeyCol), "vectors" -> Nil),
       stored = vectors(spark, indexDir).select(col("vec_id"), col(BatchCol))
-        .unionByName(postings(spark, indexDir).select(col("vec_id"), col(BatchCol)))) { batch =>
-      // Pinned: both writes consume the hashed batch, and the crash-safety
-      // ordering below (postings BEFORE vectors) rules out the build()'s
-      // read-back trick — unpinned, the hash projection would run twice
-      // over the arriving vectors. |batch|-sized, released after the writes.
+        .unionByName(postingRows(postings(spark, indexDir)).select(col("vec_id"), col(BatchCol)))) { batch =>
+      // Pinned (|batch|-sized): both writes consume the hashed batch, and
+      // the ordering below rules out build()'s read-back trick.
       val hashed = Materialize.stable(
         Lsh.withHashes(spark, newVectors, model)
           .select(col("vec_id"), col("embedding"), col("hashes"), lit(batch).as(BatchCol)),
         eager = true)
-      // Postings first: a crash between the two jobs then leaves orphan
-      // postings. Orphans can still win k1 candidate slots (the vectors
-      // inner-join drops them only at re-rank) until a replay of the same
-      // ids supersedes them (above) or a rebuild; no wrong row is ever
-      // RETURNED either way, whereas the reverse order would leave vectors
-      // that silently never match any search.
+      // Postings first: a crash between the jobs leaves orphan postings,
+      // which may win k1 slots but are never RETURNED (the re-rank joins
+      // the vectors), where the reverse order would leave unmatchable vectors.
       try {
-        withPKey(explodeWithBatch(hashed), numBuckets)
-          .repartition(col(PKeyCol))
-          .write.mode(SaveMode.Append)
-          .partitionBy(PKeyCol)
-          .parquet(s"$indexDir/postings")
+        writeLists(explodeWithBatch(hashed), numBuckets, SaveMode.Append, s"$indexDir/postings")
         hashed.write.mode(SaveMode.Append).parquet(s"$indexDir/vectors")
       } finally Materialize.release(hashed)
     }
@@ -245,37 +234,29 @@ object Index {
     Lifecycle.live(spark, indexDir, vectors(spark, indexDir))
 
   def livePostings(spark: SparkSession, indexDir: String): DataFrame =
-    Lifecycle.live(spark, indexDir, postings(spark, indexDir))
+    Lifecycle.live(spark, indexDir, postingRows(postings(spark, indexDir)))
 
   /** Rewrite `postings/` so every pkey directory holds one file again (the
-    * small-file debt of repeated [[append]]s). Contents are unchanged —
-    * byte-identical row set, asserted in LshSpec.
+    * small-file debt of repeated [[append]]s), each (tbl, hash, batch) one
+    * list. Contents are unchanged — an identical set of postings, asserted
+    * in LshSpec.
     *
-    * Swap protocol: [[Lifecycle.promoteSwap]] — write to
-    * `postings_compacting`, then two renames (live→old, compacting→live).
-    * The window between them is not atomic on a generic filesystem —
-    * compact is a single-writer MAINTENANCE op, run it without concurrent
-    * readers (a table format with atomic commits — Delta/Iceberg — is the
-    * production answer). A crashed run's leftovers are settled on the next
-    * call ([[Lifecycle.settleSwap]], [[Lifecycle.clearSwapStaging]]), so a
-    * crashed compact never wedges the index.
+    * Swap protocol: [[Lifecycle.promoteSwap]] (write to
+    * `postings_compacting`, then two renames) — a single-writer MAINTENANCE
+    * op, run without concurrent readers (atomic commits, as Delta/Iceberg
+    * give, are the production answer); the next call settles a crashed
+    * run's leftovers, so a crashed compact never wedges the index.
     */
   def compact(spark: SparkSession, indexDir: String): Unit = {
-    // Hadoop FS throughout (same reason as the tombstone check): indexDir
-    // may be an hdfs:// URI, where java.io.File renames/exists silently
-    // operate on a bogus local path.
+    // Hadoop FS throughout: indexDir may be an hdfs:// URI
     val fs = Lifecycle.fsOf(spark, indexDir)
     val live = new org.apache.hadoop.fs.Path(s"$indexDir/postings")
     val old = new org.apache.hadoop.fs.Path(s"$indexDir/postings_old")
     val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/postings_compacting")
     Lifecycle.settleSwap(fs, live, old)
     Lifecycle.clearSwapStaging(fs, old, tmp)
-    postings(spark, indexDir)
-      .select(col("vec_id"), col(BatchCol), col("tbl"), col("hash"), col(PKeyCol))
-      .repartition(col(PKeyCol))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(PKeyCol)
-      .parquet(tmp.toString)
+    writeLists(postings(spark, indexDir),
+      Lsh.loadModel(spark, s"$indexDir/model")._2, SaveMode.Overwrite, tmp.toString)
     Lifecycle.promoteSwap(fs, live, old, tmp)
   }
 
@@ -283,11 +264,13 @@ object Index {
     * rows and retire the tombstone/supersede markers, returning searches to
     * the plain-scan plans of a fresh build. [[compact]] settles small-file
     * debt; vacuum settles LIFECYCLE debt. Shared protocol + crash contract:
-    * [[Lifecycle.vacuum]].
+    * [[Lifecycle.vacuum]]; the live lists are the live postings regrouped.
     */
   def vacuum(spark: SparkSession, indexDir: String): Unit =
-    Lifecycle.vacuum(spark, indexDir,
-      Seq("vectors" -> Nil, "postings" -> Seq(PKeyCol)))
+    Lifecycle.vacuum(spark, indexDir, Seq("vectors" -> Nil, "postings" -> Seq(PKeyCol)),
+      rewrite = Map("postings" -> (tmp => writeLists(
+        Lifecycle.liveKeepBatch(spark, indexDir, postingRows(spark.read.parquet(s"$indexDir/postings"))),
+        Lsh.loadModel(spark, s"$indexDir/model")._2, SaveMode.Overwrite, tmp))))
 
   def vectors(spark: SparkSession, indexDir: String): DataFrame =
     graft.Readers.parquet(spark, s"$indexDir/vectors")
@@ -304,21 +287,18 @@ object Index {
   /** Cheap integrity probe for the one degradation replay cannot heal by
     * itself: ORPHAN postings from an append that crashed between the
     * postings write and the vectors write, whose ids are never re-ingested.
-    * Such rows win k1 candidate slots forever (the vectors join drops them
-    * only at re-rank), silently costing recall until a rebuild — this probe
-    * makes the condition DETECTABLE instead of discovered via recall drift.
+    * Such rows win k1 candidate slots forever, silently costing recall
+    * until a rebuild — this probe makes the condition DETECTABLE.
     *
     * Returns one row per append generation holding live postings whose
-    * vec_id has no live vectors row — empty ⇔ healthy. `batch >= 0` scopes
-    * the scan to one suspect generation (pushed predicate on the batch
-    * column; the usual call after a crashed append). Cost: both scans are
-    * column-pruned to ids+batch (never an embedding), and the anti-join
-    * shuffles 16-byte rows — OK to run on a schedule next to
-    * [[vacuum]]. Remedy on hits: re-ingest the ids (replay heals them via
-    * supersede markers) or rebuild; vacuum alone keeps marker-live orphans.
+    * vec_id has no live vectors row — empty ⇔ healthy; the postings count
+    * (id, key) pairs, the lists exploded. `batch >= 0` scopes the scan to
+    * one suspect generation (a pushed predicate). Both scans read ids and
+    * batch only, never an embedding. Remedy on hits: re-ingest the ids
+    * (replay supersedes them) or rebuild; vacuum alone keeps them.
     */
   def integrityReport(spark: SparkSession, indexDir: String, batch: Long = -1L): DataFrame = {
-    val posts = Lifecycle.liveKeepBatch(spark, indexDir, postings(spark, indexDir))
+    val posts = Lifecycle.liveKeepBatch(spark, indexDir, postingRows(postings(spark, indexDir)))
       .select(col("vec_id"), col(BatchCol))
     val scoped = if (batch >= 0L) posts.filter(col(BatchCol) === batch) else posts
     scoped

@@ -27,14 +27,16 @@ import org.apache.spark.sql.graft.{PlanBridge, PreparedScan, VectorExpressions}
   * Spark shape (indexed search, [[searchIndex]] / [[searchIndexByVector]]),
   * the reference's coordinating node (SURVEY §3.3 steps 3–4). Each layout
   * part a search reads is a PREPARED SCAN
-  * ([[org.apache.spark.sql.graft.PreparedScan]]): the live postings as
-  * (key, vec_id) ([[Probe]]) and the live vectors as (vec_id, embedding)
-  * ([[Fetch]]), each analyzed, optimized and planned once per layout epoch
-  * ([[graft.Readers.prepared]]). A search is two jobs that re-run them,
-  * neither with an exchange (KnnJobsSpec): the probe runs on the files
-  * under the probed pkey directories and collects the (key, vec_id) pairs
-  * of the probed keys, and the driver counts collisions per query and cuts
-  * top-k1; then [[rerank]], the one exact re-rank tail the quantized
+  * ([[org.apache.spark.sql.graft.PreparedScan]]): the posting lists as
+  * (key, batch, ids) ([[Probe]]) and the live vectors as (vec_id,
+  * embedding) ([[Fetch]]), each analyzed, optimized and planned once per
+  * layout epoch ([[graft.Readers.prepared]]). A search is two jobs that
+  * re-run them, neither with an exchange (KnnJobsSpec): the probe runs on
+  * the files under the probed pkey directories and collects the live
+  * (key, vec_id) pairs of the probed keys' lists, one row per key and
+  * batch, live by the driver-loaded marker sets ([[Lifecycle.liveness]]),
+  * and the driver counts collisions per query and cuts top-k1; then
+  * [[rerank]], the one exact re-rank tail the quantized
   * searches in [[Pq]] share, runs the fetch on the partitions whose vec_id
   * range holds a candidate, scores the candidates on the executors and
   * collects the at most |Q|·k1 rescored rows, and the driver cuts top-k2.
@@ -53,7 +55,7 @@ import org.apache.spark.sql.graft.{PlanBridge, PreparedScan, VectorExpressions}
   * Scale notes (100 TB): the probe reads only the probed pkey
   * directories and is executor-parallel; no cross product anywhere, and no
   * embedding is ever shuffled or collected (the fetch returns distances).
-  * The driver holds at most the probed postings' (key, vec_id) pairs —
+  * The driver holds at most the probed lists' (key, vec_id) pairs —
   * E[bucket] is held near the target by [[Lsh.deriveBits]], and
   * [[Lsh.autoBucketCap]] caps it past the width ceiling — plus at most
   * |Q|·k1 rescored rows; |Q| is point-lookup sized by contract, as the
@@ -165,10 +167,9 @@ object Knn {
       bucketCap = autoCap, candidateFilter = Some(meta.select(col("vec_id"))))
   }
 
-  /** Has this layout ever been batch-appended to? `appends/` batch markers
-    * exist from the first [[Lifecycle.allocateBatch]] on — a fresh build or
-    * an exactly-once streamed bootstrap has none, and therefore cannot hold
-    * duplicate copies of any (tbl, hash, vec_id) row. One driver fs stat.
+  /** Has this layout ever been batch-appended to (`appends/` markers)? A
+    * fresh build or an exactly-once streamed bootstrap has none, and so no
+    * duplicate copy of any (tbl, hash, vec_id) posting. One fs stat.
     */
   private def everAppended(spark: SparkSession, indexDir: String): Boolean =
     Lifecycle.fsOf(spark, indexDir)
@@ -276,18 +277,21 @@ object Knn {
       }
   }
 
-  /** A layout's postings as a search probes them: the live rows (the
-    * [[Lifecycle.liveKeepBatch]] view) as (key, vec_id), the key packed as
-    * tbl·2^bits + hash, and whether the layout can hold duplicate copies
-    * ([[everAppended]]). Prepared once per layout epoch
-    * ([[graft.Readers.prepared]]).
+  /** A layout's postings as a search probes them: the posting lists as
+    * (key, batch, ids), the key packed as tbl·2^bits + hash; the layout's
+    * live view as a predicate, None without markers; and whether it can
+    * hold duplicate copies ([[everAppended]]). Prepared once per layout
+    * epoch ([[graft.Readers.prepared]]).
     */
-  private def probeOf(spark: SparkSession, indexDir: String, bits: Int): (DirScan, Boolean) =
+  private final class Probe(
+      val lists: DirScan, val live: Option[Lifecycle.Liveness], val appended: Boolean)
+
+  private def probeOf(spark: SparkSession, indexDir: String, bits: Int): Probe =
     graft.Readers.prepared(spark, Seq(indexDir, s"$indexDir/postings"), s"probe:$bits") {
-      (new DirScan(PlanBridge.prepare(
-        Lifecycle.liveKeepBatch(spark, indexDir, Index.postings(spark, indexDir)).select(
-          shiftleft(col("tbl").cast("long"), bits).bitwiseOR(col("hash")).as("key"), col("vec_id")))),
-        everAppended(spark, indexDir))
+      new Probe(new DirScan(PlanBridge.prepare(Index.postings(spark, indexDir).select(
+          shiftleft(col("tbl").cast("long"), bits).bitwiseOR(col("hash")).as("key"),
+          col(Index.BatchCol), col("ids")))),
+        Lifecycle.liveness(spark, indexDir), everAppended(spark, indexDir))
     }
 
   /** A vector table as the fetch and the stored-id GET read it: (vec_id,
@@ -344,15 +348,13 @@ object Knn {
     * the k1 candidates (A6) and cuts top-k2 — the two-job shape in the
     * [[Knn]] scaladoc. `probes` are (query_id, tbl, hash), multiprobe flips
     * included; `keep` is the exclusion predicate over (query_id, vec_id),
-    * applied before the count. The probe re-runs the layout's prepared
-    * [[Probe]] on the files under the probed pkey directories, its tasks
-    * keeping the rows whose key is probed (and, with a cap, each key's
-    * `bucketCap` smallest distinct ids, which the driver cuts again). A
-    * `candidateFilter` is one collect of the allowed ids among the probed
-    * ones, applied in the count. Duplicate posting or vector copies exist
-    * only on a layout that has been appended to (a batch holding an id
-    * twice), and only there are they collapsed, on the driver: the probed
-    * (key, vec_id) pairs before the count, and the |Q|·k1 rescored rows.
+    * applied before the count. The probe's tasks emit the live ids of each
+    * probed list (with a cap, each key's `bucketCap` smallest distinct live
+    * ids, which the driver cuts again). A `candidateFilter` is one
+    * collect of the allowed ids among the probed ones, applied in the
+    * count. Only an appended layout can hold duplicate copies (a batch
+    * holding an id twice), and only there are they collapsed, on the
+    * driver: the probed pairs before the count, and the rescored rows.
     */
   private def search(
       spark: SparkSession,
@@ -372,21 +374,26 @@ object Knn {
     val queriesByKey = mutable.LongMap.from(probes.distinct
       .groupMap { case (_, t, h) => (t.toLong << model.bits) | h }(_._1)
       .view.mapValues(_.toArray))
-    val (probe, appended) = probeOf(spark, indexDir, model.bits)
+    val probe = probeOf(spark, indexDir, model.bits)
+    val (live, appended) = (probe.live, probe.appended)
     val keys = queriesByKey.keys.toArray.sorted
-    val found = probe.scan.run("Knn.probe", probe.parts(probes.map { case (_, t, h) =>
+    val found = probe.lists.scan.run("Knn.probe", probe.lists.parts(probes.map { case (_, t, h) =>
       s"${Index.PKeyCol}=${Index.pkeyOf(t, h, numBuckets)}" }.toSet)) { rows =>
       val out = new mutable.ArrayBuilder.ofLong
       rows.foreach { r =>
-        if (!r.isNullAt(0) && !r.isNullAt(1) && java.util.Arrays.binarySearch(keys, r.getLong(0)) >= 0) {
-          out += r.getLong(0)
-          out += r.getLong(1)
+        if (!r.isNullAt(0) && !r.isNullAt(2) && java.util.Arrays.binarySearch(keys, r.getLong(0)) >= 0) {
+          val (key, batch, ids) = (r.getLong(0), r.getLong(1), r.getArray(2))
+          var i = 0
+          while (i < ids.numElements()) {
+            if (live.forall(_(ids.getLong(i), batch))) out += key += ids.getLong(i)
+            i += 1
+          }
         }
       }
       if (bucketCap > 0) smallestPerKey(out.result(), bucketCap) else out.result()
     }.toArray.flatten
-    // the cap cut again over every partition's survivors; on an appended
-    // layout, each key's distinct ids
+    // the cap cut again over every task's survivors; on an appended layout,
+    // each key's distinct ids
     val pairs =
       if (bucketCap > 0 || appended)
         smallestPerKey(found, if (bucketCap > 0) bucketCap else Int.MaxValue)

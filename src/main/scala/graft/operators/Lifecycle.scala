@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Index mutation machinery shared by every persisted layout — the LSH
@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * cell-partitioned IVF-PQ code table: parquet is immutable, so all four
   * express the ES document lifecycle the same way —
   *
-  *   - DELETE: ids append to `<dir>/tombstones/`; readers anti-join them out.
+  *   - DELETE: ids append to `<dir>/tombstones/`; readers anti-join them out
+  *     (the LSH probe filters by the driver-loaded set, [[liveness]]).
   *   - UPSERT: every stored row carries [[BatchCol]], the append generation
   *     that wrote it (0 = initial build). Re-ingesting an id records
   *     (id, batch) in `<dir>/superseded/`; readers keep only rows at or
@@ -260,43 +261,58 @@ object Lifecycle {
     }
   }
 
-  private def withoutTombstones(spark: SparkSession, indexDir: String, df: DataFrame): DataFrame = {
-    // Hadoop FS, not java.io.File: indexDir may be hdfs://... on a cluster,
-    // where a File.exists check is always false and deletes would silently
-    // stop applying.
+  /** The layout's marker sets, each absent until its first write: the
+    * tombstoned ids, and each re-ingested id's live-from batch (its latest
+    * supersede point: rows of an earlier batch are replaced versions).
+    * Hadoop FS, not java.io.File: indexDir may be hdfs://..., where a
+    * File.exists check is always false and deletes would stop applying. A
+    * tombstone rewrite that crashed between its renames left the set staged
+    * aside: read it there, never an absent set as empty, until the next
+    * append or vacuum settles it; a reader never renames (its roll-forward
+    * racing an append's promote would nest the new set inside the old one).
+    */
+  private def markers(spark: SparkSession, indexDir: String): (Option[DataFrame], Option[DataFrame]) = {
     val fs = fsOf(spark, indexDir)
     val (path, old, _) = tombstoneSwap(indexDir)
-    // A rewrite that crashed between its renames left the set staged aside:
-    // read it there, never an absent set as empty, until the next append or
-    // vacuum settles it. A reader never renames: its roll-forward racing an
-    // append's promote would nest the new set inside the old one.
-    Seq(path, old).find(fs.exists).fold(df)(p =>
-      df.join(broadcast(graft.Readers.parquet(spark, p.toString)), Seq("vec_id"), "left_anti"))
+    val superseded = new Path(s"$indexDir/superseded")
+    (Seq(path, old).find(fs.exists).map(p => graft.Readers.parquet(spark, p.toString)),
+      Option.when(fs.exists(superseded))(graft.Readers.parquet(spark, superseded.toString)
+        .groupBy(col("vec_id")).agg(max(col(BatchCol)).as("live_from"))))
   }
 
-  /** Keep only each id's newest version: rows whose batch predates the id's
-    * latest supersede marker are dead (replaced by a later append of the
-    * same id). The marker set is |re-ingested ids|-sized — broadcast, and
-    * absent entirely (plan untouched) for append-only or build-once indexes.
+  /** The live view as a predicate over (vec_id, batch), for a reader that
+    * filters in its own tasks (the LSH probe): the sorted tombstone set and
+    * live-from batches, loaded by one small collect each.
     */
-  private def withoutSuperseded(spark: SparkSession, indexDir: String, df: DataFrame): DataFrame = {
-    val fs = fsOf(spark, indexDir)
-    val path = new Path(s"$indexDir/superseded")
-    if (!fs.exists(path)) df
-    else {
-      val sup = graft.Readers.parquet(spark, path.toString)
-        .groupBy(col("vec_id")).agg(max(col(BatchCol)).as("live_from"))
-      df.join(broadcast(sup), Seq("vec_id"), "left")
-        .filter(col("live_from").isNull || col(BatchCol) >= col("live_from"))
-        .drop("live_from")
+  final class Liveness(dead: Array[Long], superseded: Array[Long], from: Array[Long]) extends Serializable {
+    def apply(vec: Long, batch: Long): Boolean =
+      java.util.Arrays.binarySearch(dead, vec) < 0 && {
+        val at = java.util.Arrays.binarySearch(superseded, vec)
+        at < 0 || batch >= from(at)
+      }
+  }
+
+  /** The layout's [[Liveness]]; None while it has no marker. */
+  private[operators] def liveness(spark: SparkSession, indexDir: String): Option[Liveness] = {
+    val (dead, sup) = markers(spark, indexDir)
+    Option.when(dead.nonEmpty || sup.nonEmpty) {
+      val from = sup.fold(Array.empty[Row])(_.collect()).map(r => r.getLong(0) -> r.getLong(1)).sorted
+      new Liveness(dead.fold(Array.empty[Row])(_.collect()).map(_.getLong(0)).sorted,
+        from.map(_._1), from.map(_._2))
     }
   }
 
   /** The live row set WITH its batch column — what [[vacuum]] persists and
-    * what [[Index.integrityReport]] attributes orphans by.
+    * what [[Index.integrityReport]] attributes orphans by: tombstoned ids
+    * out by a broadcast anti-join, superseded versions by a broadcast join
+    * on the live-from batches; the plan is untouched without markers.
     */
-  private[operators] def liveKeepBatch(spark: SparkSession, indexDir: String, df: DataFrame): DataFrame =
-    withoutSuperseded(spark, indexDir, withoutTombstones(spark, indexDir, df))
+  private[operators] def liveKeepBatch(spark: SparkSession, indexDir: String, df: DataFrame): DataFrame = {
+    val (dead, sup) = markers(spark, indexDir)
+    val alive = dead.fold(df)(t => df.join(broadcast(t), Seq("vec_id"), "left_anti"))
+    sup.fold(alive)(s => alive.join(broadcast(s), Seq("vec_id"), "left")
+      .filter(col("live_from").isNull || col(BatchCol) >= col("live_from")).drop("live_from"))
+  }
 
   /** The live view of any stored row set: tombstoned ids out, superseded
     * versions out, bookkeeping column dropped. Both filters are no-ops (the
@@ -316,7 +332,8 @@ object Lifecycle {
     * `parts` lists each data subdir with its partition columns (e.g.
     * `("postings", Seq("pkey"))`, `("cells", Seq("cell"))`); partitioned
     * parts are re-clustered one-file-per-directory, which also settles the
-    * small-file debt of repeated appends.
+    * small-file debt of repeated appends. A part named in `rewrite` is
+    * written to the staging dir by its own function instead.
     *
     * Crash safety, same single-writer maintenance contract as
     * [[Index.compact]]: each part uses the write-aside / two-rename swap
@@ -331,7 +348,8 @@ object Lifecycle {
   def vacuum(
       spark: SparkSession,
       indexDir: String,
-      parts: Seq[(String, Seq[String])]): Unit = {
+      parts: Seq[(String, Seq[String])],
+      rewrite: Map[String, String => Unit] = Map.empty): Unit = {
     val fs = fsOf(spark, indexDir)
     // Settle a crashed append's half-finished tombstone swap first, so the
     // tombstone set we purge against is the consistent live one.
@@ -342,12 +360,14 @@ object Lifecycle {
       val tmp = new Path(s"$indexDir/${sub}_compacting")
       settleSwap(fs, livePath, old)
       clearSwapStaging(fs, old, tmp)
-      val purged = liveKeepBatch(spark, indexDir, spark.read.parquet(livePath.toString))
-      val clustered =
-        if (pcols.nonEmpty) purged.repartition(pcols.map(col): _*)
-        else purged
-      val w = clustered.write.mode(SaveMode.Overwrite)
-      (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(tmp.toString)
+      rewrite.getOrElse(sub, (to: String) => {
+        val purged = liveKeepBatch(spark, indexDir, spark.read.parquet(livePath.toString))
+        val clustered =
+          if (pcols.nonEmpty) purged.repartition(pcols.map(col): _*)
+          else purged
+        val w = clustered.write.mode(SaveMode.Overwrite)
+        (if (pcols.nonEmpty) w.partitionBy(pcols: _*) else w).parquet(to)
+      })(tmp.toString)
       promoteSwap(fs, livePath, old, tmp)
     }
     // All parts are physically live-only now; the markers are dead weight.

@@ -600,45 +600,28 @@ object Vectors {
     if (!new java.io.File(dir, "_SUCCESS").exists()) {
       val emb = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
       val model = pairModel(spark, sfDir, tables, useBits)
-      // BUCKET-AGGREGATED layout: one row per (tbl, hash) holding the
-      // bucket's sorted posting list. The ingest-time groupBy replaces the
-      // mining-time co-partitioning shuffle the raw-row layout needed —
-      // the pair generator ([[minePairsFromBuckets]]) then runs exchange-
-      // free over whatever splits the artifact scan yields. sort_array
-      // makes the per-bucket order (and so the capped prefix) deterministic.
-      // Artifact buckets are pre-capped with the SAME valve the mining
-      // tail applies ([[Skew.capBuckets]], keep-cap-smallest, BEFORE the
-      // aggregate so the collect_list buffer is bounded too): past the
-      // width ceiling a degenerate bucket would otherwise persist as one
-      // unbounded multi-MB array row — a per-task memory spike at build
-      // AND read time for ids the miner is contractually going to slice
-      // off anyway. Below the ceiling (every gate fixture) the cap is 0
-      // and this is the identity. Explicit-bits callers own their
-      // operating point and keep uncapped artifacts (autoCap derives only
-      // for bits == 0); the mining-side slice stays as a second, now
-      // idempotent, application of the same contract.
+      // BUCKET-AGGREGATED layout, one sorted posting list per (tbl, hash):
+      // the pair generator ([[minePairsFromBuckets]]) runs exchange-free
+      // over the artifact's splits, and a capped prefix is deterministic.
+      // Buckets are pre-capped with the mining tail's valve
+      // ([[Skew.capBuckets]], keep-cap-smallest, BEFORE the aggregate, so
+      // the collect_list buffer is bounded too): past the width ceiling a
+      // degenerate bucket would persist as one unbounded array row of ids
+      // the miner slices off anyway. Below the ceiling (every gate
+      // fixture), and for explicit-bits callers, the cap is 0.
       val buildCap = if (bits > 0) 0 else Lsh.autoBucketCap(n, Lsh.PairTargetBucket)
       val posts0 = Lsh.explodeHashes(Lsh.withHashes(spark, emb, model))
       val posts = if (buildCap > 0) Skew.capBuckets(posts0, buildCap) else posts0
-      posts
-        .groupBy(col("tbl"), col("hash"))
-        .agg(sort_array(collect_list(col("vec_id"))).as("ids"))
-        // Fixed-count RANGE repartition: mining scans every bucket and
-        // fans each into C(|bucket|,2) generated pairs, so scan splits ARE
-        // the pair stage's parallelism — AQE's size-based coalescing sees
-        // a few hundred KB of arrays, packs them into ONE file, and the
-        // whole Σ bucket² generation runs single-task. 8 = the
-        // heavy-kernel file-count policy (Tables.ensureIngested); at
-        // deployment scale bucket bytes dominate and files size to
-        // maxPartitionBytes as usual. RANGE, not hash: when the session's
-        // shuffle.partitions equals `files`, a hash repartition on the
-        // grouping keys is canonically REDUNDANT with the aggregate's own
-        // exchange — the optimizer elides it and AQE then coalesces the
-        // tiny agg exchange to one partition (observed: a 1-file artifact
-        // and q63 back to single-task, 0.24 → 0.86 s). Range partitioning
-        // is never satisfied by the hash exchange, so the layout shuffle
-        // survives at exactly `files` output partitions, and the
-        // (tbl, hash)-sorted files carry min/max stats for free.
+      Index.postingLists(posts, col("tbl"), col("hash"))
+        // Fixed-count RANGE repartition: scan splits ARE the pair stage's
+        // parallelism, and AQE would pack the few hundred KB of arrays into
+        // ONE file, running the whole Σ bucket² generation in one task
+        // (8 = the heavy-kernel file count, Tables.ensureIngested). RANGE,
+        // not hash: a hash repartition on the grouping keys is redundant
+        // with the aggregate's exchange when shuffle.partitions equals
+        // `files`, so the optimizer elides it and AQE coalesces to one
+        // partition (q63 0.24 → 0.86 s); the range one survives, and its
+        // (tbl, hash)-sorted files carry min/max stats.
         .repartitionByRange(files, col("tbl"), col("hash"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(dir.getAbsolutePath)

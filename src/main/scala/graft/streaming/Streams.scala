@@ -122,11 +122,12 @@ object Streams {
 
   /** Streaming index ingest END-TO-END (A3/A9 closed loop): vectors arrive
     * on a stream, get hashed, exploded to postings, and land in the SAME
-    * pkey-partitioned layout [[graft.operators.Index.build]] writes — so a
-    * [[graft.operators.Knn.searchIndex]] probe prunes streamed postings
-    * exactly like batch-built ones. Durable file sink + checkpoint: exactly-
-    * once per micro-batch, resumable. StreamingSpec proves the streamed
-    * layout is row-identical to the batch build.
+    * pkey-partitioned layout [[graft.operators.Index.build]] writes, each
+    * posting a one-id list — so a [[graft.operators.Knn.searchIndex]] probe
+    * prunes streamed postings exactly like batch-built ones. Durable file
+    * sink + checkpoint: exactly-once per micro-batch, resumable.
+    * StreamingSpec proves the streamed layout holds the batch build's
+    * postings.
     */
   def postingsSink(
       spark: SparkSession,
@@ -144,10 +145,11 @@ object Streams {
     // batch = 0 matches Index.build's stamp: the streamed layout is the
     // INITIAL build expressed as a stream; incremental streamed ingest into
     // a live index would thread Index.allocateBatch through here instead.
+    // One-id lists keep the sink stateless; Index.compact merges them.
     val posts = graft.operators.Index.withPKey(
       graft.operators.Lsh.explodeHashes(hashedVectors(spark, srcDir, model))
-        .select(col("vec_id"), lit(0L).as(graft.operators.Index.BatchCol),
-          col("tbl"), col("hash")),
+        .select(col("tbl"), col("hash"), lit(0L).as(graft.operators.Index.BatchCol),
+          array(col("vec_id")).as("ids")),
       numBuckets)
     posts.writeStream
       .format("parquet")

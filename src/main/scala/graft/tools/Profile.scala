@@ -31,7 +31,8 @@ import graft.operators.Materialize
   * construction wall apart from the action's, the action's optimization and
   * planning time from its `QueryExecution.tracker`, the prepared scans it
   * reused and prepared ([[graft.Readers.prepared]]), every job with its
-  * `[start -> end]` offsets from the call's start, and one line of task
+  * `[start -> end]` offsets from the call's start and its tasks' summed
+  * `inputMetrics.recordsRead` (a kNN probe's rows read), and one line of task
   * metrics per stage; after the reps, the Catalyst rule-time ranking over
   * the timed reps. The last rep's final adaptive plan is written to
   * `OUTDIR/<query>.txt`, a failure to `OUTDIR/<query>.ERROR.txt`.
@@ -46,7 +47,7 @@ object Profile {
   val RankedRules = 15
 
   /** Start and end are seconds from the start of the call. */
-  final case class Job(id: Int, start: Double, end: Double)
+  final case class Job(id: Int, start: Double, end: Double, rows: Long)
 
   final case class Stage(id: Int, name: String, wallMs: Long, tasks: Int, runMs: Long,
       cpuMs: Long, gcMs: Long, deserMs: Long, serMs: Long, inputBytes: Long,
@@ -134,7 +135,7 @@ object Profile {
         s"  jobs=${p.jobs.size} stages=${p.stages.size} tasks=${p.stages.map(_.tasks).sum}" +
         s"  scans reused=${p.scans._1} prepared=${p.scans._2}"
       val jobs = p.jobs.map(j =>
-        f"    job ${j.id}%4d ${j.end - j.start}%7.3f s  [${j.start}%7.3f -> ${j.end}%7.3f]")
+        f"    job ${j.id}%4d ${j.end - j.start}%7.3f s  [${j.start}%7.3f -> ${j.end}%7.3f]  rows=${j.rows}")
       val stages = p.stages.map(s =>
         f"    stage ${s.id}%4d wall=${s.wallMs}%5d ms tasks=${s.tasks}%3d run=${s.runMs}%5d" +
           f" cpu=${s.cpuMs}%5d gc=${s.gcMs}%3d deser=${s.deserMs}%4d ser=${s.serMs}%3d" +
@@ -155,21 +156,23 @@ object Profile {
     */
   private final class Events extends SparkListener with QueryExecutionListener {
     private final class Tasks {
-      var n, runMs, cpuNs, gcMs, deserMs, serMs, inputBytes, readBytes, writeBytes = 0L
+      var n, runMs, cpuNs, gcMs, deserMs, serMs, inputBytes, inputRows, readBytes, writeBytes = 0L
     }
     private val jobStarts = new ConcurrentHashMap[Int, java.lang.Long]()
+    private val jobStages = new ConcurrentHashMap[Int, Seq[Int]]()
     private val jobEnds = new ConcurrentHashMap[Int, java.lang.Long]()
     private val completed = new ConcurrentHashMap[Int, (String, Long)]()
     private val tasks = new ConcurrentHashMap[Int, Tasks]()
     val executions = new ConcurrentLinkedDeque[QueryExecution]()
 
     def clear(): Unit = {
-      jobStarts.clear(); jobEnds.clear(); completed.clear(); tasks.clear(); executions.clear()
+      Seq(jobStarts, jobStages, jobEnds, completed, tasks).foreach(_.clear()); executions.clear()
     }
 
     def jobs(epochMs: Long): Seq[Job] = jobStarts.asScala.toSeq.sortBy(_._1).map { case (id, s) =>
       val e = Option(jobEnds.get(id)).getOrElse(s)
-      Job(id, (s.longValue - epochMs) / 1e3, (e.longValue - epochMs) / 1e3)
+      val rows = jobStages.getOrDefault(id, Nil).flatMap(st => Option(tasks.get(st))).map(_.inputRows).sum
+      Job(id, (s.longValue - epochMs) / 1e3, (e.longValue - epochMs) / 1e3, rows)
     }
 
     def stages(): Seq[Stage] = completed.asScala.toSeq.sortBy(_._1).map { case (id, (name, wallMs)) =>
@@ -178,7 +181,10 @@ object Profile {
         t.serMs, t.inputBytes, t.readBytes, t.writeBytes)
     }
 
-    override def onJobStart(e: SparkListenerJobStart): Unit = jobStarts.put(e.jobId, e.time)
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      jobStages.put(e.jobId, e.stageIds)
+      jobStarts.put(e.jobId, e.time)
+    }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = jobEnds.put(e.jobId, e.time)
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
@@ -197,6 +203,7 @@ object Profile {
         t.deserMs += m.executorDeserializeTime
         t.serMs += m.resultSerializationTime
         t.inputBytes += m.inputMetrics.bytesRead
+        t.inputRows += m.inputMetrics.recordsRead
         t.readBytes += m.shuffleReadMetrics.totalBytesRead
         t.writeBytes += m.shuffleWriteMetrics.bytesWritten
       }

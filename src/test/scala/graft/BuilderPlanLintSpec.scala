@@ -147,6 +147,11 @@ class BuilderPlanLintSpec extends SparkSpec {
       "applies the same cap as the mining tail, scaladoc'd at " +
       "ensurePairPostings), so the buffer is cap-bounded past the ceiling " +
       "and E[bucket]-sized below it"),
+    "lsh_index" -> ("index posting lists (Index.postingLists): " +
+      "collect_list(vec_id) per (tbl, hash, batch) — one bucket's ids, 8 " +
+      "bytes each, E[bucket]-sized by Lsh.deriveBits (the list is the " +
+      "artifact being persisted, as for pair_postings)"),
+    "lsh_build_append" -> "same posting-list build as lsh_index, over one batch",
     "line_removals" -> ("removal map: sort_array(collect_list(idx)) per " +
       "doc_id — bounded by one document's line count (tens of bytes per " +
       "affected doc; the map is the artifact being persisted)"))

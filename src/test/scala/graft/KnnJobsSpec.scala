@@ -146,6 +146,26 @@ class KnnJobsSpec extends SparkSpec {
     assertProbesWithoutExchange(storedPlans ++ vectorPlans)
   }
 
+  test("a probe after a delete and a re-ingest: no join, no broadcast, the same budget") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val dir = java.nio.file.Files.createTempDirectory("graft-idx-deleted").toString
+    Index.build(spark, emb, Lsh.fit(emb, tables = 8, bits = 3), dir)
+    // a tombstone set and a supersede marker: the live view, which the
+    // probe's tasks apply from driver-loaded sets
+    Index.delete(spark, dir, Seq(42L, 43L))
+    Index.append(spark, dir, emb.filter("vec_id = 44"))
+    val query = q
+    Knn.searchIndex(spark, dir, 8, 100, 10).collect()
+    val (rows, stored, storedPlans) = searchJobs(Knn.searchIndex(spark, dir, 8, 100, 10))
+    val (_, byVector, vectorPlans) = searchJobs(Knn.searchIndexByVector(spark, dir, query, 100, 10))
+    info(s"jobs: stored-id $stored, raw-vector $byVector")
+    assert(stored <= 1 + SearchJobs && byVector <= SearchJobs)
+    assert(!rows.exists(r => r.getLong(1) == 42L || r.getLong(1) == 43L))
+    val probes = (storedPlans ++ vectorPlans).filter(_.contains("postings"))
+    assert(probes.length == 2, (storedPlans ++ vectorPlans).mkString("\n\n"))
+    probes.foreach(p => assert(!p.contains("Join") && !p.contains("BroadcastExchange"), p))
+  }
+
   test("a capped search: the stored-id budget, no exchange") {
     // the cap is cut in the probe's tasks and again on the driver; as a
     // dense_rank window it cost an exchange and four jobs

@@ -170,8 +170,10 @@ class LshSpec extends SparkSpec {
     assert(vecs.count() == emb.count())
     assert(vecs.columns.contains("hashes"))
     val posts = Index.postings(spark, dir)
-    assert(posts.count() == emb.count() * 4) // one posting per (vector, table)
-    assert(posts.columns.contains(Index.PKeyCol))
+    assert(Index.postingRows(posts).count() == emb.count() * 4) // one posting per (vector, table)
+    assert(posts.columns.toSeq == Seq("tbl", "hash", Index.BatchCol, "ids", Index.PKeyCol))
+    // one list per (tbl, hash): at most 4 tables × 2^6 hashes
+    assert(posts.count() == posts.select("tbl", "hash").distinct().count() && posts.count() <= 4 * 64)
     val one = Index.lookup(vecs, 7L).collect()
     assert(one.length == 1)
   }
@@ -206,21 +208,21 @@ class LshSpec extends SparkSpec {
     assert(gotRows == wantRows, "incremental index must serve identical results")
     assert(Index.vectors(spark, incr).count() == emb.count())
 
-    // Compaction: strictly fewer posting files, byte-identical posting rows,
-    // identical search results.
+    // Compaction: strictly fewer posting files, an identical set of
+    // (tbl, hash, batch, vec_id) postings, identical search results.
     def files(dir: String) = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles.toSeq.flatMap(walk) else Seq(f)
       walk(new java.io.File(s"$dir/postings")).filter(_.getName.endsWith(".parquet"))
     }
     val before = files(incr).size
-    val rowsBefore = Index.postings(spark, incr)
-      .collect().map(_.toSeq).toSet
+    def postings() = Index.postingRows(Index.postings(spark, incr))
+      .select("tbl", "hash", Index.BatchCol, "vec_id").collect().map(_.toSeq).toSet
+    val rowsBefore = postings()
     Index.compact(spark, incr)
     assert(files(incr).size < before,
       s"compact should shrink file count (before=$before after=${files(incr).size})")
-    val rowsAfter = Index.postings(spark, incr).collect().map(_.toSeq).toSet
-    assert(rowsAfter == rowsBefore)
+    assert(postings() == rowsBefore)
     val gotCompacted = Knn.searchIndex(spark, incr, 8, 100, 10).collect().map(_.toSeq).toSeq
     assert(gotCompacted == wantRows)
   }
@@ -329,10 +331,10 @@ class LshSpec extends SparkSpec {
     val fresh = emb.filter(col("vec_id") >= 400).filter(col("vec_id") < 450)
     val fs = graft.operators.Lifecycle.fsOf(spark, dir)
     val b1 = graft.operators.Lifecycle.allocateBatch(fs, dir)
-    Index.withPKey(
+    Index.postingLists(Index.withPKey(
       Lsh.explodeHashes(Lsh.withHashes(spark, fresh, model))
         .select(col("vec_id"), lit(b1).as(Index.BatchCol), col("tbl"), col("hash")),
-      numBuckets = 16)
+      numBuckets = 16), col("tbl"), col("hash"), col(Index.BatchCol), col(Index.PKeyCol))
       .repartition(col(Index.PKeyCol))
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .partitionBy(Index.PKeyCol)
@@ -388,7 +390,7 @@ class LshSpec extends SparkSpec {
     val rawVecs = Index.vectors(spark, dir).collect()
     assert(!rawVecs.exists(_.getLong(0) == deleted), "tombstoned vector survived")
     assert(rawVecs.count(_.getLong(0) == upserted) == 1, "superseded version survived")
-    assert(!Index.postings(spark, dir).collect().exists(_.getLong(0) == deleted),
+    assert(!Index.postingRows(Index.postings(spark, dir)).collect().exists(_.getLong(0) == deleted),
       "tombstoned postings survived")
     // search identical to the pre-vacuum live view
     val after = Knn.searchIndex(spark, dir, 4, 100, 10).collect().map(_.toSeq).toSeq
@@ -417,7 +419,7 @@ class LshSpec extends SparkSpec {
     assert(!new java.io.File(s"$dir/tombstones").exists)
     val got = Knn.searchIndex(spark, dir, 4, 50, 5).collect().map(_.toSeq).toSeq
     assert(got == want, "recovered vacuum must preserve the live results")
-    assert(!Index.postings(spark, dir).collect().exists(_.getLong(0) == 42L))
+    assert(!Index.postingRows(Index.postings(spark, dir)).collect().exists(_.getLong(0) == 42L))
   }
 
   test("append recovers a tombstone swap that crashed between the renames") {
@@ -462,6 +464,48 @@ class LshSpec extends SparkSpec {
     assert(after.map(_.toSeq).toSeq == want)
   }
 
+  test("posting lists: ids from three appends, a delete and a re-ingest serve a fresh build's rows") {
+    val emb = Tables.embeddings(spark, sf0001)
+    val model = Lsh.fit(emb, tables = 8, bits = 3)
+    val dir = java.nio.file.Files.createTempDirectory("graft-idx-lists").toString
+    Index.build(spark, emb.filter(col("vec_id") < 300), model, dir, numBuckets = 16)
+    Seq((300, 400), (400, 450), (450, 500)).foreach { case (lo, hi) =>
+      Index.append(spark, dir, emb.filter(col("vec_id") >= lo && col("vec_id") < hi))
+    }
+    // a key whose lists hold ids of the build and of all three appends
+    val rows = Index.postingRows(Index.postings(spark, dir))
+    val key = rows.groupBy("tbl", "hash").agg(countDistinct(col(Index.BatchCol)).as("n"))
+      .filter(col("n") === 4).orderBy("tbl", "hash").first()
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("tbl") === key.getInt(0) && col("hash") === key.getLong(1))
+        .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
+    val batchOf = rows.filter(col("tbl") === key.getInt(0) && col("hash") === key.getLong(1))
+      .select("vec_id", Index.BatchCol).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // not a query doc (< 8), so the query set is unchanged
+    val deleted = batchOf.collect { case (id, 0L) if id >= 8 => id }.min
+    val reingested = batchOf.collect { case (id, 2L) => id }.min
+    Index.delete(spark, dir, Seq(deleted))
+    Index.append(spark, dir, emb.filter(col("vec_id") === reingested))
+    val fresh = java.nio.file.Files.createTempDirectory("graft-idx-lists-ref").toString
+    Index.build(spark, emb.filter(col("vec_id") =!= deleted), model, fresh, numBuckets = 16)
+    val want = ids(Index.postingRows(Index.postings(spark, fresh)))
+    assert(!want.contains(deleted) && want.contains(reingested))
+    // plain, capped (the cap binds on these 8 × 3-bit buckets) and multiprobe
+    def answers(d: String) = Seq(
+      Knn.searchIndex(spark, d, 8, 100, 10),
+      Knn.searchIndex(spark, d, 8, 100, 10, bucketCap = 16),
+      Knn.searchIndex(spark, d, 4, 100, 10, multiprobe = true)).map(_.collect().map(_.toSeq).toSeq)
+    val ref = answers(fresh)
+    assert(ids(Index.livePostings(spark, dir)) == want)
+    assert(answers(dir) == ref, "lists under markers")
+    Index.compact(spark, dir)
+    assert(ids(Index.livePostings(spark, dir)) == want)
+    assert(answers(dir) == ref, "compacted lists")
+    Index.vacuum(spark, dir)
+    assert(ids(Index.postingRows(Index.postings(spark, dir))) == want)
+    assert(answers(dir) == ref, "vacuumed lists")
+  }
+
   test("indexed search returns identical results to the inline path") {
     val inline = Knn.lshTopK(spark, sf0001, queryMaxId = 8, k1 = 100, k2 = 10)
       .collect().map(_.toSeq).toSeq
@@ -484,7 +528,7 @@ class LshSpec extends SparkSpec {
       n -> dir
     }.toMap
     val derived = Lsh.loadModel(spark, s"${dirs(0)}/model")._2
-    assert(derived == Index.deriveBuckets(spark, emb.count(), model.tables))
+    assert(derived == Index.deriveBuckets(spark, emb.count(), model.tables, model.bits))
     assert(derived == operators.Skew.shufflePartitions(spark),
       "a fixture-sized corpus keeps the engine's one width")
     assert(Lsh.loadModel(spark, s"${dirs(1)}/model")._2 == 1)

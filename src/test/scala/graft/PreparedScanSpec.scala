@@ -152,8 +152,9 @@ class PreparedScanSpec extends SparkSpec {
     val rest = Lsh.withHashes(spark, emb.filter(col("vec_id") >= 400), m)
       .select(col("vec_id"), col("embedding"), col("hashes"), lit(0L).as(Index.BatchCol))
     rest.write.mode(SaveMode.Append).parquet(s"$dir/vectors")
-    Index.withPKey(rest.select(col("vec_id"), col(Index.BatchCol),
-        posexplode(col("hashes")).as(Seq("tbl", "hash"))), numBuckets)
+    Index.postingLists(Index.withPKey(rest.select(col("vec_id"), col(Index.BatchCol),
+        posexplode(col("hashes")).as(Seq("tbl", "hash"))), numBuckets),
+        col("tbl"), col("hash"), col(Index.BatchCol), col(Index.PKeyCol))
       .write.mode(SaveMode.Append).partitionBy(Index.PKeyCol).parquet(s"$dir/postings")
     val before = prepares
     val got = answers(dir)

@@ -81,8 +81,9 @@ class StreamingSpec extends SparkSpec {
     try q.processAllAvailable()
     finally q.stop()
     def key(df: org.apache.spark.sql.DataFrame) =
-      df.select("vec_id", "tbl", "hash", graft.operators.Index.PKeyCol).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getInt(3))).toSet
+      graft.operators.Index.postingRows(df)
+        .select("tbl", "hash", graft.operators.Index.BatchCol, "vec_id", graft.operators.Index.PKeyCol)
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getInt(4))).toSet
     val streamed = key(spark.read.parquet(outDir))
     val batchDir = Files.createTempDirectory("graft-pbatch").toString
     graft.operators.Index.build(spark, emb, model, batchDir, numBuckets = 16)
