@@ -225,7 +225,7 @@ object Index {
   }
 
   /** Delete-by-id as tombstones — shared protocol, see [[Lifecycle.delete]];
-    * [[liveVectors]] / [[livePostings]] anti-join them out.
+    * [[liveVectors]] / [[livePostings]] filter them out.
     */
   def delete(spark: SparkSession, indexDir: String, ids: Seq[Long]): Unit =
     Lifecycle.delete(spark, indexDir, ids)

@@ -34,12 +34,15 @@ import org.apache.spark.sql.graft.{PlanBridge, PreparedScan, VectorExpressions}
   * re-run them, neither with an exchange (KnnJobsSpec): the probe runs on
   * the files under the probed pkey directories and collects the live
   * (key, vec_id) pairs of the probed keys' lists, one row per key and
-  * batch, live by the driver-loaded marker sets ([[Lifecycle.liveness]]),
-  * and the driver counts collisions per query and cuts top-k1; then
+  * batch, and the driver counts collisions per query and cuts top-k1; then
   * [[rerank]], the one exact re-rank tail the quantized
   * searches in [[Pq]] share, runs the fetch on the partitions whose vec_id
   * range holds a candidate, scores the candidates on the executors and
   * collects the at most |Q|·k1 rescored rows, and the driver cuts top-k2.
+  * Both read the live view through the one memoized load of the marker
+  * sets ([[Lifecycle.liveness]]): the probe's tasks call it on each listed id,
+  * the GET's and fetch's scan filters by it, so a delete or re-ingest adds
+  * no join.
   * The query side — a few hundred bytes of driver data: the probe keys,
   * the candidate ids, the query vectors — rides each job's task closure,
   * never a plan, so a search compiles no plan and renders no literal. The
@@ -279,7 +282,8 @@ object Knn {
 
   /** A layout's postings as a search probes them: the posting lists as
     * (key, batch, ids), the key packed as tbl·2^bits + hash; the layout's
-    * live view as a predicate, None without markers; and whether it can
+    * live view as a predicate ([[Lifecycle.liveness]], the memo every
+    * reader of the layout shares), None without markers; and whether it can
     * hold duplicate copies ([[everAppended]]). Prepared once per layout
     * epoch ([[graft.Readers.prepared]]).
     */

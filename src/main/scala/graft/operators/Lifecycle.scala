@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Index mutation machinery shared by every persisted layout — the LSH
@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
   * cell-partitioned IVF-PQ code table: parquet is immutable, so all four
   * express the ES document lifecycle the same way —
   *
-  *   - DELETE: ids append to `<dir>/tombstones/`; readers anti-join them out
-  *     (the LSH probe filters by the driver-loaded set, [[liveness]]).
+  *   - DELETE: ids append to `<dir>/tombstones/`; readers drop them.
   *   - UPSERT: every stored row carries [[BatchCol]], the append generation
   *     that wrote it (0 = initial build). Re-ingesting an id records
   *     (id, batch) in `<dir>/superseded/`; readers keep only rows at or
@@ -20,10 +19,14 @@ import org.apache.spark.sql.functions._
   *   - Re-adding a deleted id resurfaces it: append clears arriving ids from
   *     the tombstone set through the one swap protocol ([[promoteSwap]]).
   *
+  * Every reader applies both marker sets through one live view, as ES
+  * consults one live-docs set per segment: a [[Liveness]] the driver loads
+  * once per layout epoch ([[liveness]]), which the LSH probe calls in its
+  * tasks and every other reader applies as a filter ([[liveKeepBatch]]).
   * Compaction-class rewrites are where dead versions and tombstoned rows get
-  * physically dropped; until then the live views pay one broadcast-small
-  * anti-join / join per read, and nothing at all while the marker dirs are
-  * absent (build-once indexes keep their plain-scan plans).
+  * physically dropped and the sets retired ([[vacuum]]); while the marker
+  * dirs are absent a read is the plain scan (build-once indexes keep their
+  * plain-scan plans).
   */
 object Lifecycle {
 
@@ -117,9 +120,8 @@ object Lifecycle {
 
   /** Delete-by-id as TOMBSTONES (the ES delete-doc analog): O(|batch|) per
     * delete — no index rewrite. The tombstone set stays id-only (8 bytes a
-    * row) and is broadcast into the anti-join while small — the usual
-    * deleted-fraction regime; Catalyst falls back to a shuffled anti-join if
-    * it ever isn't.
+    * row); readers hold it on the driver ([[liveness]]), so it is bounded by
+    * driver memory until [[vacuum]] retires it.
     */
   def delete(spark: SparkSession, indexDir: String, ids: Seq[Long]): Unit = {
     import spark.implicits._
@@ -261,28 +263,9 @@ object Lifecycle {
     }
   }
 
-  /** The layout's marker sets, each absent until its first write: the
-    * tombstoned ids, and each re-ingested id's live-from batch (its latest
+  /** The live view as a predicate over (vec_id, batch): the sorted
+    * tombstone set, and each re-ingested id's live-from batch (its latest
     * supersede point: rows of an earlier batch are replaced versions).
-    * Hadoop FS, not java.io.File: indexDir may be hdfs://..., where a
-    * File.exists check is always false and deletes would stop applying. A
-    * tombstone rewrite that crashed between its renames left the set staged
-    * aside: read it there, never an absent set as empty, until the next
-    * append or vacuum settles it; a reader never renames (its roll-forward
-    * racing an append's promote would nest the new set inside the old one).
-    */
-  private def markers(spark: SparkSession, indexDir: String): (Option[DataFrame], Option[DataFrame]) = {
-    val fs = fsOf(spark, indexDir)
-    val (path, old, _) = tombstoneSwap(indexDir)
-    val superseded = new Path(s"$indexDir/superseded")
-    (Seq(path, old).find(fs.exists).map(p => graft.Readers.parquet(spark, p.toString)),
-      Option.when(fs.exists(superseded))(graft.Readers.parquet(spark, superseded.toString)
-        .groupBy(col("vec_id")).agg(max(col(BatchCol)).as("live_from"))))
-  }
-
-  /** The live view as a predicate over (vec_id, batch), for a reader that
-    * filters in its own tasks (the LSH probe): the sorted tombstone set and
-    * live-from batches, loaded by one small collect each.
     */
   final class Liveness(dead: Array[Long], superseded: Array[Long], from: Array[Long]) extends Serializable {
     def apply(vec: Long, batch: Long): Boolean =
@@ -292,30 +275,49 @@ object Lifecycle {
       }
   }
 
-  /** The layout's [[Liveness]]; None while it has no marker. */
-  private[operators] def liveness(spark: SparkSession, indexDir: String): Option[Liveness] = {
-    val (dead, sup) = markers(spark, indexDir)
-    Option.when(dead.nonEmpty || sup.nonEmpty) {
-      val from = sup.fold(Array.empty[Row])(_.collect()).map(r => r.getLong(0) -> r.getLong(1)).sorted
-      new Liveness(dead.fold(Array.empty[Row])(_.collect()).map(_.getLong(0)).sorted,
-        from.map(_._1), from.map(_._2))
+  /** The layout's [[Liveness]], None while it has no marker set (each is
+    * absent until its first write): one small collect per set, memoized per
+    * layout epoch by [[graft.Readers.prepared]] over `indexDir`, whose
+    * listing covers `tombstones/` and `superseded/`, so a marker written
+    * without a bump still reloads it. Hadoop FS, not java.io.File: indexDir
+    * may be hdfs://..., where a File.exists check is always false and
+    * deletes would stop applying. A tombstone rewrite that crashed between
+    * its renames left the set staged aside: read it there, never an absent
+    * set as empty, until the next append or vacuum settles it; a reader
+    * never renames (its roll-forward racing an append's promote would nest
+    * the new set inside the old one).
+    */
+  private[operators] def liveness(spark: SparkSession, indexDir: String): Option[Liveness] =
+    graft.Readers.prepared(spark, Seq(indexDir), "liveness") {
+      val fs = fsOf(spark, indexDir)
+      val (path, old, _) = tombstoneSwap(indexDir)
+      val superseded = new Path(s"$indexDir/superseded")
+      val dead = Seq(path, old).find(fs.exists).map(p =>
+        graft.Readers.parquet(spark, p.toString).collect().map(_.getLong(0)).sorted)
+      val from = Option.when(fs.exists(superseded))(
+        graft.Readers.parquet(spark, superseded.toString).select(col("vec_id"), col(BatchCol)).collect()
+          .groupMapReduce(_.getLong(0))(_.getLong(1))(math.max).toArray.sorted)
+      Option.when(dead.nonEmpty || from.nonEmpty) {
+        val f = from.getOrElse(Array.empty[(Long, Long)])
+        new Liveness(dead.getOrElse(Array.empty[Long]), f.map(_._1), f.map(_._2))
+      }
     }
-  }
 
   /** The live row set WITH its batch column — what [[vacuum]] persists and
-    * what [[Index.integrityReport]] attributes orphans by: tombstoned ids
-    * out by a broadcast anti-join, superseded versions by a broadcast join
-    * on the live-from batches; the plan is untouched without markers.
+    * what [[Index.integrityReport]] attributes orphans by: `df` filtered by
+    * the layout's [[Liveness]] on (vec_id, batch), the input plan untouched
+    * without markers. Null-safe: a null id is in no marker set, and a null
+    * batch precedes every supersede point.
     */
-  private[operators] def liveKeepBatch(spark: SparkSession, indexDir: String, df: DataFrame): DataFrame = {
-    val (dead, sup) = markers(spark, indexDir)
-    val alive = dead.fold(df)(t => df.join(broadcast(t), Seq("vec_id"), "left_anti"))
-    sup.fold(alive)(s => alive.join(broadcast(s), Seq("vec_id"), "left")
-      .filter(col("live_from").isNull || col(BatchCol) >= col("live_from")).drop("live_from"))
-  }
+  private[operators] def liveKeepBatch(spark: SparkSession, indexDir: String, df: DataFrame): DataFrame =
+    liveness(spark, indexDir).fold(df) { live =>
+      val keep = udf((vec: java.lang.Long, batch: java.lang.Long) =>
+        vec == null || live(vec, if (batch == null) Long.MinValue else batch.longValue))
+      df.filter(keep(col("vec_id"), col(BatchCol)))
+    }
 
   /** The live view of any stored row set: tombstoned ids out, superseded
-    * versions out, bookkeeping column dropped. Both filters are no-ops (the
+    * versions out, bookkeeping column dropped. The filter is a no-op (the
     * input plan is returned untouched) until the first delete / re-ingest.
     */
   def live(spark: SparkSession, indexDir: String, df: DataFrame): DataFrame =
@@ -326,7 +328,7 @@ object Lifecycle {
     * versions dropped), then retire the marker dirs — returning reads to
     * the plain-scan plans a build-once index has. This is the op that stops
     * tombstone/supersede debt growing forever under daily re-ingest; without
-    * it every read pays the anti-join/join against an ever-larger marker
+    * it every read filters by, and the driver holds, an ever-larger marker
     * set.
     *
     * `parts` lists each data subdir with its partition columns (e.g.

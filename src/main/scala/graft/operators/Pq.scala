@@ -499,8 +499,9 @@ object Pq {
   def vacuum(spark: SparkSession, indexDir: String): Unit =
     Lifecycle.vacuum(spark, indexDir, Seq("codes" -> Nil))
 
-  /** The live code table (tombstones and superseded versions filtered out;
-    * plain scan until the first delete / re-ingest).
+  /** The live code table (tombstones and superseded versions filtered out
+    * by the layout's driver-loaded [[Lifecycle.Liveness]]; plain scan until
+    * the first delete / re-ingest).
     */
   def liveCodes(spark: SparkSession, indexDir: String): DataFrame =
     Lifecycle.live(spark, indexDir, graft.Readers.parquet(spark, s"$indexDir/codes"))

@@ -323,7 +323,7 @@ object Vectors {
   /** The live cell table (tombstones and superseded versions filtered out;
     * plain scan until the first delete / re-ingest). The partition column
     * comes back inference-typed — cast to long so cell ids (seed vec_ids)
-    * survive; callers' cell-prune filters push through the lifecycle joins
+    * survive; callers' cell-prune filters push past the live-view filter
     * down to the scan.
     */
   def liveCells(spark: SparkSession, indexDir: String): DataFrame =

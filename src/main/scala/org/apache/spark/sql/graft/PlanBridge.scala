@@ -44,9 +44,9 @@ object PlanBridge {
 
   /** `df` (a file scan under narrow operators only) planned and executed
     * once: its RDD is built inside a SQL execution of its own
-    * `QueryExecution`, so a broadcast the plan holds (the tombstone
-    * anti-join of a live view) is built here, once. The execution has no
-    * name, so query-execution listeners are not told of it.
+    * `QueryExecution`, so a broadcast the plan holds is built here, once.
+    * The execution has no name, so query-execution listeners are not told
+    * of it.
     */
   def prepare(df: DataFrame): PreparedScan = {
     val qe = df.queryExecution

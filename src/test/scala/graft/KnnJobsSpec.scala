@@ -151,7 +151,8 @@ class KnnJobsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-idx-deleted").toString
     Index.build(spark, emb, Lsh.fit(emb, tables = 8, bits = 3), dir)
     // a tombstone set and a supersede marker: the live view, which the
-    // probe's tasks apply from driver-loaded sets
+    // probe's tasks and the GET's and fetch's scans apply from one
+    // driver-loaded Liveness
     Index.delete(spark, dir, Seq(42L, 43L))
     Index.append(spark, dir, emb.filter("vec_id = 44"))
     val query = q
@@ -161,9 +162,17 @@ class KnnJobsSpec extends SparkSpec {
     info(s"jobs: stored-id $stored, raw-vector $byVector")
     assert(stored <= 1 + SearchJobs && byVector <= SearchJobs)
     assert(!rows.exists(r => r.getLong(1) == 42L || r.getLong(1) == 43L))
-    val probes = (storedPlans ++ vectorPlans).filter(_.contains("postings"))
-    assert(probes.length == 2, (storedPlans ++ vectorPlans).mkString("\n\n"))
-    probes.foreach(p => assert(!p.contains("Join") && !p.contains("BroadcastExchange"), p))
+    val plans = storedPlans ++ vectorPlans
+    assert(plans.count(_.contains("postings")) == 2, plans.mkString("\n\n"))
+    assertWithoutJoin(plans, "postings", "vectors")
+  }
+
+  /** A search's plans after a delete: one reads each of `reads`, and none
+    * has a join or a broadcast.
+    */
+  private def assertWithoutJoin(plans: Seq[String], reads: String*): Unit = {
+    assertNoExchange(plans, reads: _*)
+    plans.foreach(p => assert(!p.contains("Join") && !p.contains("BroadcastExchange"), p))
   }
 
   test("a capped search: the stored-id budget, no exchange") {
@@ -219,6 +228,34 @@ class KnnJobsSpec extends SparkSpec {
     }
   }
 
+  test("PQ, SQ8, BQ and IVF-PQ after a delete and a re-ingest: no join, the same budget") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    def marked(build: String => Unit, append: String => Unit): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-codes-deleted").toString
+      build(dir)
+      Pq.delete(spark, dir, Seq(42L, 43L))
+      append(dir)
+      dir
+    }
+    def flat[M <: AnyRef](codec: Pq.Codec[M]): String =
+      marked(Pq.build(spark, codec, emb, codec.fit(emb), _), Pq.append(spark, codec, _, emb.filter("vec_id = 44")))
+    val ivfPq = marked(Pq.buildIvfPqIndexWith(spark, emb, Vectors.quantizer(spark, emb, cells = 16), Pq.PQ().fit(emb), _),
+      Pq.appendIvfPqIndex(spark, _, emb.filter("vec_id = 44")))
+    Seq[(String, () => DataFrame)](
+      "PQ" -> { val d = flat(Pq.PQ()); () => Pq.searchIndex(spark, Pq.PQ(), d, sf0001) },
+      "SQ8" -> { val d = flat(Pq.SQ8); () => Pq.searchIndex(spark, Pq.SQ8, d, sf0001) },
+      "BQ" -> { val d = flat(Pq.BQ); () => Pq.searchIndex(spark, Pq.BQ, d, sf0001) },
+      "IVF-PQ" -> (() => Pq.searchIvfPqIndex(spark, ivfPq, sf0001))).foreach { case (family, search) =>
+      search().collect()
+      val (rows, jobs, plans) = searchJobs(search())
+      assert(rows.map(_.getLong(0)).distinct.length == 8)
+      assert(!rows.exists(r => r.getLong(1) == 42L || r.getLong(1) == 43L), s"$family served a deleted id")
+      info(s"$family jobs: $jobs")
+      assert(jobs <= QuantizedJobs, s"$family search ran $jobs jobs")
+      assertWithoutJoin(plans, "/codes", "embeddings")
+    }
+  }
+
   /** Jobs per call of an inline quantized search's second call: the fit is
     * memoized per (codec, corpus), so the call runs the indexed search's
     * three jobs, the code scan re-running the fixture's embeddings scan
@@ -245,12 +282,11 @@ class KnnJobsSpec extends SparkSpec {
     * top-k per query, the driver merging them), so its action runs none.
     * With literal probes and a window its action alone ran four (the
     * window's exchange, the final sort's sample job, range exchange and
-    * result), and six with broadcast query relations. The test keeps the
-    * name it had then; it now checks the GET and one cell scan, no exchange.
+    * result), and six with broadcast query relations.
     */
   val IvfJobs = 2
 
-  test("indexed IVF search: the literal query side keeps the action within budget") {
+  test("indexed IVF search: a GET and one cell scan, no exchange") {
     Vectors.annIvfIndexed(spark, sf0001).collect()
     val (rows, jobs, plans) = searchJobs(Vectors.annIvfIndexed(spark, sf0001))
     assert(rows.map(_.getLong(0)).distinct.length == 8)

@@ -13,8 +13,8 @@ import graft.operators.{Index, Knn, Lsh, Pq}
   * after every op the live view must equal the model, and the final index
   * must serve searches IDENTICAL to a from-scratch build of the model's
   * end state under the same LSH model — which also pins the
-  * appended-layout search path (duplicate-collapse exchanges on) against
-  * the fresh-layout path (collapse skipped) on the same data.
+  * appended-layout search path (duplicate copies collapsed on the driver)
+  * against the fresh-layout path (no collapse) on the same data.
   */
 class LifecycleFuzzSpec extends SparkSpec {
 

@@ -446,6 +446,9 @@ class LshSpec extends SparkSpec {
     val midCrash = Knn.searchIndex(spark, dir, 4, 100, 10).collect()
     assert(!midCrash.exists(r => r.getLong(1) == v1 || r.getLong(1) == v2),
       "a deleted id served mid-crash")
+    // the DataFrame view reads the same staged set through the same loader
+    assert(Index.liveVectors(spark, dir).filter(col("vec_id").isin(v1, v2)).isEmpty,
+      "a deleted id in the live view mid-crash")
     assert(new java.io.File(s"$dir/tombstones_old").exists())
     // Replaying the append rolls the old set forward, clears the staging,
     // then completes normally.
