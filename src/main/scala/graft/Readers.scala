@@ -3,7 +3,10 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.{HoldsScans, PreparedScan}
 import org.apache.spark.sql.types.StructType
 
 /** Memoized parquet SCHEMA resolution — the engine's (tiny) catalog cache.
@@ -47,13 +50,14 @@ object Readers {
     String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
   private val artifactMemo = new ConcurrentHashMap[String, AnyRef]()
   private val probeMemo = new ConcurrentHashMap[String, java.lang.Boolean]()
-  private val scanMemo = new ConcurrentHashMap[String, AnyRef]()
+  private val scanMemo = new ConcurrentHashMap[String, Prepared]()
   private val scanPrepares = new AtomicLong(0L)
   private val scanReuses = new AtomicLong(0L)
 
   /** Invalidate every memoized schema, artifact doc, prepared scan and
     * sink-probe result (called by lifecycle mutations AND by the engine's
-    * streaming sink starters — a dir growing a sink log must re-probe).
+    * streaming sink starters — a dir growing a sink log must re-probe), and
+    * release the resident blocks of every prepared scan it drops.
     */
   def bump(): Unit = {
     epoch.incrementAndGet()
@@ -61,7 +65,7 @@ object Readers {
     relMemo.clear()
     artifactMemo.clear()
     probeMemo.clear()
-    scanMemo.clear()
+    scanMemo.keySet.forEach(k => Option(scanMemo.remove(k)).foreach(release))
     Plans.clear() // prepared plans hold resolved relations of the old epoch
   }
 
@@ -94,31 +98,76 @@ object Readers {
     Memo.once(artifactMemo, s"${sessionKey(spark)}:${epoch.get()}:$path")(load)
       .asInstanceOf[T]
 
-  /** A PREPARED SCAN over layout `dirs` (an
+  /** A memoized holder and the listing signature of the dirs it was
+    * prepared over.
+    */
+  private final class Prepared(val sig: String, val held: AnyRef)
+
+  private def scansOf(held: AnyRef): Seq[PreparedScan] = held match {
+    case h: HoldsScans => h.scans
+    case _ => Nil
+  }
+
+  private def release(p: Prepared): Unit = scansOf(p.held).foreach(_.release())
+
+  /** What a search reads of layout `dirs`, prepared once per (session,
+    * epoch, `what`) and listing signature of each dir: PREPARED SCANS
+    * (a [[HoldsScans]], such as an
     * [[org.apache.spark.sql.graft.PreparedScan]] with what its searches
-    * need beside it), prepared once per (session, epoch, `what`, listing
-    * signature of each dir) — the [[parquet]] key discipline, so a bump
-    * and a file landing in a dir without one both re-prepare. A sink-live
-    * dir is prepared on every call and never memoized, the [[parquet]]
-    * rule. `prepare` runs outside any map lock ([[Memo.once]]).
+    * need beside it) or a small driver-loaded value of the layout.
+    *
+    * This memo is the one owner of the prepared scans' resident blocks: it
+    * persists a holder's scans when it memoizes them, and releases them
+    * when it drops the holder — at a [[bump]], or when a listing change
+    * seen without one (a file landing in a dir) replaces the stale holder.
+    * Blocks live for one layout epoch. A sink-live dir is prepared on every
+    * call and never memoized (the [[parquet]] rule), so its scans run
+    * unpersisted. `prepare` runs outside any map lock ([[Memo.once]]);
+    * under a miss race the first holder to land is kept and the other's
+    * scans are released before any run has filled them.
     */
   def prepared[T <: AnyRef](spark: SparkSession, dirs: Seq[String], what: String)(
       prepare: => T): T = {
-    def fresh(): T = { scanPrepares.incrementAndGet(); prepare }
+    def fresh(): T = {
+      val held = prepare
+      if (scansOf(held).nonEmpty) scanPrepares.incrementAndGet()
+      held
+    }
     if (dirs.exists(sinkLiveMemo(spark, _))) fresh()
     else {
-      val key = keyOf(spark, dirs.mkString(","), s"$what:${dirs.map(childSigOf(spark, _)).mkString(",")}")
+      val key = keyOf(spark, dirs.mkString(","), what)
+      val sig = dirs.map(childSigOf(spark, _)).mkString(",")
       val hit = scanMemo.get(key)
-      if (hit != null) { scanReuses.incrementAndGet(); hit.asInstanceOf[T] }
-      else Memo.once(scanMemo, key)(fresh()).asInstanceOf[T]
+      if (hit != null && hit.sig == sig) {
+        if (scansOf(hit.held).nonEmpty) scanReuses.incrementAndGet()
+        hit.held.asInstanceOf[T]
+      } else {
+        val mine = new Prepared(sig, fresh())
+        // persisted before it lands, so a bump that drops it releases it
+        scansOf(mine.held).foreach(_.persist())
+        val landed =
+          if (hit == null) scanMemo.putIfAbsent(key, mine) == null else scanMemo.replace(key, hit, mine)
+        if (landed) { if (hit != null) release(hit); mine.held.asInstanceOf[T] }
+        else {
+          release(mine)
+          val won = scanMemo.get(key)
+          (if (won != null && won.sig == sig) won.held else mine.held).asInstanceOf[T]
+        }
+      }
     }
   }
 
-  /** Prepared-scan counters since JVM start, (reused, prepared) — shaped
-    * like [[Plans.stats]]' (hits, misses); tools/Profile prints them per
-    * call.
+  /** Prepared-scan counters since JVM start, (reused, prepared), counting
+    * holders of scans only — shaped like [[Plans.stats]]' (hits, misses);
+    * tools/Profile prints them per call.
     */
   def scanStats: (Long, Long) = (scanReuses.get(), scanPrepares.get())
+
+  /** The ids of the RDDs whose partitions are the memoized scans' resident
+    * blocks.
+    */
+  def residentRdds: Set[Int] =
+    scanMemo.values.asScala.flatMap(p => scansOf(p.held)).map(_.residentId).toSet
 
   /** Stable per-session key: the session UUID (via the
     * [[org.apache.spark.sql.graft.SessionIds]] bridge — it's `private[sql]`)

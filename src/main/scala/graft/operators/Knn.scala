@@ -11,8 +11,7 @@ import graft.Tables
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.graft.{PlanBridge, PreparedScan, VectorExpressions}
+import org.apache.spark.sql.graft.{HoldsScans, PlanBridge, PreparedScan, VectorExpressions}
 
 /** Two-phase approximate kNN — the reference's flagship search
   * (SURVEY.md §2.A A5–A7, `[PUBREPO AknnRestAction.handleSearchRequest,
@@ -30,15 +29,19 @@ import org.apache.spark.sql.graft.{PlanBridge, PreparedScan, VectorExpressions}
   * ([[org.apache.spark.sql.graft.PreparedScan]]): the posting lists as
   * (key, batch, ids) ([[Probe]]) and the live vectors as (vec_id,
   * embedding) ([[Fetch]]), each analyzed, optimized and planned once per
-  * layout epoch ([[graft.Readers.prepared]]). A search is two jobs that
-  * re-run them, neither with an exchange (KnnJobsSpec): the probe runs on
-  * the files under the probed pkey directories and collects the live
+  * layout epoch ([[graft.Readers.prepared]]), its decoded rows kept in
+  * executor memory as RESIDENT BLOCKS for that epoch: one block per probed
+  * pkey directory, one per vectors scan partition. A search is two jobs
+  * that re-run them, neither with an exchange (KnnJobsSpec): the probe
+  * reads the blocks of the probed pkey directories and collects the live
   * (key, vec_id) pairs of the probed keys' lists, one row per key and
   * batch, and the driver counts collisions per query and cuts top-k1; then
   * [[rerank]], the one exact re-rank tail the quantized
-  * searches in [[Pq]] share, runs the fetch on the partitions whose vec_id
+  * searches in [[Pq]] share, runs the fetch on the blocks whose vec_id
   * range holds a candidate, scores the candidates on the executors and
   * collects the at most |Q|·k1 rescored rows, and the driver cuts top-k2.
+  * Only the first search of an epoch decodes the parquet of the blocks it
+  * reads; later ones read the decoded rows.
   * Both read the live view through the one memoized load of the marker
   * sets ([[Lifecycle.liveness]]): the probe's tasks call it on each listed id,
   * the GET's and fetch's scan filters by it, so a delete or re-ingest adds
@@ -58,6 +61,10 @@ import org.apache.spark.sql.graft.{PlanBridge, PreparedScan, VectorExpressions}
   * Scale notes (100 TB): the probe reads only the probed pkey
   * directories and is executor-parallel; no cross product anywhere, and no
   * embedding is ever shuffled or collected (the fetch returns distances).
+  * A resident block is at most one scan split ([[Index.deriveBuckets]]
+  * sizes each pkey directory to one), held `MEMORY_ONLY`: a block the
+  * executors cannot keep is evicted and recomputed from its files on its
+  * next read, so memory bounds the speed of a search, never its answer.
   * The driver holds at most the probed lists' (key, vec_id) pairs —
   * E[bucket] is held near the target by [[Lsh.deriveBits]], and
   * [[Lsh.autoBucketCap]] caps it past the width ceiling — plus at most
@@ -264,20 +271,16 @@ object Knn {
   }
 
   /** A prepared scan of a layout partitioned into `column=value`
-    * directories: the postings by pkey, the IVF layouts by cell.
+    * directories: the postings by pkey, the IVF layouts by cell. Each of
+    * its blocks holds one directory's files.
     */
-  private[operators] final class DirScan(val scan: PreparedScan) {
-    private val dirs = scan.partitions.map(_.files.map(_.toPath.getParent.getName))
+  private[operators] final class DirScan(val scan: PreparedScan) extends HoldsScans {
+    private val dirs = scan.blocks.map(_.files.head.toPath.getParent.getName)
 
-    /** The scan's partitions cut to their files under a `probed`
-      * directory (a lossless prune, at the job); a partition left with no
-      * file is not run.
-      */
-    def parts(probed: Set[String]): Seq[FilePartition] =
-      scan.partitions.zip(dirs).flatMap { case (p, names) =>
-        val files = p.files.zip(names).collect { case (f, n) if probed(n) => f }
-        if (files.isEmpty) None else Some(FilePartition(p.index, files))
-      }
+    def scans: Seq[PreparedScan] = scan.scans
+
+    /** The blocks under a `probed` directory (a lossless prune, at the job). */
+    def parts(probed: Set[String]): Seq[Int] = dirs.indices.filter(i => probed(dirs(i)))
   }
 
   /** A layout's postings as a search probes them: the posting lists as
@@ -289,6 +292,9 @@ object Knn {
     */
   private final class Probe(
       val lists: DirScan, val live: Option[Lifecycle.Liveness], val appended: Boolean)
+      extends HoldsScans {
+    def scans: Seq[PreparedScan] = lists.scans
+  }
 
   private def probeOf(spark: SparkSession, indexDir: String, bits: Int): Probe =
     graft.Readers.prepared(spark, Seq(indexDir, s"$indexDir/postings"), s"probe:$bits") {
@@ -299,26 +305,30 @@ object Knn {
     }
 
   /** A vector table as the fetch and the stored-id GET read it: (vec_id,
-    * embedding), with each partition's vec_id [min, max] from the parquet
-    * footers of the row groups it reads. Prepared once per layout epoch.
-    * The range is what selects a fetch's partitions: a pushed `In` of more
-    * than `spark.sql.parquet.pushdown.inFilterThreshold` ids reaches
-    * parquet only as one min..max range, which k1 ids spread over the
-    * corpus never let prune.
+    * embedding), with each block's vec_id [min, max] from the parquet
+    * footers of the row groups it reads; a block is one scan partition.
+    * Prepared once per layout epoch. The range is what selects a fetch's
+    * blocks: a pushed `In` of more than
+    * `spark.sql.parquet.pushdown.inFilterThreshold` ids reaches parquet
+    * only as one min..max range, which k1 ids spread over the corpus never
+    * let prune.
     */
-  private[operators] final class Fetch(val scan: PreparedScan, ranges: IndexedSeq[(Long, Long)]) {
+  private[operators] final class Fetch(val scan: PreparedScan, ranges: IndexedSeq[(Long, Long)])
+      extends HoldsScans {
 
-    /** The partitions whose range holds one of the sorted `ids`. */
-    def parts(ids: Array[Long]): Seq[FilePartition] =
-      scan.partitions.zip(ranges).collect { case (p, (lo, hi)) if {
-        val at = java.util.Arrays.binarySearch(ids, lo)
+    def scans: Seq[PreparedScan] = scan.scans
+
+    /** The blocks whose range holds one of the sorted `ids`. */
+    def parts(ids: Array[Long]): Seq[Int] =
+      ranges.indices.filter { b =>
+        val at = java.util.Arrays.binarySearch(ids, ranges(b)._1)
         val first = if (at >= 0) at else -at - 1
-        first < ids.length && ids(first) <= hi
-      } => p }
+        first < ids.length && ids(first) <= ranges(b)._2
+      }
 
     /** The GET: (vec_id, vector) of every row with vec_id < `below`. */
     def get(below: Long): Seq[(Long, Array[Float])] = {
-      val holding = scan.partitions.zip(ranges).collect { case (p, (lo, hi)) if lo <= hi && lo < below => p }
+      val holding = ranges.indices.filter { b => val (lo, hi) = ranges(b); lo <= hi && lo < below }
       scan.run("Knn.get", holding) { rows =>
         val out = mutable.ArrayBuffer.empty[(Long, Array[Float])]
         rows.foreach { r =>
@@ -478,7 +488,7 @@ object Knn {
 
   /** The scan phase of the quantized ([[Pq]]) and indexed IVF searches,
     * shaped like the reference's shards (SURVEY §3.3): one job re-runs
-    * `scan` on `parts` under the job description `description`; `score`
+    * `scan` on the blocks `parts` under the job description `description`; `score`
     * calls `emit(q, dist)` for each query index it scores a row against,
     * and each task keeps each query's `k` nearest by (dist, vec_id),
     * self-matches (column 0 is the vec_id) dropped. The driver merges them:
@@ -487,7 +497,7 @@ object Knn {
   private[operators] def nearest(
       scan: PreparedScan,
       description: String,
-      parts: Seq[FilePartition],
+      parts: Seq[Int],
       qids: Array[Long],
       k: Int)(
       score: (InternalRow, (Int, Double) => Unit) => Unit): Map[Long, Seq[(Double, Long)]] = {

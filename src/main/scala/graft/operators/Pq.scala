@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -541,7 +540,7 @@ object Pq {
   }
 
   /** Phase 1 of every quantized search: one job, under the job description
-    * `description`, re-runs `scan` on `parts`; each task scores each row's
+    * `description`, re-runs `scan` on the blocks `parts`; each task scores each row's
     * code (`code`) with the codec's scorer against the queries `probing`
     * picks for the row (None: every query; for IVF-PQ those probing its
     * cell) and keeps its top-k1 per query ([[Knn.nearest]]).
@@ -551,7 +550,7 @@ object Pq {
       model: M,
       scan: PreparedScan,
       description: String,
-      parts: Seq[FilePartition],
+      parts: Seq[Int],
       queries: Seq[(Long, Array[Float])],
       k1: Int,
       probing: Option[InternalRow => Array[Int]])(
@@ -595,7 +594,7 @@ object Pq {
     val model = graft.Memo.once(fitMemo, s"${codec.tag}:$sfDir:$srcSig")(
       codec.fit(Tables.embeddings(spark, sfDir))).asInstanceOf[M]
     search(spark, sfDir, queryMaxId, k2) { (fetch, queries) =>
-      candidates(codec, model, fetch.scan, "Pq.ann", fetch.scan.partitions, queries, k1, None)(
+      candidates(codec, model, fetch.scan, "Pq.ann", fetch.scan.blocks.indices, queries, k1, None)(
         row => codec.encoded(model, row.getArray(1)))
     }
   }
@@ -643,7 +642,7 @@ object Pq {
       PlanBridge.prepare(liveCodes(spark, indexDir).select(col("vec_id"), col(codec.codeCol)))
     }
     candidates(codec, codec.loadModel(spark, s"$indexDir/model"), scan, "Pq.annIndexed",
-      scan.partitions, queries, k1, None)(codec.stored(_, 1))
+      scan.blocks.indices, queries, k1, None)(codec.stored(_, 1))
   }
 
   // ---------------------------------------------------------------- IVF-PQ

@@ -8,7 +8,6 @@ import graft.Tables
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.graft.{PlanBridge, PreparedScan, VectorExpressions}
 import graft.functions.CentroidAgg
 
@@ -359,8 +358,8 @@ object Vectors {
   }
 
   /** The scan of an IVF search: the live cell-partitioned `part` as
-    * (vec_id, `column`, cell), prepared once per layout epoch; its
-    * partitions cut to the files under the cells the `queries` probe (each
+    * (vec_id, `column`, cell), prepared once per layout epoch; its blocks
+    * (one per cell directory) under the cells the `queries` probe (each
     * one's `nprobe` nearest by the stored quantizer, driver-side); and each
     * row's probing query indices.
     */
@@ -370,7 +369,7 @@ object Vectors {
       part: String,
       column: String,
       queries: Seq[Array[Float]],
-      nprobe: Int)(live: => DataFrame): (PreparedScan, Seq[FilePartition], InternalRow => Array[Int]) = {
+      nprobe: Int)(live: => DataFrame): (PreparedScan, Seq[Int], InternalRow => Array[Int]) = {
     val cents = loadCentroids(spark, s"$indexDir/centroids")
     val byCell = queries.indices.flatMap(q => cents.nearestArray(queries(q), nprobe).map(_ -> q))
       .groupMap(_._1)(_._2).map { case (cell, qs) => cell -> qs.toArray }

@@ -30,7 +30,8 @@ import graft.operators.Materialize
   * materializes every output column. Per call it prints the
   * construction wall apart from the action's, the action's optimization and
   * planning time from its `QueryExecution.tracker`, the prepared scans it
-  * reused and prepared ([[graft.Readers.prepared]]), every job with its
+  * reused and prepared ([[graft.Readers.prepared]]) and the resident blocks
+  * held after it, every job with its
   * `[start -> end]` offsets from the call's start and its tasks' summed
   * `inputMetrics.recordsRead` (a kNN probe's rows read), and one line of task
   * metrics per stage; after the reps, the Catalyst rule-time ranking over
@@ -54,11 +55,13 @@ object Profile {
       shuffleReadBytes: Long, shuffleWriteBytes: Long)
 
   /** `scans` counts the call's prepared-scan reuses and preparations
-    * ([[graft.Readers.scanStats]]).
+    * ([[graft.Readers.scanStats]]); `resident` the prepared scans' resident
+    * blocks held after the call and their bytes in memory
+    * (`SparkContext.getRDDStorageInfo` of [[graft.Readers.residentRdds]]).
     */
   final case class Rep(label: String, constructS: Double, actionS: Double,
       optimizationS: Double, planningS: Double, jobs: Seq[Job], stages: Seq[Stage],
-      scans: (Long, Long))
+      scans: (Long, Long), resident: (Int, Long))
 
   /** `rules` holds the ranking's lines; `error` the failure that ended the query. */
   final case class Report(query: String, reps: Seq[Rep], rules: Seq[String],
@@ -104,8 +107,11 @@ object Profile {
       def sec(phase: String): Double =
         action.tracker.phases.get(phase).map(_.durationMs / 1e3).getOrElse(0.0)
       val (reused, prepared) = Readers.scanStats
+      val resident = Readers.residentRdds
+      val cached = spark.sparkContext.getRDDStorageInfo.filter(i => resident(i.id))
       reps += Rep(label, constructS, actionS, sec("optimization"), sec("planning"),
-        events.jobs(epochMs), events.stages(), (reused - reused0, prepared - prepared0))
+        events.jobs(epochMs), events.stages(), (reused - reused0, prepared - prepared0),
+        (cached.map(_.numCachedPartitions).sum, cached.map(_.memSize).sum))
       action
     }
     def write(name: String, text: String): Unit =
@@ -133,7 +139,8 @@ object Profile {
       val head = f"  ${p.label}%-5s  construct ${p.constructS}%.3f s  action ${p.actionS}%.3f s" +
         f"  optimization ${p.optimizationS}%.3f s  planning ${p.planningS}%.3f s" +
         s"  jobs=${p.jobs.size} stages=${p.stages.size} tasks=${p.stages.map(_.tasks).sum}" +
-        s"  scans reused=${p.scans._1} prepared=${p.scans._2}"
+        s"  scans reused=${p.scans._1} prepared=${p.scans._2}" +
+        f"  resident blocks=${p.resident._1} ${p.resident._2 / 1048576.0}%.1f MB"
       val jobs = p.jobs.map(j =>
         f"    job ${j.id}%4d ${j.end - j.start}%7.3f s  [${j.start}%7.3f -> ${j.end}%7.3f]  rows=${j.rows}")
       val stages = p.stages.map(s =>

@@ -17,6 +17,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+import org.apache.spark.storage.StorageLevel
 
 /** Bridge to `Dataset.ofRows` (private[sql]): build a DataFrame from an
   * already-resolved logical plan. Used to reuse a RESOLVED scan relation
@@ -24,7 +25,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
   * relation construction) on every call — the measured ~10 ms/analysis
   * `ResolveDataSource` tail the bench pays on each of 200+ queries × reps.
   *
-  * [[prepare]] plans a scan once for re-running on chosen partitions
+  * [[prepare]] plans a scan once for re-running on chosen blocks
   * ([[PreparedScan]]), the serving form of the indexed vector searches.
   */
 object PlanBridge {
@@ -46,7 +47,7 @@ object PlanBridge {
     * once: its RDD is built inside a SQL execution of its own
     * `QueryExecution`, so a broadcast the plan holds is built here, once.
     * The execution has no name, so query-execution listeners are not told
-    * of it.
+    * of it. Its blocks stay unpersisted until their owner persists them.
     */
   def prepare(df: DataFrame): PreparedScan = {
     val qe = df.queryExecution
@@ -73,21 +74,43 @@ object PlanBridge {
     }
 }
 
+/** A holder of prepared scans: what [[graft.Readers.prepared]] memoizes
+  * for one layout epoch, and whose resident blocks it keeps and releases.
+  */
+trait HoldsScans {
+  def scans: Seq[PreparedScan]
+}
+
 /** A file scan planned once and re-run by every search that reads it: one
   * Catalyst analysis, optimization and physical planning, one file-split
-  * planning and one Hadoop-conf broadcast for all of them. Each [[run]] is
-  * a SQL execution of the same `QueryExecution` (listeners see its executed
-  * plan, whose SQL metrics accumulate over the runs) whose one job reads
-  * only the given file partitions; what a search asks of the rows rides the
-  * task closure, not the plan.
+  * planning and one Hadoop-conf broadcast for all of them. Its output rows
+  * are cut into BLOCKS, one per scan partition and directory: the files of
+  * one partition under one directory (a `pkey=` or `cell=` directory of a
+  * partitioned layout, else the partition's files), so a block never
+  * exceeds one scan split. Each [[run]] is a SQL execution of the same
+  * `QueryExecution` (listeners see its executed plan, whose SQL metrics
+  * accumulate over the runs) whose one job reads the given blocks; what a
+  * search asks of the rows rides the task closure, not the plan.
+  *
+  * The blocks are RESIDENT once [[persist]] is called (by
+  * [[graft.Readers.prepared]], their one owner): the first run that reads a
+  * block decodes its files once and keeps the decoded rows in executor
+  * memory (`MEMORY_ONLY`, `UnsafeRow` copies), and later runs read the rows
+  * from there and open no file. An evicted or lost block is recomputed from
+  * its files through the same narrow chain, so no answer depends on the
+  * cache. Unpersisted, every run decodes the files it reads.
   */
-final class PreparedScan private[graft] (qe: QueryExecution, rdd: RDD[InternalRow]) {
+final class PreparedScan private[graft] (qe: QueryExecution, rdd: RDD[InternalRow])
+    extends HoldsScans {
 
-  /** The scan's file partitions, by partition index: the file scan under
-    * the plan's narrow chain, whose partitions its top RDD computes one to
-    * one.
+  def scans: Seq[PreparedScan] = Seq(this)
+
+  /** The scan's blocks, by block id: each file partition of the file scan
+    * under the plan's narrow chain (whose partitions its top RDD computes
+    * one to one), cut by directory in file order, each keeping its
+    * partition's index.
     */
-  val partitions: IndexedSeq[FilePartition] = {
+  val blocks: IndexedSeq[FilePartition] = {
     def scanOf(r: RDD[_]): FileScanRDD = r match {
       case f: FileScanRDD => f
       case _ => r.dependencies match {
@@ -96,17 +119,35 @@ final class PreparedScan private[graft] (qe: QueryExecution, rdd: RDD[InternalRo
           s"not a file scan under narrow operators:\n${qe.executedPlan}")
       }
     }
-    scanOf(rdd).filePartitions.toIndexedSeq
+    scanOf(rdd).filePartitions.toIndexedSeq.flatMap { p =>
+      p.files.map(_.toPath.getParent).distinct.toSeq.map(dir =>
+        FilePartition(p.index, p.files.filter(_.toPath.getParent == dir)))
+    }
   }
 
-  /** Min and max of the LONG column `column` per partition, from the
-    * parquet footers of the row groups each split reads (assigned as the
-    * reader assigns them); an empty partition gets an empty range (min >
-    * max), a row group without statistics the full one.
+  /** The blocks' rows: block i runs its files through `rdd`'s own narrow
+    * chain, each row copied out of the reader's reused buffer.
+    */
+  private val resident: RDD[InternalRow] =
+    new FilesOf(rdd, blocks.toArray).mapPartitions(_.map(_.copy()), preservesPartitioning = true)
+
+  /** The id of the RDD whose partitions are the blocks. */
+  def residentId: Int = resident.id
+
+  /** Keep the blocks in executor memory from their next read on. */
+  def persist(): Unit = resident.persist(StorageLevel.MEMORY_ONLY)
+
+  /** Drop the blocks from executor memory, without waiting. */
+  def release(): Unit = resident.unpersist(blocking = false)
+
+  /** Min and max of the LONG column `column` per block, from the parquet
+    * footers of the row groups each block reads (assigned as the reader
+    * assigns them); an empty block gets an empty range (min > max), a row
+    * group without statistics the full one.
     */
   def longRanges(column: String): IndexedSeq[(Long, Long)] = {
     val conf = qe.sparkSession.sessionState.newHadoopConf()
-    partitions.map(_.files.foldLeft((Long.MaxValue, Long.MinValue)) { case (acc, file) =>
+    blocks.map(_.files.foldLeft((Long.MaxValue, Long.MinValue)) { case (acc, file) =>
       val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(file.toPath, conf),
         ParquetFooterReader.buildFilter(conf, file, /* skipRowGroup = */ false))
       footer.getBlocks.asScala.foldLeft(acc) { case ((lo, hi), block) =>
@@ -119,21 +160,19 @@ final class PreparedScan private[graft] (qe: QueryExecution, rdd: RDD[InternalRo
     })
   }
 
-  /** One job over `parts` (file partitions of this scan, possibly holding
-    * fewer files than the scan's own), under a SQL execution of the
-    * prepared plan and the job description `description`; the caller's
-    * description is restored afterwards, its job group never touched. No
-    * parts, no job.
+  /** One job over the blocks `ids` (one task each), under a SQL execution
+    * of the prepared plan and the job description `description`; the
+    * caller's description is restored afterwards, its job group never
+    * touched. No blocks, no job.
     */
-  def run[U: ClassTag](description: String, parts: Seq[FilePartition])(
-      f: Iterator[InternalRow] => U): Seq[U] =
-    if (parts.isEmpty) Nil
+  def run[U: ClassTag](description: String, ids: Seq[Int])(f: Iterator[InternalRow] => U): Seq[U] =
+    if (ids.isEmpty) Nil
     else {
       val sc = qe.sparkSession.sparkContext
       val caller = sc.getLocalProperty(SparkContext.SPARK_JOB_DESCRIPTION)
       sc.setJobDescription(description)
       try SQLExecution.withNewExecutionId(qe, Some("collect")) {
-        sc.runJob(new FilesOf(rdd, parts.toArray), f).toSeq
+        sc.runJob(resident, f, ids).toSeq
       } finally sc.setLocalProperty(SparkContext.SPARK_JOB_DESCRIPTION, caller)
     }
 }

@@ -90,6 +90,24 @@ class KnnJobsSpec extends SparkSpec {
     assertProbesWithoutExchange(plans)
   }
 
+  test("a repeated search reads resident blocks: its scans open no file") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val query = q
+    Knn.searchIndexByVector(spark, idx, query, 100, 10).collect()
+    val plans = PlanLints.executedPlans(spark)(Knn.searchIndexByVector(spark, idx, query, 100, 10).collect())
+    // the prepared probe's and fetch's scans (the result's collect reads a local relation)
+    val scans = plans.flatMap(_.collect { case s: FileSourceScanExec => s })
+    assert(scans.map(_.relation.location.rootPaths.head.getName).sorted == Seq("postings", "vectors"),
+      plans.mkString("\n\n"))
+    def scanMetrics: Seq[Long] =
+      scans.flatMap(s => Seq(s.metrics("numFiles").value, s.metrics("numOutputRows").value))
+    val before = scanMetrics
+    val (rows, jobs, _) = searchJobs(Knn.searchIndexByVector(spark, idx, query, 100, 10))
+    assert(rows.nonEmpty)
+    assert(jobs <= SearchJobs, s"raw-vector search ran $jobs jobs")
+    assert(scanMetrics == before, s"the probe or fetch scan read files: $before -> $scanMetrics")
+  }
+
   test("stored-id batch search: the query-doc GET plus two jobs") {
     val dir = idx
     val (rows, jobs, plans) = searchJobs(Knn.searchIndex(spark, dir, queryMaxId = 8, 100, 10))

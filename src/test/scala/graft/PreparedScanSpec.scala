@@ -16,7 +16,9 @@ import graft.operators.{Index, Knn, Lifecycle, Lsh, Pq, Vectors}
   * by [[Readers.prepared]]): concurrent searches share them safely, every
   * change to the layout re-prepares them, and every search in between
   * reuses them without compiling a plan or touching the caller's job
-  * description.
+  * description. Their resident blocks live for one layout epoch: a change
+  * releases the superseded ones, a sink-live dir keeps none, and an
+  * evicted block is recomputed from its files.
   */
 class PreparedScanSpec extends SparkSpec {
 
@@ -156,10 +158,80 @@ class PreparedScanSpec extends SparkSpec {
         posexplode(col("hashes")).as(Seq("tbl", "hash"))), numBuckets),
         col("tbl"), col("hash"), col(Index.BatchCol), col(Index.PKeyCol))
       .write.mode(SaveMode.Append).partitionBy(Index.PKeyCol).parquet(s"$dir/postings")
+    val superseded = Readers.residentRdds
     val before = prepares
     val got = answers(dir)
     assert(prepares > before, "the probe and fetch were not re-prepared")
+    // the stale probe and fetch were replaced, their blocks released
+    assert((persisted & superseded).isEmpty, s"superseded blocks still resident: $superseded")
     assert(got == answers(built("graft-prep-ref", emb)))
+  }
+
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("every change releases the superseded blocks: only the current epoch's stay resident") {
+    val dir = built("graft-prep-resident", emb)
+    val wider = Lsh.fit(emb, tables = 8, bits = 4)
+    val seen = scala.collection.mutable.Set.empty[Int]
+    val counts = (1 to 2).flatMap { round =>
+      val extra = emb.filter(col("vec_id") < 20).withColumn("vec_id", col("vec_id") + 100000L * round)
+      Seq[(String, () => Unit)](
+        "append" -> (() => Index.append(spark, dir, extra)),
+        "delete" -> (() => Index.delete(spark, dir, Seq(10L + round, 100000L * round))),
+        "compact" -> (() => Index.compact(spark, dir)),
+        "vacuum" -> (() => Index.vacuum(spark, dir)),
+        "rebuild" -> (() => Index.build(spark, emb, if (round == 1) wider else model, dir))).map {
+        case (what, change) =>
+          change()
+          answers(dir)
+          val current = Readers.residentRdds
+          seen ++= current
+          // the probe and the fetch of this layout, nothing else of its past
+          assert(current.size == 2, s"after $what: resident $current")
+          assert((persisted & seen) == current, s"after $what: ${persisted & seen} resident, $current current")
+          persisted.size
+      }
+    }
+    assert(counts.max <= counts.head, s"persisted RDDs per mutation: $counts")
+  }
+
+  test("a sink-live dir is read unpersisted: its searches leave no persisted RDD") {
+    val sq = Pq.SQ8.fit(emb)
+    val idx = Files.createTempDirectory("graft-prep-sink").toString
+    Pq.SQ8.writeModel(spark, sq, s"$idx/model")
+    val src = Files.createTempDirectory("graft-prep-sink-src").toString
+    emb.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$src-part")
+    val part = new java.io.File(s"$src-part").listFiles().find(_.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath, java.nio.file.Paths.get(src, "b0.parquet"))
+    val q = graft.streaming.Streams.codesSink(spark, src, Pq.SQ8.encoder(sq), s"$idx/codes",
+      Files.createTempDirectory("graft-prep-sink-ckpt").toString)
+    try q.processAllAvailable()
+    finally q.stop()
+    assert(Readers.sinkLive(spark, s"$idx/codes"), "precondition: the codes carry a sink log")
+    val first = rows(Pq.searchIndex(spark, Pq.SQ8, idx, sf0001))
+    val held = persisted
+    val before = prepares
+    assert(rows(Pq.searchIndex(spark, Pq.SQ8, idx, sf0001)) == first)
+    assert(prepares > before, "the sink-live code scan was not prepared again")
+    assert(persisted == held, s"a sink-live search persisted ${persisted -- held}")
+  }
+
+  test("evicted blocks recompute from the files: the same rows, the files read again") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val dir = built("graft-prep-evict", emb)
+    val want = answers(dir)
+    val plans = PlanLints.executedPlans(spark)(answers(dir))
+    def rowsDecoded: Long =
+      plans.flatMap(_.collect { case s: FileSourceScanExec => s.metrics("numOutputRows").value }).sum
+    val warm = rowsDecoded
+    assert(answers(dir) == want)
+    assert(rowsDecoded == warm, "a warm search decoded files")
+    Readers.residentRdds.foreach(org.apache.spark.sql.graft.TestBus.evict(spark, _))
+    assert(answers(dir) == want, "rows after an eviction differ")
+    val refilled = rowsDecoded
+    assert(refilled > warm, "the searches after an eviction read no file")
+    assert(answers(dir) == want)
+    assert(rowsDecoded == refilled, "the refilled blocks were not kept")
   }
 
   test("searches with different queries share one prepared probe and fetch") {

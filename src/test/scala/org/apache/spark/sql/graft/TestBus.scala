@@ -12,4 +12,10 @@ import org.apache.spark.sql.SparkSession
 object TestBus {
   def drain(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Drop every cached block of RDD `id` from the block managers and wait,
+    * leaving the RDD persisted: what an eviction does to its blocks.
+    */
+  def evict(spark: SparkSession, id: Int): Unit =
+    spark.sparkContext.env.blockManager.master.removeRdd(id, blocking = true)
 }
