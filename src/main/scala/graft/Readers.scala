@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graft.{HoldsScans, PreparedScan}
+import org.apache.spark.sql.graft.{HoldsScan, PreparedScan}
 import org.apache.spark.sql.types.StructType
 
 /** Memoized parquet SCHEMA resolution — the engine's (tiny) catalog cache.
@@ -103,34 +103,34 @@ object Readers {
     */
   private final class Prepared(val sig: String, val held: AnyRef)
 
-  private def scansOf(held: AnyRef): Seq[PreparedScan] = held match {
-    case h: HoldsScans => h.scans
-    case _ => Nil
+  private def scanOf(held: AnyRef): Option[PreparedScan] = held match {
+    case h: HoldsScan => Some(h.scan)
+    case _ => None
   }
 
-  private def release(p: Prepared): Unit = scansOf(p.held).foreach(_.release())
+  private def release(p: Prepared): Unit = scanOf(p.held).foreach(_.release())
 
   /** What a search reads of layout `dirs`, prepared once per (session,
-    * epoch, `what`) and listing signature of each dir: PREPARED SCANS
-    * (a [[HoldsScans]], such as an
+    * epoch, `what`) and listing signature of each dir: a PREPARED SCAN
+    * (a [[HoldsScan]], such as an
     * [[org.apache.spark.sql.graft.PreparedScan]] with what its searches
     * need beside it) or a small driver-loaded value of the layout.
     *
     * This memo is the one owner of the prepared scans' resident blocks: it
-    * persists a holder's scans when it memoizes them, and releases them
+    * persists a holder's scan when it memoizes it, and releases it
     * when it drops the holder — at a [[bump]], or when a listing change
     * seen without one (a file landing in a dir) replaces the stale holder.
     * Blocks live for one layout epoch. A sink-live dir is prepared on every
-    * call and never memoized (the [[parquet]] rule), so its scans run
+    * call and never memoized (the [[parquet]] rule), so its scan runs
     * unpersisted. `prepare` runs outside any map lock ([[Memo.once]]);
     * under a miss race the first holder to land is kept and the other's
-    * scans are released before any run has filled them.
+    * scan is released before any run has filled it.
     */
   def prepared[T <: AnyRef](spark: SparkSession, dirs: Seq[String], what: String)(
       prepare: => T): T = {
     def fresh(): T = {
       val held = prepare
-      if (scansOf(held).nonEmpty) scanPrepares.incrementAndGet()
+      if (scanOf(held).nonEmpty) scanPrepares.incrementAndGet()
       held
     }
     if (dirs.exists(sinkLiveMemo(spark, _))) fresh()
@@ -139,12 +139,12 @@ object Readers {
       val sig = dirs.map(childSigOf(spark, _)).mkString(",")
       val hit = scanMemo.get(key)
       if (hit != null && hit.sig == sig) {
-        if (scansOf(hit.held).nonEmpty) scanReuses.incrementAndGet()
+        if (scanOf(hit.held).nonEmpty) scanReuses.incrementAndGet()
         hit.held.asInstanceOf[T]
       } else {
         val mine = new Prepared(sig, fresh())
         // persisted before it lands, so a bump that drops it releases it
-        scansOf(mine.held).foreach(_.persist())
+        scanOf(mine.held).foreach(_.persist())
         val landed =
           if (hit == null) scanMemo.putIfAbsent(key, mine) == null else scanMemo.replace(key, hit, mine)
         if (landed) { if (hit != null) release(hit); mine.held.asInstanceOf[T] }
@@ -167,7 +167,7 @@ object Readers {
     * blocks.
     */
   def residentRdds: Set[Int] =
-    scanMemo.values.asScala.flatMap(p => scansOf(p.held)).map(_.residentId).toSet
+    scanMemo.values.asScala.flatMap(p => scanOf(p.held)).map(_.residentId).toSet
 
   /** Stable per-session key: the session UUID (via the
     * [[org.apache.spark.sql.graft.SessionIds]] bridge — it's `private[sql]`)

@@ -11,7 +11,7 @@ import graft.Tables
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.{HoldsScans, PlanBridge, PreparedScan, VectorExpressions}
+import org.apache.spark.sql.graft.{HoldsScan, PlanBridge, PreparedScan, VectorExpressions}
 
 /** Two-phase approximate kNN — the reference's flagship search
   * (SURVEY.md §2.A A5–A7, `[PUBREPO AknnRestAction.handleSearchRequest,
@@ -274,10 +274,8 @@ object Knn {
     * directories: the postings by pkey, the IVF layouts by cell. Each of
     * its blocks holds one directory's files.
     */
-  private[operators] final class DirScan(val scan: PreparedScan) extends HoldsScans {
+  private[operators] final class DirScan(val scan: PreparedScan) extends HoldsScan {
     private val dirs = scan.blocks.map(_.files.head.toPath.getParent.getName)
-
-    def scans: Seq[PreparedScan] = scan.scans
 
     /** The blocks under a `probed` directory (a lossless prune, at the job). */
     def parts(probed: Set[String]): Seq[Int] = dirs.indices.filter(i => probed(dirs(i)))
@@ -292,8 +290,8 @@ object Knn {
     */
   private final class Probe(
       val lists: DirScan, val live: Option[Lifecycle.Liveness], val appended: Boolean)
-      extends HoldsScans {
-    def scans: Seq[PreparedScan] = lists.scans
+      extends HoldsScan {
+    def scan: PreparedScan = lists.scan
   }
 
   private def probeOf(spark: SparkSession, indexDir: String, bits: Int): Probe =
@@ -314,9 +312,7 @@ object Knn {
     * let prune.
     */
   private[operators] final class Fetch(val scan: PreparedScan, ranges: IndexedSeq[(Long, Long)])
-      extends HoldsScans {
-
-    def scans: Seq[PreparedScan] = scan.scans
+      extends HoldsScan {
 
     /** The blocks whose range holds one of the sorted `ids`. */
     def parts(ids: Array[Long]): Seq[Int] =

@@ -74,11 +74,11 @@ object PlanBridge {
     }
 }
 
-/** A holder of prepared scans: what [[graft.Readers.prepared]] memoizes
+/** A holder of a prepared scan: what [[graft.Readers.prepared]] memoizes
   * for one layout epoch, and whose resident blocks it keeps and releases.
   */
-trait HoldsScans {
-  def scans: Seq[PreparedScan]
+trait HoldsScan {
+  def scan: PreparedScan
 }
 
 /** A file scan planned once and re-run by every search that reads it: one
@@ -101,9 +101,9 @@ trait HoldsScans {
   * cache. Unpersisted, every run decodes the files it reads.
   */
 final class PreparedScan private[graft] (qe: QueryExecution, rdd: RDD[InternalRow])
-    extends HoldsScans {
+    extends HoldsScan {
 
-  def scans: Seq[PreparedScan] = Seq(this)
+  def scan: PreparedScan = this
 
   /** The scan's blocks, by block id: each file partition of the file scan
     * under the plan's narrow chain (whose partitions its top RDD computes
