@@ -89,8 +89,9 @@ trait HoldsScan {
   * partitioned layout, else the partition's files), so a block never
   * exceeds one scan split. Each [[run]] is a SQL execution of the same
   * `QueryExecution` (listeners see its executed plan, whose SQL metrics
-  * accumulate over the runs) whose one job reads the given blocks; what a
-  * search asks of the rows rides the task closure, not the plan.
+  * accumulate over the runs) whose one job reads the given blocks, one task
+  * per scan partition; what a search asks of the rows rides the task
+  * closure, not the plan.
   *
   * The blocks are RESIDENT once [[persist]] is called (by
   * [[graft.Readers.prepared]], their one owner): the first run that reads a
@@ -129,7 +130,8 @@ final class PreparedScan private[graft] (qe: QueryExecution, rdd: RDD[InternalRo
     * chain, each row copied out of the reader's reused buffer.
     */
   private val resident: RDD[InternalRow] =
-    new FilesOf(rdd, blocks.toArray).mapPartitions(_.map(_.copy()), preservesPartitioning = true)
+    new PartsOf(rdd, blocks.toArray.map(Array[Partition](_)))
+      .mapPartitions(_.map(_.copy()), preservesPartitioning = true)
 
   /** The id of the RDD whose partitions are the blocks. */
   def residentId: Int = resident.id
@@ -160,8 +162,10 @@ final class PreparedScan private[graft] (qe: QueryExecution, rdd: RDD[InternalRo
     })
   }
 
-  /** One job over the blocks `ids` (one task each), under a SQL execution
-    * of the prepared plan and the job description `description`; the
+  /** One job over the blocks `ids`, under a SQL execution of the prepared
+    * plan and the job description `description`: one task per scan
+    * partition holding any of them, reading its blocks in turn, so a
+    * warm run schedules no more tasks than the scan has partitions. The
     * caller's description is restored afterwards, its job group never
     * touched. No blocks, no job.
     */
@@ -172,26 +176,29 @@ final class PreparedScan private[graft] (qe: QueryExecution, rdd: RDD[InternalRo
       val caller = sc.getLocalProperty(SparkContext.SPARK_JOB_DESCRIPTION)
       sc.setJobDescription(description)
       try SQLExecution.withNewExecutionId(qe, Some("collect")) {
-        sc.runJob(resident, f, ids).toSeq
+        val tasks = ids.sorted.groupBy(blocks(_).index).values.toArray.sortBy(_.head)
+        sc.runJob(new PartsOf(resident, tasks.map(_.toArray.map(resident.partitions(_)))), f).toSeq
       } finally sc.setLocalProperty(SparkContext.SPARK_JOB_DESCRIPTION, caller)
     }
 }
 
-/** `prev` computed over the given file partitions: partition i runs
-  * `parts(i)` through `prev`'s own narrow chain, which hands the partition
-  * object down to the file scan that reads its files.
+/** `prev` computed over groups of partitions: partition i runs each of
+  * `groups(i)` in turn through `prev`'s own narrow chain, which hands the
+  * partition object down, standing for `prev`'s partition of the same
+  * index: a file partition cut to fewer files reaches the file scan that
+  * reads them, a persisted RDD's partition its cached block.
   */
-private final class FilesOf(prev: RDD[InternalRow], @transient parts: Array[FilePartition])
-    extends RDD[InternalRow](prev.sparkContext, Seq(new PartsOf(prev, parts.map(_.index)))) {
+private final class PartsOf(prev: RDD[InternalRow], @transient groups: Array[Array[Partition]])
+    extends RDD[InternalRow](prev.sparkContext, Seq(new GroupsOf(prev, groups.map(_.map(_.index))))) {
   override protected def getPartitions: Array[Partition] =
-    Array.tabulate[Partition](parts.length)(i => new FilesPartition(i, parts(i)))
+    Array.tabulate[Partition](groups.length)(i => new PartsPartition(i, groups(i)))
   override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
-    prev.iterator(split.asInstanceOf[FilesPartition].files, context)
+    split.asInstanceOf[PartsPartition].parts.iterator.flatMap(prev.iterator(_, context))
 }
 
-private final class FilesPartition(val index: Int, val files: FilePartition) extends Partition
+private final class PartsPartition(val index: Int, val parts: Array[Partition]) extends Partition
 
-private final class PartsOf(prev: RDD[InternalRow], parents: Array[Int])
+private final class GroupsOf(prev: RDD[InternalRow], parents: Array[Array[Int]])
     extends NarrowDependency[InternalRow](prev) {
-  override def getParents(partitionId: Int): Seq[Int] = Seq(parents(partitionId))
+  override def getParents(partitionId: Int): Seq[Int] = parents(partitionId).toSeq
 }

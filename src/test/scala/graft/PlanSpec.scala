@@ -516,6 +516,31 @@ class PlanSpec extends SparkSpec {
     assert(rowsRead == probedRows, s"the probe read $rowsRead rows; the probed pkey dirs hold $probedRows")
   }
 
+  test("a warm indexed probe runs one task per scan partition, not one per probed directory") {
+    // Each pkey directory is a resident block; a scan partition packs
+    // several, and one task reads all of its partition's probed blocks.
+    import graft.operators.{Index, Knn, Lsh}
+    import org.apache.spark.sql.functions.col
+    val emb = Tables.embeddings(spark, sf0001)
+    val model = Lsh.fit(emb, tables = 4, bits = 3)
+    val dir = java.nio.file.Files.createTempDirectory("graft-idx-tasks").toString
+    Index.build(spark, emb, model, dir, numBuckets = 64)
+    val queries = emb.filter(col("vec_id") < 8L).select(col("embedding")).collect()
+      .map(_.getSeq[Float](0).toArray)
+    val probed = queries.flatMap(model.hashVector(_).zipWithIndex.map { case (h, t) => Index.pkeyOf(t, h, 64) })
+      .distinct
+    val postings = spark.read.parquet(s"$dir/postings")
+    val splits = postings.rdd.getNumPartitions
+    assert(probed.length > splits, s"${probed.length} probed pkeys, $splits scan partitions")
+    val probedRows = postings.filter(col(Index.PKeyCol).isin(probed.toSeq: _*)).count()
+    Knn.searchIndex(spark, dir, queryMaxId = 8, 100, 10).collect()
+    val probes = jobReads(Knn.searchIndex(spark, dir, queryMaxId = 8, 100, 10)).filter(_._1 == "Knn.probe")
+    assert(probes.length == 1, probes)
+    val (_, tasks, rowsRead) = probes.head
+    assert(tasks >= 1 && tasks <= splits, s"$tasks tasks for ${probed.length} probed pkeys in $splits partitions")
+    assert(rowsRead == probedRows, s"the probe read $rowsRead rows; the probed pkey dirs hold $probedRows")
+  }
+
   test("tfidf joins the tiny idf table by broadcast, not a shuffle join") {
     val plan = planOf("q61_tfidf_search")
     assert(plan.contains("BroadcastHashJoin"), plan)
